@@ -13,7 +13,7 @@ cited inline below.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .schema import FAKE_BUILD_VERSION, META_PARSE_LIMIT
@@ -310,14 +310,15 @@ def charset_column(http_headers: Column, meta_tags: Column) -> Column:
 
 # --- N/a/g assembly ------------------------------------------------------------
 
-def add_cdx_field_columns(df: DataFrame, *, host_massage: bool = True,
-                          screenshot_mode: bool = False,
-                          g_prefix: str | None = None) -> DataFrame:
-    """Adds the 11 field columns to a pages frame that already carries
-    ``handler``, ``http_headers``, ``payload`` (see job.py)."""
+def cdx_field_steps(*, host_massage: bool = True,
+                    screenshot_mode: bool = False,
+                    g_prefix: str | None = None) -> list[tuple[str, Column]]:
+    """The 11 field columns (plus the ``_safe_url`` helper they share)
+    as ordered ``(name, Column)`` steps for ``withColumn``, over a pages
+    frame that already carries ``handler``, ``http_headers``,
+    ``payload`` (see job.py, which builds them once per config)."""
     h = F.col("handler")
-    safe = safe_url_column(F.col("url"))
-    df = df.withColumn("_safe_url", safe)
+    safe = F.col("_safe_url")
 
     warcinfo_url = F.format_string(
         "warcinfo:/%s/%s", F.col("warc_file"), F.lit(FAKE_BUILD_VERSION))
@@ -326,55 +327,50 @@ def add_cdx_field_columns(df: DataFrame, *, host_massage: bool = True,
     original = (
         F.when(h == "warcinfo", warcinfo_url)
         .when(h == "screenshot",
-              F.concat(F.lit("http://web.archive.org/screenshot/"),
-                       F.col("_safe_url")))
-        .otherwise(F.col("_safe_url"))
+              F.concat(F.lit("http://web.archive.org/screenshot/"), safe))
+        .otherwise(safe)
     )
 
     # N: massaged url (:128-136; warcinfo :267-269; screenshot :582-583)
     surt_fb = make_surt_udf(host_massage=host_massage, fallback=True)
-    massaged = surt_fb(F.col("_safe_url"))
+    massaged = surt_fb(safe)
     if screenshot_mode:
         surt_strict = make_surt_udf(host_massage=host_massage, fallback=False)
         massaged = F.when(
             h == "screenshot",
             F.concat(F.lit("org,archive,web)/screenshot/"),
-                     surt_strict(F.col("_safe_url"))),
+                     surt_strict(safe)),
         ).otherwise(massaged)
     massaged = F.when(h == "warcinfo", original).otherwise(massaged)
 
-    mime = mime_column(h, F.col("record_type"), F.col("content_type"),
-                       F.col("http_ct"))
-    df = (
-        df.withColumn("massaged_url", massaged)
-        .withColumn("date", date14_column(F.col("raw_date"), F.col("warc_ts")))
-        .withColumn("original_url", original)
-        .withColumn("mime_type", mime)
-        .withColumn("response_code",
-                    response_code_column(h, F.col("http_status")))
-        .withColumn("new_style_checksum",
-                    checksum_column(h, F.col("warc_headers"), F.col("html"),
-                                    F.col("http_headers"), F.col("payload")))
-        # r is unconditionally '-' since Sept 2012 (cdx_writer.py:287-293)
-        .withColumn("redirect", F.lit(None).cast("string"))
-        .withColumn("aif_meta_tags",
-                    aif_meta_tags_column(h, F.col("mime_type"),
-                                         F.col("payload"),
-                                         F.col("content_length"),
-                                         F.col("html"),
-                                         F.col("http_headers"),
-                                         F.col("warc_headers"),
-                                         F.col("payload_present")))
-        .withColumn("compressed_record_size",
-                    F.col("compressed_size").cast("string"))  # :232-239
-        .withColumn("compressed_arc_file_offset",
-                    F.col("offset").cast("string"))  # :241-246
-    )
     # g: file name (:256-260, 739-744) — prefix joined driver-side
     if g_prefix:
         sep = "" if g_prefix.endswith("/") else "/"
-        df = df.withColumn(
-            "file_name", F.concat(F.lit(g_prefix + sep), F.col("warc_file")))
+        file_name = F.concat(F.lit(g_prefix + sep), F.col("warc_file"))
     else:
-        df = df.withColumn("file_name", F.col("warc_file"))
-    return df
+        file_name = F.col("warc_file")
+
+    return [
+        ("_safe_url", safe_url_column(F.col("url"))),
+        ("massaged_url", massaged),
+        ("date", date14_column(F.col("raw_date"), F.col("warc_ts"))),
+        ("original_url", original),
+        ("mime_type", mime_column(h, F.col("record_type"),
+                                  F.col("content_type"), F.col("http_ct"))),
+        ("response_code", response_code_column(h, F.col("http_status"))),
+        ("new_style_checksum",
+         checksum_column(h, F.col("warc_headers"), F.col("html"),
+                         F.col("http_headers"), F.col("payload"))),
+        # r is unconditionally '-' since Sept 2012 (cdx_writer.py:287-293)
+        ("redirect", F.lit(None).cast("string")),
+        ("aif_meta_tags",
+         aif_meta_tags_column(h, F.col("mime_type"), F.col("payload"),
+                              F.col("content_length"), F.col("html"),
+                              F.col("http_headers"), F.col("warc_headers"),
+                              F.col("payload_present"))),
+        ("compressed_record_size",
+         F.col("compressed_size").cast("string")),  # :232-239
+        ("compressed_arc_file_offset",
+         F.col("offset").cast("string")),  # :241-246
+        ("file_name", file_name),
+    ]

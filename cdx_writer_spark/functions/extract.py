@@ -241,11 +241,19 @@ def write_wet(pages: DataFrame, out_dir: str, cfg=None) -> None:
     parts for the logical ``.warc.wet``; a real deployment points the
     writer at a ``.gz`` codec for the member-per-record form).  Same
     sink shape as ``sink.write_per_file_cdx``: one exchange on
-    ``warc_file``, in-partition sort on the record offset, single-
-    data-column text sink."""
-    recs = wet_records(pages, cfg)
+    ``warc_file``, in-partition sort on the file-order key (so the
+    writer's ``warc_file`` ordering is a prefix of it and Spark adds
+    no second, unstable sort), single-data-column text sink."""
+    from ..job import file_order_cols
+
+    ext = extract_text(pages, cfg).filter(F.col("text").isNotNull())
+    # the file-order key carries record_seq, which wet_records drops:
+    # records of one multi-record gzip member share their offset
+    order = file_order_cols(ext)
+    recs = ext.select(*order, wet_record_col(
+        F.col("url"), F.col("warc_ts"), F.col("text")).alias("wet_record"))
     (recs.repartition(F.col("warc_file"))
-     .sortWithinPartitions("offset")
+     .sortWithinPartitions(*order)
      .select("warc_file", "wet_record")
      .write.mode("overwrite").partitionBy("warc_file")
      .text(out_dir))

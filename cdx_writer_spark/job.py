@@ -11,15 +11,16 @@ predicates into the parquet/Iceberg scan.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterable
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .canonicalize import surt_key
 from .dispatch import content_length_ok, handler_column
-from .fields import add_cdx_field_columns, field_column_name
+from .fields import cdx_field_steps, field_column_name
 from .schema import DEFAULT_FORMAT
 from .udfs import http_split, native_http_split_struct
 
@@ -92,13 +93,49 @@ def excluded_column(surt_col: Column, prefixes: list[str]) -> Column:
     return F.coalesce(cond, F.lit(False))
 
 
-# --- pipeline stages ------------------------------------------------------------
+# --- the projection, built once per (config, SparkContext) --------------------
 
-def cdx_flagged(pages: DataFrame, cfg: CDXConfig | None = None) -> DataFrame:
-    """pages + derived columns + boolean stage flags, UNFILTERED — one row
-    per input record, so stats can aggregate the same flags the filters
-    use (single-pass, like the reference's inline counters :830-853)."""
-    cfg = cfg or CDXConfig()
+
+@dataclass(frozen=True)
+class _Projection:
+    """Every Column of the CDX projection for one config.  Building them
+    is serial Python-side work (thousands of py4j calls: the base32
+    checksum tree alone is ~330) that yields the same expressions every
+    time, so ``_projection`` builds them once and each job only applies
+    them."""
+    split: Column                               # the HTTP block parse
+    http_fields: tuple[tuple[str, Column], ...]  # UDF split only
+    payload: Column
+    payload_present: Column
+    handler: Column
+    admitted: Column
+    fields: tuple[tuple[str, Column], ...]
+    excluded: Column
+    line: Column
+    stats: tuple[Column, ...]
+
+
+_PROJECTIONS: dict = {}
+
+
+def projection_key(cfg: CDXConfig) -> tuple:
+    """The memo key of ``_projection``: the config AND the active
+    SparkContext.  Pandas-UDF Columns capture the context that created
+    them, so a stopped and restarted session must rebuild."""
+    return cfg, SparkContext._active_spark_context
+
+
+def _projection(cfg: CDXConfig) -> _Projection:
+    key = projection_key(cfg)
+    proj = _PROJECTIONS.get(key)
+    if proj is None:
+        if any(k[1] is not key[1] for k in _PROJECTIONS):
+            _PROJECTIONS.clear()  # drop a stopped context's Columns
+        proj = _PROJECTIONS[key] = _build_projection(cfg)
+    return proj
+
+
+def _build_projection(cfg: CDXConfig) -> _Projection:
     masked = (F.when(F.col("record_type") == "response", F.col("html"))
               .otherwise(F.lit(None)))
     if cfg.native_split:
@@ -106,60 +143,85 @@ def cdx_flagged(pages: DataFrame, cfg: CDXConfig | None = None) -> DataFrame:
         # node — the materialization barrier that stops projection
         # collapse re-inlining the parse into every field consumer
         # (same role the ArrowEvalPython node plays for the UDF)
-        df = pages.select(
-            "*", F.inline(F.array(native_http_split_struct(masked))))
+        split = F.inline(F.array(native_http_split_struct(masked)))
+        http_fields = ()
     else:
         split = http_split(masked)
-        df = (
-            pages.withColumn("_http", split)
-            .withColumn("http_headers", F.col("_http.headers"))
-            .withColumn("_body_off", F.col("_http.body_off"))
-            .withColumn("http_status", F.col("_http.status"))
-            .withColumn("http_version", F.col("_http.version"))
-            .withColumn("http_ct", F.col("_http.ct"))
-            .drop("_http")
-            .withColumnRenamed("_body_off", "body_off")
-        )
-    df = (
-        df
+        http_fields = tuple(
+            (name, F.col("_http." + attr)) for name, attr in (
+                ("http_headers", "headers"), ("_body_off", "body_off"),
+                ("http_status", "status"), ("http_version", "version"),
+                ("http_ct", "ct")))
+    inc = F.col("admitted") & ~F.col("excluded")
+    return _Projection(
+        split=split,
+        http_fields=http_fields,
         # NATIVE payload slice: the split returns only the byte OFFSET
         # of the body, so the multi-MB payload bytes never ride the
         # Arrow return path — substring on a NULL offset propagates
         # NULL (non-HTTP blocks / non-response records), and an
         # offset of len+1 slices to b'' (header-only blocks), exactly
         # the retired body column's semantics
-        .withColumn("payload",
-                    F.substring(F.col("html"), F.col("body_off"),
-                                F.octet_length(F.col("html"))))
+        payload=F.substring(F.col("html"), F.col("body_off"),
+                            F.octet_length(F.col("html"))),
         # cheap NULL test for the masks: payload is NULL iff the offset
         # is (substring null-propagates) — gating on this int check
         # instead of payload.isNotNull() keeps the byte-copying slice
         # out of every gate expression
-        .withColumn("payload_present", F.col("body_off").isNotNull())
-        .drop("body_off")
-    )
-    df = df.withColumn(
-        "handler",
-        handler_column(
+        payload_present=F.col("body_off").isNotNull(),
+        handler=handler_column(
             F.col("record_type"), F.col("content_type"), F.col("url"),
             F.col("http_status"), F.col("http_version"),
             F.col("warc_headers"),
             all_records=cfg.all_records,
-            screenshot_mode=cfg.screenshot_mode,
-        ),
+            screenshot_mode=cfg.screenshot_mode),
+        admitted=(F.col("handler").isNotNull()
+                  & content_length_ok(F.col("content_length"))),
+        fields=tuple(cdx_field_steps(
+            host_massage=cfg.host_massage,
+            screenshot_mode=cfg.screenshot_mode, g_prefix=cfg.g_prefix)),
+        excluded=(F.col("admitted")
+                  & excluded_column(F.col("massaged_url"),
+                                    cfg.exclude_surts())),
+        # space-joined line with None -> '-' (cdx_writer.py:850-851)
+        line=F.concat_ws(
+            " ", *[F.coalesce(F.col(field_column_name(c)), F.lit("-"))
+                   for c in cfg.field_codes()]),
+        # the reference's three counters (cdx_writer.py:805-809, 830,
+        # 843, 853)
+        stats=(
+            F.count(F.lit(1)).alias("num_records_processed"),
+            F.sum(F.when(inc, 1).otherwise(0)).alias("num_records_included"),
+            F.sum(F.when(F.col("excluded"), 1).otherwise(0)).alias(
+                "num_records_filtered")),
     )
-    df = df.withColumn(
-        "admitted",
-        F.col("handler").isNotNull()
-        & content_length_ok(F.col("content_length")))
-    df = add_cdx_field_columns(
-        df, host_massage=cfg.host_massage,
-        screenshot_mode=cfg.screenshot_mode, g_prefix=cfg.g_prefix)
-    df = df.withColumn(
-        "excluded",
-        F.col("admitted")
-        & excluded_column(F.col("massaged_url"), cfg.exclude_surts()))
-    return df
+
+
+# --- pipeline stages ------------------------------------------------------------
+
+def cdx_flagged(pages: DataFrame, cfg: CDXConfig | None = None) -> DataFrame:
+    """pages + derived columns + boolean stage flags, UNFILTERED — one row
+    per input record, so stats can aggregate the same flags the filters
+    use (single-pass, like the reference's inline counters :830-853)."""
+    cfg = cfg or CDXConfig()
+    p = _projection(cfg)
+    if cfg.native_split:
+        df = pages.select("*", p.split)
+    else:
+        df = pages.withColumn("_http", p.split)
+        for name, col in p.http_fields:
+            df = df.withColumn(name, col)
+        df = df.drop("_http").withColumnRenamed("_body_off", "body_off")
+    df = (
+        df.withColumn("payload", p.payload)
+        .withColumn("payload_present", p.payload_present)
+        .drop("body_off")
+        .withColumn("handler", p.handler)
+        .withColumn("admitted", p.admitted)
+    )
+    for name, col in p.fields:
+        df = df.withColumn(name, col)
+    return df.withColumn("excluded", p.excluded)
 
 
 def file_order_cols(df: DataFrame) -> list[str]:
@@ -188,9 +250,7 @@ def cdx_records(pages: DataFrame, cfg: CDXConfig | None = None) -> DataFrame:
 
 def cdx_line_column(cfg: CDXConfig) -> Column:
     """Space-joined line with None -> '-' (cdx_writer.py:850-851)."""
-    return F.concat_ws(
-        " ", *[F.coalesce(F.col(field_column_name(c)), F.lit("-"))
-               for c in cfg.field_codes()])
+    return _projection(cfg).line
 
 
 def cdx_lines(pages: DataFrame, cfg: CDXConfig | None = None,
@@ -235,19 +295,15 @@ STATS_COLUMNS = (
     "num_records_processed", "num_records_included", "num_records_filtered")
 
 
-def stats_aggregation() -> list[Column]:
+def stats_aggregation(cfg: CDXConfig | None = None) -> list[Column]:
     """The reference's three counters (cdx_writer.py:805-809, 830, 843,
     853) as aggregate expressions over a cdx_flagged frame; usable with
-    .agg() or .observe() for single-pass stats during a write."""
-    inc = F.col("admitted") & ~F.col("excluded")
-    return [
-        F.count(F.lit(1)).alias("num_records_processed"),
-        F.sum(F.when(inc, 1).otherwise(0)).alias("num_records_included"),
-        F.sum(F.when(F.col("excluded"), 1).otherwise(0)).alias(
-            "num_records_filtered"),
-    ]
+    .agg() or .observe() for single-pass stats during a write.  They
+    do not depend on the config; passing the job's config only reuses
+    its memoized projection."""
+    return list(_projection(cfg or CDXConfig()).stats)
 
 
 def cdx_stats(pages: DataFrame, cfg: CDXConfig | None = None) -> dict:
-    row = cdx_flagged(pages, cfg).agg(*stats_aggregation()).collect()[0]
+    row = cdx_flagged(pages, cfg).agg(*stats_aggregation(cfg)).collect()[0]
     return {k: int(row[k] or 0) for k in STATS_COLUMNS}

@@ -36,7 +36,7 @@ from .job import (
 
 def _lines_with_observation(pages: DataFrame, cfg: CDXConfig):
     obs = Observation("cdx_stats")
-    flagged = cdx_flagged(pages, cfg).observe(obs, *stats_aggregation())
+    flagged = cdx_flagged(pages, cfg).observe(obs, *stats_aggregation(cfg))
     lines = (
         flagged.filter(F.col("admitted") & ~F.col("excluded"))
         .select(*file_order_cols(flagged),

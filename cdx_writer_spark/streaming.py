@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .job import CDXConfig, cdx_flagged, cdx_line_column
+from .job import CDXConfig, cdx_flagged, cdx_line_column, stats_aggregation
 from .schema import PAGES_SCHEMA
 
 
@@ -65,17 +65,11 @@ def cdx_stream_stats(pages: DataFrame, cfg: CDXConfig | None = None,
     per key."""
     cfg = cfg or CDXConfig()
     flagged = cdx_flagged(pages, cfg).withWatermark("warc_ts", watermark)
-    inc = F.col("admitted") & ~F.col("excluded")
     win = (F.window("warc_ts", window, slide) if slide
            else F.window("warc_ts", window))
     return (
         flagged.groupBy(win.alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("num_records_processed"),
-            F.sum(F.when(inc, 1).otherwise(0))
-            .alias("num_records_included"),
-            F.sum(F.when(F.col("excluded"), 1).otherwise(0))
-            .alias("num_records_filtered"))
+        .agg(*stats_aggregation(cfg))
         .select(F.col("w.start").alias("window_start"),
                 "num_records_processed", "num_records_included",
                 "num_records_filtered")

@@ -39,6 +39,7 @@ import re
 import zlib
 from collections.abc import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .schema import PAGES_SCHEMA
@@ -54,29 +55,42 @@ _RE_UNIVERSAL_BLANK = re.compile(
     rb"(?:\r\n|\r(?!\n)|\n)(?:\r\n|\r(?!\n)|\n)")
 
 
+# Input slice fed to the decompressor per call: a member's decoder
+# reads at most one chunk past the member's end, so splitting an
+# archive costs O(archive) instead of copying the whole remainder
+# once per member.
+_GZIP_CHUNK = 16 * 1024
+
+
 def split_gzip_members(data: bytes):
     """Yield (offset, compressed_size, decompressed_bytes) per gzip
     member; empty members are yielded with empty payload.  A corrupt
-    member yields a final ``(offset, remaining_bytes, None)`` marker —
-    payload None — so callers can distinguish a truncated/corrupt
-    archive from a short one (the reference raises ParseError on
-    warctools stream errors, cdx_writer.py:826-827; silent truncation
-    would make a corrupt archive indistinguishable from a complete
-    index)."""
+    or truncated member (no end-of-stream marker before the data ends)
+    yields a final ``(offset, remaining_bytes, None)`` marker — payload
+    None — so callers can distinguish a truncated/corrupt archive from
+    a short one (the reference raises ParseError on warctools stream
+    errors, cdx_writer.py:826-827; silent truncation would make a
+    corrupt archive indistinguishable from a complete index)."""
+    view = memoryview(data)
     pos = 0
     n = len(data)
     while pos < n:
         d = zlib.decompressobj(wbits=31)
+        out = []
+        fed = pos
         try:
-            out = d.decompress(data[pos:])
+            while not d.eof and fed < n:
+                chunk = view[fed:fed + _GZIP_CHUNK]
+                out.append(d.decompress(chunk))
+                fed += len(chunk)
         except zlib.error:
             yield pos, n - pos, None
             return
-        consumed = n - pos - len(d.unused_data)
-        if consumed <= 0:
+        if not d.eof:
             yield pos, n - pos, None
             return
-        yield pos, consumed, out
+        consumed = fed - pos - len(d.unused_data)
+        yield pos, consumed, b"".join(out)
         pos += consumed
 
 
@@ -416,23 +430,23 @@ def archive_to_rows(path: str, data: bytes) -> Iterator[dict]:
             yield _spill_oversized(row)
 
 
+def _warc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel: binaryFile (path, content) rows -> pages rows.
+    Module-level so it pickles by reference, not by value."""
+    cols = [f.name for f in PAGES_SCHEMA.fields]
+    for pdf in batches:
+        rows = []
+        for p, content in zip(pdf["path"], pdf["content"]):
+            rows.extend(archive_to_rows(p, bytes(content)))
+        yield pd.DataFrame({c: [r[c] for r in rows] for c in cols})
+
+
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Distributed WARC scan: one task per archive file."""
-    import pandas as pd
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PAGES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(archive_to_rows(p, bytes(content)))
-            yield pd.DataFrame(
-                {c: [r[c] for r in rows] for c in cols})
-
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{warc,arc,warc.gz,arc.gz}")
         .load(path)
         .select("path", "content")
-        .mapInPandas(kernel, schema=PAGES_SCHEMA)
+        .mapInPandas(_warc_kernel, schema=PAGES_SCHEMA)
     )

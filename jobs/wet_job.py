@@ -14,8 +14,10 @@ Ship it the way the north star specifies::
         jobs/wet_job.py pages.parquet out_wet/ \
         --stats-file wet_stats.json
 
-``--incremental LANDING CKPT`` switches to the Structured Streaming
-drain (availableNow + checkpoint): rerun after new archives land to
+``wet_job.py LANDING out_wet/ --incremental CKPT`` switches to the
+Structured Streaming drain (availableNow + checkpoint dir ``CKPT``;
+the ``pages`` positional is then the landing directory): rerun after
+new archives land to
 convert only the delta with exactly-once bookkeeping — the
 content-derived record ids make retried micro-batches byte-identical.
 """

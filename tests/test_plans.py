@@ -618,3 +618,41 @@ def test_kn_counts_exchange_inventory(spark):
     # type aggs + the join alignments — bounded, never corpus-keyed
     # beyond the documented set
     assert plan.count("Exchange hashpartitioning") <= 8, plan
+
+
+def test_sorted_sink_plan_rebuild_reuses_projection(spark, monkeypatch):
+    """The CDX projection's Columns are built once per (config,
+    SparkContext): building the sorted sink's plan again for the same
+    config only applies them, a few hundred py4j gateway commands
+    where a fresh build sends thousands.  No Spark action runs."""
+    from py4j.clientserver import ClientServerConnection
+    from pyspark import SparkContext
+
+    from cdx_writer_spark import job, sink
+
+    pages = spark.createDataFrame(bulk_rows(20), PAGES_SCHEMA)
+    cfg = CDXConfig(all_records=True)
+
+    def build():
+        lines, _, _ = sink._lines_with_observation(pages, cfg)
+        return lines.select("cdx_line").orderBy("cdx_line")
+
+    build()
+    sent = [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert 0 < sent[0] <= 400
+
+    # pandas-UDF Columns capture their SparkContext: a new context is
+    # a new memo key, so a restarted session rebuilds the projection
+    key = job.projection_key(cfg)
+    assert job.projection_key(cfg) == key
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    assert job.projection_key(cfg) != key

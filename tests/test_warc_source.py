@@ -220,3 +220,55 @@ def test_corrupt_gzip_member_raises(tmp_path):
     assert members[-1][2] is None  # corruption marker
     with pytest.raises(ValueError, match="corrupt gzip member"):
         list(warc_source.archive_to_rows("bad.warc.gz", data))
+
+
+def test_truncated_final_gzip_member_raises():
+    """A final member cut before its end-of-stream marker is corrupt,
+    not a short record: the split marks it and the archive raises."""
+    import pytest
+
+    first, second = gzip.compress(RECORDS[0]), gzip.compress(RECORDS[1])
+    data = first + second[:len(second) // 2]
+    members = list(warc_source.split_gzip_members(data))
+    assert [m[:2] for m in members] == [
+        (0, len(first)), (len(first), len(data) - len(first))]
+    assert members[0][2] == RECORDS[0]
+    assert members[-1][2] is None  # corruption marker
+    with pytest.raises(ValueError, match="corrupt gzip member"):
+        list(warc_source.archive_to_rows("cut.warc.gz", data))
+
+
+def test_gzip_split_is_linear(monkeypatch):
+    """Each member's decoder reads at most one chunk past the member's
+    end, so the bytes fed to all decoders stay within the archive size
+    plus one chunk per member (a split that hands each decoder the whole
+    remainder is quadratic in the member count), and the yields are
+    unchanged."""
+    import zlib
+
+    members = [gzip.compress(RECORDS[i % len(RECORDS)] + b"%d" % i)
+               for i in range(300)]
+    members.insert(7, gzip.compress(b""))  # tolerated empty member
+    members.append(gzip.compress(b"x" * (5 * warc_source._GZIP_CHUNK)))
+    data = b"".join(members)
+
+    fed = [0]
+    real = zlib.decompressobj
+
+    class Counting:
+        def __init__(self, *args, **kwargs):
+            self._d = real(*args, **kwargs)
+
+        def decompress(self, chunk):
+            fed[0] += len(chunk)
+            return self._d.decompress(chunk)
+
+        def __getattr__(self, name):
+            return getattr(self._d, name)
+
+    monkeypatch.setattr(warc_source.zlib, "decompressobj", Counting)
+    got = list(warc_source.split_gzip_members(data))
+    offsets = [sum(map(len, members[:i])) for i in range(len(members))]
+    assert got == [(off, len(m), gzip.decompress(m))
+                   for off, m in zip(offsets, members)]
+    assert fed[0] <= len(data) + len(members) * warc_source._GZIP_CHUNK

@@ -136,3 +136,25 @@ def test_write_wet_per_file_layout_and_order(spark, tmp_path):
         nums = [int(u.rsplit("/f", 1)[1]) for u in uris]
         assert nums == sorted(nums)
         assert len(nums) == 3
+
+
+def test_write_wet_orders_records_of_one_member(spark, tmp_path):
+    """Records re-split from one multi-record gzip member share the
+    member's offset; the sink orders them by the record ordinal, the
+    rest of the file-order key, whatever order they arrive in."""
+    rows = _finalize([
+        _row(f"http://wet.example.com/m{i}",
+             html=http_block(payload=f"<html><body>m {i}</body></html>"
+                             .encode()),
+             warc_file="single.warc.gz")
+        for i in range(5)])
+    for r in rows:
+        r["offset"] = 0
+    df = spark.createDataFrame(rows[::-1], PAGES_SCHEMA).repartition(3)
+    out = str(tmp_path / "wet")
+    write_wet(df, out)
+    d = os.path.join(out, "warc_file=single.warc.gz")
+    text = "".join(open(os.path.join(d, p)).read()
+                   for p in sorted(os.listdir(d)) if p.startswith("part-"))
+    uris = re.findall(r"WARC-Target-URI: (\S+)", text)
+    assert uris == [f"http://wet.example.com/m{i}" for i in range(5)]
