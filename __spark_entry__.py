@@ -3,7 +3,7 @@
 ``entry(spark)`` runs the flagship CDX-line query at sf0.001;
 ``queries()`` exposes one callable per implemented operator family from
 SURVEY.md §2 (CDX indexing engine) plus the training-data-pipeline
-operators (dedup / similarity / text stats / multimodal);
+operators (dedup / text stats / multimodal);
 ``oracle_sql()`` gives the independent DuckDB recomputation for every
 SQL-expressible query.
 
@@ -27,8 +27,7 @@ from cdx_writer_spark.job import (
     CDXConfig, cdx_flagged, cdx_lines, stats_aggregation,
 )
 from cdx_writer_spark.functions import (audio, decontam, dedup, extract,
-                                        multimodal, pii, similarity,
-                                        textstats)
+                                        multimodal, pii, textstats)
 from cdx_writer_spark.webview import ORACLE_PAGES_CTE, pages_from_documents
 
 # Format without the k (checksum) field: the flagship keeps the
@@ -814,53 +813,6 @@ def q_corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.domain_cap(docs, "domain", cap=5)
 
 
-def q_corpus_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable HyperLogLog cardinality sketch over the document
-    texts — the one-pass distinct counter a 10^10-URL crawl uses
-    where exact countDistinct would shuffle the key set.  Registers
-    come from md5 (bucket = top 8 bits of a 60-bit hash, rank via
-    the exact length(bin(w)) identity) and the harmonic sum is an
-    exact scaled BIGINT, so the oracle reproduces the register state
-    and the estimate bit-for-bit."""
-    from cdx_writer_spark.functions import sketch
-
-    return sketch.hll_count(_docs(spark, sf_dir), "text")
-
-
-def q_hll_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPED HyperLogLog: one sketch per host (distinct document
-    texts per planted doc_id%37 host) — the per-host distinct-URL
-    telemetry a crawl dashboard reads.  The mergeable-sketch property
-    is the skew story: a host with 10^9 pages contributes the same
-    ≤256 register rows to the shuffle as a host with 10^3 (map-side
-    partial max on (host, bucket)).  Same exact-integer register
-    arithmetic as ``corpus_hll``, so the oracle reproduces every
-    per-host register state and estimate bit-for-bit."""
-    from cdx_writer_spark.functions import sketch
-
-    docs = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 37).alias("host"), "text")
-    return sketch.hll_count_grouped(docs, "host", "text")
-
-
-def q_cms_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min heavy-hitter telemetry: per-host frequency estimates
-    from a 4×256 mergeable sketch (functions/sketch.py: cms_table /
-    cms_estimate) — the bounded-memory hot-host detector a crawl
-    runs where an exact per-key count would shuffle the full key set.
-    md5-salted row hashes make the table portable, so the oracle
-    rebuilds the SAME sketch and the SAME min-read in SQL; at 37
-    planted hosts and width 256 the estimates also equal the exact
-    counts (collision-free), which the oracle's reconstruction
-    confirms value-for-value."""
-    from cdx_writer_spark.functions import sketch
-
-    hosts = _docs(spark, sf_dir).select(
-        (F.col("doc_id") % 37).cast("string").alias("host"))
-    table = sketch.cms_table(hosts, "host")
-    return sketch.cms_estimate(table, hosts.distinct(), "host")
-
-
 def q_fuzzy_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance-1 fuzzy matching (functions/fuzzy.py) over the
     planted host names — the typo-site / off-by-one-id detector
@@ -912,27 +864,6 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.col("doc_id") % 7 == 0)
 
 
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the planted-clone view (every 10th vector cloned
-    at exactly 2x, cosine exactly 1.0, natural max pairwise cosine
-    ≤ 0.61): broadcast-codebook cell assignment (centroids = base
-    vec_id % 37 == 0), one survivor (min id) per within-cell
-    cosine ≥ 0.95 connected group.  Expected outcome: exactly the
-    clones drop, each pointing at its base as keeper — the oracle
-    re-derives assignment, the pair graph, and the groups (recursive
-    min-reachable closure) in SQL."""
-    emb = _table(spark, sf_dir, "embeddings")
-    clones = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: (x * 2).cast("float"))
-        .alias("embedding"))
-    aug = emb.select("vec_id", "embedding").unionByName(clones)
-    cents = emb.filter(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").cast("long").alias("cid"),
-        F.col("embedding").alias("cvec"))
-    return similarity.semdedup(aug, threshold=0.95, codebook=cents)
-
-
 def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (rolling-hash) document fingerprints — MOSS-style;
     the oracle re-derives k-gram hashing, the sliding min-window and
@@ -947,102 +878,6 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).select(
         "doc_id", both.alias("_b")).select(
         "doc_id", "_b.n_fingerprints", "_b.fingerprints_csv")
-
-
-# --- training-data pipeline: similarity search --------------------------------
-
-def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return similarity.cosine_topk(emb, queries, k=5)
-
-
-def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucketed ANN top-k with md5-derived portable hyperplanes: the
-    48-bit weights are exact binary doubles in both engines, so the
-    DuckDB oracle reproduces the buckets (hence the candidate sets and
-    the ranking) bit-for-bit — the approximate pipeline itself is
-    hash-checked, with cosine_topk as the exhaustive baseline."""
-    emb = _table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    # 8 planes: ~2.3 avg bucket occupancy on the sf0.01 table, so the
-    # result exercises real candidate sets, not just self-matches
-    return similarity.lsh_bucket_topk(emb, queries, k=5, n_planes=8,
-                                      portable=True)
-
-
-def q_similarity_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe bucketed ANN (n_probes=2): each query also probes
-    the bucket reached by flipping its lowest-|margin| sign bit.  With
-    the portable hyperplanes the plane dots are exact doubles in both
-    engines, so the DuckDB oracle re-derives the margin argmin, the
-    flipped bucket, the widened candidate set and the ranking
-    bit-for-bit."""
-    emb = _table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return similarity.lsh_bucket_topk(emb, queries, k=5, n_planes=8,
-                                      portable=True, n_probes=2)
-
-
-def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN top-k with the deterministic modulo codebook
-    (centroids = vec_id % 37 == 0) — the SQL oracle replicates the
-    whole algorithm: cell assignment (argmax cosine, ties to lower
-    centroid id), nprobe=2 query cells, exact re-rank."""
-    emb = _table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return similarity.ivf_topk(emb, queries, k=5, centroid_stride=37,
-                               nprobe=2)
-
-
-def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ-ADC approximate top-k (m=8 subspaces, ksub=16, deterministic
-    ``vec_id % 31`` codebook) — the SQL oracle re-derives the whole
-    pipeline: per-subspace argmin-L2 code assignment (round-9 grid,
-    ties to lower rank), the per-query m x ksub inner-product lookup
-    table, the ordered code-indexed ADC sum, and the ranking."""
-    emb = _table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return similarity.pq_topk(emb, queries, k=5, m=8, ksub=16, stride=31)
-
-
-def q_similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ (Faiss-IVFADC-shaped, no residuals): the vec_id % 37
-    coarse cells restrict the scan to nprobe=2 cells per query, PQ-ADC
-    (m=8, ksub=16, vec_id % 31 codebook) ranks within them.  The SQL
-    oracle composes the similarity_ivf cell CTEs with the
-    similarity_pq code/LUT CTEs and re-derives the cell-restricted ADC
-    sums; nprobe >= n_cells degenerating to exactly pq_topk is
-    pytest-gated (`tests/test_similarity_quality.py`)."""
-    emb = _table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return similarity.ivfpq_topk(emb, queries, k=5, m=8, ksub=16,
-                                 pq_stride=31, centroid_stride=37,
-                                 nprobe=2)
-
-
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs over a view with PLANTED near-duplicates:
-    every 10th vector gets a clone (id + 10M) scaled by exactly 2.0 —
-    doubling is lossless in binary float, so each planted pair has
-    cosine exactly 1.0 in both engines and lands in identical LSH
-    buckets (recall 1 for the planted tier, asserted in
-    tests/test_similarity_quality.py).  The testdata's natural max
-    pairwise cosine is ≤ 0.61 at every SF, so the 0.95 threshold admits
-    exactly the planted pairs and the DuckDB all-pairs oracle matches."""
-    emb = _table(spark, sf_dir, "embeddings")
-    clones = emb.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: (x * 2).cast("float"))
-        .alias("embedding"))
-    aug = emb.select("vec_id", "embedding").unionByName(clones)
-    return similarity.embedding_near_dup_pairs(aug, threshold=0.95)
 
 
 # --- training-data pipeline: multimodal plumbing ------------------------------
@@ -1874,9 +1709,8 @@ def q_events_distinct_users(spark: SparkSession, sf_dir: str
     event type.  Catalyst expands the mixed distinct/non-distinct
     aggregate into its two-phase Expand + partial/final shape
     automatically (the (type, user) dedup rides the same exchange as
-    the final agg) — the exact twin of the HLL sketch queries
-    (hll_hosts / corpus_hll), which remain the documented 100 TB
-    default when the exact expansion is too expensive."""
+    the final agg).  At 100 TB an approximate distinct count is the
+    documented fallback when the exact expansion is too expensive."""
     ev = _table(spark, sf_dir, "events")
     return (ev.groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("n_users"),
@@ -2311,73 +2145,6 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       n_partitions=8, capacity=256)
 
 
-def q_corpus_size_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable HDR-histogram quantile sketch (functions/sketch.py:
-    quantile_sketch) — p50/p90/p99 document sizes without a global
-    sort: exponent+4-mantissa-bit integer buckets (no float log, the
-    HLL bin() trick), counts mergeable by addition, estimate = the
-    bucket lower bound (guaranteed within 1/16 relative).  The
-    oracle reruns the identical integer spec in SQL."""
-    from cdx_writer_spark.functions import sketch
-
-    docs = _table(spark, sf_dir, "documents")
-    return sketch.quantile_sketch(docs, "n_chars",
-                                  percentiles=(50, 90, 99))
-
-
-def q_lang_size_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPED quantile sketch (functions/sketch.py:
-    quantile_sketch_grouped) — per-language p50/p90/p99 document
-    sizes, the realized 100 TB swap for exact grouped percentiles:
-    one mergeable HDR sketch per group, every group capped at the
-    bucket-table size in the shuffle (the grouped-HLL skew story).
-    Oracle = the identical integer spec partitioned by lang."""
-    from cdx_writer_spark.functions import sketch
-
-    docs = _table(spark, sf_dir, "documents")
-    return sketch.quantile_sketch_grouped(
-        docs, "lang", "n_chars", percentiles=(50, 90, 99))
-
-
-def q_host_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT two-pass heavy hitters (functions/sketch.py:
-    heavy_hitters) — every host above a 1/9 frequency share, with its
-    exact count, over a planted geometric host skew
-    (host-j = bit-length of doc_id%4096+1, so host-12 takes ~50% of
-    the corpus — the crawl hot-host shape).  Pass 1 is a map-only
-    Misra-Gries candidate sweep (≤ k counters per task); pass 2
-    re-counts with the candidate set broadcast, so no shuffle ever
-    carries the full distinct-host set — the plain
-    ``groupBy(host).count()`` the oracle runs would.  Output is
-    partitioning-independent because only pass-2's exact counts
-    decide."""
-    from cdx_writer_spark.functions import sketch
-
-    docs = _table(spark, sf_dir, "documents")
-    hosts = docs.select(F.concat(
-        F.lit("host-"),
-        F.length(F.bin((F.col("doc_id") % 4096) + 1)).cast("string")
-    ).alias("host"))
-    return sketch.heavy_hitters(hosts, "host", k=8)
-
-
-def q_kmv_value_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV distinct-set overlap (functions/sketch.py: kmv_overlap) —
-    how many distinct value-cent buckets two event streams share
-    (event_id parity split), from two 64-row sketches instead of a
-    distinct-set exchange: the "how many distinct URLs do two crawl
-    snapshots share" estimator at snapshot scale.  Integer anchors
-    (k-th hash, match count) are exact md5 arithmetic; the oracle
-    re-derives the same k-minima and estimates bit-for-bit."""
-    from cdx_writer_spark.functions import sketch
-
-    ev = _table(spark, sf_dir, "events").withColumn(
-        "bucket", F.floor(F.col("value") * 100).cast("long"))
-    df_a = ev.filter(F.col("event_id") % 2 == 0)
-    df_b = ev.filter(F.col("event_id") % 2 == 1)
-    return sketch.kmv_overlap(df_a, "bucket", df_b, "bucket")
-
-
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT directional n-gram containment pairs
     (functions/dedup.py: ngram_containment_pairs) — |A∩B|/|A| >= 1/2,
@@ -2420,25 +2187,6 @@ def q_url_param_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat(F.lit("c"), cid.cast("string"))))
     pages = docs.select(url.alias("url"), digest.alias("digest"))
     return dust.insignificant_params(pages)
-
-
-def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) layout stats (functions/layout.py) — events
-    bucketed on (user, price-cent) dimensions, interleaved into a
-    Morton key, ntile'd into 16 files; output is each file's parquet-
-    footer-style min/max box per dimension — the stats a 100 TB scan
-    planner prunes on (a point query on EITHER dimension overlaps
-    ~sqrt(16) boxes; one-dimension sorts force full reads on the other
-    dimension, pytest-gated).  The oracle re-derives the interleave as
-    a sum of disjoint shifted bits and the identical ANSI ntile."""
-    from cdx_writer_spark.functions import layout
-
-    ev = _table(spark, sf_dir, "events").select(
-        (F.col("user_id") % 256).alias("u"),
-        (F.floor(F.col("value") * 100).cast("long") % 256).alias("p"),
-        "event_id")
-    return layout.zorder_file_stats(ev, ["u", "p"], "event_id",
-                                    bits=8, n_files=16)
 
 
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2553,40 +2301,6 @@ _DHASH_CTES = (
     "CASE WHEN cs[(i // 8) * 9 + (i % 8) + 1] "
     "> cs[(i // 8) * 9 + (i % 8) + 2] THEN '1' ELSE '0' END), "
     "'string_agg', '') AS bits FROM cells)")
-
-
-# Shared host/eTLD+1 oracle CTEs: per-doc host view (hv), distinct
-# hosts, the VALUES rule table and the longest-match winner (w) — the
-# same candidate/longest-match algorithm as urlstats.registrable_domain
-# run in SQL.
-_HOST_DOMAIN_CTES = (
-    "hv AS (SELECT doc_id, n_chars, CASE doc_id % 6 "
-    "WHEN 0 THEN 'www.site' || (doc_id % 40) || '.com' "
-    "WHEN 1 THEN 'site' || (doc_id % 40) || '.co.uk' "
-    "WHEN 2 THEN 'a.b.site' || (doc_id % 40) || '.org.uk' "
-    "WHEN 3 THEN 'user' || (doc_id % 40) || '.github.io' "
-    "WHEN 4 THEN 'site' || (doc_id % 40) || '.internal' "
-    "ELSE 'deep.cdn.site' || (doc_id % 40) || '.com.au' END "
-    "AS host FROM documents), "
-    "hosts AS (SELECT DISTINCT host FROM hv), "
-    "rules(suffix, rk) AS (VALUES ('ac.uk', 2), ('au', 1), "
-    "('blogspot.com', 2), ('co.jp', 2), ('co.uk', 2), "
-    "('com', 1), ('com.au', 2), ('de', 1), ('edu', 1), "
-    "('fr', 1), ('github.io', 2), ('gov', 1), ('gov.uk', 2), "
-    "('io', 1), ('jp', 1), ('net', 1), ('net.au', 2), "
-    "('org', 1), ('org.uk', 2), ('uk', 1)), "
-    "parts AS (SELECT host, string_split(host, '.') AS p "
-    "FROM hosts), "
-    "cand AS (SELECT host, p, CAST(t.k AS INTEGER) AS k "
-    "FROM parts, unnest([1, 2]) AS t(k) "
-    "WHERE t.k <= len(p) - 1), "
-    "m AS (SELECT c.host, c.k, r.suffix, "
-    "array_to_string(list_slice(c.p, len(c.p) - c.k, "
-    "len(c.p)), '.') AS dom FROM cand c JOIN rules r "
-    "ON r.suffix = array_to_string(list_slice(c.p, "
-    "len(c.p) - c.k + 1, len(c.p)), '.') AND r.rk = c.k), "
-    "w AS (SELECT *, row_number() OVER (PARTITION BY host "
-    "ORDER BY k DESC) AS rn FROM m)")
 
 
 # The video-dHash oracle: the image-dHash arithmetic per frame f with
@@ -2770,21 +2484,6 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.elect_canonical(pairs, attrs, id_col="doc_id")
 
 
-def q_host_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pay-level-domain extraction (urlstats.registrable_domain):
-    longest-suffix match against a broadcast public-suffix-style rule
-    table over candidate last-k-label slices — the grouping key
-    per-site crawl policy wants (github.io private registry beats io;
-    co.uk/org.uk beat uk; unknown TLDs yield NULL).  Oracle = the
-    same candidate/longest-match algorithm in SQL over a VALUES rule
-    table."""
-    from cdx_writer_spark.functions import urlstats
-
-    docs = _table(spark, sf_dir, "documents")
-    return urlstats.registrable_domain(
-        docs.select(_doc_host_col().alias("host")))
-
-
 def _doc_host_col() -> F.Column:
     """The synthetic per-doc host (six shapes: www-prefixed gTLD,
     second-level ccTLDs, a private-registry user site, an unknown TLD,
@@ -2802,30 +2501,6 @@ def _doc_host_col() -> F.Column:
                   F.concat(F.lit("site"), n, F.lit(".internal")))
             .otherwise(F.concat(F.lit("deep.cdn.site"), n,
                                 F.lit(".com.au"))))
-
-
-def q_site_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-SITE corpus rollup — the curation unit domain-level quality
-    filtering actually wants (C4-style domain blocklists, per-site
-    caps): hosts dedupe FIRST, the eTLD+1 map computes once per
-    distinct host (urlstats.registrable_domain) and BROADCASTS back
-    onto the page rows, then one grouped aggregation keyed by
-    coalesce(registrable_domain, host).  At 100 TB the explode runs
-    per host (10^7), the page-side cost is one broadcast-join
-    projection + a map-side-combined agg.  Oracle = the same
-    longest-match CTEs + join + GROUP BY."""
-    from cdx_writer_spark.functions import urlstats
-
-    docs = _table(spark, sf_dir, "documents").select(
-        "doc_id", "n_chars", _doc_host_col().alias("host"))
-    domains = urlstats.registrable_domain(docs.select("host"))
-    joined = docs.join(F.broadcast(domains), "host")
-    site = F.coalesce("registrable_domain", F.col("host"))
-    return (joined.groupBy(site.alias("site"))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.countDistinct("host").alias("n_hosts"),
-                 F.sum("n_chars").alias("sum_chars"),
-                 F.max("n_chars").alias("max_chars")))
 
 
 def _dhash_png_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3144,17 +2819,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is deliberate (round-4 VERDICT ask #5): a capped
-    # driver run samples from the FRONT, so never-driver-sampled
-    # queries lead — this round's new five first, then the 15 with no
-    # r04 CORRECTNESS row (the 5 never-sampled ones, then the 10
-    # whose last driver row is r03).
+    # A capped run of the registry samples from the front of this
+    # dict, so queries without a recent recorded run come first.
     return {
-        # lead with the queries that lack a fresh driver
-        # CORRECTNESS row, newest first: this final session's
-        # eight additions, then the five r04 never sampled, then
-        # the block last sampled in r03 — a capped driver run
-        # covers them before re-confirming recorded rows
         "host_trustrank": q_host_trustrank,
         "host_communities": q_host_communities,
         "wet_records": q_wet_records,
@@ -3175,8 +2842,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdx_index_merge": q_cdx_index_merge,
         "events_json": q_events_json,
         "dedup_canonical": q_dedup_canonical,
-        "host_domains": q_host_domains,
-        "site_quality": q_site_quality,
         "cdx_collapse": q_cdx_collapse,
         "orders_above_avg": q_orders_above_avg,
         "events_retention": q_events_retention,
@@ -3206,13 +2871,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_budget": q_crawl_budget,
         "recrawl_tiers": q_recrawl_tiers,
         "cdx_roundtrip": q_cdx_roundtrip,
-        "corpus_size_quantiles": q_corpus_size_quantiles,
-        "lang_size_quantiles": q_lang_size_quantiles,
-        "host_heavy_hitters": q_host_heavy_hitters,
-        "kmv_value_overlap": q_kmv_value_overlap,
         "dedup_containment": q_dedup_containment,
         "url_param_rules": q_url_param_rules,
-        "zorder_layout": q_zorder_layout,
         "phrase_search": q_phrase_search,
         "warc_revisit_dedup": q_warc_revisit_dedup,
         "cdx_closest": q_cdx_closest,
@@ -3237,10 +2897,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "agg_grouping_sets": q_agg_grouping_sets,
         "orders_rank_dist": q_orders_rank_dist,
         "host_pagerank": q_host_pagerank,
-        "hll_hosts": q_hll_hosts,
         "events_tumbling": q_events_tumbling,
         "events_funnel": q_events_funnel,
-        "cms_hosts": q_cms_hosts,
         "customer_distribution": q_customer_distribution,
         "events_rolling": q_events_rolling,
         "fuzzy_hosts": q_fuzzy_hosts,
@@ -3281,18 +2939,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_perplexity": q_quality_perplexity,
         "corpus_chunks": q_corpus_chunks,
         "corpus_mix": q_corpus_mix,
-        "corpus_hll": q_corpus_hll,
         "dsir_select": q_dsir_select,
-        "semantic_dedup": q_semantic_dedup,
         "text_tfidf": q_text_tfidf,
         "text_winnowing": q_text_winnowing,
-        "similarity_topk": q_similarity_topk,
-        "similarity_lsh": q_similarity_lsh,
-        "similarity_lsh_probe": q_similarity_lsh_probe,
-        "similarity_ivf": q_similarity_ivf,
-        "similarity_pq": q_similarity_pq,
-        "similarity_ivfpq": q_similarity_ivfpq,
-        "embedding_near_dup": q_embedding_near_dup,
         "multimodal_meta": q_multimodal_meta,
         "audio_features": q_audio_features,
         "gif_frames": q_gif_frames,
@@ -3690,99 +3339,6 @@ _SIMHASH_CTE = (
     "AS simhash FROM hs)")
 
 
-def _hex48_sql(h_sql: str) -> str:
-    """Integer value of the first 12 hex chars of `h_sql` (a 48-bit
-    value, exact in a double) — nibble-by-nibble strpos lookup, powers
-    of 16 as exact double literals."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr({h_sql}, {j + 1}, 1)) - 1) "
-        f"* {16 ** (11 - j)}.0"
-        for j in range(12)]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _dots_sql(v: str, n_planes: int = 8) -> str:
-    """Per-plane signed dot products of FLOAT[] column `v` against the
-    portable md5-derived hyperplanes — mirrors
-    similarity._plane_dots_col(portable=True): weight = 48-bit integer
-    / 2^48 - 0.5 (exact doubles in both engines), left-fold sum."""
-    h = "md5(p::VARCHAR || ',' || d::VARCHAR)"
-    w = f"({_hex48_sql(h)} / 281474976710656.0 - 0.5)"
-    dot = (f"list_aggregate(list_transform(range(0, len({v})), d -> "
-           f"CAST({v}[d + 1] AS DOUBLE) * {w}), 'sum')")
-    return f"list_transform(range(0, {n_planes}), p -> {dot})"
-
-
-def _bucket_sql(v: str, n_planes: int = 8) -> str:
-    """The portable hyperplane bucket of FLOAT[] column `v` — mirrors
-    similarity.hyperplane_bucket_col(portable=True): sign-bit string
-    of the plane dots (see :func:`_dots_sql`)."""
-    return (f"array_to_string(list_transform({_dots_sql(v, n_planes)}, "
-            "x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '')")
-
-
-def _cos_sql(a: str, b: str) -> str:
-    """DuckDB cosine-similarity expression between two FLOAT[] columns
-    (mirrors similarity.cosine_col: everything cast to DOUBLE)."""
-    return (
-        f"(list_aggregate(list_transform(list_zip({a}, {b}), "
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum') "
-        f"/ (sqrt(list_aggregate(list_transform({a}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) "
-        f"* sqrt(list_aggregate(list_transform({b}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))))")
-
-
-# IVF coarse-cell CTEs (c/cell_scores/asg/qcells) and PQ
-# code/LUT CTEs (js/cent/dists/codes/lut) — shared verbatim by
-# similarity_ivf, similarity_pq and their composition
-# similarity_ivfpq so the three oracles cannot drift.
-_IVF_CTES = (
-    "c AS (SELECT vec_id AS cid, embedding AS cvec "
-            "FROM embeddings WHERE vec_id % 37 = 0), "
-            "cell_scores AS (SELECT e.vec_id, e.embedding, c.cid, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY e.vec_id "
-            f"ORDER BY round({_cos_sql('e.embedding', 'c.cvec')}, 9) "
-            "DESC, c.cid ASC) AS INTEGER) AS crn "
-            "FROM embeddings e CROSS JOIN c), "
-            "asg AS (SELECT vec_id, embedding, cid AS cell "
-            "FROM cell_scores WHERE crn = 1), "
-            "qcells AS (SELECT vec_id AS q_id, embedding AS q_vec, "
-            "cid AS cell FROM cell_scores "
-            "WHERE vec_id < 3 AND crn <= 2), "
-)
-
-_PQ_CTES = (
-    "js AS (SELECT unnest(range(0,8)) AS j), "
-            "cent AS (SELECT "
-            "CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) "
-            "AS c, list_transform(embedding, x -> CAST(x AS DOUBLE)) "
-            "AS cvec FROM embeddings WHERE vec_id % 31 = 0 "
-            "QUALIFY ROW_NUMBER() OVER (ORDER BY vec_id) <= 16), "
-            "dists AS (SELECT e.vec_id, js.j, cent.c, "
-            "round(list_aggregate(list_transform(list_zip("
-            "e.embedding[CAST(js.j*8+1 AS BIGINT):"
-            "CAST(js.j*8+8 AS BIGINT)], "
-            "cent.cvec[CAST(js.j*8+1 AS BIGINT):"
-            "CAST(js.j*8+8 AS BIGINT)]), "
-            "x -> (CAST(x[1] AS DOUBLE) - x[2]) "
-            "* (CAST(x[1] AS DOUBLE) - x[2])), 'sum'), 9) AS dist "
-            "FROM embeddings e CROSS JOIN js CROSS JOIN cent), "
-            "codes AS (SELECT vec_id, j, c FROM dists "
-            "QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j "
-            "ORDER BY dist, c) = 1), "
-            "lut AS (SELECT q.vec_id AS q_id, js.j, cent.c, "
-            "round(list_aggregate(list_transform(list_zip("
-            "q.embedding[CAST(js.j*8+1 AS BIGINT):"
-            "CAST(js.j*8+8 AS BIGINT)], "
-            "cent.cvec[CAST(js.j*8+1 AS BIGINT):"
-            "CAST(js.j*8+8 AS BIGINT)]), "
-            "x -> CAST(x[1] AS DOUBLE) * x[2]), 'sum'), 9) AS ip "
-            "FROM embeddings q CROSS JOIN js CROSS JOIN cent "
-            "WHERE q.vec_id < 3), "
-)
-
-
 def oracle_sql() -> dict[str, str]:
     line = (
         "surt || ' ' || date14 || ' ' || url || ' ' || "
@@ -3953,26 +3509,6 @@ def oracle_sql() -> dict[str, str]:
             "best.curl AS canonical_url, "
             "lab.id = best.cid AS is_canonical "
             "FROM lab JOIN best ON best.c = lab.c"),
-        # eTLD+1: the same candidate-slice / longest-match algorithm
-        # over a VALUES rule table
-        "host_domains": (
-            "WITH " + _HOST_DOMAIN_CTES + " "
-            "SELECT h.host, w.suffix AS public_suffix, "
-            "w.dom AS registrable_domain FROM hosts h "
-            "LEFT JOIN w ON w.host = h.host AND w.rn = 1"),
-        # per-site rollup: the distinct-host domain map joined back
-        # onto the page rows, sites keyed by eTLD+1 (host fallback)
-        "site_quality": (
-            "WITH " + _HOST_DOMAIN_CTES + ", "
-            "dom AS (SELECT h.host, w.dom FROM hosts h "
-            "LEFT JOIN w ON w.host = h.host AND w.rn = 1) "
-            "SELECT COALESCE(dom.dom, hv.host) AS site, "
-            "COUNT(*) AS n_docs, "
-            "COUNT(DISTINCT hv.host) AS n_hosts, "
-            "CAST(SUM(hv.n_chars) AS BIGINT) AS sum_chars, "
-            "MAX(hv.n_chars) AS max_chars "
-            "FROM hv JOIN dom ON dom.host = hv.host "
-            "GROUP BY 1"),
         # engine's union-tag decomposition replaces — same rows or bust
         "cdx_snapshot_delta": (
             "WITH old AS (SELECT 'com,site' || (doc_id % 37) || ')/p' "
@@ -4029,93 +3565,6 @@ def oracle_sql() -> dict[str, str]:
             "(ORDER BY score_micro DESC, doc_id) AS INT) AS rank "
             "FROM d) "
             "SELECT * FROM r WHERE rank <= 20"),
-        # HDR quantile sketch: identical integer bucket spec —
-        # len(bin(v)) exponent, 4 mantissa bits, cumulative probe
-        "corpus_size_quantiles": (
-            "WITH vv AS (SELECT greatest(CAST(n_chars AS BIGINT), 0) "
-            "AS v FROM documents), "
-            "e AS (SELECT v, len(bin(v)) - 1 AS e FROM vv), "
-            "bkt AS (SELECT CASE WHEN v < 16 THEN v "
-            "ELSE (e - 4) * 16 + (v >> (e - 4)) END AS b FROM e), "
-            "c AS (SELECT b, COUNT(*) AS cnt FROM bkt GROUP BY b), "
-            "cum AS (SELECT b, SUM(cnt) OVER (ORDER BY b) AS cum, "
-            "SUM(cnt) OVER () AS n FROM c), "
-            "p AS (SELECT * FROM (VALUES (50), (90), (99)) AS t(pct)), "
-            "hit AS (SELECT pct, MIN(b) AS b, MAX(n) AS n "
-            "FROM cum, p WHERE cum * 100 >= n * pct GROUP BY pct) "
-            "SELECT CAST(pct AS INT) AS pct, "
-            "CAST(CASE WHEN b < 16 THEN b "
-            "ELSE ((b % 16) + 16) << (b // 16 - 1) END AS BIGINT) "
-            "AS estimate, CAST(n AS BIGINT) AS n FROM hit"),
-        # grouped HDR sketch: same integer spec, partitioned by lang
-        "lang_size_quantiles": (
-            "WITH vv AS (SELECT lang, "
-            "greatest(CAST(n_chars AS BIGINT), 0) AS v "
-            "FROM documents), "
-            "e AS (SELECT lang, v, len(bin(v)) - 1 AS e FROM vv), "
-            "bkt AS (SELECT lang, CASE WHEN v < 16 THEN v "
-            "ELSE (e - 4) * 16 + (v >> (e - 4)) END AS b FROM e), "
-            "c AS (SELECT lang, b, COUNT(*) AS cnt FROM bkt "
-            "GROUP BY lang, b), "
-            "cum AS (SELECT lang, b, "
-            "SUM(cnt) OVER (PARTITION BY lang ORDER BY b) AS cum, "
-            "SUM(cnt) OVER (PARTITION BY lang) AS n FROM c), "
-            "p AS (SELECT * FROM (VALUES (50), (90), (99)) AS t(pct)), "
-            "hit AS (SELECT lang, pct, MIN(b) AS b, MAX(n) AS n "
-            "FROM cum, p WHERE cum * 100 >= n * pct "
-            "GROUP BY lang, pct) "
-            "SELECT lang, CAST(pct AS INT) AS pct, "
-            "CAST(CASE WHEN b < 16 THEN b "
-            "ELSE ((b % 16) + 16) << (b // 16 - 1) END AS BIGINT) "
-            "AS estimate, CAST(n AS BIGINT) AS n FROM hit"),
-        # exact heavy hitters: the oracle runs the full-cardinality
-        # groupBy the two-pass operator exists to avoid — same exact
-        # answer, structurally different plan
-        "host_heavy_hitters": (
-            "WITH v AS (SELECT 'host-' || "
-            "CAST(length(bin((doc_id % 4096) + 1)) AS VARCHAR) "
-            "AS item FROM documents), "
-            "c AS (SELECT item, COUNT(*) AS cnt FROM v GROUP BY 1), "
-            "t AS (SELECT SUM(cnt) AS n FROM c) "
-            "SELECT item, CAST(cnt AS BIGINT) AS cnt, "
-            "CAST(n AS BIGINT) AS n FROM c, t WHERE cnt * 9 > n"),
-        # KMV overlap re-derived from scratch: same md5-top-60-bit
-        # hash, exact k-minima per side, merged sketch, identical
-        # double arithmetic for the two estimates
-        "kmv_value_overlap": (
-            "WITH ev AS (SELECT event_id, "
-            "CAST(FLOOR(value * 100) AS BIGINT) AS bucket "
-            "FROM events), "
-            "ha AS (SELECT DISTINCT "
-            + _HEXN_SQL(
-                "substr(md5(CAST(bucket AS VARCHAR)), 1, 15)", 15)
-            + " AS h FROM ev WHERE event_id % 2 = 0 "
-            "AND bucket IS NOT NULL), "
-            "hb AS (SELECT DISTINCT "
-            + _HEXN_SQL(
-                "substr(md5(CAST(bucket AS VARCHAR)), 1, 15)", 15)
-            + " AS h FROM ev WHERE event_id % 2 = 1 "
-            "AND bucket IS NOT NULL), "
-            "a AS (SELECT h FROM ha ORDER BY h LIMIT 64), "
-            "b AS (SELECT h FROM hb ORDER BY h LIMIT 64), "
-            "u AS (SELECT DISTINCT h FROM "
-            "((SELECT h FROM a) UNION ALL (SELECT h FROM b)) "
-            "ORDER BY h LIMIT 64), "
-            "f AS (SELECT COUNT(*) AS n_u, MAX(h) AS kth, "
-            "SUM(CASE WHEN h IN (SELECT h FROM a) "
-            "AND h IN (SELECT h FROM b) THEN 1 ELSE 0 END) AS m "
-            "FROM u), "
-            "s AS (SELECT n_u, kth, m, "
-            "round(CASE WHEN n_u < 64 THEN CAST(n_u AS DOUBLE) "
-            "ELSE 63.0 * 1152921504606846976.0 / CAST(kth AS DOUBLE) "
-            "END, 2) AS est_u FROM f) "
-            "SELECT CAST(64 AS BIGINT) AS k, "
-            "CAST(n_u AS BIGINT) AS n_union_sketch, "
-            "CAST(kth AS BIGINT) AS kth_hash, "
-            "CAST(m AS BIGINT) AS matches_both, "
-            "est_u AS est_union, "
-            "round(CAST(m AS DOUBLE) * est_u "
-            "/ least(64, n_u), 2) AS est_intersection FROM s"),
         # directional containment brute-forced: ordered pairs sharing
         # >= 1 shingle (complete superset of any threshold > 0), exact
         # |A∩B|/|A| verify — independent of the prefix filter
@@ -4174,27 +3623,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(n_matched AS BIGINT) AS n_matched, "
             "n_matched * 2 >= n_urls * 1 AS insignificant "
             "FROM c WHERE n_urls >= 2"),
-        # Morton interleave as a sum of disjoint shifted bits (+ == |
-        # on non-overlapping positions), identical ANSI ntile
-        "zorder_layout": (
-            "WITH d AS (SELECT user_id % 256 AS u, "
-            "CAST(FLOOR(value * 100) AS BIGINT) % 256 AS p, "
-            "event_id FROM events), "
-            "z AS (SELECT u, p, event_id, "
-            + " + ".join(
-                f"(((u >> {b}) & 1) << {2 * b}) + "
-                f"(((p >> {b}) & 1) << {2 * b + 1})"
-                for b in range(8))
-            + " AS zv FROM d), "
-            "f AS (SELECT u, p, ntile(16) OVER "
-            "(ORDER BY zv, event_id) AS file_id FROM z) "
-            "SELECT CAST(file_id AS INT) AS file_id, "
-            "CAST(COUNT(*) AS BIGINT) AS n_rows, "
-            "CAST(MIN(u) AS BIGINT) AS min_u, "
-            "CAST(MAX(u) AS BIGINT) AS max_u, "
-            "CAST(MIN(p) AS BIGINT) AS min_p, "
-            "CAST(MAX(p) AS BIGINT) AS max_p "
-            "FROM f GROUP BY 1"),
         # phrase search by the strategy the engine avoids: m-way
         # positional self-join over unnested (doc, pos, token) rows
         "phrase_search": (
@@ -4754,52 +4182,6 @@ def oracle_sql() -> dict[str, str]:
             "AS INTEGER) AS hamming "
             "FROM sh a JOIN sh b ON a.doc_id < b.doc_id) "
             "SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3"),
-        # The bucketed ANN pipeline itself: portable hyperplane buckets
-        # (exact-double weights), bucket-equality candidates, exact
-        # cosine re-rank.
-        "similarity_lsh": (
-            "WITH b AS (SELECT vec_id, embedding, "
-            + _bucket_sql("embedding", 8) + " AS bucket FROM embeddings), "
-            "q AS (SELECT vec_id AS q_id, embedding AS q_vec, bucket "
-            "FROM b WHERE vec_id < 3), "
-            "scored AS (SELECT q.q_id, e.vec_id, "
-            "round(" + _cos_sql("e.embedding", "q.q_vec") + ", 4) "
-            "AS cosine FROM b e JOIN q ON e.bucket = q.bucket), "
-            "ranked AS (SELECT q_id, vec_id, cosine, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY q_id "
-            "ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank "
-            "FROM scored) SELECT q_id, vec_id, cosine, rank "
-            "FROM ranked WHERE rank <= 5"),
-        # multi-probe LSH: the oracle re-derives the per-plane margins,
-        # the argmin-|margin| bit flip (ties -> lowest plane index,
-        # matching probe_buckets_col's (|m|, i) struct sort), the
-        # widened candidate set and the ranking
-        "similarity_lsh_probe": (
-            "WITH b AS (SELECT vec_id, embedding, "
-            + _bucket_sql("embedding", 8) + " AS bucket FROM embeddings), "
-            "qd AS (SELECT vec_id AS q_id, embedding AS q_vec, "
-            + _dots_sql("embedding", 8) + " AS dots "
-            "FROM embeddings WHERE vec_id < 3), "
-            "qb AS (SELECT q_id, q_vec, "
-            "array_to_string(list_transform(dots, "
-            "x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '') AS bucket, "
-            "CAST(list_position(list_transform(dots, x -> abs(x)), "
-            "list_aggregate(list_transform(dots, x -> abs(x)), 'min')) "
-            "- 1 AS INTEGER) AS flip FROM qd), "
-            "q AS (SELECT q_id, q_vec, bucket FROM qb "
-            "UNION ALL SELECT q_id, q_vec, "
-            "substr(bucket, 1, flip) || "
-            "(CASE WHEN substr(bucket, flip + 1, 1) = '1' "
-            "THEN '0' ELSE '1' END) || "
-            "substr(bucket, flip + 2, 8 - flip - 1) AS bucket FROM qb), "
-            "scored AS (SELECT q.q_id, e.vec_id, "
-            "round(" + _cos_sql("e.embedding", "q.q_vec") + ", 4) "
-            "AS cosine FROM b e JOIN q ON e.bucket = q.bucket), "
-            "ranked AS (SELECT q_id, vec_id, cosine, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY q_id "
-            "ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank "
-            "FROM scored) SELECT q_id, vec_id, cosine, rank "
-            "FROM ranked WHERE rank <= 5"),
         "text_stats": (
             "WITH toks AS (SELECT doc_id, text, "
             "string_split_regex(trim(text), '\\s+') AS tk, "
@@ -5140,37 +4522,6 @@ def oracle_sql() -> dict[str, str]:
             "ntile(4) OVER (ORDER BY "
             "CAST(logw_q AS DOUBLE) / n_feats DESC, doc_id ASC) = 1 "
             "AS selected FROM ag"),
-        # portable HLL re-derived register-for-register: same md5
-        # 60-bit hash (unrolled 15-nibble decode), same exact-integer
-        # bucket/rank arithmetic (length(bin(w))), same scaled BIGINT
-        # harmonic sum and bias/linear-counting estimate
-        "corpus_hll": (
-            "WITH hx AS (SELECT "
-            + _HEXN_SQL("substr(md5(text), 1, 15)", 15)
-            + " AS h FROM documents WHERE text IS NOT NULL), "
-            "reg AS (SELECT "
-            "(h - (h % 4503599627370496)) // 4503599627370496 "
-            "AS bucket, "
-            "least(CASE WHEN h % 4503599627370496 = 0 THEN 53 "
-            "ELSE 53 - length(bin(h % 4503599627370496)) END, 50) "
-            "AS rank FROM hx), "
-            "mx AS (SELECT bucket, MAX(rank) AS r FROM reg "
-            "GROUP BY 1), "
-            "fd AS (SELECT count(*) AS nz, "
-            "SUM(CAST(pow(2.0, 50 - r) AS BIGINT)) AS ps FROM mx) "
-            "SELECT CAST(256 AS BIGINT) AS m, "
-            "CAST(nz AS BIGINT) AS nonzero_registers, "
-            "CAST(ps + (256 - nz) * 1125899906842624 AS BIGINT) "
-            "AS sum_scaled, "
-            "round(CASE WHEN (256 - nz) > 0 AND "
-            "(0.7213/(1.0 + 1.079/256) * 256 * 256 "
-            "* 1125899906842624.0 "
-            "/ (ps + (256 - nz) * 1125899906842624)) <= 640.0 "
-            "THEN 256.0 * ln(256.0 / (256 - nz)) "
-            "ELSE 0.7213/(1.0 + 1.079/256) * 256 * 256 "
-            "* 1125899906842624.0 "
-            "/ (ps + (256 - nz) * 1125899906842624) END, 2) "
-            "AS estimate FROM fd"),
         # fuzzy pairs brute-forced: DuckDB's own levenshtein over ALL
         # distinct-name pairs — banding-independent ground truth
         "fuzzy_hosts": (
@@ -5180,54 +4531,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(levenshtein(a.t, b.t) AS INTEGER) AS dist "
             "FROM nm a JOIN nm b ON a.t < b.t "
             "AND levenshtein(a.t, b.t) <= 1"),
-        # count-min rebuilt in SQL: same md5-salted row hashes, same
-        # depth x width table, same min-over-rows point read
-        "cms_hosts": (
-            "WITH vals AS (SELECT CAST(doc_id % 37 AS VARCHAR) AS v "
-            "FROM documents), "
-            "pr AS (SELECT j, v FROM vals, "
-            "(SELECT unnest([0, 1, 2, 3]) AS j) js), "
-            "hb AS (SELECT j, v, "
-            + _HEXN_SQL(
-                "substr(md5(CAST(j AS VARCHAR) || ':' || v), 1, 15)",
-                15)
-            + " % 256 AS bucket FROM pr), "
-            "tab AS (SELECT j, bucket, COUNT(*) AS cnt FROM hb "
-            "GROUP BY 1, 2), "
-            "ib AS (SELECT DISTINCT j, v, bucket FROM hb), "
-            "est AS (SELECT ib.v, MIN(COALESCE(tab.cnt, 0)) AS est "
-            "FROM ib LEFT JOIN tab USING (j, bucket) GROUP BY 1) "
-            "SELECT v AS host, CAST(est AS BIGINT) AS est FROM est"),
-        # grouped HLL: identical register/estimate arithmetic to
-        # corpus_hll, with every aggregation keyed by the planted host
-        "hll_hosts": (
-            "WITH hx AS (SELECT doc_id % 37 AS host, "
-            + _HEXN_SQL("substr(md5(text), 1, 15)", 15)
-            + " AS h FROM documents WHERE text IS NOT NULL), "
-            "reg AS (SELECT host, "
-            "(h - (h % 4503599627370496)) // 4503599627370496 "
-            "AS bucket, "
-            "least(CASE WHEN h % 4503599627370496 = 0 THEN 53 "
-            "ELSE 53 - length(bin(h % 4503599627370496)) END, 50) "
-            "AS rank FROM hx), "
-            "mx AS (SELECT host, bucket, MAX(rank) AS r FROM reg "
-            "GROUP BY 1, 2), "
-            "fd AS (SELECT host, count(*) AS nz, "
-            "SUM(CAST(pow(2.0, 50 - r) AS BIGINT)) AS ps FROM mx "
-            "GROUP BY 1) "
-            "SELECT host, CAST(256 AS BIGINT) AS m, "
-            "CAST(nz AS BIGINT) AS nonzero_registers, "
-            "CAST(ps + (256 - nz) * 1125899906842624 AS BIGINT) "
-            "AS sum_scaled, "
-            "round(CASE WHEN (256 - nz) > 0 AND "
-            "(0.7213/(1.0 + 1.079/256) * 256 * 256 "
-            "* 1125899906842624.0 "
-            "/ (ps + (256 - nz) * 1125899906842624)) <= 640.0 "
-            "THEN 256.0 * ln(256.0 / (256 - nz)) "
-            "ELSE 0.7213/(1.0 + 1.079/256) * 256 * 256 "
-            "* 1125899906842624.0 "
-            "/ (ps + (256 - nz) * 1125899906842624) END, 2) "
-            "AS estimate FROM fd"),
         # fixed-context chunking re-derived: same 32/24 window starts,
         # same trailing-partial windows, same re-joined text
         "corpus_chunks": (
@@ -5245,44 +4548,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, CAST(c.idx AS BIGINT) AS chunk_idx, "
             "CAST(c.n AS BIGINT) AS n_tokens, c.txt AS chunk_text "
             "FROM ch"),
-        # SemDeDup re-derived: same planted-clone view, same
-        # broadcast-codebook cell assignment tie-break, same
-        # within-cell cosine>=0.95 pair graph — then the duplicate
-        # GROUPS via a recursive min-reachable-label closure (the
-        # independent formulation of the star-algorithm components)
-        "semantic_dedup": (
-            "WITH RECURSIVE aug AS ("
-            "SELECT vec_id, embedding FROM embeddings "
-            "UNION ALL "
-            "SELECT vec_id + 10000000 AS vec_id, "
-            "list_transform(embedding, x -> CAST(x * 2 AS FLOAT)) "
-            "AS embedding FROM embeddings WHERE vec_id % 10 = 0), "
-            "c AS (SELECT vec_id AS cid, embedding AS cvec "
-            "FROM embeddings WHERE vec_id % 37 = 0), "
-            "cs AS (SELECT e.vec_id, e.embedding, c.cid, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY e.vec_id "
-            f"ORDER BY round({_cos_sql('e.embedding', 'c.cvec')}, 9) "
-            "DESC, c.cid ASC) AS INTEGER) AS crn "
-            "FROM aug e CROSS JOIN c), "
-            "asg AS (SELECT vec_id, embedding, cid AS cell "
-            "FROM cs WHERE crn = 1), "
-            "pr AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b "
-            "FROM asg a JOIN asg b "
-            "ON a.cell = b.cell AND a.vec_id < b.vec_id "
-            f"WHERE round({_cos_sql('a.embedding', 'b.embedding')}, 4) "
-            ">= 0.95), "
-            "edges AS (SELECT id_a AS u, id_b AS v FROM pr "
-            "UNION SELECT id_b, id_a FROM pr), "
-            "reach AS (SELECT u AS id, u AS lab FROM edges "
-            "UNION SELECT e.v, r.lab FROM reach r "
-            "JOIN edges e ON e.u = r.id), "
-            "comp AS (SELECT id, MIN(lab) AS comp FROM reach "
-            "GROUP BY id) "
-            "SELECT g.vec_id, g.cell, "
-            "CASE WHEN c.comp IS NOT NULL AND c.comp <> g.vec_id "
-            "THEN c.comp END AS keeper, "
-            "c.comp IS NULL OR c.comp = g.vec_id AS kept "
-            "FROM asg g LEFT JOIN comp c ON g.vec_id = c.id"),
         # Winnowing fingerprints re-derived: char 8-grams of the
         # normalized text -> md5-prefix hashes -> min of each
         # 4-hash window -> sorted distinct set
@@ -5300,23 +4565,6 @@ def oracle_sql() -> dict[str, str]:
             "AS fps FROM h) "
             "SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fingerprints, "
             "array_to_string(fps, ',') AS fingerprints_csv FROM fp"),
-        "similarity_topk": (
-            "WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec "
-            "FROM embeddings WHERE vec_id < 3), "
-            "scored AS (SELECT q.q_id, e.vec_id, "
-            "round(list_aggregate(list_transform(list_zip(e.embedding, "
-            "q.q_vec), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), "
-            "'sum') / (sqrt(list_aggregate(list_transform(e.embedding, "
-            "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) "
-            "* sqrt(list_aggregate(list_transform(q.q_vec, "
-            "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))), 4) "
-            "AS cosine FROM embeddings e CROSS JOIN q), "
-            "ranked AS (SELECT q_id, vec_id, cosine, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY q_id "
-            "ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank "
-            "FROM scored) "
-            "SELECT q_id, vec_id, cosine, rank FROM ranked "
-            "WHERE rank <= 5"),
         "multimodal_meta": (
             _W + " SELECT doc_id, "
             f"CAST(length({_PAYLOAD_SQL}) AS BIGINT) AS payload_bytes, "
@@ -5492,72 +4740,6 @@ def oracle_sql() -> dict[str, str]:
             "+ (strpos('0123456789abcdef', "
             "substr(frame_digest, 2, 1)) - 1) AS INTEGER) "
             "AS frame_luma_x256 FROM fd"),
-        "similarity_ivf": (
-            "WITH " + _IVF_CTES +
-            
-            "cand AS (SELECT qc.q_id, a.vec_id, "
-            f"round({_cos_sql('a.embedding', 'qc.q_vec')}, 4) AS cosine "
-            "FROM asg a JOIN qcells qc ON a.cell = qc.cell), "
-            "ranked AS (SELECT q_id, vec_id, cosine, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY q_id "
-            "ORDER BY cosine DESC, vec_id ASC) AS INTEGER) AS rank "
-            "FROM cand) "
-            "SELECT q_id, vec_id, cosine, rank FROM ranked "
-            "WHERE rank <= 5"),
-        # PQ-ADC re-derived end-to-end: rank-ordered modulo codebook,
-        # per-subspace argmin-L2 codes on the round-9 grid (ties to
-        # lower rank), per-query m x ksub IP lookup table, ordered
-        # code-indexed ADC sum (list fold over j — matches Spark's
-        # left-fold aggregate), rank by (approx_ip DESC, vec_id ASC)
-        "similarity_pq": (
-            "WITH " + _PQ_CTES +
-            
-            "approx AS (SELECT l.q_id, cd.vec_id, "
-            "round(list_aggregate(list(l.ip ORDER BY cd.j), 'sum'), 4) "
-            "AS approx_ip "
-            "FROM codes cd JOIN lut l ON l.j = cd.j AND l.c = cd.c "
-            "GROUP BY l.q_id, cd.vec_id), "
-            "ranked AS (SELECT q_id, vec_id, approx_ip, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY q_id "
-            "ORDER BY approx_ip DESC, vec_id ASC) AS INTEGER) AS rank "
-            "FROM approx) "
-            "SELECT q_id, vec_id, approx_ip, rank FROM ranked "
-            "WHERE rank <= 5"),
-        # IVF-PQ composed: the IVF cell CTEs restrict which (query,
-        # vector) pairs score, the PQ code/LUT CTEs provide the ADC
-        # sums — identical fragments to the two component oracles
-        "similarity_ivfpq": (
-            "WITH " + _IVF_CTES + _PQ_CTES +
-            "approx AS (SELECT qc.q_id, cd.vec_id, "
-            "round(list_aggregate(list(l.ip ORDER BY cd.j), 'sum'), 4) "
-            "AS approx_ip "
-            "FROM asg a JOIN qcells qc ON a.cell = qc.cell "
-            "JOIN codes cd ON cd.vec_id = a.vec_id "
-            "JOIN lut l ON l.q_id = qc.q_id AND l.j = cd.j "
-            "AND l.c = cd.c "
-            "GROUP BY qc.q_id, cd.vec_id), "
-            "ranked AS (SELECT q_id, vec_id, approx_ip, "
-            "CAST(ROW_NUMBER() OVER (PARTITION BY q_id "
-            "ORDER BY approx_ip DESC, vec_id ASC) AS INTEGER) AS rank "
-            "FROM approx) "
-            "SELECT q_id, vec_id, approx_ip, rank FROM ranked "
-            "WHERE rank <= 5"),
-        "embedding_near_dup": (
-            "WITH aug AS ("
-            "SELECT vec_id AS id, embedding AS v FROM embeddings "
-            "UNION ALL "
-            "SELECT vec_id + 10000000 AS id, "
-            "list_transform(embedding, x -> CAST(x * 2 AS FLOAT)) AS v "
-            "FROM embeddings WHERE vec_id % 10 = 0), "
-            "scored AS (SELECT a.id AS id_a, b.id AS id_b, "
-            "round(list_aggregate(list_transform(list_zip(a.v, b.v), "
-            "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum') "
-            "/ (sqrt(list_aggregate(list_transform(a.v, "
-            "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) "
-            "* sqrt(list_aggregate(list_transform(b.v, "
-            "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))), 4) "
-            "AS cosine FROM aug a JOIN aug b ON a.id < b.id) "
-            "SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.95"),
         # RFC 9309 robots: admitted set + budgets re-decided in SQL —
         # group selection (cdxbot group on h%3=0 hosts), longest-match
         # with allow-beats-equal-disallow, * wildcard, $ anchor,

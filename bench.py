@@ -2,8 +2,8 @@
 """Throughput benchmark for the headline queries.
 
 Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints ONE JSON line:
-``{"metric": ..., "value": <total sec>, "unit": "sec",
+``local[$SPARK_GRAFT_CPUS]`` (default: CPU count) and prints ONE JSON
+line: ``{"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {...}, "sf": ...}``.
 
 Extra keys (not required by the driver, used by the scaling report):
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 AMPLIFY = int(os.environ.get("SPARK_GRAFT_AMPLIFY", "20"))
 
 
@@ -47,16 +47,12 @@ def build_spark() -> SparkSession:
 
 
 def bench_queries(spark: SparkSession, sf_dir: str):
-    from cdx_writer_spark.functions import (decontam, dedup, extract,
-                                            similarity)
+    from cdx_writer_spark.functions import decontam, dedup, extract
     from cdx_writer_spark.job import CDXConfig, cdx_lines
     from cdx_writer_spark.webview import pages_from_documents
     import __spark_entry__ as entrymod
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    emb_q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
 
     from cdx_writer_spark.job import cdx_lines_per_file
 
@@ -99,25 +95,9 @@ def bench_queries(spark: SparkSession, sf_dir: str):
         "dsir_select": lambda: entrymod.q_dsir_select(spark, sf_dir),
         "frontier_links": lambda: entrymod.q_frontier_links(
             spark, sf_dir),
-        "semantic_dedup": lambda: entrymod.q_semantic_dedup(
-            spark, sf_dir),
         "extract_text": lambda: extract.extract_text(
             pages_from_documents(spark, sf_dir, amplify=AMPLIFY))
         .select("url", "text"),
-        "similarity_topk": lambda: similarity.cosine_topk(
-            emb, emb_q, k=10),
-        "similarity_pq": lambda: similarity.pq_topk(
-            emb, emb_q, k=10),
-        "similarity_ivfpq": lambda: similarity.ivfpq_topk(
-            emb, emb_q, k=10, nprobe=2),
-        "embedding_near_dup": lambda: similarity.embedding_near_dup_pairs(
-            emb.unionByName(
-                emb.filter(F.col("vec_id") % 10 == 0).select(
-                    (F.col("vec_id") + 10_000_000).alias("vec_id"),
-                    F.transform("embedding", lambda x: (x * 2)
-                                .cast("float")).alias("embedding"),
-                    "label")),
-            threshold=0.95),
         "agg_pricing": lambda: entrymod.q_agg_pricing(spark, sf_dir),
         "join_customer_orders": lambda: entrymod.q_join_customer_orders(
             spark, sf_dir),
@@ -135,7 +115,6 @@ def bench_queries(spark: SparkSession, sf_dir: str):
             spark, sf_dir),
         "host_pagerank": lambda: entrymod.q_host_pagerank(
             spark, sf_dir),
-        "hll_hosts": lambda: entrymod.q_hll_hosts(spark, sf_dir),
         "fuzzy_hosts": lambda: entrymod.q_fuzzy_hosts(spark, sf_dir),
         "events_rolling": lambda: entrymod.q_events_rolling(
             spark, sf_dir),
@@ -178,20 +157,10 @@ def bench_queries(spark: SparkSession, sf_dir: str):
             entrymod.q_recrawl_tiers(spark, sf_dir),
         "cdx_roundtrip": lambda:
             entrymod.q_cdx_roundtrip(spark, sf_dir),
-        "corpus_size_quantiles": lambda:
-            entrymod.q_corpus_size_quantiles(spark, sf_dir),
-        "lang_size_quantiles": lambda:
-            entrymod.q_lang_size_quantiles(spark, sf_dir),
-        "host_heavy_hitters": lambda:
-            entrymod.q_host_heavy_hitters(spark, sf_dir),
-        "kmv_value_overlap": lambda:
-            entrymod.q_kmv_value_overlap(spark, sf_dir),
         "dedup_containment": lambda:
             entrymod.q_dedup_containment(spark, sf_dir),
         "url_param_rules": lambda:
             entrymod.q_url_param_rules(spark, sf_dir),
-        "zorder_layout": lambda:
-            entrymod.q_zorder_layout(spark, sf_dir),
         "phrase_search": lambda:
             entrymod.q_phrase_search(spark, sf_dir),
         "warc_revisit_dedup": lambda:
@@ -216,10 +185,6 @@ def bench_queries(spark: SparkSession, sf_dir: str):
             entrymod.q_events_json(spark, sf_dir),
         "dedup_canonical": lambda:
             entrymod.q_dedup_canonical(spark, sf_dir),
-        "host_domains": lambda:
-            entrymod.q_host_domains(spark, sf_dir),
-        "site_quality": lambda:
-            entrymod.q_site_quality(spark, sf_dir),
         "cdx_collapse": lambda:
             entrymod.q_cdx_collapse(spark, sf_dir),
         "orders_above_avg": lambda:
@@ -343,7 +308,7 @@ def main() -> None:
                      if timings.get("frontier_rounds") else None)
     print(json.dumps({
         "metric": "headline query wall time (CDX full-format sorted lines "
-                  f"amplify={AMPLIFY} + dedup/similarity/text/relational "
+                  f"amplify={AMPLIFY} + dedup/text/relational "
                   f"suite + {n_pages}-page frontier crawl rounds) "
                   f"at local[{CPUS}]",
         "value": total,

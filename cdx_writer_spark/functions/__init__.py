@@ -1,3 +1,3 @@
-"""Large-scale training-data pipeline operators (dedup, similarity,
-text analysis, multimodal plumbing) — first-class engine components
-beyond the reference's own operator set."""
+"""Large-scale training-data pipeline operators (dedup, text analysis,
+multimodal plumbing) — first-class engine components beyond the
+reference's own operator set."""

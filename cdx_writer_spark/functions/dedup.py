@@ -124,11 +124,10 @@ def _persist_candidates(cand: DataFrame) -> DataFrame:
 def release_candidate_caches() -> int:
     """Unpersist every candidate frame cached by
     :func:`minhash_lsh_dedup`, :func:`simhash_near_pairs` and
-    ``similarity.embedding_near_dup_pairs`` since the last release;
-    returns how many were released.  Long-lived sessions that call the
-    ops repeatedly should release once each result is materialized —
-    the cache only exists so banding runs once per op, not per
-    consumer."""
+    :func:`bits_near_pairs` since the last release; returns how many
+    were released.  Long-lived sessions that call the ops repeatedly
+    should release once each result is materialized — the cache only
+    exists so banding runs once per op, not per consumer."""
     n = len(_CANDIDATE_CACHES)
     while _CANDIDATE_CACHES:
         _CANDIDATE_CACHES.pop().unpersist()

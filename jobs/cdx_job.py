@@ -54,7 +54,8 @@ def main() -> None:
     p.add_argument("--per-file", action="store_true",
                    help="file-order sink instead of global sort")
     p.add_argument("--cpus", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                   default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                              os.cpu_count())))
     args = p.parse_args()
 
     from pyspark.sql import SparkSession

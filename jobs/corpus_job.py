@@ -87,7 +87,8 @@ def main() -> None:
                    "(sandbox default) or Iceberg catalog identifiers "
                    "(cluster); auto infers from the reference shape")
     p.add_argument("--cpus", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                   default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                              os.cpu_count())))
     args = p.parse_args()
 
     from pyspark.sql import SparkSession

@@ -60,13 +60,15 @@ def main() -> None:
                    help="emit (url, text) parquet via the HTML->text "
                         "extraction (the north rule's per-row invariant)")
     p.add_argument("--cpus", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    p.add_argument("--probe", default="native",
-                   choices=["native", "pandas", "cogroup"],
-                   help="URL-seen Bloom probe strategy: native Catalyst "
-                        "expression (default), pandas broadcast blobs, "
-                        "or per-partition cogroup (filter state too "
-                        "large to broadcast)")
+                   default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                              os.cpu_count())))
+    p.add_argument("--probe", default="auto",
+                   choices=["auto", "native", "pandas", "cogroup"],
+                   help="URL-seen Bloom probe strategy: auto "
+                        "(default: native while the filter words fit "
+                        "the broadcast budget, else cogroup), native "
+                        "Catalyst expression, pandas broadcast blobs, "
+                        "or per-partition cogroup")
     p.add_argument("--filter-kind", default="bloom",
                    choices=["bloom", "cuckoo"],
                    help="URL-seen filter family: blocked Bloom "

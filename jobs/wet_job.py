@@ -52,7 +52,8 @@ def main() -> None:
     p.add_argument("--table-format", default="auto",
                    choices=["auto", "parquet", "iceberg"])
     p.add_argument("--cpus", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                   default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                              os.cpu_count())))
     args = p.parse_args()
 
     from pyspark.sql import SparkSession

@@ -292,3 +292,19 @@ def test_wet_job_via_spark_submit_pyfiles(spark, tmp_path):
         r["content_length"] for r in batch)
     assert stats["n_archives"] == len(
         {r["warc_file"] for r in batch})
+
+
+def test_crawl_index_job_runs_rounds(tmp_path):
+    """The crawl job end-to-end on a small synthetic web with its
+    default probe ('auto'): exit 0 and one JSON summary per round."""
+    state = str(tmp_path / "crawl_state")
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "crawl_index_job.py"),
+         "--state-dir", state, "--pages", "2000", "--seeds", "20",
+         "--rounds", "2", "--cpus", "2"],
+        capture_output=True, text=True, timeout=420)
+    assert r.returncode == 0, r.stderr[-4000:]
+    summaries = [json.loads(ln) for ln in r.stdout.splitlines()
+                 if ln.startswith("{")]
+    assert [s["round"] for s in summaries] == [1, 2]
+    assert all(s["scheduled"] > 0 for s in summaries)

@@ -39,78 +39,11 @@ def test_column_pruning_on_narrow_format(spark, tmp_path):
     assert "url" in scan_line
 
 
-def test_similarity_topk_broadcasts_queries(spark):
-    from cdx_writer_spark.functions import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    plan = _plan(similarity.cosine_topk(emb, q, k=3))
-    assert "Broadcast" in plan            # broadcast exchange present
-    assert "SortMergeJoin" not in plan    # scan side never shuffles
-
-
-def test_cosine_topk_two_stage_no_qid_funnel(spark):
-    """The exact top-k must NOT funnel the full scored scan into one
-    exchange keyed on q_id alone (≤ #queries reducer tasks at scale).
-    Stage 1 exchanges on (q_id, spark_partition_id) — parallelism-
-    preserving — over the narrow (q_id, vec_id, cosine) projection;
-    the q_id-only exchange sees only WindowGroupLimit survivors."""
-    import re
-
-    from cdx_writer_spark.functions import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    plan = _plan(similarity.cosine_topk(emb, q, k=3))
-    # stage-1 exchange keyed on (q_id, _pid)
-    assert re.search(r"hashpartitioning\(q_id#\d+L?, _pid#\d+", plan)
-    # the final q_id-only exchange has a partial group-limit below it:
-    # only ≤ k rows per (q_id, map task) ever cross it
-    m = re.search(r"Exchange hashpartitioning\(q_id#\d+L?, \d+\)", plan)
-    assert m is not None
-    below_final_exchange = plan[m.end():]
-    assert "WindowGroupLimit" in below_final_exchange
-    # vectors are pruned before the exchanges: the shuffled projection
-    # is exactly the narrow (q_id, vec_id, cosine)
-    assert re.search(r"Project \[q_id#\d+L?, vec_id#\d+L?, cosine#\d+\]",
-                     plan)
-
-
-def test_ivf_codebook_is_broadcast_not_inlined(spark):
-    """The IVF codebook must reach the scan as BROADCAST DATA (one
-    cid-sorted array row, cross-joined), never as driver-collected
-    literal vectors baked into the expression tree — at a real
-    codebook size (thousands of centroids x dims) literal inlining is
-    a driver OOM + codegen explosion."""
-    from cdx_writer_spark.functions import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    plan = _plan(similarity.ivf_topk(emb, q, k=3, centroid_stride=37,
-                                     nprobe=2))
-    assert "BroadcastNestedLoopJoin" in plan   # broadcast codebook row
-    # no literal centroid vectors: the sf0.01 codebook alone is 14
-    # centroids x 64 dims ~ 900 float literals; a handful of numeric
-    # literals from k/nprobe/rounding is fine
-    assert plan.count("0.") < 100, plan.count("0.")
-    assert "ArrowEvalPython" not in plan       # assignment stays native
-
-
 def test_near_dup_exchanges_are_narrow(spark):
-    """Candidate-pair dedup must never shuffle the wide vector (or
-    shingle) payloads: every aggregate in the near-dup plans keys on
-    the narrow gkey projection, vectors re-joined only afterwards."""
-    from cdx_writer_spark.functions import dedup, similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(similarity.embedding_near_dup_pairs(emb, threshold=0.95))
-    agg_lines = [ln for ln in plan.splitlines() if "HashAggregate" in ln]
-    assert any("gkey_a" in ln for ln in agg_lines)
-    for ln in agg_lines:
-        assert "v_a#" not in ln and "v_b#" not in ln, ln
+    """Candidate-pair dedup must never shuffle the wide shingle
+    payloads: every aggregate in the near-dup plan keys on the narrow
+    gkey projection, shingles re-joined only afterwards."""
+    from cdx_writer_spark.functions import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(dedup.minhash_lsh_dedup(docs, threshold=0.5))
@@ -147,18 +80,15 @@ def test_dedup_is_partial_aggregated(spark):
 
 def test_near_dup_verify_is_candidate_pruned(spark):
     """The exact-verification side must recompute expensive payloads
-    (shingles / simhash / vectors) only for rows that survived banding:
-    the candidate set is persisted (one banding execution, reused by
-    every consumer) and its keys are BROADCAST onto the representative
-    rows before the payload expression — never a second full-corpus
-    pass."""
-    from cdx_writer_spark.functions import dedup, similarity
+    (shingles / simhash) only for rows that survived banding: the
+    candidate set is persisted (one banding execution, reused by every
+    consumer) and its keys are BROADCAST onto the representative rows
+    before the payload expression — never a second full-corpus pass."""
+    from cdx_writer_spark.functions import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     for df in (dedup.minhash_lsh_dedup(docs, threshold=0.5),
-               dedup.simhash_near_pairs(docs),
-               similarity.embedding_near_dup_pairs(emb, threshold=0.95)):
+               dedup.simhash_near_pairs(docs)):
         plan = _plan(df)
         # persisted candidates: banding runs once, consumers read cache
         assert "InMemoryTableScan" in plan, plan[:2000]
@@ -234,30 +164,6 @@ def test_http_split_returns_no_payload_bytes(spark):
     pages = spark.createDataFrame(bulk_rows(50), PAGES_SCHEMA)
     plan = _plan(cdx_flagged(pages).select("payload"))
     assert "substring" in plan.lower(), plan[:2000]
-
-
-def test_pq_scan_is_map_only_over_broadcasts(spark):
-    """The PQ-ADC scan must be map-only: codebook and per-query LUTs
-    arrive as broadcast rows (two BroadcastNestedLoopJoins), encoding
-    and scoring stay native (no Python eval nodes), and the only
-    exchange is the two-stage top-k's narrow (q_id, vec_id, approx_ip)
-    rank — vectors never shuffle."""
-    import re
-
-    from cdx_writer_spark.functions import similarity
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    plan = _plan(similarity.pq_topk(emb, q, k=3))
-    assert plan.count("BroadcastNestedLoopJoin") >= 2
-    assert "ArrowEvalPython" not in plan
-    assert "BatchEvalPython" not in plan
-    # the rank exchange carries the narrow projection only
-    assert re.search(
-        r"Exchange hashpartitioning\(q_id#\d+L?, _pid#\d+", plan)
-    assert "embedding#" not in plan.split("Exchange", 1)[1].split(
-        "\n", 1)[0]
 
 
 def test_span_dedup_owner_exchange_is_narrow(spark):
@@ -471,38 +377,6 @@ def test_sampling_plans(spark):
     assert "Python" not in p2
 
 
-def test_heavy_hitters_two_pass_shape(spark):
-    """Pass 1 is MAP-ONLY (no Exchange between the scan and the
-    Misra-Gries mapInPandas) and pass 2 probes the candidate set via
-    a BROADCAST join — nothing data-cardinality-sized crosses an
-    exchange.  The final total/filter window runs over the tiny
-    post-aggregation frame, not the data."""
-    from cdx_writer_spark.functions import sketch
-
-    df = spark.createDataFrame([("a",), ("b",)], "v string")
-    vals = df.select(F.col("v").alias("item"))
-    pass1 = _plan(sketch._mg_candidates(vals, 8))
-    assert "Exchange" not in pass1          # map-only candidate sweep
-    full = _plan(sketch.heavy_hitters(df, "v", 8))
-    assert "BroadcastHashJoin" in full
-    # exactly: candidate distinct (1) + groupBy (1) + window (1)
-    # exchanges — none keyed by the raw value column's full set
-    assert full.count("Exchange") <= 4
-
-
-def test_kmv_partition_pass_is_map_only(spark):
-    """The per-partition k-min summary runs with no Exchange before
-    the mapInPandas (bounded memory, ≤ k rows out per partition); the
-    global k-min then operates on summary rows only."""
-    from cdx_writer_spark.functions import sketch
-
-    df = spark.createDataFrame([("u",)], "u string")
-    hashed = df.select(sketch._hash60_col(F.col("u")).alias("h"))
-    pass1 = _plan(sketch._kmv_partition_mins(hashed, 64))
-    assert "Exchange" not in pass1
-    assert "ArrowEvalPython" not in pass1   # mapInPandas, not per-row
-
-
 def test_dust_verdicts_one_key_join_and_broadcast_collapse(spark):
     """insignificant_params exchanges only md5 identity keys (witness
     join) plus the distinct/agg exchanges; collapse_aliases applies
@@ -624,7 +498,11 @@ def test_sorted_sink_plan_rebuild_reuses_projection(spark, monkeypatch):
     """The CDX projection's Columns are built once per (config,
     SparkContext): building the sorted sink's plan again for the same
     config only applies them, a few hundred py4j gateway commands
-    where a fresh build sends thousands.  No Spark action runs."""
+    where a fresh build sends thousands.  No Spark action runs.  Only
+    this thread's commands count: py4j's finalizer thread sends the
+    deletes of earlier garbage whenever it runs."""
+    import threading
+
     from py4j.clientserver import ClientServerConnection
     from pyspark import SparkContext
 
@@ -640,9 +518,10 @@ def test_sorted_sink_plan_rebuild_reuses_projection(spark, monkeypatch):
     build()
     sent = [0]
     real = ClientServerConnection.send_command
+    me = threading.get_ident()
 
     def counting(self, command):
-        sent[0] += 1
+        sent[0] += threading.get_ident() == me
         return real(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)

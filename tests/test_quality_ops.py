@@ -1,7 +1,8 @@
 """Behavior gates for the C4 line filter, the CCNet-style bigram-LM
-perplexity scorer, and SemDeDup — hand-derived expectations on planted
-inputs (the oracle-parity sweep in test_entry_oracle.py checks the
-full pipelines value-for-value; these pin the SEMANTICS)."""
+perplexity scorer and the other corpus text operators — hand-derived
+expectations on planted inputs (the oracle-parity sweep in
+test_entry_oracle.py checks the full pipelines value-for-value; these
+pin the SEMANTICS)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from cdx_writer_spark.functions import lm, similarity, sketch, textstats
+from cdx_writer_spark.functions import lm, textstats
 
 
 # --- C4 line filter -----------------------------------------------------------
@@ -275,271 +276,6 @@ def test_dsir_empty_target_raises(spark):
         lm.dsir_importance(docs, F.lit(False))
 
 
-# --- SemDeDup -----------------------------------------------------------------
-
-def test_semdedup_planted_clones(spark):
-    """8 base vectors in 2 obvious clusters + exact 2x clones of two of
-    them: the clones (higher ids) drop with their base as keeper,
-    every base row is kept."""
-    rows = []
-    for i in range(8):
-        base = [10.0, 0.0, 1.0 * i] if i < 4 else [0.0, 10.0, 1.0 * i]
-        rows.append((i, [float(x) for x in base]))
-    rows.append((100, [v * 2 for v in rows[1][1]]))   # clone of 1
-    rows.append((101, [v * 2 for v in rows[5][1]]))   # clone of 5
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>")
-    cents = spark.createDataFrame(
-        [(0, rows[0][1]), (1, rows[4][1])],
-        "cid long, cvec array<float>")
-    out = {r["vec_id"]: r.asDict() for r in similarity.semdedup(
-        emb, threshold=0.999, codebook=cents).collect()}
-    assert len(out) == 10
-    assert not out[100]["kept"] and out[100]["keeper"] == 1
-    assert not out[101]["kept"] and out[101]["keeper"] == 5
-    for i in range(8):
-        assert out[i]["kept"] and out[i]["keeper"] is None
-    # cells follow the obvious geometry
-    assert out[100]["cell"] == out[1]["cell"]
-    assert out[101]["cell"] == out[5]["cell"]
-
-
-def test_semdedup_keep_first_within_group(spark):
-    """Three mutually-identical vectors: the smallest id survives and
-    both others point at it (min-id keeper, not chain keeper)."""
-    vec = [1.0, 2.0, 3.0]
-    emb = spark.createDataFrame(
-        [(7, vec), (3, vec), (9, vec), (1, [5.0, -2.0, 0.5])],
-        "vec_id long, embedding array<float>")
-    cents = spark.createDataFrame(
-        [(0, vec)], "cid long, cvec array<float>")
-    out = {r["vec_id"]: r.asDict() for r in similarity.semdedup(
-        emb, threshold=0.999, codebook=cents).collect()}
-    assert out[3]["kept"]
-    assert not out[7]["kept"] and out[7]["keeper"] == 3
-    assert not out[9]["kept"] and out[9]["keeper"] == 3
-
-
-def test_semdedup_chain_keeps_one_per_group(spark):
-    """Chain a~b, b~c with a NOT ~ c (unit vectors at 0°, 18°, 36°,
-    τ between cos18° and cos36°): one connected group — only the min
-    id survives and BOTH others point at the kept row (the greedy
-    any-lower-id rule would have c point at the dropped b)."""
-    import math
-    def unit(deg):
-        r = math.radians(deg)
-        return [math.cos(r), math.sin(r)]
-    emb = spark.createDataFrame(
-        [(1, unit(0)), (2, unit(18)), (3, unit(36))],
-        "vec_id long, embedding array<float>")
-    cents = spark.createDataFrame(
-        [(0, unit(10))], "cid long, cvec array<float>")
-    out = {r["vec_id"]: r.asDict() for r in similarity.semdedup(
-        emb, threshold=0.94, codebook=cents).collect()}
-    assert out[1]["kept"] and out[1]["keeper"] is None
-    assert not out[2]["kept"] and out[2]["keeper"] == 1
-    assert not out[3]["kept"] and out[3]["keeper"] == 1  # via the chain
-    # every keeper is itself a kept row
-    keepers = {r["keeper"] for r in out.values() if r["keeper"] is not None}
-    assert all(out[k]["kept"] for k in keepers)
-
-
-def test_semdedup_stride_guard(spark):
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0])], "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError, match="no centroids"):
-        similarity.semdedup(emb, centroid_stride=50)
-
-
-def test_semdedup_default_codebook_tracks_corpus_size(spark):
-    """The DEFAULT codebook must grow with the corpus so expected
-    cell size stays ~1/cells_frac at any N (round-4 VERDICT ask #2):
-    10x the vectors -> ~10x the centroids, and the max assigned-cell
-    size does not scale with N."""
-    import pyspark.sql.functions as F
-
-    def corpus(n):
-        return spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.array(F.cos(F.col("id") * 0.7),
-                    F.sin(F.col("id") * 0.7),
-                    (F.col("id") % 13).cast("double") / 13.0)
-            .alias("embedding"))
-
-    def cell_profile(n, frac):
-        emb = corpus(n)
-        cents = similarity.semdedup_codebook(emb, cells_frac=frac)
-        n_cells = cents.count()
-        cb = similarity._codebook_row(cents)
-        sizes = (emb.crossJoin(F.broadcast(cb))
-                 .select(similarity._nearest_cells(
-                     F.col("embedding"), 1)[0].alias("cell"))
-                 .groupBy("cell").count())
-        mx = sizes.agg(F.max("count")).first()[0]
-        return n_cells, mx
-
-    # frac=1/50 keeps the unit test fast; the scaling law is
-    # rate-based sampling, identical at the 0.001 default
-    c_small, mx_small = cell_profile(5_000, 1 / 50)
-    c_big, mx_big = cell_profile(50_000, 1 / 50)
-    # codebook grows ~linearly with N (hash sampling: +-5 sigma slack)
-    assert 0.5 * 10 * c_small < c_big < 2.0 * 10 * c_small
-    # cell size is bounded by geometry, not by N: 10x the corpus must
-    # not approach 10x the max cell
-    assert mx_big < 4 * mx_small
-
-    # end-to-end default path on a small corpus (fallback codebook):
-    # runs, keeps exact clones deduplicated
-    emb = corpus(300).unionByName(
-        corpus(300).select((F.col("vec_id") + 1000).alias("vec_id"),
-                           "embedding"))
-    out = similarity.semdedup(emb, threshold=0.9999)
-    dropped = out.filter(~F.col("kept")).count()
-    assert out.count() == 600
-    assert dropped >= 290  # clones collapse onto their base
-
-
-# --- HyperLogLog sketch ---------------------------------------------------
-
-def test_hll_accuracy_and_exactness(spark):
-    from cdx_writer_spark.functions import sketch
-
-    docs = spark.range(20000).selectExpr(
-        "concat('value-', CAST(id % 5000 AS STRING)) AS v")
-    row = sketch.hll_count(docs, "v").collect()[0]
-    assert row["m"] == 256
-    # 5000 distinct, 256 registers: ~6.5% standard error; 3 sigma gate
-    assert abs(row["estimate"] - 5000) / 5000 < 0.2
-    # register state is an exact function of the value SET
-    again = sketch.hll_count(docs.repartition(13), "v").collect()[0]
-    assert row.asDict() == again.asDict()
-
-
-def test_hll_small_range_linear_counting(spark):
-    from cdx_writer_spark.functions import sketch
-
-    docs = spark.range(10).selectExpr("CAST(id AS STRING) AS v")
-    row = sketch.hll_count(docs, "v").collect()[0]
-    # with 10 distinct values linear counting is near-exact
-    assert abs(row["estimate"] - 10) <= 1
-    assert row["nonzero_registers"] <= 10
-
-
-def test_hll_ignores_nulls_and_duplicates(spark):
-    from cdx_writer_spark.functions import sketch
-
-    docs = spark.createDataFrame(
-        [("a",), ("a",), (None,), ("b",)], "v string")
-    row = sketch.hll_count(docs, "v").collect()[0]
-    assert row["nonzero_registers"] == 2
-
-
-def test_hll_empty_and_all_null_input_estimates_zero(spark):
-    """256 empty registers = linear counting at zero, not a NULL
-    propagating out of an empty SUM."""
-    from cdx_writer_spark.functions import sketch
-    from cdx_writer_spark.functions.sketch import M, RANK_CAP
-
-    for docs in (spark.createDataFrame([], "v string"),
-                 spark.createDataFrame([(None,), (None,)],
-                                       "v string")):
-        row = sketch.hll_count(docs, "v").collect()[0]
-        assert row["nonzero_registers"] == 0
-        assert row["sum_scaled"] == M * (1 << RANK_CAP)
-        assert row["estimate"] == 0.0
-
-
-def test_hll_grouped_matches_per_group_ungrouped(spark):
-    """The grouped fold must be exactly the ungrouped sketch run per
-    group — same registers, same estimate, any partitioning."""
-    from cdx_writer_spark.functions import sketch
-    from pyspark.sql import functions as F
-
-    docs = spark.range(6000).selectExpr(
-        "CAST(id % 3 AS LONG) AS g",
-        "concat('v-', CAST(id % (500 * (1 + id % 3)) AS STRING)) AS v")
-    grouped = {r["g"]: r.asDict() for r in
-               sketch.hll_count_grouped(docs, "g", "v").collect()}
-    assert set(grouped) == {0, 1, 2}
-    for g in (0, 1, 2):
-        solo = sketch.hll_count(
-            docs.filter(F.col("g") == g), "v").collect()[0].asDict()
-        want = dict(solo, g=g)
-        assert grouped[g] == want
-    again = {r["g"]: r.asDict() for r in
-             sketch.hll_count_grouped(docs.repartition(17), "g", "v")
-             .collect()}
-    assert again == grouped
-
-
-def test_hll_grouped_all_null_group_emits_no_row(spark):
-    from cdx_writer_spark.functions import sketch
-
-    docs = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, None)], "g long, v string")
-    rows = sketch.hll_count_grouped(docs, "g", "v").collect()
-    assert [r["g"] for r in rows] == [1]
-
-
-def test_cms_never_underestimates_and_is_exact_when_wide(spark):
-    """Count-min guarantee: est >= true count for EVERY item; with
-    width >> distinct keys the min-read is exact."""
-    from cdx_writer_spark.functions import sketch
-    from pyspark.sql import functions as F
-
-    # skewed stream: key k appears (k+1)^2 times, k in 0..19
-    docs = spark.range(20).selectExpr(
-        "CAST(id AS STRING) AS k", "(id+1)*(id+1) AS n") \
-        .selectExpr("k", "explode(sequence(1, n)) AS _")
-    truth = {r["k"]: r["cnt"] for r in
-             docs.groupBy("k").agg(F.count("*").alias("cnt"))
-             .collect()}
-    table = sketch.cms_table(docs, "k")
-    est = {r["k"]: r["est"] for r in
-           sketch.cms_estimate(table, docs.select("k").distinct(),
-                               "k").collect()}
-    assert set(est) == set(truth)
-    assert all(est[k] >= truth[k] for k in truth)
-    # 20 keys into 4x256 buckets: every row has a collision-free cell
-    assert est == truth
-    # absent key reads 0 (all four cells empty) or a small collision
-    ghost = spark.createDataFrame([("zzz-absent",)], "k string")
-    g = sketch.cms_estimate(table, ghost, "k").collect()[0]["est"]
-    assert g == 0
-
-
-def test_cms_tables_merge_by_summing(spark):
-    """Additivity: the sketch of a union equals the cell-wise sum of
-    the parts' sketches — the property that lets per-day/per-partition
-    tables fold into one."""
-    from cdx_writer_spark.functions import sketch
-    from pyspark.sql import functions as F
-
-    a = spark.range(500).selectExpr("CAST(id % 50 AS STRING) AS k")
-    b = spark.range(300).selectExpr("CAST(id % 30 AS STRING) AS k")
-    whole = {(r["j"], r["bucket"]): r["cnt"] for r in
-             sketch.cms_table(a.union(b), "k").collect()}
-    merged = {}
-    for part in (a, b):
-        for r in sketch.cms_table(part, "k").collect():
-            key = (r["j"], r["bucket"])
-            merged[key] = merged.get(key, 0) + r["cnt"]
-    assert whole == merged
-
-
-def test_cms_is_partitioning_invariant_and_bounded(spark):
-    from cdx_writer_spark.functions import sketch
-
-    docs = spark.range(4000).selectExpr(
-        "CAST(id % 333 AS STRING) AS k")
-    t1 = sorted(map(tuple, sketch.cms_table(docs, "k").collect()))
-    t2 = sorted(map(tuple,
-                    sketch.cms_table(docs.repartition(13), "k")
-                    .collect()))
-    assert t1 == t2
-    assert len(t1) <= 4 * 256
-
-
 # --- inverted_index / term_cooccurrence ----------------------------------------
 
 def test_inverted_index_tf_and_first_pos(spark):
@@ -658,191 +394,6 @@ def test_bm25_partitioning_invariance(spark):
     b = sorted(map(tuple, textstats.bm25_topk(
         df.repartition(13), ["spark", "merge"], k=40).collect()))
     assert a == b  # integer micro-point sums are order-immune
-
-
-# --- quantile_sketch (HDR-histogram percentiles) ----------------------------
-
-
-def _py_qbucket(v):
-    if v < 16:
-        return v
-    e = v.bit_length() - 1
-    return (e - 4) * 16 + (v >> (e - 4))
-
-
-def _py_qlo(b):
-    if b < 16:
-        return b
-    return ((b % 16) + 16) << (b // 16 - 1)
-
-
-def test_quantile_bucket_round_trip_bounds():
-    # pure-python spec check: lo(bucket(v)) <= v < lo * (1 + 1/16) + 1
-    import random
-    rng = random.Random(11)
-    vals = ([0, 1, 15, 16, 17, 31, 32, 2**40, 2**62]
-            + [rng.randrange(0, 2**50) for _ in range(2000)])
-    for v in vals:
-        lo = _py_qlo(_py_qbucket(v))
-        assert lo <= v
-        assert v <= lo + (lo >> 4) + 1
-
-
-def test_quantile_sketch_brackets_exact_percentiles(spark):
-    import random
-    rng = random.Random(3)
-    vals = [rng.randrange(1, 10**9) for _ in range(5000)]
-    df = spark.createDataFrame([(v,) for v in vals], "x long")
-    got = {r["pct"]: (r["estimate"], r["n"])
-           for r in sketch.quantile_sketch(
-               df, "x", percentiles=(50, 90, 99)).collect()}
-    svals = sorted(vals)
-    for pct in (50, 90, 99):
-        est, n = got[pct]
-        assert n == 5000
-        true = svals[-(-5000 * pct // 100) - 1]  # ceil rank, 0-based
-        assert est <= true <= est + (est >> 4) + 1
-
-
-def test_quantile_sketch_matches_python_and_partitioning(spark):
-    vals = list(range(0, 3000, 7)) + [0, 0, 1, 2**45]
-    df = spark.createDataFrame([(v,) for v in vals], "x long")
-    a = sorted(map(tuple, sketch.quantile_sketch(
-        df.repartition(1), "x").collect()))
-    b = sorted(map(tuple, sketch.quantile_sketch(
-        df.repartition(17), "x").collect()))
-    assert a == b
-    # python reference of the full spec
-    from collections import Counter
-    c = Counter(_py_qbucket(v) for v in vals)
-    n = len(vals)
-    want = []
-    for pct in (50, 90, 99):
-        cum = 0
-        for bkt in sorted(c):
-            cum += c[bkt]
-            if cum * 100 >= n * pct:
-                want.append((pct, _py_qlo(bkt), n))
-                break
-    assert a == sorted(want)
-
-
-def test_quantile_sketch_grouped_equals_per_group_ungrouped(spark):
-    import random
-    rng = random.Random(9)
-    rows = [(f"g{i % 3}", rng.randrange(0, 10**7)) for i in range(900)]
-    df = spark.createDataFrame(rows, "k string, x long")
-    got = sorted(map(tuple, sketch.quantile_sketch_grouped(
-        df, "k", "x").collect()))
-    want = []
-    for g in ("g0", "g1", "g2"):
-        sub = df.filter(F.col("k") == g)
-        for r in sketch.quantile_sketch(sub, "x").collect():
-            want.append((g, r["pct"], r["estimate"], r["n"]))
-    assert got == sorted(want)
-
-
-# --- exact two-pass heavy hitters ---------------------------------------------
-
-def _zipfish_host_rows():
-    """Geometric host skew: host-j appears 2^j times (j in 0..11) plus
-    a 500-item distinct tail — the crawl hot-host shape."""
-    rows = []
-    for j in range(12):
-        rows += [(f"host-{j}",)] * (1 << j)
-    rows += [(f"tail-{i}",) for i in range(500)]
-    return rows
-
-
-def test_heavy_hitters_exact_and_partition_invariant(spark):
-    import collections
-    rows = _zipfish_host_rows()
-    cnt = collections.Counter(r[0] for r in rows)
-    n = sum(cnt.values())
-    k = 8
-    want = sorted((i, c, n) for i, c in cnt.items()
-                  if c * (k + 1) > n)
-    assert len(want) >= 2                 # non-vacuous
-    df = spark.createDataFrame(rows, "v string")
-    for parts in (1, 13):
-        got = sorted(map(tuple, sketch.heavy_hitters(
-            df.repartition(parts), "v", k).collect()))
-        assert got == want
-
-
-def test_heavy_hitters_candidate_pass_is_bounded(spark):
-    """Pass 1 (Misra-Gries) emits at most k rows from a partition
-    holding 5000 distinct values, and those rows still include every
-    item above the partition's N/(k+1) bar — the completeness the
-    exact pass relies on."""
-    import collections
-    rows = _zipfish_host_rows() + [(f"extra-{i}",) for i in range(4500)]
-    df = spark.createDataFrame(rows, "v string").coalesce(1) \
-        .select(F.col("v").alias("item"))
-    k = 8
-    cand = {r.item for r in sketch._mg_candidates(df, k).collect()}
-    assert len(cand) <= k
-    cnt = collections.Counter(r[0] for r in rows)
-    n = sum(cnt.values())
-    must = {i for i, c in cnt.items() if c * (k + 1) > n}
-    assert must and must <= cand
-
-
-def test_heavy_hitters_no_qualifiers_yields_empty(spark):
-    df = spark.createDataFrame(
-        [(f"u{i % 100}",) for i in range(1000)], "v string")
-    assert sketch.heavy_hitters(df, "v", k=8).count() == 0
-
-
-# --- KMV distinct-set sketch ---------------------------------------------------
-
-def _h60(s):
-    import hashlib
-    return int(hashlib.md5(str(s).encode()).hexdigest()[:15], 16)
-
-
-def test_kmv_overlap_matches_python_reference(spark):
-    a_vals = list(range(3000))
-    b_vals = list(range(1500, 4500))
-    dfa = spark.createDataFrame([(x,) for x in a_vals], "x long") \
-        .repartition(7)
-    dfb = spark.createDataFrame([(x,) for x in b_vals], "x long") \
-        .repartition(5)
-    row = sketch.kmv_overlap(dfa, "x", dfb, "x").collect()[0]
-    ha = sorted({_h60(x) for x in a_vals})[:64]
-    hb = sorted({_h60(x) for x in b_vals})[:64]
-    hu = sorted(set(ha) | set(hb))[:64]
-    m = sum(1 for h in hu if h in set(ha) and h in set(hb))
-    assert (row.n_union_sketch, row.kth_hash, row.matches_both) == \
-        (len(hu), max(hu), m)
-    est_u = round(63 * (1 << 60) / max(hu), 2)
-    assert row.est_union == est_u
-    assert row.est_intersection == round(m * est_u / 64, 2)
-    # the estimates actually estimate: within 3/sqrt(k-2) relative
-    assert abs(row.est_union - 4500) / 4500 < 3 / (62 ** 0.5)
-    assert abs(row.est_intersection - 1500) / 1500 < 3 / (62 ** 0.5)
-
-
-def test_kmv_small_regime_is_exact(spark):
-    """Under k distinct union values the sketch IS the distinct set:
-    est_union / est_intersection equal the exact cardinalities."""
-    dfa = spark.createDataFrame(
-        [(x % 20,) for x in range(200)], "x long")
-    dfb = spark.createDataFrame(
-        [(x,) for x in range(10, 40)], "x long")
-    row = sketch.kmv_overlap(dfa, "x", dfb, "x").collect()[0]
-    assert row.n_union_sketch == 40      # |{0..39}|
-    assert row.est_union == 40.0
-    assert row.matches_both == 10 and row.est_intersection == 10.0
-
-
-def test_kmv_mins_partition_invariant(spark):
-    vals = [(f"url-{i % 777}",) for i in range(5000)]
-    df = spark.createDataFrame(vals, "u string")
-    one = [r.h for r in sketch.kmv_mins(df.coalesce(1), "u").collect()]
-    many = [r.h for r in sketch.kmv_mins(
-        df.repartition(17), "u").collect()]
-    assert one == many == sorted({_h60(f"url-{i}") for i in range(777)})[:64]
 
 
 # --- positional phrase search ---------------------------------------------------
