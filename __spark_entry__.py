@@ -473,111 +473,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dedup(_docs(spark, sf_dir))
 
 
-def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.normalized_dedup(_docs(spark, sf_dir))
-
-
-def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs with the md5-seeded portable hash
-    family — the DuckDB oracle re-derives the ENTIRE pipeline in pure
-    SQL (shingles → 32-hash signature → 8 bands → candidate self-join
-    → exact-Jaccard verification), so this row is hash-checked, not
-    rows-only.  The xxhash64 family (portable=False) is the faster
-    production default; both are gated by the exact all-pairs ground
-    truth in tests/test_dedup_quality.py."""
-    return dedup.minhash_lsh_dedup(_docs(spark, sf_dir), threshold=0.5,
-                                   portable=True)
-
-
-def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs via prefix filtering — the
-    lossless counterpart to MinHash-LSH (every pair >= 1/2, provable
-    completeness).  The DuckDB oracle is INDEPENDENT of the prefix
-    filter: it enumerates candidates as "pairs sharing >= 1 shingle"
-    (a complete superset for any threshold > 0) and verifies exact
-    Jaccard — so a prefix-length bug on the Spark side (a missed
-    candidate) could not hash-match."""
-    return dedup.ngram_jaccard_pairs(_docs(spark, sf_dir),
-                                     threshold_num=1, threshold_den=2)
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash collision groups, md5-seeded portable variant
-    (bit-majority vote re-derived independently by the DuckDB oracle)."""
-    return dedup.simhash_dedup(_docs(spark, sf_dir), portable=True)
-
-
-def q_dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded SimHash near-pairs, Hamming <= 3, md5-seeded portable
-    variant.  The oracle computes the EXACT all-pairs Hamming <= 3 set
-    — equality with this banded plan is the 4x16-bit pigeonhole
-    guarantee (<= 3 bit flips cannot touch all 4 disjoint bands),
-    which tests/test_dedup_quality.py also pins for the xxhash64
-    family."""
-    return dedup.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3,
-                                    portable=True)
-
-
-def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware dedup survivor election: the portable MinHash
-    near-dup pairs closed into clusters, then the LONGEST member (an
-    octet-length quality proxy; ties to the lowest doc_id) elected
-    per cluster — the keep-the-best-copy policy real corpus builds
-    apply instead of keep-min-id (dedup.elect_survivors).  The
-    oracle closes the same pairs with a recursive CTE and re-elects
-    via a row_number argmax, sharing nothing with the star
-    alternation or the struct-max aggregation."""
-    docs = _docs(spark, sf_dir)
-    pairs = dedup.minhash_lsh_dedup(docs, threshold=0.5, portable=True)
-    scored = docs.select("doc_id",
-                         F.octet_length("text").alias("score"))
-    return dedup.elect_survivors(scored, pairs).select(
-        F.col("id").alias("doc_id"), "cluster_id", "is_keep")
-
-
-def q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide exact paragraph dedup (the Dolma/C4 boilerplate
-    pass, dedup.drop_duplicate_paragraphs) over a paragraph-
-    structured view of the documents table: each doc becomes a
-    unique-ish body line plus planted 'footer %7' / 'nav %3'
-    boilerplate lines, so cross-document duplicate paragraphs (and
-    duplicate BODIES, where the corpus carries planted duplicate
-    texts) exist by construction.  First global occurrence by
-    (doc_id, idx) owns each paragraph; the oracle re-derives the
-    owner with a row_number window over the raw paragraph text —
-    a different mechanism than the engine's digest-keyed struct-min
-    aggregation, so an owner-election bug on either side
-    hash-mismatches."""
-    docs = _docs(spark, sf_dir)
-    text2 = F.concat(
-        F.lit("body "), F.col("text"), F.lit("\n"),
-        F.lit("footer "), (F.col("doc_id") % 7).cast("string"),
-        F.lit("\n"),
-        F.lit("nav "), (F.col("doc_id") % 3).cast("string"))
-    paged = docs.select("doc_id", text2.alias("text"))
-    return dedup.drop_duplicate_paragraphs(paged)
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS: the portable MinHash pairs closed into
-    connected components (alternating large-star/small-star), one
-    cluster id (= min member doc_id) per document and a keep flag for
-    the cluster representative — the decision a corpus build actually
-    applies, where pair-at-a-time dropping would over-delete on chains.
-    The oracle closes the same pairs with a recursive CTE (min
-    reachable id), sharing nothing with the star alternation."""
-    docs = _docs(spark, sf_dir)
-    pairs = dedup.minhash_lsh_dedup(docs, threshold=0.5, portable=True)
-    labels = dedup.connected_components(pairs)
-    comp = F.coalesce(F.col("component"), F.col("doc_id"))
-    return (
-        docs.select("doc_id")
-        .join(labels.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .select(F.col("doc_id"), comp.alias("cluster_id"),
-                (comp == F.col("doc_id")).alias("is_keep"))
-    )
-
-
 def _pii_aug_col() -> F.Column:
     """The deterministic planted-PII suffix (modulo-keyed email /
     phone / ipv4 / ssn) — pure arithmetic the oracle replays via
@@ -609,18 +504,6 @@ def q_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = F.concat(F.col("text"), _pii_aug_col())
     docs = _docs(spark, sf_dir).select("doc_id", aug.alias("text"))
     return pii.scrub_pii(docs)
-
-
-def q_dedup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping-window duplicated-substring removal (Lee et al.
-    2022 style): every 10-word window is examined at every alignment,
-    a window occurrence owns its text iff it is the global minimum
-    (doc, pos), and a word survives iff some covering window is an
-    owner — so an unaligned verbatim re-post vanishes where fixed
-    chunks (dedup_spans) would miss it.  The oracle re-derives
-    windows, global first-occurrence ROW_NUMBER, coverage expansion
-    and the ordered reassembly in SQL."""
-    return dedup.drop_duplicate_windows(_docs(spark, sf_dir), k=10)
 
 
 def q_corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -785,34 +668,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm.linear_quality_scores(_docs(spark, sf_dir), wdf)
 
 
-def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenizer-application half of bpe_merges: replay the two
-    learned merges over every document (driver-collected merge table
-    = vocabulary-sized config, the --py-files shipping shape) and
-    report per-doc word/symbol counts — the post-BPE sequence length
-    that drives context packing.  Zero shuffles: per-row transform +
-    one replace per merge + a native aggregate fold.  The oracle
-    re-learns the merges AND re-applies them per word in SQL."""
-    from cdx_writer_spark.functions import lm
-
-    merges = lm.bpe_merges(_docs(spark, sf_dir), rounds=2)
-    return lm.bpe_segment_counts(_docs(spark, sf_dir), merges)
-
-
-def q_corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain balancing (sampling.domain_cap): every synthetic host
-    capped at 5 documents chosen by the salted md5 key — the
-    mega-site safeguard of a corpus mix, as an unbiased deterministic
-    subsample rather than first-K-by-crawl-order.  One domain-keyed
-    exchange with Partial WindowGroupLimit pre-pruning (plan-tested);
-    the oracle re-ranks with the same md5 key in SQL."""
-    docs = _table(spark, sf_dir, "documents").select(
-        "doc_id", _doc_host_col().alias("domain"))
-    from cdx_writer_spark.functions import sampling
-
-    return sampling.domain_cap(docs, "domain", cap=5)
-
-
 def q_fuzzy_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance-1 fuzzy matching (functions/fuzzy.py) over the
     planted host names — the typo-site / off-by-one-id detector
@@ -862,22 +717,6 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return lm.dsir_importance(_docs(spark, sf_dir),
                               F.col("doc_id") % 7 == 0)
-
-
-def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing (rolling-hash) document fingerprints — MOSS-style;
-    the oracle re-derives k-gram hashing, the sliding min-window and
-    the distinct-set in DuckDB list SQL (arrays projected to csv for
-    the driver's sortable-schema contract)."""
-    # both outputs read the fingerprint array -> bind it once
-    both = dedup.bind_once(
-        dedup.winnowing_fingerprints_col(F.col("text")),
-        lambda f: F.struct(
-            F.size(f).cast("long").alias("n_fingerprints"),
-            F.concat_ws(",", f).alias("fingerprints_csv")))
-    return _docs(spark, sf_dir).select(
-        "doc_id", both.alias("_b")).select(
-        "doc_id", "_b.n_fingerprints", "_b.fingerprints_csv")
 
 
 # --- training-data pipeline: multimodal plumbing ------------------------------
@@ -2145,18 +1984,6 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       n_partitions=8, capacity=256)
 
 
-def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT directional n-gram containment pairs
-    (functions/dedup.py: ngram_containment_pairs) — |A∩B|/|A| >= 1/2,
-    the quote/inclusion detector Jaccard resemblance misses.  The
-    DuckDB oracle is independent of the asymmetric prefix filter: it
-    enumerates ordered pairs sharing >= 1 shingle (a complete
-    superset) and verifies the exact containment ratio."""
-    return dedup.ngram_containment_pairs(_docs(spark, sf_dir),
-                                         threshold_num=1,
-                                         threshold_den=2)
-
-
 def q_url_param_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DUST-style parameter-insignificance mining (frontier/dust.py:
     insignificant_params, Bar-Yossef WWW'07) over a planted alias
@@ -2459,48 +2286,6 @@ def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max(k).alias("max_k"),
                  F.sum(F.when(k % 2 == 0, 1).otherwise(0))
                  .cast("long").alias("n_even")))
-
-
-def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical-URL election (dedup.elect_canonical): alias chains
-    (base url / trailing-slash / ?utm_source variant) resolve to one
-    canonical spelling per connected component — components from the
-    O(log n) star alternation, the election itself ONE map-side
-    min(struct(len, url, id)) aggregation + a component-keyed join
-    back.  The oracle closes the same chains with a recursive CTE and
-    elects with a window."""
-    docs = _table(spark, sf_dir, "documents")
-    cid = F.expr("doc_id div 3")
-    base = F.concat(F.lit("http://site"), (cid % 37).cast("string"),
-                    F.lit(".example.com/p/"), cid.cast("string"))
-    url = (F.when(F.col("doc_id") % 3 == 1, F.concat(base, F.lit("/")))
-           .when(F.col("doc_id") % 3 == 2,
-                 F.concat(base, F.lit("?utm_source=feed")))
-           .otherwise(base))
-    attrs = docs.select("doc_id", url.alias("url"))
-    pairs = (docs.filter(F.col("doc_id") % 3 != 0)
-             .select((F.col("doc_id") - 1).alias("id_a"),
-                     F.col("doc_id").alias("id_b")))
-    return dedup.elect_canonical(pairs, attrs, id_col="doc_id")
-
-
-def _doc_host_col() -> F.Column:
-    """The synthetic per-doc host (six shapes: www-prefixed gTLD,
-    second-level ccTLDs, a private-registry user site, an unknown TLD,
-    a deep subdomain)."""
-    n = (F.col("doc_id") % 40).cast("string")
-    return (F.when(F.col("doc_id") % 6 == 0,
-                   F.concat(F.lit("www.site"), n, F.lit(".com")))
-            .when(F.col("doc_id") % 6 == 1,
-                  F.concat(F.lit("site"), n, F.lit(".co.uk")))
-            .when(F.col("doc_id") % 6 == 2,
-                  F.concat(F.lit("a.b.site"), n, F.lit(".org.uk")))
-            .when(F.col("doc_id") % 6 == 3,
-                  F.concat(F.lit("user"), n, F.lit(".github.io")))
-            .when(F.col("doc_id") % 6 == 4,
-                  F.concat(F.lit("site"), n, F.lit(".internal")))
-            .otherwise(F.concat(F.lit("deep.cdn.site"), n,
-                                F.lit(".com.au"))))
 
 
 def _dhash_png_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2827,11 +2612,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "wet_records": q_wet_records,
         "lm_kn_counts": q_lm_kn_counts,
         "bpe_merges": q_bpe_merges,
-        "bpe_segment": q_bpe_segment,
         "quality_classifier": q_quality_classifier,
-        "dedup_survivors": q_dedup_survivors,
-        "dedup_paragraphs": q_dedup_paragraphs,
-        "corpus_domain_cap": q_corpus_domain_cap,
         "image_dhash": q_image_dhash,
         "image_near_dup": q_image_near_dup,
         "audio_fingerprint": q_audio_fingerprint,
@@ -2841,7 +2622,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdx_prefix_scan": q_cdx_prefix_scan,
         "cdx_index_merge": q_cdx_index_merge,
         "events_json": q_events_json,
-        "dedup_canonical": q_dedup_canonical,
         "cdx_collapse": q_cdx_collapse,
         "orders_above_avg": q_orders_above_avg,
         "events_retention": q_events_retention,
@@ -2871,7 +2651,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_budget": q_crawl_budget,
         "recrawl_tiers": q_recrawl_tiers,
         "cdx_roundtrip": q_cdx_roundtrip,
-        "dedup_containment": q_dedup_containment,
         "url_param_rules": q_url_param_rules,
         "phrase_search": q_phrase_search,
         "warc_revisit_dedup": q_warc_revisit_dedup,
@@ -2922,14 +2701,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdx_checksum_computed": q_cdx_checksum_computed,
         "cdx_mime_status": q_cdx_mime_status,
         "dedup_exact": q_dedup_exact,
-        "dedup_normalized": q_dedup_normalized,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_jaccard": q_dedup_jaccard,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_simhash_near": q_dedup_simhash_near,
-        "dedup_clusters": q_dedup_clusters,
         "dedup_spans": q_dedup_spans,
-        "dedup_windows": q_dedup_windows,
         "corpus_decontaminate": q_corpus_decontaminate,
         "text_pii_scrub": q_text_pii_scrub,
         "text_stats": q_text_stats,
@@ -2941,7 +2713,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_mix": q_corpus_mix,
         "dsir_select": q_dsir_select,
         "text_tfidf": q_text_tfidf,
-        "text_winnowing": q_text_winnowing,
         "multimodal_meta": q_multimodal_meta,
         "audio_features": q_audio_features,
         "gif_frames": q_gif_frames,
@@ -3121,9 +2892,9 @@ def _HEXN_SQL(expr: str, n: int) -> str:
     return f"(SELECT {terms} FROM (SELECT {expr} AS _h))"
 
 
-# BPE learner CTEs (shared by the bpe_merges / bpe_segment
-# oracles): word-frequency table, double-delimiter framing, two
-# argmax rounds ending in b1/b2 holding (s1, s2, wt)
+# BPE learner CTEs (the bpe_merges oracle): word-frequency table,
+# double-delimiter framing, two argmax rounds ending in b1/b2 holding
+# (s1, s2, wt)
 _BPE_LEARN_CTES = (
     "tk AS (SELECT "
     "string_split_regex(trim(lower(text)), '\\s+') AS w "
@@ -3232,17 +3003,6 @@ _HEX_BYTE = ("((strpos('0123456789abcdef', substr(dg, {p1}, 1)) - 1) * 16"
              " + (strpos('0123456789abcdef', substr(dg, {p2}, 1)) - 1))")
 
 
-# --- md5-seeded portable-hash pipelines re-derived in DuckDB SQL -------------
-#
-# These oracles recompute the APPROXIMATE pipelines end-to-end (not
-# just their outputs): same md5-seeded hash families, same banding,
-# same verification — expressed with DuckDB list lambdas and sharing
-# zero code with the Spark operators.
-
-# 64-bit SimHash as a 64-char bit-string: token hash = first 16 hex
-# chars of md5(token); bit i = majority vote of bit i across tokens
-# (nibble i//4 via a strpos hex lookup, shifted by 3 - i%4; the Spark
-# side uses conv() instead).  Mirrors dedup.simhash_bits_col.
 # PII-scrub oracle, composed from the SAME ordered pattern constants
 # the Spark operator applies (the patterns are the operator's spec;
 # both engines' regex dialects meet on the Java/RE2 common subset the
@@ -3297,46 +3057,6 @@ def _pii_sql() -> str:
 
 
 _PII_SQL = _pii_sql()
-
-
-# The full portable MinHash+LSH pipeline (shingles → 32-hash md5
-# signature → 8 bands → bucket candidates → exact-Jaccard scores),
-# shared by the dedup_minhash oracle and the dedup_clusters oracle
-# (which clusters its surviving pairs).  Mirrors
-# dedup.minhash_lsh_dedup(portable=True) stage for stage.
-_MINHASH_CTES = (
-    "tk AS (SELECT doc_id, string_split_regex(trim(text), "
-    "'\\s+') AS tk FROM documents), "
-    "shg AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 3 "
-    "THEN list_transform(range(1, len(tk) - 1), i -> "
-    "array_to_string(list_slice(tk, i, i + 2), ' ')) "
-    "ELSE [array_to_string(tk, ' ')] END) AS sh FROM tk), "
-    "sig AS (SELECT doc_id, list_transform(range(0, 32), j -> "
-    "list_aggregate(list_transform(sh, s -> "
-    "md5(j::VARCHAR || ':' || s)), 'min')) AS sig FROM shg), "
-    "banded AS (SELECT doc_id, u.band AS band, u.bucket AS bucket "
-    "FROM (SELECT doc_id, unnest(list_transform(range(0, 8), "
-    "b -> {'band': b, 'bucket': md5(array_to_string("
-    "list_slice(sig, b * 4 + 1, b * 4 + 4), ','))})) AS u "
-    "FROM sig)), "
-    "cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b "
-    "FROM banded a JOIN banded b ON a.band = b.band "
-    "AND a.bucket = b.bucket AND a.doc_id < b.doc_id), "
-    "scored AS (SELECT id_a, id_b, round(CAST(len(list_filter("
-    "sa.sh, s -> list_contains(sb.sh, s))) AS DOUBLE) / "
-    "len(list_distinct(list_concat(sa.sh, sb.sh))), 4) AS jaccard "
-    "FROM cand JOIN shg sa ON sa.doc_id = cand.id_a "
-    "JOIN shg sb ON sb.doc_id = cand.id_b)")
-
-_SIMHASH_CTE = (
-    "hs AS (SELECT doc_id, list_transform(list_distinct("
-    "string_split_regex(trim(lower(text)), '\\s+')), t -> "
-    "substr(md5(t), 1, 16)) AS hs FROM documents), "
-    "sh AS (SELECT doc_id, array_to_string(list_transform(range(0, 64), "
-    "i -> CASE WHEN 2 * len(list_filter(hs, h -> (((strpos("
-    "'0123456789abcdef', substr(h, (i // 4) + 1, 1)) - 1) "
-    ">> (3 - (i % 4))) & 1) = 1)) >= len(hs) THEN '1' ELSE '0' END), '') "
-    "AS simhash FROM hs)")
 
 
 def oracle_sql() -> dict[str, str]:
@@ -3481,34 +3201,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM (SELECT event_type, "
             "CAST(json_extract_string(props, '$.k') AS BIGINT) AS k "
             "FROM events) GROUP BY event_type"),
-        # canonical-URL election: recursive closure over the alias
-        # chains + a window election — vs the engine's star-alternation
-        # components + map-side min-struct election
-        "dedup_canonical": (
-            "WITH RECURSIVE als AS (SELECT doc_id, "
-            "'http://site' || ((doc_id // 3) % 37) || '.example.com/p/' "
-            "|| (doc_id // 3) || "
-            "CASE WHEN doc_id % 3 = 1 THEN '/' "
-            "WHEN doc_id % 3 = 2 THEN '?utm_source=feed' "
-            "ELSE '' END AS url FROM documents), "
-            "pr AS (SELECT doc_id - 1 AS u, doc_id AS v "
-            "FROM documents WHERE doc_id % 3 <> 0), "
-            "edges AS (SELECT u, v FROM pr UNION SELECT v, u FROM pr), "
-            "reach AS (SELECT u AS id, u AS lab FROM edges "
-            "UNION SELECT e.v, r.lab FROM reach r "
-            "JOIN edges e ON e.u = r.id), "
-            "comp AS (SELECT id, MIN(lab) AS c FROM reach GROUP BY id), "
-            "lab AS (SELECT a.doc_id AS id, a.url, "
-            "COALESCE(comp.c, a.doc_id) AS c "
-            "FROM als a LEFT JOIN comp ON comp.id = a.doc_id), "
-            "win AS (SELECT *, row_number() OVER (PARTITION BY c "
-            "ORDER BY length(url), url, id) AS rn FROM lab), "
-            "best AS (SELECT c, id AS cid, url AS curl "
-            "FROM win WHERE rn = 1) "
-            "SELECT lab.id, lab.url, best.cid AS canonical_id, "
-            "best.curl AS canonical_url, "
-            "lab.id = best.cid AS is_canonical "
-            "FROM lab JOIN best ON best.c = lab.c"),
         # engine's union-tag decomposition replaces — same rows or bust
         "cdx_snapshot_delta": (
             "WITH old AS (SELECT 'com,site' || (doc_id % 37) || ')/p' "
@@ -3565,29 +3257,6 @@ def oracle_sql() -> dict[str, str]:
             "(ORDER BY score_micro DESC, doc_id) AS INT) AS rank "
             "FROM d) "
             "SELECT * FROM r WHERE rank <= 20"),
-        # directional containment brute-forced: ordered pairs sharing
-        # >= 1 shingle (complete superset of any threshold > 0), exact
-        # |A∩B|/|A| verify — independent of the prefix filter
-        "dedup_containment": (
-            "WITH tk AS (SELECT doc_id, string_split_regex(trim(text), "
-            "'\\s+') AS tk FROM documents), "
-            "shg AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 3 "
-            "THEN list_transform(range(1, len(tk) - 1), i -> "
-            "array_to_string(list_slice(tk, i, i + 2), ' ')) "
-            "ELSE [array_to_string(tk, ' ')] END) AS sh FROM tk), "
-            "ex AS (SELECT doc_id, unnest(sh) AS s FROM shg), "
-            "cand AS (SELECT DISTINCT a.doc_id AS id_a, "
-            "b.doc_id AS id_b FROM ex a JOIN ex b ON a.s = b.s "
-            "AND a.doc_id <> b.doc_id), "
-            "scored AS (SELECT id_a, id_b, "
-            "CAST(len(list_filter(sa.sh, s -> list_contains(sb.sh, s))) "
-            "AS BIGINT) AS i, "
-            "CAST(len(sa.sh) AS BIGINT) AS na "
-            "FROM cand JOIN shg sa ON sa.doc_id = cand.id_a "
-            "JOIN shg sb ON sb.doc_id = cand.id_b) "
-            "SELECT id_a, id_b, "
-            "round(CAST(i AS DOUBLE) / na, 4) AS containment "
-            "FROM scored WHERE i * 2 >= na"),
         # DUST re-mined in SQL: same planted alias view, its own
         # split/strip rebuild, witness join on RAW (url, digest)
         # strings — independent of the engine's md5 identity keys
@@ -3962,168 +3631,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(MIN(doc_id) AS BIGINT) AS keep_id, "
             "CAST(COUNT(*) AS BIGINT) AS n_dups "
             "FROM documents GROUP BY 1"),
-        "dedup_normalized": (
-            "SELECT md5(trim(regexp_replace(regexp_replace(lower(text), "
-            "'[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS text_hash, "
-            "CAST(MIN(doc_id) AS BIGINT) AS keep_id, "
-            "CAST(COUNT(*) AS BIGINT) AS n_dups "
-            "FROM documents GROUP BY 1"),
-        # MinHash-LSH re-derived end-to-end: 3-shingles -> 32 md5-seeded
-        # min-hashes -> 8 bands of 4 -> bucket self-join -> exact
-        # Jaccard >= 0.5.  (No exact-collapse mirroring needed: the
-        # Spark side's representative collapse + expansion is
-        # output-equivalent to banding every doc, which is what this
-        # SQL does.)
-        "dedup_minhash": (
-            "WITH " + _MINHASH_CTES +
-            " SELECT id_a, id_b, jaccard FROM scored "
-            "WHERE jaccard >= 0.5"),
-        # near-dup CLUSTERS: the minhash pairs above, closed under
-        # transitive reachability by a recursive CTE (label = min
-        # reachable id) — an implementation-independent check of the
-        # Spark side's large-star/small-star alternation
-        # domain cap re-ranked with the same salted md5 key
-        "corpus_domain_cap": (
-            "WITH d AS (SELECT doc_id, "
-            "CASE WHEN doc_id % 6 = 0 THEN "
-            "'www.site' || (doc_id % 40) || '.com' "
-            "WHEN doc_id % 6 = 1 THEN "
-            "'site' || (doc_id % 40) || '.co.uk' "
-            "WHEN doc_id % 6 = 2 THEN "
-            "'a.b.site' || (doc_id % 40) || '.org.uk' "
-            "WHEN doc_id % 6 = 3 THEN "
-            "'user' || (doc_id % 40) || '.github.io' "
-            "WHEN doc_id % 6 = 4 THEN "
-            "'site' || (doc_id % 40) || '.internal' "
-            "ELSE 'deep.cdn.site' || (doc_id % 40) || '.com.au' END "
-            "AS domain FROM documents), "
-            "rk AS (SELECT doc_id, domain, "
-            "row_number() OVER (PARTITION BY domain ORDER BY "
-            "md5('dcap' || doc_id), doc_id) AS dom_rank FROM d) "
-            "SELECT doc_id, domain, CAST(dom_rank AS BIGINT) "
-            "AS dom_rank FROM rk WHERE dom_rank <= 5"),
-        # paragraph dedup: owner via row_number over the raw text
-        # (vs the engine's digest-keyed struct-min), blank exemption,
-        # ordered string_agg reassembly
-        "dedup_paragraphs": (
-            "WITH px0 AS (SELECT doc_id, "
-            "'body ' || text || chr(10) || "
-            "'footer ' || (doc_id % 7) || chr(10) || "
-            "'nav ' || (doc_id % 3) AS t FROM documents), "
-            "px AS (SELECT doc_id, "
-            "unnest(string_split(t, chr(10))) AS para, "
-            "unnest(range(0, len(string_split(t, chr(10))))) AS idx "
-            "FROM px0), "
-            "rk AS (SELECT doc_id, idx, para, "
-            "row_number() OVER (PARTITION BY para "
-            "ORDER BY doc_id, idx) AS rn FROM px "
-            "WHERE trim(para) <> ''), "
-            "kept AS (SELECT doc_id, idx, para FROM rk WHERE rn = 1 "
-            "UNION ALL SELECT doc_id, idx, para FROM px "
-            "WHERE trim(para) = ''), "
-            "rb AS (SELECT doc_id, COUNT(*) AS n_kept, "
-            "string_agg(para, chr(10) ORDER BY idx) AS clean_text "
-            "FROM kept GROUP BY doc_id), "
-            "tot AS (SELECT doc_id, "
-            "len(string_split(t, chr(10))) AS n_paras FROM px0) "
-            "SELECT tot.doc_id AS id, "
-            "CAST(n_paras AS BIGINT) AS n_paras, "
-            "CAST(COALESCE(n_kept, 0) AS BIGINT) AS n_kept, "
-            "COALESCE(clean_text, '') AS clean_text "
-            "FROM tot LEFT JOIN rb USING (doc_id)"),
-        # survivor election: the cluster closure plus a row_number
-        # argmax by (octet length DESC, doc_id ASC) per cluster
-        "dedup_survivors": (
-            "WITH RECURSIVE " + _MINHASH_CTES + ", "
-            "pairs AS (SELECT id_a, id_b FROM scored "
-            "WHERE jaccard >= 0.5), "
-            "edges AS (SELECT id_a AS u, id_b AS v FROM pairs "
-            "UNION SELECT id_b, id_a FROM pairs), "
-            "reach AS (SELECT u AS id, u AS lab FROM edges "
-            "UNION SELECT e.v, r.lab FROM reach r "
-            "JOIN edges e ON e.u = r.id), "
-            "comp AS (SELECT id, MIN(lab) AS comp FROM reach "
-            "GROUP BY id), "
-            "lab AS (SELECT d.doc_id, "
-            "coalesce(c.comp, d.doc_id) AS cluster_id, "
-            "octet_length(encode(d.text)) AS sc "
-            "FROM documents d LEFT JOIN comp c ON c.id = d.doc_id), "
-            "rk AS (SELECT doc_id, cluster_id, "
-            "row_number() OVER (PARTITION BY cluster_id "
-            "ORDER BY sc DESC, doc_id ASC) AS rn FROM lab) "
-            "SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id, "
-            "rn = 1 AS is_keep FROM rk"),
-        "dedup_clusters": (
-            "WITH RECURSIVE " + _MINHASH_CTES + ", "
-            "pairs AS (SELECT id_a, id_b FROM scored "
-            "WHERE jaccard >= 0.5), "
-            "edges AS (SELECT id_a AS u, id_b AS v FROM pairs "
-            "UNION SELECT id_b, id_a FROM pairs), "
-            "reach AS (SELECT u AS id, u AS lab FROM edges "
-            "UNION SELECT e.v, r.lab FROM reach r "
-            "JOIN edges e ON e.u = r.id), "
-            "comp AS (SELECT id, MIN(lab) AS comp FROM reach "
-            "GROUP BY id) "
-            "SELECT d.doc_id, "
-            "CAST(coalesce(c.comp, d.doc_id) AS BIGINT) AS cluster_id, "
-            "coalesce(c.comp, d.doc_id) = d.doc_id AS is_keep "
-            "FROM documents d LEFT JOIN comp c ON c.id = d.doc_id"),
-        # EXACT prefix-filtered Jaccard — the oracle is independent of
-        # the prefix filter: candidates = pairs sharing ANY shingle (a
-        # complete superset for threshold > 0), then exact verification
-        # with the integer qualifying test (2*|A∩B| >= |A∪B|)
-        "dedup_jaccard": (
-            "WITH tk AS (SELECT doc_id, string_split_regex(trim(text), "
-            "'\\s+') AS tk FROM documents), "
-            "shg AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 3 "
-            "THEN list_transform(range(1, len(tk) - 1), i -> "
-            "array_to_string(list_slice(tk, i, i + 2), ' ')) "
-            "ELSE [array_to_string(tk, ' ')] END) AS sh FROM tk), "
-            "ex AS (SELECT doc_id, unnest(sh) AS s FROM shg), "
-            "cand AS (SELECT DISTINCT a.doc_id AS id_a, "
-            "b.doc_id AS id_b FROM ex a JOIN ex b ON a.s = b.s "
-            "AND a.doc_id < b.doc_id), "
-            "scored AS (SELECT id_a, id_b, "
-            "CAST(len(list_filter(sa.sh, s -> list_contains(sb.sh, s))) "
-            "AS BIGINT) AS i, "
-            "CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) "
-            "AS BIGINT) AS u "
-            "FROM cand JOIN shg sa ON sa.doc_id = cand.id_a "
-            "JOIN shg sb ON sb.doc_id = cand.id_b) "
-            "SELECT id_a, id_b, "
-            "round(CAST(i AS DOUBLE) / u, 4) AS jaccard "
-            "FROM scored WHERE i * 2 >= u"),
-        # overlapping-window substring dedup re-derived: all 10-word
-        # windows (short-doc whole-text fallback), global
-        # first-occurrence ROW_NUMBER over (doc_id, pos), owner
-        # windows expanded to covered word indices, ordered
-        # reassembly of covered words
-        "dedup_windows": (
-            "WITH w AS (SELECT doc_id, string_split(text, ' ') "
-            "AS words FROM documents), "
-            "win AS (SELECT doc_id, CAST(t.p AS INTEGER) AS p, "
-            "array_to_string(words[CAST(t.p+1 AS BIGINT):"
-            "CAST(t.p+10 AS BIGINT)], ' ') AS chunk "
-            "FROM w, unnest(range(0, len(words)-9)) AS t(p) "
-            "WHERE len(words) >= 10 "
-            "UNION ALL SELECT doc_id, 0, array_to_string(words, ' ') "
-            "FROM w WHERE len(words) < 10), "
-            "ranked AS (SELECT doc_id, p, ROW_NUMBER() OVER "
-            "(PARTITION BY chunk ORDER BY doc_id, p) AS rn FROM win), "
-            "covered AS (SELECT DISTINCT doc_id, "
-            "CAST(t.i AS INTEGER) AS i FROM ranked, "
-            "unnest(range(p+1, p+11)) AS t(i) WHERE rn = 1), "
-            "we AS (SELECT doc_id, CAST(t.i AS INTEGER) AS i, "
-            "words[t.i] AS wd FROM w, "
-            "unnest(range(1, len(words)+1)) AS t(i)) "
-            "SELECT we.doc_id, "
-            "coalesce(string_agg(CASE WHEN c.i IS NOT NULL THEN wd "
-            "END, ' ' ORDER BY we.i), '') AS clean_text, "
-            "CAST(count(*) AS BIGINT) AS n_words, "
-            "CAST(sum(CASE WHEN c.i IS NOT NULL THEN 1 ELSE 0 END) "
-            "AS BIGINT) AS n_kept "
-            "FROM we LEFT JOIN covered c ON c.doc_id = we.doc_id "
-            "AND c.i = we.i GROUP BY we.doc_id"),
         # PII scrub re-derived: the same deterministic augmentation,
         # then the IDENTICAL pattern strings (pii.PII_PATTERNS is the
         # spec, not the implementation) through DuckDB's RE2 —
@@ -4167,21 +3674,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) "
             "AS n_kept "
             "FROM ranked GROUP BY doc_id"),
-        "dedup_simhash": (
-            "WITH " + _SIMHASH_CTE + " SELECT simhash, "
-            "CAST(MIN(doc_id) AS BIGINT) AS keep_id, "
-            "CAST(COUNT(*) AS BIGINT) AS n_dups FROM sh GROUP BY 1"),
-        # EXACT all-pairs Hamming <= 3 — equality with the Spark side's
-        # banded plan is the 4x16-bit pigeonhole guarantee, so this
-        # oracle is strictly independent of the banding.
-        "dedup_simhash_near": (
-            "WITH " + _SIMHASH_CTE + ", pairs AS (SELECT "
-            "a.doc_id AS id_a, b.doc_id AS id_b, "
-            "CAST(len(list_filter(range(1, 65), i -> "
-            "substr(a.simhash, i, 1) <> substr(b.simhash, i, 1))) "
-            "AS INTEGER) AS hamming "
-            "FROM sh a JOIN sh b ON a.doc_id < b.doc_id) "
-            "SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3"),
         "text_stats": (
             "WITH toks AS (SELECT doc_id, text, "
             "string_split_regex(trim(text), '\\s+') AS tk, "
@@ -4426,29 +3918,6 @@ def oracle_sql() -> dict[str, str]:
             "UNION ALL "
             "SELECT CAST(2 AS BIGINT), s1, s2, s1 || s2, "
             "CAST(wt AS BIGINT) FROM b2"),
-        # segmentation: re-apply the two learned merges per word (the
-        # same double-delimiter replaces) and fold symbol counts
-        "bpe_segment": (
-            "WITH " + _BPE_LEARN_CTES + ", "
-            "ba AS (SELECT s1 AS s1a, s2 AS s2a FROM b1), "
-            "bb AS (SELECT s1 AS s1b, s2 AS s2b FROM b2), "
-            "seg AS (SELECT doc_id, "
-            "list_filter(string_split_regex(trim(lower(text)), "
-            "'\\s+'), t -> t <> '') AS w FROM documents), "
-            "app AS (SELECT doc_id, len(w) AS n_words, "
-            "list_sum(list_transform(w, tok -> "
-            "len(string_split(replace(replace("
-            "chr(31) || regexp_replace(replace(tok, chr(31), ''), "
-            "'(.)', chr(31) || '\\1' || chr(31), 'g') || chr(31), "
-            "chr(31) || s1a || chr(31) || chr(31) || s2a || chr(31), "
-            "chr(31) || s1a || s2a || chr(31)), "
-            "chr(31) || s1b || chr(31) || chr(31) || s2b || chr(31), "
-            "chr(31) || s1b || s2b || chr(31)), "
-            "chr(31) || chr(31))) - 2)) AS n_symbols "
-            "FROM seg CROSS JOIN ba CROSS JOIN bb) "
-            "SELECT doc_id, CAST(n_words AS BIGINT) AS n_words, "
-            "CAST(COALESCE(n_symbols, 0) AS BIGINT) AS n_symbols "
-            "FROM app"),
         # Kneser-Ney counts re-derived with lockstep parallel unnest
         # of the token list against its shift — distinct pair types,
         # then two vocabulary-sized aggregations
@@ -4548,23 +4017,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, CAST(c.idx AS BIGINT) AS chunk_idx, "
             "CAST(c.n AS BIGINT) AS n_tokens, c.txt AS chunk_text "
             "FROM ch"),
-        # Winnowing fingerprints re-derived: char 8-grams of the
-        # normalized text -> md5-prefix hashes -> min of each
-        # 4-hash window -> sorted distinct set
-        "text_winnowing": (
-            "WITH nrm AS (SELECT doc_id, "
-            "trim(regexp_replace(regexp_replace(lower(text), "
-            "'[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g')) AS t "
-            "FROM documents), "
-            "h AS (SELECT doc_id, list_transform(range(1, "
-            "greatest(len(t) - 7, 1) + 1), i -> "
-            "substr(md5(substr(t, i, 8)), 1, 8)) AS hs FROM nrm), "
-            "fp AS (SELECT doc_id, list_sort(list_distinct("
-            "list_transform(range(1, greatest(len(hs) - 3, 1) + 1), "
-            "j -> list_aggregate(list_slice(hs, j, j + 3), 'min')))) "
-            "AS fps FROM h) "
-            "SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fingerprints, "
-            "array_to_string(fps, ',') AS fingerprints_csv FROM fp"),
         "multimodal_meta": (
             _W + " SELECT doc_id, "
             f"CAST(length({_PAYLOAD_SQL}) AS BIGINT) AS payload_bytes, "

@@ -84,9 +84,9 @@ class CrawlConfig:
     # while total filter state fits seen.NATIVE_BROADCAST_MAX_BYTES,
     # else 'cogroup' (per-pid shuffle, each task holds one blob: the
     # 10^10-key path where ~12 GB of filter state must never be
-    # broadcast).  Explicit 'native'/'pandas'/'cogroup' force a
-    # strategy.  Resolution is pure driver-side arithmetic (the loop
-    # passes seen.filter_state_bytes) — no extra job per round.
+    # broadcast).  Explicit 'native'/'cogroup' force a strategy.
+    # Resolution is pure driver-side arithmetic (the loop passes
+    # seen.filter_state_bytes) — no extra job per round.
     probe_strategy: str = "auto"
     # Bloom FOLD strategy (seen.update_filters): 'native' explodes the
     # k probe positions JVM-side and bit_or-aggregates words (Python
@@ -153,25 +153,6 @@ def _write_concurrent(rnd_dir: str, named: list[tuple[str, DataFrame]]
     with ThreadPoolExecutor(max_workers=len(named)) as ex:
         # list() so every future's exception propagates
         list(ex.map(one, named))
-
-
-def _profile_phase(label: str, fn):
-    """Opt-in phase profiler (SPARK_GRAFT_ROUND_PROFILE=1): times a
-    blocking action and prints it to stderr.  Profiling forces extra
-    materialization actions in run_round to decompose the round's
-    wall time — it changes what is measured, never what is computed,
-    and stays off in benchmarks."""
-    import sys
-    import time as _time
-
-    t0 = _time.monotonic()
-    out = fn()
-    print(f"[round-profile] {label}: {_time.monotonic() - t0:.2f}s",
-          file=sys.stderr, flush=True)
-    return out
-
-
-_PROFILE = "SPARK_GRAFT_ROUND_PROFILE"
 
 
 def _observed_count(df: DataFrame, obs_name: str):
@@ -291,10 +272,7 @@ def run_round(spark: SparkSession, web: DataFrame, state_dir: str,
              F.first("host_rank").alias("host_rank"))  # is deterministic
     )
 
-    # 4. URL-seen (Bloom prefilter + exact anti-join); the blob
-    # broadcast (if any) is unpersisted after the commit — one leaked
-    # broadcast per round would accumulate across a long crawl
-    bloom_cleanup: list = []
+    # 4. URL-seen (Bloom prefilter + exact anti-join)
     # k is fully determined by the config's filter sizing — passing it
     # saves the probe's per-round driver peek job (the expression still
     # guards per-row against differently-sized resumed filters)
@@ -303,8 +281,7 @@ def run_round(spark: SparkSession, web: DataFrame, state_dir: str,
         if cfg.filter_kind == "bloom" else None)
     flagged = seenmod.flag_maybe_seen(
         discovered, filters, cfg.n_partitions,
-        strategy=cfg.probe_strategy,
-        cleanup=bloom_cleanup, static_k=expected_k,
+        strategy=cfg.probe_strategy, static_k=expected_k,
         kind=cfg.filter_kind,
         # configured geometry -> 'auto' resolves with zero Spark jobs
         state_bytes=seenmod.filter_state_bytes(
@@ -391,31 +368,16 @@ def run_round(spark: SparkSession, web: DataFrame, state_dir: str,
     # the four independent state writes are submitted concurrently
     # (shared upstream stages are persisted above, so the writers
     # reuse — not recompute — batch/flagged/new)
-    if os.environ.get(_PROFILE) == "1":
-        # decompose the round: force each persisted stage in turn so
-        # the write block's cost separates from the compute stages
-        _profile_phase("schedule(batch)", batch.count)
-        _profile_phase("probe(flagged)", flagged.count)
-        _profile_phase("verify(new)", new.count)
-        _profile_phase("commit(4 writes)", lambda: _write_concurrent(
-            rnd_dir, [("frontier", frontier_next), ("seen", seen_obs),
-                      ("filters", filters_next),
-                      ("scheduled", scheduled_obs)]))
-        _profile_phase("metrics", lambda: metrics_from(filters_next)
-                       .coalesce(1).write.mode("overwrite").parquet(
-                           os.path.join(rnd_dir, "metrics")))
-    else:
-        _write_concurrent(rnd_dir, [
-            ("frontier", frontier_next), ("seen", seen_obs),
-            ("filters", filters_next), ("scheduled", scheduled_obs)])
-        # metrics last: its _SUCCESS is the round's commit marker.
-        # coalesce(1): the frame is one row per filter partition (~64)
-        # but inherits shuffle-partition fan-out from its joins —
-        # writing it wide is pure per-round fixed cost (task launch +
-        # file create per partition) that a 4x-core level cannot
-        # parallelize away
-        metrics_from(filters_next).coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(rnd_dir, "metrics"))
+    _write_concurrent(rnd_dir, [
+        ("frontier", frontier_next), ("seen", seen_obs),
+        ("filters", filters_next), ("scheduled", scheduled_obs)])
+    # metrics last: its _SUCCESS is the round's commit marker.
+    # coalesce(1): the frame is one row per filter partition (~64) but
+    # inherits shuffle-partition fan-out from its joins — writing it
+    # wide is pure per-round fixed cost (task launch + file create per
+    # partition) that a 4x-core level cannot parallelize away
+    metrics_from(filters_next).coalesce(1).write.mode(
+        "overwrite").parquet(os.path.join(rnd_dir, "metrics"))
 
     n_scheduled = get_scheduled()
     n_new = get_new()
@@ -429,8 +391,6 @@ def run_round(spark: SparkSession, web: DataFrame, state_dir: str,
     flagged.unpersist()
     new.unpersist()
     filters_next.unpersist()
-    for b in bloom_cleanup:
-        b.unpersist()
     return {"round": rnd, "scheduled": n_scheduled, "new_urls": n_new}
 
 

@@ -12,8 +12,8 @@ Probe flow for a batch of discovered candidates:
 2. ``flag_maybe_seen`` flags each candidate — by default with a
    PURE-CATALYST probe (broadcast the filters' int64 word arrays,
    ``element_at`` + ``shiftright`` bit tests; no Python, no shuffle),
-   falling back to a pandas-UDF blob probe or a per-pid cogroup at
-   filter-state sizes past the broadcast budget → boolean
+   falling back to a per-pid cogroup at filter-state sizes past the
+   broadcast budget → boolean
    ``maybe_seen``.  Definitely-new rows (the vast majority in a
    growing crawl) **skip the anti-join shuffle entirely**.
 3. Only the maybe-seen minority anti-joins the exact seen table
@@ -70,8 +70,8 @@ _FILTER_SCHEMA = ("partition_id int, filter_blob binary, n_items long, "
 def _filter_from_bytes(blob: bytes):
     """Deserialize a filter blob by its format magic — Bloom (BLF2) or
     cuckoo (CKF1).  Both classes expose the same ``contains_many`` /
-    ``add_many`` / ``to_longs`` surface, so the pandas and cogroup
-    probe strategies are filter-kind-agnostic: a checkpoint directory
+    ``add_many`` / ``to_longs`` surface, so the cogroup probe and the
+    Python folds are filter-kind-agnostic: a checkpoint directory
     self-describes which filter family wrote it."""
     if blob[:4] == b"CKF1":
         return CuckooFilter.from_bytes(blob)
@@ -247,8 +247,6 @@ def empty_filters(spark, n_partitions: int = DEFAULT_PARTITIONS,
 
 def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
                     n_partitions: int = DEFAULT_PARTITIONS,
-                    broadcast_probe: bool | None = None,
-                    cleanup: list | None = None,
                     strategy: str = "auto",
                     static_k: int | None = None,
                     kind: str = "bloom",
@@ -265,7 +263,8 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
     arithmetic); without it one tiny n_partitions-row aggregate reads
     the actual geometry.
 
-    Three physical strategies, same semantics (tested equal):
+    Two physical strategies, one per size regime, same semantics
+    (tested equal):
 
     * ``strategy='native'``: broadcast-join the tiny filters
       table (pid → bits_longs words) onto the candidates and evaluate
@@ -274,25 +273,11 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
       pandas stage; Arrow serde + Python workers burn ~2 cores per
       task slot).  Right while total filter state fits the broadcast
       budget.
-    * ``strategy='pandas'`` (``broadcast_probe=True``): collect the
-      blobs (bounded: P × blob size) and probe inside a pandas UDF
-      over the candidates' natural partitioning — zero shuffle.
-    * ``strategy='cogroup'`` (``broadcast_probe=False``): cogroup
-      candidates with blobs per pid — two hash shuffles, but each task
-      holds exactly one blob.  The 10^10-key path (4096 × ~2.9 MB
-      blobs ≈ 12 GB total filter state, too big to broadcast).
-
-    ``broadcast_probe`` (bool) is the legacy selector for the two
-    Python paths and overrides ``strategy`` when given.
-
-    ``cleanup``: with the pandas strategy, the Broadcast handle is
-    appended here so the caller can ``.unpersist()`` it once the
-    round's actions complete — otherwise a long resumable crawl
-    accumulates one blob broadcast per round in driver + executor
-    memory.
+    * ``strategy='cogroup'``: cogroup candidates with blobs per pid —
+      two hash shuffles, but each task holds exactly one blob.  The
+      10^10-key path (4096 × ~2.9 MB blobs ≈ 12 GB total filter state,
+      too big to broadcast).
     """
-    if broadcast_probe is not None:
-        strategy = "pandas" if broadcast_probe else "cogroup"
     if strategy == "auto":
         if state_bytes is None:
             # n_partitions rows; n_bits/8 is each row's word-array
@@ -301,6 +286,9 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
                 (F.sum("n_bits") / 8).alias("b")).first()
             state_bytes = int(row["b"] or 0)
         strategy = resolve_probe_strategy(state_bytes)
+    if strategy not in ("native", "cogroup"):
+        raise ValueError(f"unknown probe strategy {strategy!r}: "
+                         "expected 'auto', 'native' or 'cogroup'")
     cand = with_hash_cols(candidates.select(*_CAND_COLS), n_partitions)
 
     if strategy == "native" and kind == "cuckoo":
@@ -370,36 +358,6 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
         return joined.withColumn("maybe_seen", probe) \
             .select(*_CAND_COLS, "maybe_seen")
 
-    if strategy == "pandas":
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-
-        blobs = {int(r["partition_id"]): bytes(r["filter_blob"])
-                 for r in filters.collect()}
-        sc = candidates.sparkSession.sparkContext
-        b_blobs = sc.broadcast(blobs)
-        if cleanup is not None:
-            cleanup.append(b_blobs)
-
-        @pandas_udf("boolean")
-        def probe_udf(pid: pd.Series, h1: pd.Series,
-                      h2: pd.Series) -> pd.Series:
-            out = np.zeros(len(pid), dtype=bool)
-            pids = pid.to_numpy()
-            h1v, h2v = h1.to_numpy(), h2.to_numpy()
-            for p in np.unique(pids):
-                blob = b_blobs.value.get(int(p))
-                if blob is None:
-                    continue
-                bf = _filter_from_bytes(blob)
-                mask = pids == p
-                out[mask] = bf.contains_many(h1v[mask], h2v[mask])
-            return pd.Series(out)
-
-        return cand.withColumn(
-            "maybe_seen", probe_udf("pid", "h1", "h2")
-        ).select(*_CAND_COLS, "maybe_seen")
-
     def probe(cpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
         if len(cpdf) == 0:
             return pd.DataFrame(
@@ -423,7 +381,6 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
 
 def split_new(candidates: DataFrame, filters: DataFrame, seen: DataFrame,
               n_partitions: int = DEFAULT_PARTITIONS,
-              broadcast_probe: bool | None = None,
               strategy: str = "auto",
               kind: str = "bloom",
               state_bytes: int | None = None) -> DataFrame:
@@ -434,7 +391,7 @@ def split_new(candidates: DataFrame, filters: DataFrame, seen: DataFrame,
     produces a false negative — so the split (and hence crawl order)
     is byte-identical across filter families, which is tested."""
     flagged = flag_maybe_seen(candidates, filters, n_partitions,
-                              broadcast_probe, strategy=strategy,
+                              strategy=strategy,
                               kind=kind, state_bytes=state_bytes)
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     verified_new = (

@@ -458,57 +458,6 @@ def linear_quality_scores(docs: DataFrame, weights: DataFrame,
         (F.col("score_q") > F.lit(int(threshold_q))).alias("keep"))
 
 
-def bpe_segment_counts(docs: DataFrame, merges: DataFrame,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Apply a learned BPE merge table to the corpus — the tokenizer
-    APPLICATION half of :func:`bpe_merges` (what every training run
-    does to every document with the frozen ``merges.txt``): segment
-    each word by replaying the merges in learned order and report
-    ``(id, n_words, n_symbols)`` — the post-BPE sequence length that
-    drives context-window packing and per-doc token accounting.
-
-    ``merges`` is the ``bpe_merges`` output (or a loaded merges
-    table); it is COLLECTED driver-side — a tokenizer's merge list
-    is vocabulary-sized configuration, exactly the thing a Spark job
-    ships with ``--py-files``/broadcast, never a data-sized collect.
-
-    Scale shape: ZERO shuffles — per row, words bind once behind the
-    Generate-barrier-free ``transform`` lambda, each merge is one
-    ``replace`` on the double-delimiter framing (the exact greedy
-    semantics of the learner), and the symbol count folds with a
-    native ``aggregate``.  Plan depth grows one ``replace`` per
-    merge: past a few hundred merges, checkpoint the projection
-    every ~100 merges (same discipline as the iterative graph
-    operators) — documented trade, irrelevant at config-sized merge
-    counts."""
-    rows = sorted(((int(r["round"]), r["left_sym"], r["right_sym"])
-                   for r in merges.collect()))
-    toks = tokens_col(F.lower(F.col(text_col)))
-
-    def _nsyms(word):
-        stripped = F.replace(word, F.lit(BPE_SEP), F.lit(""))
-        framed = F.concat(
-            F.lit(BPE_SEP),
-            F.regexp_replace(stripped, "(.)",
-                             BPE_SEP + "$1" + BPE_SEP),
-            F.lit(BPE_SEP))
-        for _, s1, s2 in rows:
-            framed = F.replace(
-                framed,
-                F.lit(BPE_SEP + s1 + BPE_SEP * 2 + s2 + BPE_SEP),
-                F.lit(BPE_SEP + s1 + s2 + BPE_SEP))
-        return F.size(F.split(framed, BPE_SEP + BPE_SEP)) - 2
-
-    w = F.filter(toks, lambda t: t != "")
-    return docs.select(
-        F.col(id_col),
-        F.size(w).cast("long").alias("n_words"),
-        F.aggregate(w, F.lit(0),
-                    lambda acc, t: acc + _nsyms(t)).cast("long")
-        .alias("n_symbols"))
-
-
 #: default per-tier keep rates in thousandths (CCNet keeps the head,
 #: thins the middle, mostly drops the tail)
 DEFAULT_MIX_MILLIS = {"head": 1000, "middle": 500, "tail": 125}

@@ -180,31 +180,3 @@ def apportion(df: DataFrame, weight_col: str, budget: int,
                     (F.col("__ap_base")
                      + F.when(F.col("__ap_rk") <= leftover, 1)
                      .otherwise(0)).cast("long").alias("quota")))
-
-def domain_cap(df: DataFrame, domain_col: str, cap: int,
-               id_col: str = "doc_id",
-               salt: str = "dcap") -> DataFrame:
-    """Domain balancing — cap every domain's contribution to the
-    corpus at ``cap`` documents (the safeguard corpus builds apply
-    against dominant hosts: without it a handful of mega-sites own
-    the token budget).  Survivors are chosen by the salted md5
-    sample key (id tie-break), i.e. an UNBIASED deterministic
-    subsample of each domain — never first-``cap``-by-id, which
-    correlates with crawl order and systematically favors a site's
-    oldest pages.  Returns the surviving rows with their
-    ``dom_rank`` (1-based within the domain).
-
-    Scale shape: ONE domain-keyed exchange, and because the cap is a
-    rank filter Catalyst's *Partial* ``WindowGroupLimit`` prunes
-    every map task to ≤ ``cap`` rows per domain BEFORE the exchange
-    — shuffle volume is cap·|domains|, not |rows| (plan-tested); a
-    mega-domain ships ``cap`` rows per map task, never its page set.
-    The choice is a pure function of (salt, id), so reruns and
-    independent engines agree without coordination."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(domain_col).orderBy(
-        sample_key_col(F.col(id_col), salt), F.col(id_col))
-    return (df.withColumn("dom_rank", F.row_number().over(w))
-            .filter(F.col("dom_rank") <= int(cap))
-            .withColumn("dom_rank", F.col("dom_rank").cast("long")))

@@ -100,7 +100,7 @@ def normalized_text_col(text: Column) -> Column:
 
 def fingerprint_col(text: Column) -> Column:
     """Document fingerprint: md5 of the normalized text (md5 exists in
-    both engines; the rolling/simhash variants live in dedup.py)."""
+    both engines)."""
     return F.md5(normalized_text_col(text))
 
 

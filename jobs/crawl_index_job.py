@@ -63,12 +63,11 @@ def main() -> None:
                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
                                               os.cpu_count())))
     p.add_argument("--probe", default="auto",
-                   choices=["auto", "native", "pandas", "cogroup"],
+                   choices=["auto", "native", "cogroup"],
                    help="URL-seen Bloom probe strategy: auto "
                         "(default: native while the filter words fit "
                         "the broadcast budget, else cogroup), native "
-                        "Catalyst expression, pandas broadcast blobs, "
-                        "or per-partition cogroup")
+                        "Catalyst expression, or per-partition cogroup")
     p.add_argument("--filter-kind", default="bloom",
                    choices=["bloom", "cuckoo"],
                    help="URL-seen filter family: blocked Bloom "

@@ -86,11 +86,11 @@ warm = cdx_lines(pages_from_documents(spark, sf_dir, amplify=1),
 warm.write.format("noop").mode("overwrite").save()
 
 # 1. CDX projection throughput in the reference's native output mode
-# (file-order CDX; the bytewise-sorted variant is an extra reported by
-# bench.py — its range sampler re-executes the projection, so it mixes
-# 2x compute into the measurement).  SPARK_GRAFT_SKIP_CDX=1 runs a
-# crawl-only trial (cheaper reps when hunting a quiet window for the
-# crawl gate; the official record always comes from full runs).
+# (file-order CDX; bench.py times the bytewise-sorted sink, whose
+# range sort adds an exchange this measurement leaves out).
+# SPARK_GRAFT_SKIP_CDX=1 runs a crawl-only trial (cheaper reps when
+# hunting a quiet window for the crawl gate; the official record always
+# comes from full runs).
 skip_cdx = os.environ.get("SPARK_GRAFT_SKIP_CDX", "0") == "1"
 cdx_rows, cdx_sec = 0, None
 if not skip_cdx:

@@ -99,103 +99,3 @@ def test_cc_releases_intermediate_checkpoint_blocks(spark):
     leftover = ids() - before
     assert len(leftover) <= 2, (
         f"{len(leftover)} persistent RDDs leaked: {sorted(leftover)}")
-
-
-# --- quality-aware survivor election --------------------------------------------
-
-
-def _py_survivors(ids_scores, pairs):
-    """Reference: union-find closure, then per-component argmax by
-    (score, -id)."""
-    parent = {i: i for i, _ in ids_scores}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp = {}
-    for i, _ in ids_scores:
-        comp.setdefault(find(i), []).append(i)
-    # cluster id = min member (matches connected_components labels)
-    scores = dict(ids_scores)
-    out = {}
-    for members in comp.values():
-        cid = min(members)
-        best = max(members, key=lambda i: (scores[i], -i))
-        for i in members:
-            out[i] = (cid, i == best)
-    return out
-
-
-def _run_survivors(spark, ids_scores, pairs):
-    from cdx_writer_spark.functions import dedup
-
-    scored = spark.createDataFrame(ids_scores,
-                                   "doc_id long, score long")
-    pdf = spark.createDataFrame(pairs or [(0, 0)],
-                                "id_a long, id_b long")
-    if not pairs:
-        pdf = pdf.filter("id_a <> id_a")
-    return {r["id"]: (r["cluster_id"], r["is_keep"])
-            for r in dedup.elect_survivors(scored, pdf).collect()}
-
-
-def test_survivors_best_score_wins_on_chain(spark):
-    # chain 1-2-3 is ONE cluster; doc 2 has the best score
-    ids = [(1, 10), (2, 99), (3, 50), (7, 5)]
-    pairs = [(1, 2), (2, 3)]
-    got = _run_survivors(spark, ids, pairs)
-    assert got == _py_survivors(ids, pairs)
-    assert got[2] == (1, True)
-    assert got[1] == (1, False) and got[3] == (1, False)
-    assert got[7] == (7, True)          # singleton survives
-
-
-def test_survivors_tie_breaks_to_lowest_id(spark):
-    ids = [(4, 7), (9, 7), (2, 7)]
-    pairs = [(4, 9), (9, 2)]
-    got = _run_survivors(spark, ids, pairs)
-    assert got == _py_survivors(ids, pairs)
-    assert [i for i, (_, k) in got.items() if k] == [2]
-
-
-def test_survivors_match_python_reference_random(spark):
-    import random
-    rng = random.Random(53)
-    ids = [(i, rng.randrange(100)) for i in range(40)]
-    pairs = [(rng.randrange(40), rng.randrange(40))
-             for _ in range(25)]
-    pairs = [p for p in pairs if p[0] != p[1]]
-    got = _run_survivors(spark, ids, pairs)
-    assert got == _py_survivors(ids, pairs)
-    # exactly one survivor per cluster
-    from collections import Counter
-    keeps = Counter(c for c, k in got.values() if k)
-    clusters = {c for c, _ in got.values()}
-    assert set(keeps) == clusters and all(
-        v == 1 for v in keeps.values())
-
-
-def test_survivors_partitioning_invariance(spark):
-    from cdx_writer_spark.functions import dedup
-
-    import random
-    rng = random.Random(59)
-    ids = [(i, rng.randrange(50)) for i in range(30)]
-    pairs = [(rng.randrange(30), rng.randrange(30))
-             for _ in range(20)]
-    pairs = [p for p in pairs if p[0] != p[1]]
-    scored = spark.createDataFrame(ids, "doc_id long, score long")
-    pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
-    a = sorted(map(tuple, dedup.elect_survivors(
-        scored.repartition(1), pdf.repartition(1)).collect()))
-    b = sorted(map(tuple, dedup.elect_survivors(
-        scored.repartition(8, "doc_id"),
-        pdf.repartition(8, "id_b")).collect()))
-    assert a == b

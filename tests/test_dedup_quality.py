@@ -1,153 +1,75 @@
-"""Ground-truth quality gates for the APPROXIMATE dedup tier.
+"""Ground-truth quality gates for the dedup tier.
 
 The reference's ethos is golden-output verification
 (/root/reference/tests/test_small_warcs.py:108-143); the exact CDX
 pipeline honors that byte-for-byte.  These tests apply the same bar to
-the operators the reference doesn't have: MinHash-LSH and SimHash
-near-dup results are checked against EXACT all-pairs recomputations
-(tractable at test scale via a crossJoin ground truth that the
-production operators never use).
+the operators the reference doesn't have: the band-bucket pair engine
+(``bits_near_pairs``), the span dedup the corpus job runs, and the
+Gopher/repetition quality rules, each against hand-built ground truth.
 
-Everything is deterministic (xxhash64 seeds, synthetic corpus from
-index arithmetic), so the measured recalls are stable run-to-run and
-the asserted floors are meaningful regressions gates, not flaky
-statistics.
+Everything is deterministic (seeded signatures, synthetic text from
+index arithmetic), so the asserted counts are regression gates, not
+flaky statistics.
 """
 
 from __future__ import annotations
 
-import pytest
+import random
+
 from pyspark.sql import functions as F
 
 from cdx_writer_spark.functions import dedup
 
-# --- synthetic corpus with KNOWN near-duplicate structure --------------------
-#
-# 30 base docs of 30 tokens each (disjoint vocabularies), and for each
-# base: a near-dup with 1 token replaced (3-shingle Jaccard ~ 25/31 =
-# 0.81) and a moderate variant with 6 tokens replaced (J ~ 0.33, below
-# every threshold used here).
 
-N_BASE = 30
-TOKENS_PER_DOC = 30
+def _bits(ones) -> str:
+    """A 64-char 0/1 signature with the given bit positions set."""
+    out = ["0"] * 64
+    for i in ones:
+        out[i] = "1"
+    return "".join(out)
 
 
-def _corpus_rows():
-    rows = []
-    for i in range(N_BASE):
-        toks = [f"w{i}_{j}" for j in range(TOKENS_PER_DOC)]
-        rows.append((i * 10, " ".join(toks)))
-        near = list(toks)
-        near[7] = f"x{i}_near"
-        rows.append((i * 10 + 1, " ".join(near)))
-        mod = list(toks)
-        for j in range(6):
-            mod[j * 5] = f"x{i}_mod{j}"
-        rows.append((i * 10 + 2, " ".join(mod)))
-    return rows
+def _random_bits(rng: random.Random) -> str:
+    return "".join(rng.choice("01") for _ in range(64))
 
 
-@pytest.fixture(scope="module")
-def corpus(spark):
-    return spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
-
-
-def _exact_jaccard_pairs(corpus):
-    """ALL-pairs exact shingle Jaccard — the ground truth.  Quadratic
-    crossJoin: test-scale only, never a production path."""
-    sh = corpus.select(
-        F.col("doc_id").alias("id"),
-        dedup.shingles_col(F.col("text")).alias("sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            (F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-             / F.size(F.array_union("a.sh", "b.sh"))).alias("jaccard"))
-    )
-
-
-def test_minhash_lsh_recall_and_precision(spark, corpus):
-    """minhash_lsh_dedup vs exact all-pairs Jaccard:
-
-    * precision 1: every returned pair truly has J >= threshold, with
-      the exact Jaccard value attached;
-    * recall >= 0.9 for pairs with J >= 0.8 (theory: band-match prob
-      1-(1-J^4)^8 = 0.985 at J=0.8; deterministic here, measured 1.0).
-    """
-    threshold = 0.7
-    got = {(r.id_a, r.id_b): r.jaccard
-           for r in dedup.minhash_lsh_dedup(
-               corpus, threshold=threshold).collect()}
-    exact = {(r.id_a, r.id_b): r.jaccard
-             for r in _exact_jaccard_pairs(corpus).collect()}
-
-    # the corpus really contains high-similarity pairs (non-vacuous)
-    high = {p for p, j in exact.items() if j >= 0.8}
-    assert len(high) >= N_BASE
-
-    # precision: nothing below threshold, values match exact
-    for pair, j in got.items():
-        assert round(exact[pair], 4) == j
-        assert j >= threshold
-
-    # recall on the high tier
-    found_high = high & set(got)
-    recall = len(found_high) / len(high)
-    assert recall >= 0.9, f"minhash recall {recall} on J>=0.8 pairs"
-
-
-def test_minhash_lsh_rejects_moderate_pairs(spark, corpus):
-    """Pairs engineered at J ~ 0.33 (6/30 tokens replaced) never pass
-    the 0.7 exact-Jaccard verification, whatever the LSH recalls."""
-    got = set((r.id_a, r.id_b) for r in dedup.minhash_lsh_dedup(
-        corpus, threshold=0.7).collect())
-    moderate = {(i * 10, i * 10 + 2) for i in range(N_BASE)}
-    assert not (got & moderate)
+def _bits_df(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, bits string")
 
 
 def test_identical_cluster_collapses_before_banding(spark):
     """The Common-Crawl boilerplate case: a cluster of byte-identical
-    docs.  Exact pre-collapse keeps the LSH band join at REPRESENTATIVE
-    cardinality (1 row per distinct text), while the output still
-    contains every intra-cluster pair at the exact score — the output
-    is inherently quadratic in the cluster, the *candidate join* must
-    not be."""
+    signatures.  Exact pre-collapse keeps the band join at
+    REPRESENTATIVE cardinality (1 row per distinct signature), while
+    the output still contains every intra-cluster pair at the exact
+    score — the output is inherently quadratic in the cluster, the
+    *candidate join* must not be."""
     k = 400
-    rows = [(i, "same boilerplate text repeated here") for i in range(k)]
-    rows += [(10_000 + i, f"unique doc {i} with its own words {i}")
-             for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    got = dedup.minhash_lsh_dedup(df, threshold=0.7)
+    rng = random.Random(7)
+    rows = [(i, _bits([0, 5, 9])) for i in range(k)]
+    rows += [(10_000 + i, _random_bits(rng)) for i in range(5)]
+    got = dedup.bits_near_pairs(_bits_df(spark, rows), "bits")
     assert got.count() == k * (k - 1) // 2
-    assert got.agg(F.min("jaccard"), F.max("jaccard")).first() == (1.0, 1.0)
-
-    near = dedup.simhash_near_pairs(df, max_hamming=3)
-    assert near.count() == k * (k - 1) // 2
-    assert near.agg(F.max("hamming")).first()[0] == 0
+    assert got.agg(F.max("hamming")).first()[0] == 0
+    dedup.release_candidate_caches()
 
 
 def test_cross_cluster_pairs_expand_with_exact_score(spark):
-    """Two clusters of identical docs whose texts are near-duplicates
+    """Two clusters of identical signatures that are near-duplicates
     of each other: every cross pair must surface with the same exact
-    Jaccard the representative pair verified at."""
-    base = [f"w{j}" for j in range(30)]
-    near = list(base)
-    near[7] = "replaced"
-    rows = [(i, " ".join(base)) for i in range(20)]
-    rows += [(100 + i, " ".join(near)) for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.id_a, r.id_b): r.jaccard
-           for r in dedup.minhash_lsh_dedup(df, threshold=0.7).collect()}
+    Hamming distance the representative pair verified at."""
+    base = _bits([3, 17, 40])
+    near = _bits([3, 17, 40, 62])                 # one bit flipped
+    rows = [(i, base) for i in range(20)]
+    rows += [(100 + i, near) for i in range(20)]
+    got = {(r.id_a, r.id_b): r.hamming for r in dedup.bits_near_pairs(
+        _bits_df(spark, rows), "bits").collect()}
+    dedup.release_candidate_caches()
     # 2 * C(20,2) intra pairs + 20*20 cross pairs
     assert len(got) == 2 * (20 * 19 // 2) + 400
-    cross = {p: j for p, j in got.items() if p[0] < 100 <= p[1]}
+    cross = {p: h for p, h in got.items() if p[0] < 100 <= p[1]}
     assert len(cross) == 400
-    assert len(set(cross.values())) == 1          # one exact score
-    assert 0.7 <= next(iter(cross.values())) < 1  # truly near, not equal
+    assert set(cross.values()) == {1}             # one exact score
 
 
 def test_bucket_cap_drops_loudly(spark, caplog):
@@ -155,115 +77,26 @@ def test_bucket_cap_drops_loudly(spark, caplog):
     opt-in, never silent (the oracle-checked queries don't set it)."""
     import logging
 
-    rows = [(i, "giant cluster of near boilerplate") for i in range(50)]
-    rows += [(1000, "alpha beta gamma delta epsilon zeta"),
-             (1001, "alpha beta gamma delta epsilon zeta")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    rows = [(i, _bits([1, 2, 3])) for i in range(50)]
+    rows += [(1000, _bits([20, 30])), (1001, _bits([20, 30])),
+             # one bit from the 50-clone cluster: found only by banding
+             (2000, _bits([1, 2, 3, 60]))]
+    df = _bits_df(spark, rows)
+    uncapped = {(r.id_a, r.id_b) for r in
+                dedup.bits_near_pairs(df, "bits").collect()}
+    assert (0, 2000) in uncapped
     # the 50-clone cluster collapses to ONE rep, so to exercise the cap
     # we cap at 0: every bucket (size >= 1) is oversized
     with caplog.at_level(logging.WARNING,
                          logger="cdx_writer_spark.functions.dedup"):
-        got = dedup.minhash_lsh_dedup(df, threshold=0.7,
-                                      max_bucket_size=0).collect()
+        got = dedup.bits_near_pairs(df, "bits",
+                                    max_bucket_size=0).collect()
+    dedup.release_candidate_caches()
     assert any("oversized buckets" in r.message for r in caplog.records)
     # banding contributed nothing; intra-cluster pairs still exact
     pairs = {(r.id_a, r.id_b) for r in got}
-    assert (1000, 1001) in pairs
+    assert (1000, 1001) in pairs and (0, 2000) not in pairs
     assert len(pairs) == 50 * 49 // 2 + 1
-
-
-def test_winnowing_shared_substring_guarantee(spark):
-    """Winnowing's core property (Schleimer et al.): documents sharing
-    a normalized substring of length >= k + w - 1 (= 11 here) share at
-    least one fingerprint; unrelated texts share none (md5 8-hex-char
-    collisions aside)."""
-    shared = "identical plagiarized passage here"
-    rows = [
-        (1, f"alpha beta {shared} gamma delta"),
-        (2, f"omega psi {shared} chi phi"),
-        (3, "completely different words nowhere overlapping at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: set(r.fps) for r in df.select(
-        "doc_id",
-        dedup.winnowing_fingerprints_col(F.col("text")).alias("fps"))
-        .collect()}
-    assert got[1] & got[2], "shared substring must share a fingerprint"
-    assert not (got[1] & got[3]) and not (got[2] & got[3])
-
-
-def test_simhash_banded_equals_exact_hamming(spark, corpus):
-    """simhash_near_pairs must equal the EXACT all-pairs Hamming <= 3
-    set — the 4x16-bit banding is a guarantee, not a heuristic: <= 3
-    bit flips cannot touch all 4 disjoint 16-bit bands (pigeonhole), so
-    every qualifying pair shares at least one band verbatim."""
-    got = {(r.id_a, r.id_b): r.hamming
-           for r in dedup.simhash_near_pairs(
-               corpus, max_hamming=3).collect()}
-
-    sh = corpus.select(F.col("doc_id").alias("id"),
-                       dedup.simhash_hex_col("text").alias("simhash"))
-    a, b = sh.alias("a"), sh.alias("b")
-    ham = F.expr(
-        "aggregate(sequence(1, 16), 0, (acc, i) -> acc + "
-        "bit_count(cast(conv(substring(sh_a, i, 1), 16, 10) as int) "
-        "^ cast(conv(substring(sh_b, i, 1), 16, 10) as int)))")
-    exact = {(r.id_a, r.id_b): r.hamming for r in (
-        a.crossJoin(b).filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.simhash").alias("sh_a"),
-                F.col("b.simhash").alias("sh_b"))
-        .withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= 3)).collect()}
-
-    # non-vacuous: 1-token perturbations land within Hamming 3
-    assert len(exact) > 0
-    assert got == exact
-
-
-def test_ngram_jaccard_equals_exact_all_pairs(spark, corpus):
-    """ngram_jaccard_pairs is EXACT: its output must equal the brute
-    all-pairs set {J >= 1/2} — prefix filtering is lossless (any
-    qualifying pair collides inside both (n - ceil(n/2) + 1)-prefixes
-    under the global md5 order), unlike MinHash's probabilistic
-    recall.  The near pairs here sit at J ~ 0.81 (in) and the moderate
-    ones at ~ 0.33 (out), so both directions are exercised."""
-    got = {(r.id_a, r.id_b): r.jaccard
-           for r in dedup.ngram_jaccard_pairs(
-               corpus, threshold_num=1, threshold_den=2).collect()}
-    exact = {(r.id_a, r.id_b): round(r.jaccard, 4)
-             for r in _exact_jaccard_pairs(corpus).collect()
-             if 2 * r.jaccard >= 1}
-    assert len(exact) >= N_BASE          # non-vacuous
-    assert got == exact
-
-
-def test_ngram_jaccard_near_threshold_and_tiny_docs(spark):
-    """Adversarial exactness: pairs engineered AT the 1/2 boundary
-    (kept: the test is >=), just under it (dropped), identical docs
-    (J = 1 via the exact-collapse path), and docs shorter than the
-    shingle width (whole-text fallback shingle)."""
-    rows = [
-        # J exactly 1/2: shingle sets {a b c, b c d} vs {a b c, b c e}
-        # -> |∩| = 1, |∪| = 3?  Build from explicit token overlap
-        # instead: 10 shared tokens + suffixes sized so the shingle
-        # Jaccard brackets 1/2 on each side.
-        (1, "s0 s1 s2 s3 s4 s5 s6 s7 s8 s9 u0 u1"),
-        (2, "s0 s1 s2 s3 s4 s5 s6 s7 s8 s9 v0 v1"),
-        (3, "t0 t1 t2 t3 u0 u1 u2 u3 u4 u5 u6 u7"),
-        (4, "t0 t1 t2 t3 w0 w1 w2 w3 w4 w5 w6 w7"),
-        (5, "same text exactly"), (6, "same text exactly"),
-        (7, "ab"), (8, "ab"), (9, "cd"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.id_a, r.id_b): r.jaccard
-           for r in dedup.ngram_jaccard_pairs(df).collect()}
-    exact = {(r.id_a, r.id_b): round(r.jaccard, 4)
-             for r in _exact_jaccard_pairs(df).collect()
-             if 2 * r.jaccard >= 1}
-    assert (5, 6) in exact and (7, 8) in exact   # identical-doc paths
-    assert (1, 2) in exact and (3, 4) not in exact  # bracketing worked
-    assert got == exact
 
 
 # --- duplicate-span removal (C4-style) ----------------------------------------
@@ -385,62 +218,3 @@ def test_repetition_short_docs_get_zero_fractions(spark):
     assert got[1].top_trigram_frac == 0.0 and got[1].passes
     assert got[2].top_bigram_frac == 1.0   # exactly one bigram
     assert got[2].top_trigram_frac == 0.0
-
-
-def _exact_containment_pairs(corpus):
-    """ALL ordered pairs' exact shingle containment |A∩B|/|A| — the
-    directional ground truth.  Quadratic crossJoin: test-scale only."""
-    sh = corpus.select(
-        F.col("doc_id").alias("id"),
-        dedup.shingles_col(F.col("text")).alias("sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a.id") != F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.size(F.array_intersect("a.sh", "b.sh")).cast("long")
-            .alias("i"),
-            F.size("a.sh").cast("long").alias("na")))
-
-
-def test_ngram_containment_equals_exact_all_pairs(spark, corpus):
-    """ngram_containment_pairs is EXACT and DIRECTIONAL: output ==
-    brute all-ordered-pairs {|A∩B|/|A| >= 1/2} — the asymmetric
-    prefix filter (A-prefix probe against B's full token index) is
-    lossless, and the near-dup rows appear in BOTH directions while
-    asymmetric-size inclusions appear in one."""
-    got = {(r.id_a, r.id_b): r.containment
-           for r in dedup.ngram_containment_pairs(
-               corpus, threshold_num=1, threshold_den=2).collect()}
-    exact = {(r.id_a, r.id_b): round(r.i / r.na, 4)
-             for r in _exact_containment_pairs(corpus).collect()
-             if 2 * r.i >= r.na}
-    assert len(exact) >= N_BASE          # non-vacuous
-    assert got == exact
-
-
-def test_ngram_containment_detects_quotes_jaccard_misses(spark):
-    """The operator's reason to exist: a short passage quoted inside a
-    much longer page has containment 1.0 (passage -> page) but Jaccard
-    far below any dedup threshold — and the reverse direction does NOT
-    qualify.  Identical docs emit both orders at 1.0 via the
-    exact-collapse path."""
-    passage = " ".join(f"q{j}" for j in range(12))
-    page = (" ".join(f"pre{j}" for j in range(60)) + " " + passage
-            + " " + " ".join(f"post{j}" for j in range(60)))
-    rows = [(1, passage), (2, page), (3, passage),
-            (4, "noise words all different everywhere")]
-    df = spark.createDataFrame(rows, "doc_id long, text string") \
-        .repartition(3)
-    got = {(r.id_a, r.id_b): r.containment
-           for r in dedup.ngram_containment_pairs(
-               df, threshold_num=4, threshold_den=5).collect()}
-    assert got[(1, 2)] == 1.0 and got[(3, 2)] == 1.0
-    assert (2, 1) not in got             # direction matters
-    assert got[(1, 3)] == 1.0 and got[(3, 1)] == 1.0
-    assert (1, 2) in got and (4, 2) not in got
-    # Jaccard at the same threshold finds only the identical pair
-    jac = {(r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(
-        df, threshold_num=4, threshold_den=5).collect()}
-    assert (1, 2) not in jac and (2, 1) not in jac

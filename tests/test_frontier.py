@@ -238,25 +238,30 @@ def test_zipf_host_skew_graph(spark, tmp_path):
 
 
 def test_probe_modes_agree(spark):
-    """Native-Catalyst, pandas-broadcast and cogroup probes must flag
-    identically (the native path replicates BloomFilter._positions
+    """Native-Catalyst and cogroup probes must flag identically (the
+    native path replicates BloomFilter._positions
     expression-for-expression)."""
     cand = webgraph.pages(spark, 300).select(
         "surt_key", "url", "host", "host_rank").withColumn(
         "depth", F.lit(1))
     half = cand.filter(F.col("surt_key").rlike("/p/[0-4]"))
     filters = seenmod.update_filters(half, seenmod.empty_filters(spark))
-    a = sorted((r.surt_key, r.maybe_seen) for r in seenmod.flag_maybe_seen(
-        cand, filters, broadcast_probe=True).collect())
     b = sorted((r.surt_key, r.maybe_seen) for r in seenmod.flag_maybe_seen(
-        cand, filters, broadcast_probe=False).collect())
+        cand, filters, strategy="cogroup").collect())
     n = sorted((r.surt_key, r.maybe_seen) for r in seenmod.flag_maybe_seen(
         cand, filters, strategy="native").collect())
-    assert a == b == n
+    assert b == n
     # the filter actually flags the added half (probe is non-vacuous)
     added = {r.surt_key for r in half.collect()}
     flagged_true = {k for k, m in n if m}
     assert added <= flagged_true  # Bloom: no false negatives
+
+
+def test_unknown_probe_strategy_raises():
+    """One probe per size regime: any other name fails before a plan
+    is built, instead of silently running one of the two."""
+    with pytest.raises(ValueError, match="unknown probe strategy"):
+        seenmod.flag_maybe_seen(None, None, strategy="pandas")
 
 
 def test_native_probe_has_no_python_and_no_shuffle(spark):

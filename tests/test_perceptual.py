@@ -99,38 +99,6 @@ def test_bits_near_pairs_rejects_bad_band_split(spark):
         pass
 
 
-def test_elect_canonical_chain_and_singleton(spark):
-    # chain 1-2, 2-3 (one component; shortest url = id 2); 4 isolated
-    attrs = spark.createDataFrame(
-        [(1, "http://a/p/"), (2, "http://a/p"),
-         (3, "http://a/p?utm_source=x"), (4, "http://b/q")],
-        "id long, url string")
-    pairs = spark.createDataFrame([(1, 2), (2, 3)],
-                                  "id_a long, id_b long")
-    got = {r.id: (r.canonical_id, r.canonical_url, r.is_canonical)
-           for r in dedup.elect_canonical(pairs, attrs).collect()}
-    dedup.release_candidate_caches()
-    assert got[1] == (2, "http://a/p", False)
-    assert got[2] == (2, "http://a/p", True)
-    assert got[3] == (2, "http://a/p", False)
-    assert got[4] == (4, "http://b/q", True)   # singleton keeps itself
-
-
-def test_elect_canonical_plan_no_window(spark):
-    """The election is a map-side min-struct aggregation + comp-keyed
-    join — never a per-component window sort (a 10^9-member
-    boilerplate cluster would serialize in one task)."""
-    attrs = spark.createDataFrame([(1, "u")], "id long, url string")
-    pairs = spark.createDataFrame([(1, 1)], "id_a long, id_b long")
-    out = dedup.elect_canonical(pairs, attrs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    dedup.release_candidate_caches()
-    # the component labels come from connected_components (windows
-    # inside are over the EDGE list, bounded per round); the election
-    # agg itself must be a partial min
-    assert "partial_min" in plan
-
-
 def _wav_df(spark, rows):
     """rows: list of (doc_id, samples list[int])."""
     import io

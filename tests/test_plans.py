@@ -39,18 +39,26 @@ def test_column_pruning_on_narrow_format(spark, tmp_path):
     assert "url" in scan_line
 
 
+def _doc_signatures(spark):
+    """(doc_id, 64-char bit signature) over the documents table — the
+    input shape of the band-bucket pair engine."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    return docs.select("doc_id", F.lpad(F.bin(F.xxhash64("text")), 64,
+                                        "0").alias("bits"))
+
+
 def test_near_dup_exchanges_are_narrow(spark):
-    """Candidate-pair dedup must never shuffle the wide shingle
-    payloads: every aggregate in the near-dup plan keys on the narrow
-    gkey projection, shingles re-joined only afterwards."""
+    """Candidate-pair dedup must never shuffle the signature payloads
+    per pair: every aggregate in the near-dup plan keys on the narrow
+    gkey projection, signatures re-joined only afterwards."""
     from cdx_writer_spark.functions import dedup
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(dedup.minhash_lsh_dedup(docs, threshold=0.5))
+    plan = _plan(dedup.bits_near_pairs(_doc_signatures(spark), "bits"))
+    dedup.release_candidate_caches()
     agg_lines = [ln for ln in plan.splitlines() if "HashAggregate" in ln]
     assert any("gkey_a" in ln for ln in agg_lines)
     for ln in agg_lines:
-        assert "sh_a#" not in ln and "sh_b#" not in ln, ln
+        assert "bits_a#" not in ln and "bits_b#" not in ln, ln
 
 
 def test_textstats_stays_in_codegen(spark):
@@ -79,21 +87,18 @@ def test_dedup_is_partial_aggregated(spark):
 
 
 def test_near_dup_verify_is_candidate_pruned(spark):
-    """The exact-verification side must recompute expensive payloads
-    (shingles / simhash) only for rows that survived banding: the
-    candidate set is persisted (one banding execution, reused by every
-    consumer) and its keys are BROADCAST onto the representative rows
-    before the payload expression — never a second full-corpus pass."""
+    """The exact-verification side must read payloads only for rows
+    that survived banding: the candidate set is persisted (one banding
+    execution, reused by every consumer) and its keys are BROADCAST
+    onto the representative rows — never a second full-corpus pass."""
     from cdx_writer_spark.functions import dedup
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    for df in (dedup.minhash_lsh_dedup(docs, threshold=0.5),
-               dedup.simhash_near_pairs(docs)):
-        plan = _plan(df)
-        # persisted candidates: banding runs once, consumers read cache
-        assert "InMemoryTableScan" in plan, plan[:2000]
-        # the candidate-keys prune is a broadcast join, not a shuffle
-        assert "BroadcastExchange" in plan
+    plan = _plan(dedup.bits_near_pairs(_doc_signatures(spark), "bits"))
+    dedup.release_candidate_caches()
+    # persisted candidates: banding runs once, consumers read cache
+    assert "InMemoryTableScan" in plan, plan[:2000]
+    # the candidate-keys prune is a broadcast join, not a shuffle
+    assert "BroadcastExchange" in plan
 
 
 def test_verify_prune_broadcast_is_size_gated(spark):
@@ -138,10 +143,12 @@ def test_release_candidate_caches(spark):
     from cdx_writer_spark.functions import dedup
 
     dedup.release_candidate_caches()  # drain anything earlier tests left
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
-    dedup.minhash_lsh_dedup(docs, threshold=0.5).count()
-    dedup.simhash_near_pairs(docs).count()
-    assert dedup.release_candidate_caches() == 2
+    sigs = spark.createDataFrame(
+        [(i, "01" * 32 if i % 2 else "10" * 32) for i in range(20)],
+        "doc_id long, bits string")
+    pairs = dedup.bits_near_pairs(sigs, "bits")   # signatures + candidates
+    dedup.connected_components(pairs)             # + the labels
+    assert dedup.release_candidate_caches() == 3
     assert dedup.release_candidate_caches() == 0
 
 

@@ -779,73 +779,3 @@ def test_linear_classifier_partitioning_invariance(spark):
         docs.repartition(16, "doc_id"), wdf,
         n_buckets=128).collect()))
     assert a == b
-
-
-def _py_bpe_segment(texts, merges):
-    """Reference application: replay merges in order, greedy
-    left-to-right, per lowercased whitespace word; count symbols."""
-    out = {}
-    for i, t in enumerate(texts):
-        words = [w.replace("\x1f", "")
-                 for w in t.strip().lower().split() if w]
-        n_sym = 0
-        for w in words:
-            syms = list(w)
-            for _, a, b, _m, _wt in merges:
-                res, j = [], 0
-                while j < len(syms):
-                    if (j + 1 < len(syms) and syms[j] == a
-                            and syms[j + 1] == b):
-                        res.append(a + b)
-                        j += 2
-                    else:
-                        res.append(syms[j])
-                        j += 1
-                syms = res
-            n_sym += len(syms)
-        out[i] = (len(words), n_sym)
-    return out
-
-
-def test_bpe_segment_matches_reference_with_learned_merges(spark):
-    texts = [
-        "the theme of the thesis",
-        "there is the other theory",
-        "then the weather was better",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    merges_df = lm.bpe_merges(docs, rounds=3)
-    merges = sorted(map(tuple, merges_df.collect()))
-    got = {r["doc_id"]: (r["n_words"], r["n_symbols"])
-           for r in lm.bpe_segment_counts(docs, merges_df).collect()}
-    assert got == _py_bpe_segment(texts, merges)
-    # merges actually compress: fewer symbols than characters
-    chars = sum(len(w) for t in texts for w in t.split())
-    assert sum(v[1] for v in got.values()) < chars
-
-
-def test_bpe_segment_empty_merge_table_counts_chars(spark):
-    docs = spark.createDataFrame(
-        [(0, "ab cde"), (1, ""), (2, "  ")],
-        "doc_id long, text string")
-    empty = spark.createDataFrame(
-        [], "round long, left_sym string, right_sym string, "
-            "merged string, pair_weight long")
-    got = {r["doc_id"]: (r["n_words"], r["n_symbols"])
-           for r in lm.bpe_segment_counts(docs, empty).collect()}
-    assert got == {0: (2, 5), 1: (0, 0), 2: (0, 0)}
-
-
-def test_bpe_segment_consecutive_sites_merge_greedily(spark):
-    # learned pair (a,b) applied to 'abab' must yield 2 symbols —
-    # the double-delimiter framing pins the application semantics
-    docs = spark.createDataFrame(
-        [(0, "abab aaaa")], "doc_id long, text string")
-    merges = spark.createDataFrame(
-        [(1, "a", "b", "ab", 0)],
-        "round long, left_sym string, right_sym string, "
-        "merged string, pair_weight long")
-    r = lm.bpe_segment_counts(docs, merges).collect()[0]
-    # abab -> ab|ab (2), aaaa stays 4 chars
-    assert (r["n_words"], r["n_symbols"]) == (2, 6)

@@ -181,78 +181,3 @@ def test_apportion_rejects_zero_total(spark):
     df = spark.createDataFrame([("a", 0)], "host string, w long")
     with pytest.raises(ValueError):
         sampling.apportion(df, "w", budget=10, id_col="host")
-
-
-# --- domain cap -----------------------------------------------------------------
-
-
-def _py_domain_cap(rows, cap, salt="dcap"):
-    import hashlib
-
-    by_dom = {}
-    for i, dom in rows:
-        by_dom.setdefault(dom, []).append(i)
-    out = {}
-    for dom, ids in by_dom.items():
-        ranked = sorted(
-            ids, key=lambda i: (hashlib.md5(
-                f"{salt}{i}".encode()).hexdigest(), i))
-        for r, i in enumerate(ranked[:cap], 1):
-            out[i] = (dom, r)
-    return out
-
-
-def test_domain_cap_matches_python_reference(spark):
-    from cdx_writer_spark.functions.sampling import domain_cap
-
-    rows = [(i, f"d{i % 4}") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, domain string")
-    got = {r["doc_id"]: (r["domain"], r["dom_rank"])
-           for r in domain_cap(df, "domain", cap=3).collect()}
-    assert got == _py_domain_cap(rows, 3)
-    # exactly 3 survivors per domain
-    from collections import Counter
-    assert Counter(d for d, _ in got.values()) == Counter(
-        {f"d{k}": 3 for k in range(4)})
-
-
-def test_domain_cap_under_cap_domains_keep_everything(spark):
-    from cdx_writer_spark.functions.sampling import domain_cap
-
-    rows = [(1, "small"), (2, "small")]
-    df = spark.createDataFrame(rows, "doc_id long, domain string")
-    got = domain_cap(df, "domain", cap=10).collect()
-    assert {r["doc_id"] for r in got} == {1, 2}
-
-
-def test_domain_cap_is_salt_deterministic_not_id_ordered(spark):
-    from cdx_writer_spark.functions.sampling import domain_cap
-
-    rows = [(i, "one") for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, domain string")
-    a = sorted(r["doc_id"] for r in
-               domain_cap(df, "domain", cap=10).collect())
-    b = sorted(r["doc_id"] for r in
-               domain_cap(df.repartition(16), "domain",
-                          cap=10).collect())
-    assert a == b
-    assert a != list(range(10))  # NOT first-K-by-id
-    c = sorted(r["doc_id"] for r in
-               domain_cap(df, "domain", cap=10, salt="v2").collect())
-    assert c != a                # independent sample per salt
-
-
-def test_domain_cap_partial_window_group_limit_in_plan(spark):
-    from cdx_writer_spark.functions.sampling import domain_cap
-
-    rows = [(i, f"d{i % 3}") for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, domain string")
-    plan = (domain_cap(df, "domain", cap=5)
-            ._jdf.queryExecution().executedPlan().toString())
-    i_limit = plan.find("WindowGroupLimit")
-    i_exch = plan.find("Exchange")
-    assert i_limit >= 0 and i_exch >= 0
-    # a Partial WindowGroupLimit must appear BELOW (after, in print
-    # order) the exchange: map tasks prune to <= cap rows pre-shuffle
-    assert "Partial" in plan[plan.rfind("WindowGroupLimit"):].split(
-        "\n")[0] or plan.count("WindowGroupLimit") == 2, plan
