@@ -979,18 +979,23 @@ def q_frontier_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so the DuckDB oracle re-derives both rounds by unrolling
     the loop in pure SQL (seeds -> robots -> outlinks -> seen-dedup ->
     per-host ranked budget) — the engine's checkpoint/resume/Bloom
-    machinery shares no code with that recomputation."""
+    machinery shares no code with that recomputation.  The order is
+    collected into a local frame so the checkpoint tree can be removed
+    before returning."""
     import shutil
     import tempfile
 
     from cdx_writer_spark.frontier import loop, webgraph
 
     state = tempfile.mkdtemp(prefix="frontier_crawl_")
-    shutil.rmtree(state, ignore_errors=True)
-    web = webgraph.pages(spark, 2000)
-    seeds = webgraph.seeds(spark, 20, 2000)
-    loop.run_crawl(spark, web, state, 2, seeds=seeds)
-    return loop.crawl_order(spark, state)
+    try:
+        web = webgraph.pages(spark, 2000)
+        seeds = webgraph.seeds(spark, 20, 2000)
+        loop.run_crawl(spark, web, state, 2, seeds=seeds)
+        order = loop.crawl_order(spark, state)
+        return spark.createDataFrame(order.collect(), order.schema)
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
 
 
 # --- relational core (agg / join / window over the TPC-H-ish tables) ----------

@@ -19,14 +19,16 @@ round resumable):
                     only this round's new (surt_key, pid); the
                     cumulative set is the union of all rounds
                     (loop.seen_table), Iceberg-append semantics
-        filters/    Bloom blobs: (partition_id, filter_blob, n_items)
+        filters/    one row per filter partition (SEEN_FILTER_SCHEMA):
+                    the serialized blob, its int64 word array and
+                    geometry (n_bits, k), and n_items
         scheduled/  this round's fetch batch, with per-host positions
         metrics/    per-partition lineage: candidates in/out, filter
                     cardinality, plus round totals (partition_id = -1)
 
 Round pipeline (all DataFrame ops; with the default native probe the
-only Python left in a round is the Bloom FOLD cogroup in
-seen.update_filters — once per round over the new keys):
+only Python left in a round is the Bloom fold's scatter in
+seen.fold_keyed — once per round, one task at bench sizing):
 
 1. pending frontier → robots filter (broadcast) → per-host top-k
    (priority window) = the **scheduled batch** (crawl order =
@@ -36,19 +38,27 @@ seen.update_filters — once per round over the new keys):
 3. outlink discovery: explode the fetched pages' outlinks, derive
    (surt, host, depth+1), dedup within the round by min-depth.
 4. URL-seen: Bloom maybe-seen flag per host-hash partition, exact
-   anti-join for the maybe minority (seen.py) → truly-new URLs.
+   anti-join for the maybe minority (seen.py) → truly-new URLs.  The
+   probe's (pid, h1, h2) hashes ride along to the fold, the seen
+   delta and the metrics: each key is hashed once per round.
 5. commit: frontier' = (frontier ∖ batch→fetched) ∪ new-pending;
    seen' += new; filters' fold new keys; metrics row per partition.
+
+State is read back with its known schema (schema.py), never inferred:
+inference is one Spark job per table per round.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import FRONTIER_SCHEMA, SEEN_FILTER_SCHEMA, SEEN_SCHEMA
 from . import politeness, priority, seen as seenmod
 from .webgraph import robots_rules
 
@@ -119,7 +129,29 @@ def seen_table(spark: SparkSession, state_dir: str,
              for r in range(0, last + 1)
              if os.path.isdir(os.path.join(_round_dir(state_dir, r),
                                            "seen"))]
-    return spark.read.parquet(*paths)
+    return spark.read.schema(SEEN_SCHEMA).parquet(*paths)
+
+
+def _read_filters(spark: SparkSession, path: str) -> DataFrame:
+    """A filters checkpoint, read with SEEN_FILTER_SCHEMA.  The parquet
+    footer's column names are checked first, driver-side: a typed read
+    would fill a missing column with nulls, and a null word array
+    probes as "not seen" — a pre-v2 (blob-only) checkpoint must be
+    refused, never probed with the current position arithmetic (Bloom
+    false NEGATIVES: re-enqueued duplicates).  The blob itself also
+    carries a format magic (bloom.py) for the Python paths."""
+    import pyarrow.parquet as pq
+
+    parts = sorted(glob.glob(os.path.join(path, "part-*")))
+    have = set(pq.read_schema(parts[0]).names) if parts else set()
+    missing = set(SEEN_FILTER_SCHEMA.names) - have
+    if missing:
+        raise ValueError(
+            f"incompatible filter checkpoint at {path}: missing "
+            f"columns {sorted(missing)} — written by an older build; "
+            "rebuild the filters from the exact seen table "
+            "(seen.update_filters over loop.seen_table) before resuming")
+    return spark.read.schema(SEEN_FILTER_SCHEMA).parquet(path)
 
 
 def latest_round(state_dir: str) -> int:
@@ -136,14 +168,18 @@ def latest_round(state_dir: str) -> int:
     return best
 
 
-def _write_concurrent(rnd_dir: str, named: list[tuple[str, DataFrame]]
-                      ) -> None:
+def _write_concurrent(rnd_dir: str, named: list[tuple[str, DataFrame]],
+                      plan=None):
     """Submit the independent state writes from one thread each: the
     per-job fixed cost (submission, task scheduling, output commit) is
     serial time a 4x-core level cannot parallelize away when jobs run
     back-to-back, but concurrent jobs fill each other's idle task
     slots.  Content is unaffected — each write is the same
-    deterministic frame — so the crawl-order digest is unchanged."""
+    deterministic frame — so the crawl-order digest is unchanged.
+
+    ``plan()``, if given, runs on the calling thread while the writes
+    run — driver-side DataFrame building (py4j round trips, analysis)
+    overlaps the executors' work — and its result is returned."""
     from concurrent.futures import ThreadPoolExecutor
 
     def one(item: tuple[str, DataFrame]) -> None:
@@ -151,8 +187,11 @@ def _write_concurrent(rnd_dir: str, named: list[tuple[str, DataFrame]]
         df.write.mode("overwrite").parquet(os.path.join(rnd_dir, sub))
 
     with ThreadPoolExecutor(max_workers=len(named)) as ex:
-        # list() so every future's exception propagates
-        list(ex.map(one, named))
+        futures = [ex.submit(one, item) for item in named]
+        planned = plan() if plan is not None else None
+        for f in futures:   # every write's exception propagates
+            f.result()
+    return planned
 
 
 def _observed_count(df: DataFrame, obs_name: str):
@@ -177,14 +216,17 @@ def _observed_count(df: DataFrame, obs_name: str):
 def init_state(spark: SparkSession, seeds: DataFrame, state_dir: str,
                cfg: CrawlConfig = CrawlConfig()) -> None:
     """Round 0 checkpoint: seeds pending, seeds marked seen."""
+    # the frontier's known schema, so every round reads it back typed
+    seeds = seeds.select(*[F.col(f.name).cast(f.dataType)
+                           for f in FRONTIER_SCHEMA])
     keys = seenmod.with_hash_cols(
         seeds.select("surt_key"), cfg.n_partitions)
     seen_tbl = keys.select("surt_key", "pid")
-    filters = seenmod.update_filters(
-        seeds, seenmod.empty_filters(spark, cfg.n_partitions,
-                                     cfg.filter_capacity,
-                                     cfg.filter_fpr,
-                                     kind=cfg.filter_kind),
+    filters = seenmod.fold_keyed(
+        keys, seenmod.empty_filters(spark, cfg.n_partitions,
+                                    cfg.filter_capacity,
+                                    cfg.filter_fpr,
+                                    kind=cfg.filter_kind),
         cfg.n_partitions, cfg.filter_capacity, cfg.filter_fpr,
         strategy=cfg.fold_strategy, kind=cfg.filter_kind)
     scheduled = seeds.limit(0).withColumn(
@@ -201,35 +243,47 @@ def init_state(spark: SparkSession, seeds: DataFrame, state_dir: str,
     if n_seeds is None:   # empty-input action: observation absent
         n_seeds = spark.read.parquet(
             os.path.join(rnd_dir, "frontier")).count()
-    metrics = spark.createDataFrame(
-        [(-1, -1, n_seeds, 0, 0, 0)],
-        "round int, partition_id int, candidates_in long, "
-        "maybe_seen long, new_keys long, filter_items long")
+    # one row, built natively: createDataFrame of a Python list runs a
+    # Python-worker job just to deserialize it
+    metrics = spark.range(0, 1, 1, 1).select(
+        F.lit(-1).alias("round"), F.lit(-1).alias("partition_id"),
+        F.lit(n_seeds).cast("long").alias("candidates_in"),
+        *[F.lit(0).cast("long").alias(c)
+          for c in ("maybe_seen", "new_keys", "filter_items")])
     metrics.write.mode("overwrite").parquet(
         os.path.join(rnd_dir, "metrics"))
 
 
-def run_round(spark: SparkSession, web: DataFrame, state_dir: str,
-              rnd: int, rules: DataFrame | None = None,
-              cfg: CrawlConfig = CrawlConfig()) -> dict:
-    """Execute round `rnd` (reading round `rnd-1` state); returns round
-    summary counters."""
+@dataclass(frozen=True, eq=False)
+class _Round:
+    """A planned round: steps 1-4 built, their shared frames registered
+    for caching, nothing run yet.  ``_commit_round`` runs step 5."""
+    spark: SparkSession
+    state_dir: str
+    rnd: int
+    cfg: CrawlConfig
+    pending: DataFrame
+    batch: DataFrame
+    scheduled: DataFrame
+    flagged: DataFrame
+    new: DataFrame
+    filters: DataFrame
+
+    def release(self) -> None:
+        for df in (self.batch, self.flagged, self.new):
+            df.unpersist()
+
+
+def _plan_round(spark: SparkSession, web: DataFrame, state_dir: str,
+                rnd: int, rules: DataFrame | None,
+                cfg: CrawlConfig) -> _Round:
+    """Steps 1-4 of round `rnd` over round `rnd-1`'s committed state
+    files.  Builds DataFrames only: it submits no Spark job."""
     prev = _round_dir(state_dir, rnd - 1)
-    frontier = spark.read.parquet(os.path.join(prev, "frontier"))
+    filters = _read_filters(spark, os.path.join(prev, "filters"))
+    frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(
+        os.path.join(prev, "frontier"))
     seen_tbl = seen_table(spark, state_dir, upto_round=rnd - 1)
-    filters = spark.read.parquet(os.path.join(prev, "filters"))
-    missing = ({"partition_id", "filter_blob", "n_items", "bits_longs",
-                "n_bits", "k"} - set(filters.columns))
-    if missing:
-        # a pre-v2 checkpoint (blob-only schema): probing it with the
-        # current position arithmetic would yield Bloom false NEGATIVES
-        # (re-enqueued duplicates), so refuse loudly; the blob itself
-        # also carries a format magic (bloom.py) for the Python paths
-        raise ValueError(
-            f"incompatible filter checkpoint at {prev}: missing "
-            f"columns {sorted(missing)} — written by an older build; "
-            "rebuild the filters from the exact seen table "
-            "(seen.update_filters over loop.seen_table) before resuming")
     rules = rules if rules is not None else robots_rules(spark)
 
     # 1. schedule
@@ -272,14 +326,16 @@ def run_round(spark: SparkSession, web: DataFrame, state_dir: str,
              F.first("host_rank").alias("host_rank"))  # is deterministic
     )
 
-    # 4. URL-seen (Bloom prefilter + exact anti-join)
+    # 4. URL-seen (Bloom prefilter + exact anti-join); the probe keeps
+    # each candidate's (pid, h1, h2) for the fold, seen delta and
+    # metrics below.
     # k is fully determined by the config's filter sizing — passing it
     # saves the probe's per-round driver peek job (the expression still
     # guards per-row against differently-sized resumed filters)
     expected_k = (seenmod.BloomFilter.sized_for(
         cfg.filter_capacity, cfg.filter_fpr).k
         if cfg.filter_kind == "bloom" else None)
-    flagged = seenmod.flag_maybe_seen(
+    flagged = seenmod.probe_keyed(
         discovered, filters, cfg.n_partitions,
         strategy=cfg.probe_strategy, static_k=expected_k,
         kind=cfg.filter_kind,
@@ -296,102 +352,118 @@ def run_round(spark: SparkSession, web: DataFrame, state_dir: str,
         definitely_new.unionByName(verified_new).drop("maybe_seen")
         .persist()
     )
+    return _Round(spark, state_dir, rnd, cfg, pending, batch, scheduled,
+                  flagged, new, filters)
 
-    # 5. commit
-    new_frontier_rows = new.select(
-        "surt_key", "url", "host", "host_rank",
-        F.col("depth").cast("int").alias("depth"),
-        F.lit(rnd).alias("discovered_round"),
-        F.lit("pending").alias("state"))
-    # pending-only live table: this round's batch leaves the frontier
-    # (its rows are already committed to scheduled/), new URLs enter
-    frontier_next = (
-        pending.join(batch.select("surt_key"), "surt_key", "left_anti")
-        .unionByName(new_frontier_rows)
-    )
-    new_keyed = seenmod.with_hash_cols(
-        new.select("surt_key"), cfg.n_partitions)
-    # append-only: this round's seen dir holds ONLY the new keys
-    seen_delta = new_keyed.select("surt_key", "pid")
-    # persisted: the fold (cogroup over n_partitions blobs) executes
-    # once — inside the filters checkpoint write — and the metrics
-    # join below reuses the cached 64 rows instead of either
-    # re-executing the fold OR re-reading the just-committed parquet
-    # (the round-2 workaround; the read-back was ~1s/round of pure
-    # fixed cost at every parallelism level)
-    filters_next = seenmod.update_filters(
-        new, filters, cfg.n_partitions, cfg.filter_capacity,
-        cfg.filter_fpr, strategy=cfg.fold_strategy,
-        kind=cfg.filter_kind).persist()
 
-    # per-partition lineage — derived from the PERSISTED flagged frame
-    # (flagged ≡ discovered + maybe_seen), never from the discover DAG:
-    # recomputing that lineage would re-run the fetch join + outlink
-    # explode once more per metric.  candidates_in + maybe_seen come
-    # from ONE aggregation pass (not two frames full-joined), and the
-    # filter_items column joins the PERSISTED filters_next frame,
-    # already materialized by the checkpoint write that precedes the
-    # metrics write.
-    rnd_dir = _round_dir(state_dir, rnd)
-    flagged_keyed = seenmod.with_hash_cols(flagged, cfg.n_partitions)
-    cand_by_pid = flagged_keyed.groupBy("pid").agg(
-        F.count(F.lit(1)).alias("candidates_in"),
-        F.sum(F.when(F.col("maybe_seen"), 1).otherwise(0))
-        .alias("maybe_seen"))
-    new_by_pid = (new_keyed.groupBy("pid")
-                  .agg(F.count(F.lit(1)).alias("new_keys")))
-
-    def metrics_from(filters_committed: DataFrame) -> DataFrame:
-        return (
-            cand_by_pid
-            .join(new_by_pid, "pid", "full")
-            .join(filters_committed.select(
-                F.col("partition_id").alias("pid"),
-                F.col("n_items").alias("filter_items")), "pid", "full")
-            .select(
-                F.lit(rnd).alias("round"),
-                F.col("pid").alias("partition_id"),
-                F.coalesce("candidates_in", F.lit(0))
-                .alias("candidates_in"),
-                F.coalesce("maybe_seen", F.lit(0)).alias("maybe_seen"),
-                F.coalesce("new_keys", F.lit(0)).alias("new_keys"),
-                F.coalesce("filter_items", F.lit(0))
-                .alias("filter_items"))
+def _commit_round(r: _Round, plan_next=None) -> tuple[dict, _Round | None]:
+    """Step 5: the four state writes, then the metrics write whose
+    ``_SUCCESS`` marks the round committed.  ``plan_next()``, if given,
+    plans the next round while the metrics are written — it reads only
+    the state the four writes just finished — and is returned with the
+    summary.  The round's cached frames are released either way."""
+    try:
+        new_frontier_rows = r.new.select(
+            "surt_key", "url", "host", "host_rank",
+            F.col("depth").cast("int").alias("depth"),
+            F.lit(r.rnd).alias("discovered_round"),
+            F.lit("pending").alias("state"))
+        # pending-only live table: this round's batch leaves the
+        # frontier (its rows are already committed to scheduled/), new
+        # URLs enter
+        frontier_next = (
+            r.pending.join(r.batch.select("surt_key"), "surt_key",
+                           "left_anti")
+            .unionByName(new_frontier_rows)
         )
+        # append-only: this round's seen dir holds ONLY the new keys
+        seen_delta = r.new.select("surt_key", "pid")
+        # not persisted: only the filters write reads the fold (the
+        # metrics count from frames the round already holds), and under
+        # adaptive execution a persisted frame costs its own
+        # cache-building job
+        filters_next = seenmod.fold_keyed(
+            r.new, r.filters, r.cfg.n_partitions, r.cfg.filter_capacity,
+            r.cfg.filter_fpr, strategy=r.cfg.fold_strategy,
+            kind=r.cfg.filter_kind)
 
-    # summary counters ride the commit writes as Observations — no
-    # post-commit read-back jobs
-    scheduled_obs, get_scheduled = _observed_count(
-        scheduled, f"scheduled_{rnd}")
-    seen_obs, get_new = _observed_count(seen_delta, f"seen_{rnd}")
+        # summary counters ride the commit writes as Observations — no
+        # post-commit read-back jobs
+        scheduled_obs, get_scheduled = _observed_count(
+            r.scheduled, f"scheduled_{r.rnd}")
+        seen_obs, get_new = _observed_count(seen_delta, f"seen_{r.rnd}")
 
-    # the four independent state writes are submitted concurrently
-    # (shared upstream stages are persisted above, so the writers
-    # reuse — not recompute — batch/flagged/new)
-    _write_concurrent(rnd_dir, [
-        ("frontier", frontier_next), ("seen", seen_obs),
-        ("filters", filters_next), ("scheduled", scheduled_obs)])
-    # metrics last: its _SUCCESS is the round's commit marker.
-    # coalesce(1): the frame is one row per filter partition (~64) but
-    # inherits shuffle-partition fan-out from its joins — writing it
-    # wide is pure per-round fixed cost (task launch + file create per
-    # partition) that a 4x-core level cannot parallelize away
-    metrics_from(filters_next).coalesce(1).write.mode(
-        "overwrite").parquet(os.path.join(rnd_dir, "metrics"))
+        # the four independent state writes are submitted concurrently
+        # (shared upstream stages are persisted, so the writers reuse —
+        # not recompute — batch/flagged/new)
+        rnd_dir = _round_dir(r.state_dir, r.rnd)
+        metrics = _write_concurrent(rnd_dir, [
+            ("frontier", frontier_next), ("seen", seen_obs),
+            ("filters", filters_next), ("scheduled", scheduled_obs)],
+            plan=lambda: _metrics_table(r.flagged, r.new, r.filters,
+                                        r.rnd))
+        summary = {"round": r.rnd, "scheduled": get_scheduled(),
+                   "new_urls": get_new()}
+        # empty-input action: observation absent
+        for key, sub in (("scheduled", "scheduled"), ("new_urls", "seen")):
+            if summary[key] is None:
+                summary[key] = r.spark.read.parquet(
+                    os.path.join(rnd_dir, sub)).count()
 
-    n_scheduled = get_scheduled()
-    n_new = get_new()
-    if n_scheduled is None:   # empty-input action: observation absent
-        n_scheduled = spark.read.parquet(
-            os.path.join(rnd_dir, "scheduled")).count()
-    if n_new is None:
-        n_new = spark.read.parquet(
-            os.path.join(rnd_dir, "seen")).count()
-    batch.unpersist()
-    flagged.unpersist()
-    new.unpersist()
-    filters_next.unpersist()
-    return {"round": rnd, "scheduled": n_scheduled, "new_urls": n_new}
+        # metrics last: its _SUCCESS is the round's commit marker.
+        # coalesce(1): ~n_partitions rows that would otherwise inherit
+        # shuffle-partition fan-out (task launch + file create per
+        # partition: pure per-round fixed cost)
+        planned = []
+
+        def plan():
+            planned.append(plan_next())
+            return planned[0]
+
+        try:
+            nxt = _write_concurrent(
+                rnd_dir, [("metrics", metrics.coalesce(1))],
+                plan=plan if plan_next is not None else None)
+        except BaseException:
+            for p in planned:   # planned, never to be committed
+                p.release()
+            raise
+        return summary, nxt
+    finally:
+        r.release()
+
+
+def _metrics_table(flagged: DataFrame, new: DataFrame,
+                   filters: DataFrame, rnd: int) -> DataFrame:
+    """Per-partition lineage of a round, as ONE aggregation over frames
+    the round already holds: the persisted ``flagged`` (≡ discovered +
+    maybe_seen — never the discover DAG, whose recomputation would
+    re-run the fetch join and outlink explode) and ``new``, plus the
+    previous filters' ``n_items``.  ``filter_items`` is the previous
+    count plus the partition's new keys — what every fold commits
+    (each ``add_many`` adds its batch size) — so the metrics never
+    wait on, re-run or re-read the fold."""
+    zero, one = F.lit(0), F.lit(1)
+    counts = (
+        filters.select(
+            F.col("partition_id").alias("pid"),
+            zero.alias("candidates_in"), zero.alias("maybe_seen"),
+            zero.alias("new_keys"),
+            F.coalesce("n_items", zero).alias("filter_items"))
+        .unionByName(new.select(
+            "pid", zero.alias("candidates_in"), zero.alias("maybe_seen"),
+            one.alias("new_keys"), one.alias("filter_items")))
+        .unionByName(flagged.select(
+            "pid", one.alias("candidates_in"),
+            F.col("maybe_seen").cast("int").alias("maybe_seen"),
+            zero.alias("new_keys"), zero.alias("filter_items")))
+    )
+    return counts.groupBy("pid").agg(
+        *[F.sum(c).alias(c) for c in ("candidates_in", "maybe_seen",
+                                      "new_keys", "filter_items")]
+    ).select(F.lit(rnd).alias("round"),
+             F.col("pid").alias("partition_id"), "candidates_in",
+             "maybe_seen", "new_keys", "filter_items")
 
 
 def run_crawl(spark: SparkSession, web: DataFrame, state_dir: str,
@@ -421,13 +493,25 @@ def run_crawl(spark: SparkSession, web: DataFrame, state_dir: str,
                    .persist(StorageLevel.DISK_ONLY))
         web = prepped
     out = []
+    last = start + n_rounds
+    nxt = None
     try:
-        for rnd in range(start + 1, start + 1 + n_rounds):
-            summary = run_round(spark, web, state_dir, rnd, rules, cfg)
+        if n_rounds > 0:
+            nxt = _plan_round(spark, web, state_dir, start + 1, rules, cfg)
+        while nxt is not None:
+            # each round's successor is planned while its metrics (the
+            # commit marker) are written: the driver-side planning
+            # overlaps that last write instead of following it
+            rnd = nxt.rnd
+            summary, nxt = _commit_round(nxt, functools.partial(
+                _plan_round, spark, web, state_dir, rnd + 1, rules, cfg)
+                if rnd < last else None)
             out.append(summary)
             if summary["scheduled"] == 0:
                 break  # frontier drained
     finally:
+        if nxt is not None:
+            nxt.release()
         if prepped is not None:
             prepped.unpersist()
     return out
@@ -446,7 +530,7 @@ def rebuild_filters(spark: SparkSession, state_dir: str,
                     max_fold_keys: int = REBUILD_MAX_FOLD_KEYS
                     ) -> None:
     """Recovery path for an incompatible filters checkpoint (the
-    fail-fast in :func:`run_round` / ``bloom.from_bytes``): re-derive
+    fail-fast in ``_read_filters`` / ``bloom.from_bytes``): re-derive
     the latest committed round's Bloom filters from the EXACT
     cumulative seen table and overwrite that round's ``filters`` dir,
     after which ``run_crawl`` resumes normally.

@@ -29,15 +29,19 @@ At 10^10 keys / P=4096 partitions each blob sizes for ~2.4M keys →
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (ArrayType, BinaryType, LongType,
                                StructField, StructType)
 
+from ..schema import SEEN_FILTER_SCHEMA
 from .bloom import BloomFilter
 from .cuckoo import CuckooFilter
 
@@ -58,13 +62,27 @@ DEFAULT_FPR = 0.01
 NATIVE_BROADCAST_MAX_BYTES = 256 << 20
 
 _CAND_COLS = ["surt_key", "url", "host", "host_rank", "depth"]
+_HASH_COLS = ["pid", "h1", "h2"]
 _FLAG_SCHEMA = ("surt_key string, url string, host string, "
-                "host_rank double, depth int, maybe_seen boolean")
-# filter_blob is the canonical serialized filter (Python paths);
-# bits_longs/n_bits/k expose the same bit array to the native Catalyst
-# probe (element_at + shiftright — zero Python in the probe stage)
-_FILTER_SCHEMA = ("partition_id int, filter_blob binary, n_items long, "
-                  "bits_longs array<bigint>, n_bits long, k int")
+                "host_rank double, depth int, pid int, h1 long, h2 long, "
+                "maybe_seen boolean")
+
+_COLUMNS: dict = {}
+
+
+def _memo(key: tuple, build):
+    """``build()`` once per (key, active SparkContext), the pattern of
+    ``job._projection``: the probe and fold expressions are hundreds of
+    py4j calls that yield the same unresolved Columns every round.
+    Pandas-UDF Columns capture the context that created them, so a
+    stopped and restarted session rebuilds."""
+    full = (key, SparkContext._active_spark_context)
+    cols = _COLUMNS.get(full)
+    if cols is None:
+        if any(k[1] is not full[1] for k in _COLUMNS):
+            _COLUMNS.clear()  # drop a stopped context's Columns
+        cols = _COLUMNS[full] = build()
+    return cols
 
 
 def _filter_from_bytes(blob: bytes):
@@ -182,12 +200,11 @@ def _native_probe_col(h1, h2, bits_longs, n_bits, k,
 
 def with_hash_cols(df: DataFrame, n_partitions: int = DEFAULT_PARTITIONS,
                    key: str = "surt_key") -> DataFrame:
-    return (
-        df.withColumn("pid", F.pmod(F.xxhash64(key),
-                                    F.lit(n_partitions)).cast("int"))
-        .withColumn("h1", F.xxhash64(key))
-        .withColumn("h2", F.xxhash64(F.lit("b"), F.col(key)))
-    )
+    return df.withColumns(_memo(("hash", n_partitions, key), lambda: {
+        "pid": F.pmod(F.xxhash64(key), F.lit(n_partitions)).cast("int"),
+        "h1": F.xxhash64(key),
+        "h2": F.xxhash64(F.lit("b"), F.col(key)),
+    }))
 
 
 def empty_filters(spark, n_partitions: int = DEFAULT_PARTITIONS,
@@ -253,6 +270,7 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
                     state_bytes: int | None = None) -> DataFrame:
     """Candidates + ``maybe_seen`` flag from the per-partition Bloom
     probe.  Input needs _CAND_COLS; hashes are computed here.
+    :func:`probe_keyed` is the same probe keeping the hash columns.
 
     ``strategy='auto'`` (default) SIZE-GATES the physical choice:
     'native' while total filter state fits
@@ -278,6 +296,20 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
       10^10-key path (4096 × ~2.9 MB blobs ≈ 12 GB total filter state,
       too big to broadcast).
     """
+    return probe_keyed(candidates, filters, n_partitions, strategy,
+                       static_k, kind, state_bytes).select(
+                           *_CAND_COLS, "maybe_seen")
+
+
+def probe_keyed(candidates: DataFrame, filters: DataFrame,
+                n_partitions: int = DEFAULT_PARTITIONS,
+                strategy: str = "auto",
+                static_k: int | None = None,
+                kind: str = "bloom",
+                state_bytes: int | None = None) -> DataFrame:
+    """:func:`flag_maybe_seen` that keeps each candidate's ``pid``,
+    ``h1`` and ``h2``: the crawl loop hashes a key once per round and
+    carries the hashes to the fold, the seen delta and the metrics."""
     if strategy == "auto":
         if state_bytes is None:
             # n_partitions rows; n_bits/8 is each row's word-array
@@ -290,85 +322,42 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
         raise ValueError(f"unknown probe strategy {strategy!r}: "
                          "expected 'auto', 'native' or 'cogroup'")
     cand = with_hash_cols(candidates.select(*_CAND_COLS), n_partitions)
-
-    if strategy == "native" and kind == "cuckoo":
-        flt = F.broadcast(filters.select(
-            F.col("partition_id").alias("pid"), "bits_longs",
-            "n_bits", "k"))
-        joined = cand.join(flt, "pid", "left")
-        # k is the kind marker (cuckoo rows store 0, Bloom rows >= 1):
-        # probing Bloom words with cuckoo fingerprint math yields
-        # SILENT false negatives (re-crawled duplicates), so a
-        # mismatched resume must fail loudly per row — no extra
-        # driver job, the branch only fires on bad rows
-        probe = F.when(F.col("bits_longs").isNull(),
-                       F.lit(False)) \
-            .when(F.col("k") != 0, F.raise_error(F.lit(
-                "cuckoo probe over a Bloom filter row (k>0): this "
-                "checkpoint was written with filter_kind='bloom' — "
-                "resume with the same kind, or rebuild_filters for "
-                "the new kind"))) \
-            .otherwise(_native_cuckoo_probe_col(
-                F.col("h1"), F.col("h2"), F.col("bits_longs"),
-                F.col("n_bits")))
-        return joined.withColumn("maybe_seen", probe) \
-            .select(*_CAND_COLS, "maybe_seen")
+    out_cols = [*_CAND_COLS, *_HASH_COLS, "maybe_seen"]
 
     if strategy == "native":
         flt = F.broadcast(filters.select(
             F.col("partition_id").alias("pid"), "bits_longs", "n_bits",
             "k"))
-        if static_k is None:
-            # one tiny driver peek at the (uniformly sized) filters: a
-            # shared k lets the probe unroll into a flat codegen AND
-            # chain.  Callers that size the filters themselves pass
-            # static_k (BloomFilter.sized_for(capacity, fpr).k) and
-            # skip this per-call job.
-            krow = filters.agg(F.min("k").alias("lo"),
-                               F.max("k").alias("hi")).first()
-            static_k = int(krow["lo"]) if (
-                krow["lo"] is not None
-                and krow["lo"] == krow["hi"]) else None
-        joined = cand.join(flt, "pid", "left")
-        hof = _native_probe_col(
-            F.col("h1"), F.col("h2"), F.col("bits_longs"),
-            F.col("n_bits"), F.col("k"))
-        if static_k is not None:
-            unrolled = _native_probe_col(
-                F.col("h1"), F.col("h2"), F.col("bits_longs"),
-                F.col("n_bits"), F.col("k"), static_k=static_k)
-            # rows whose filter was sized differently (e.g. resumed
-            # state from another config) fall back to the per-row-k
-            # path — the unrolled chain must never probe a wrong k
-            per_row = F.when(F.col("k") == F.lit(static_k),
-                             unrolled).otherwise(hof)
+        if kind == "cuckoo":
+            probe = _memo(("cuckoo_probe",), _cuckoo_probe)
         else:
-            per_row = hof
-        # mirror of the cuckoo lane's kind guard: k=0 marks a cuckoo
-        # blob, and Bloom position math over cuckoo buckets is a
-        # silent false-negative machine
-        probe = F.when(F.col("bits_longs").isNull(),
-                       F.lit(False)) \
-            .when(F.col("k") <= 0, F.raise_error(F.lit(
-                "bloom probe over a cuckoo filter row (k=0): this "
-                "checkpoint was written with filter_kind='cuckoo' — "
-                "resume with the same kind, or rebuild_filters for "
-                "the new kind"))) \
-            .otherwise(per_row)
-        return joined.withColumn("maybe_seen", probe) \
-            .select(*_CAND_COLS, "maybe_seen")
+            if static_k is None:
+                # one tiny driver peek at the (uniformly sized)
+                # filters: a shared k lets the probe unroll into a flat
+                # codegen AND chain.  Callers that size the filters
+                # themselves pass static_k
+                # (BloomFilter.sized_for(capacity, fpr).k) and skip
+                # this per-call job.
+                krow = filters.agg(F.min("k").alias("lo"),
+                                   F.max("k").alias("hi")).first()
+                static_k = int(krow["lo"]) if (
+                    krow["lo"] is not None
+                    and krow["lo"] == krow["hi"]) else None
+            probe = _memo(("bloom_probe", static_k),
+                          lambda: _bloom_probe(static_k))
+        return cand.join(flt, "pid", "left") \
+            .withColumn("maybe_seen", probe).select(*out_cols)
 
     def probe(cpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
         if len(cpdf) == 0:
-            return pd.DataFrame(
-                columns=_CAND_COLS + ["maybe_seen"])
+            return pd.DataFrame(columns=out_cols)
         if len(fpdf) == 0:
             flags = [False] * len(cpdf)
         else:
             bf = _filter_from_bytes(bytes(fpdf["filter_blob"].iloc[0]))
             flags = bf.contains_many(
                 cpdf["h1"].to_numpy(), cpdf["h2"].to_numpy())
-        out = cpdf[_CAND_COLS].copy()
+        out = cpdf[[*_CAND_COLS, *_HASH_COLS]].copy()
         out["maybe_seen"] = flags
         return out
 
@@ -377,6 +366,50 @@ def flag_maybe_seen(candidates: DataFrame, filters: DataFrame,
         .cogroup(filters.groupBy("partition_id"))
         .applyInPandas(probe, schema=_FLAG_SCHEMA)
     )
+
+
+def _cuckoo_probe():
+    # k is the kind marker (cuckoo rows store 0, Bloom rows >= 1):
+    # probing Bloom words with cuckoo fingerprint math yields SILENT
+    # false negatives (re-crawled duplicates), so a mismatched resume
+    # must fail loudly per row — no extra driver job, the branch only
+    # fires on bad rows
+    return F.when(F.col("bits_longs").isNull(), F.lit(False)) \
+        .when(F.col("k") != 0, F.raise_error(F.lit(
+            "cuckoo probe over a Bloom filter row (k>0): this "
+            "checkpoint was written with filter_kind='bloom' — "
+            "resume with the same kind, or rebuild_filters for "
+            "the new kind"))) \
+        .otherwise(_native_cuckoo_probe_col(
+            F.col("h1"), F.col("h2"), F.col("bits_longs"),
+            F.col("n_bits")))
+
+
+def _bloom_probe(static_k: int | None):
+    hof = _native_probe_col(
+        F.col("h1"), F.col("h2"), F.col("bits_longs"),
+        F.col("n_bits"), F.col("k"))
+    if static_k is not None:
+        unrolled = _native_probe_col(
+            F.col("h1"), F.col("h2"), F.col("bits_longs"),
+            F.col("n_bits"), F.col("k"), static_k=static_k)
+        # rows whose filter was sized differently (e.g. resumed state
+        # from another config) fall back to the per-row-k path — the
+        # unrolled chain must never probe a wrong k
+        per_row = F.when(F.col("k") == F.lit(static_k),
+                         unrolled).otherwise(hof)
+    else:
+        per_row = hof
+    # mirror of the cuckoo lane's kind guard: k=0 marks a cuckoo blob,
+    # and Bloom position math over cuckoo buckets is a silent
+    # false-negative machine
+    return F.when(F.col("bits_longs").isNull(), F.lit(False)) \
+        .when(F.col("k") <= 0, F.raise_error(F.lit(
+            "bloom probe over a cuckoo filter row (k=0): this "
+            "checkpoint was written with filter_kind='cuckoo' — "
+            "resume with the same kind, or rebuild_filters for "
+            "the new kind"))) \
+        .otherwise(per_row)
 
 
 def split_new(candidates: DataFrame, filters: DataFrame, seen: DataFrame,
@@ -441,13 +474,13 @@ def remove_from_filters(keys: DataFrame, filters: DataFrame,
     return (
         keyed.groupBy("pid")
         .cogroup(filters.groupBy("partition_id"))
-        .applyInPandas(unfold, schema=_FILTER_SCHEMA)
+        .applyInPandas(unfold, schema=SEEN_FILTER_SCHEMA)
     )
 
 
-def _update_filters_native(new_keys: DataFrame, filters: DataFrame,
-                           n_partitions: int, capacity: int,
-                           fpr: float) -> DataFrame:
+def _fold_native(keyed: DataFrame, filters: DataFrame,
+                 n_partitions: int, capacity: int, fpr: float
+                 ) -> DataFrame:
     """The Bloom fold with all hash math in Catalyst: explode each new
     key into its k probe positions JVM-side (the SAME masked
     double-hash arithmetic as ``_native_probe_col`` — bit parity is
@@ -461,6 +494,14 @@ def _update_filters_native(new_keys: DataFrame, filters: DataFrame,
     borrowing cores beyond the task-slot count is also a single-box
     scaling distortion.)
 
+    The scatter runs in as few Python tasks as the filter state allows:
+    total filter bytes over the session's advisory partition size, at
+    least one.  Each Python task has a fixed worker cost (measured
+    ~0.34 s) that dwarfs scattering a few partitions' words, so at
+    bench scale (4.8 MB of state) the whole fold is one task, and at
+    the 10^10-key sizing (~12 GB) it is ~190, each holding about one
+    advisory partition of words.
+
     Geometry note: this path assumes UNIFORM filter geometry — always
     true for filters produced by ``empty_filters``/this fold under one
     config — so positions use the config's literal (n_bits, k) and no
@@ -468,17 +509,8 @@ def _update_filters_native(new_keys: DataFrame, filters: DataFrame,
     pure fixed cost).  The scatter UDF fail-fasts on a filter row
     whose n_bits disagrees (resume with a different capacity/fpr, or
     hand-built filters): the pandas fold handles per-pid geometry."""
-    from .bloom import H1_MASK, H2_MASK
-
-    sized = BloomFilter.sized_for(capacity, fpr)
-
-    keyed = with_hash_cols(new_keys.select("surt_key"), n_partitions)
-    h1m = F.col("h1").bitwiseAND(F.lit(H1_MASK))
-    h2m = F.col("h2").bitwiseAND(F.lit(H2_MASK)).bitwiseOR(F.lit(1))
-    pos_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(sized.k - 1)),
-        lambda i: F.pmod(h1m + i.cast("long") * h2m,
-                         F.lit(sized.n_bits)))
+    plan = _memo(("fold", capacity, fpr),
+                 lambda: _fold_plan(capacity, fpr))
     # ONE aggregation pass over the keyed delta: per-pid flat position
     # lists (k positions per key, computed JVM-side — Python never
     # touches hash math) + the new-key count in the same groupBy.
@@ -492,28 +524,47 @@ def _update_filters_native(new_keys: DataFrame, filters: DataFrame,
     # exchange bought nothing.  Positions per pid stay small at any
     # scale (new_keys × k / n_partitions — the partition count grows
     # with the crawl), so the lists are bounded Arrow payloads.
-    adds = (
-        keyed.select("pid", F.posexplode(pos_arr).alias("i", "p"))
-        .groupBy("pid")
-        .agg(F.collect_list("p").alias("_ps"),
-             F.sum(F.when(F.col("i") == 0, 1).otherwise(0))
-             .alias("_n_new"))
-    )
-
+    adds = keyed.select(*plan.explode).groupBy("pid").agg(*plan.agg)
     # full outer: pids missing from `filters` (delta-only — never the
     # case after init_state) synthesize a default-geometry zero array
     # in the scatter; pids with no new keys pass their blob through
-    base = filters.select(
-        F.col("partition_id").alias("pid"), "bits_longs",
-        F.col("n_bits").alias("_old_nb"), "k", "n_items")
+    base = filters.select(*plan.base)
+    spark = filters.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    n_tasks = max(1, -(-filter_state_bytes(
+        "bloom", capacity, fpr, n_partitions) // advisory))
+    return (base.join(adds, "pid", "full_outer").coalesce(n_tasks)
+            .withColumn("_s", plan.scatter).select(*plan.out))
+
+
+@dataclass(frozen=True)
+class _FoldPlan:
+    """The native fold's Columns for one filter geometry."""
+    explode: tuple[Column, ...]   # keyed delta -> (pid, i, p) positions
+    agg: tuple[Column, ...]       # per pid: position list, new-key count
+    base: tuple[Column, ...]      # filters -> the scatter's inputs
+    scatter: Column               # the Arrow scatter-OR UDF call
+    out: tuple[Column, ...]       # -> SEEN_FILTER_SCHEMA
+
+
+def _fold_plan(capacity: int, fpr: float) -> _FoldPlan:
+    from .bloom import H1_MASK, H2_MASK
+
+    sized = BloomFilter.sized_for(capacity, fpr)
+    ub, uk = sized.n_bits, sized.k
+    h1m = F.col("h1").bitwiseAND(F.lit(H1_MASK))
+    h2m = F.col("h2").bitwiseAND(F.lit(H2_MASK)).bitwiseOR(F.lit(1))
+    pos_arr = F.transform(
+        F.sequence(F.lit(0), F.lit(uk - 1)),
+        lambda i: F.pmod(h1m + i.cast("long") * h2m, F.lit(ub)))
 
     # scatter-OR + blob serialization: n_partitions rows of Python,
     # Arrow-batched (the dense word arrays cross as Arrow lists, not
     # pickled rows).  Each row ORs its (few) changed words into its
     # dense word array — vectorized numpy per row, no per-key Python
     # and no word-level shuffle anywhere.
-    ub, uk = sized.n_bits, sized.k
-
     def scatter(longs, poss, old_nb, old_k, items, n_new):
         blobs, words_out, totals = [], [], []
         for lg, ps, nb_, kk_, it, nn in zip(longs, poss, old_nb, old_k,
@@ -551,17 +602,23 @@ def _update_filters_native(new_keys: DataFrame, filters: DataFrame,
         StructField("bits_longs", ArrayType(LongType())),
         StructField("n_items", LongType()),
     ]))
-    merged = (base.join(adds, "pid", "full_outer")
-              .withColumn("_s", scatter_udf("bits_longs", "_ps",
-                                            "_old_nb", "k", "n_items",
-                                            "_n_new")))
-    return merged.select(
-        F.col("pid").alias("partition_id"),
-        F.col("_s.filter_blob").alias("filter_blob"),
-        F.col("_s.n_items").alias("n_items"),
-        F.col("_s.bits_longs").alias("bits_longs"),
-        F.coalesce("_old_nb", F.lit(ub)).cast("long").alias("n_bits"),
-        F.coalesce("k", F.lit(uk)).cast("int").alias("k"))
+    return _FoldPlan(
+        explode=(F.col("pid"), F.posexplode(pos_arr).alias("i", "p")),
+        agg=(F.collect_list("p").alias("_ps"),
+             F.sum(F.when(F.col("i") == 0, 1).otherwise(0))
+             .alias("_n_new")),
+        base=(F.col("partition_id").alias("pid"), F.col("bits_longs"),
+              F.col("n_bits").alias("_old_nb"), F.col("k"),
+              F.col("n_items")),
+        scatter=scatter_udf("bits_longs", "_ps", "_old_nb", "k",
+                            "n_items", "_n_new"),
+        out=(F.col("pid").alias("partition_id"),
+             F.col("_s.filter_blob").alias("filter_blob"),
+             F.col("_s.n_items").alias("n_items"),
+             F.col("_s.bits_longs").alias("bits_longs"),
+             F.coalesce("_old_nb", F.lit(ub)).cast("long")
+             .alias("n_bits"),
+             F.coalesce("k", F.lit(uk)).cast("int").alias("k")))
 
 
 def update_filters(new_keys: DataFrame, filters: DataFrame,
@@ -573,6 +630,7 @@ def update_filters(new_keys: DataFrame, filters: DataFrame,
     """Fold new SURT keys into the partition blobs; returns the full
     next-generation filters table (one row per partition — partitions
     with no new keys pass their blob through unchanged).
+    :func:`fold_keyed` is the same fold over already-hashed keys.
 
     ``strategy='native'`` (default) folds JVM-side with only the final
     per-partition blob serialization in Python;  ``'pandas'`` is the
@@ -585,10 +643,21 @@ def update_filters(new_keys: DataFrame, filters: DataFrame,
     per-round DELTA through Arrow (one task per partition), and
     add_many canonicalizes each batch so blobs stay byte-deterministic
     across parallelism (tested)."""
-    if strategy == "native" and kind != "cuckoo":
-        return _update_filters_native(new_keys, filters, n_partitions,
-                                      capacity, fpr)
     keyed = with_hash_cols(new_keys.select("surt_key"), n_partitions)
+    return fold_keyed(keyed, filters, n_partitions, capacity, fpr,
+                      strategy, kind)
+
+
+def fold_keyed(keyed: DataFrame, filters: DataFrame,
+               n_partitions: int = DEFAULT_PARTITIONS,
+               capacity: int = DEFAULT_CAPACITY,
+               fpr: float = DEFAULT_FPR,
+               strategy: str = "native",
+               kind: str = "bloom") -> DataFrame:
+    """:func:`update_filters` over keys that already carry ``pid``,
+    ``h1`` and ``h2`` (:func:`probe_keyed`'s output)."""
+    if strategy == "native" and kind != "cuckoo":
+        return _fold_native(keyed, filters, n_partitions, capacity, fpr)
 
     def fold(kpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
         if len(fpdf) > 0:
@@ -613,7 +682,7 @@ def update_filters(new_keys: DataFrame, filters: DataFrame,
         })
 
     return (
-        keyed.groupBy("pid")
+        keyed.select(*_HASH_COLS).groupBy("pid")
         .cogroup(filters.groupBy("partition_id"))
-        .applyInPandas(fold, schema=_FILTER_SCHEMA)
+        .applyInPandas(fold, schema=SEEN_FILTER_SCHEMA)
     )

@@ -11,6 +11,7 @@ with the record metadata the CDX computation provably reads (SURVEY.md
 from __future__ import annotations
 
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     IntegerType,
     LongType,
@@ -82,8 +83,21 @@ FRONTIER_SCHEMA = StructType([
     StructField("state", StringType()),  # pending | fetched
 ])
 
+# the exact URL-seen table: one round's new keys and their filter pid
+SEEN_SCHEMA = StructType([
+    StructField("surt_key", StringType()),
+    StructField("pid", IntegerType()),
+])
+
+# one row per URL-seen filter partition.  filter_blob is the canonical
+# serialized filter (Python paths); bits_longs/n_bits/k expose the same
+# bit array to the native Catalyst probe.  Cuckoo rows store
+# n_buckets*64 in n_bits and 0 in k.
 SEEN_FILTER_SCHEMA = StructType([
     StructField("partition_id", IntegerType()),
     StructField("filter_blob", BinaryType()),
     StructField("n_items", LongType()),
+    StructField("bits_longs", ArrayType(LongType())),
+    StructField("n_bits", LongType()),
+    StructField("k", IntegerType()),
 ])

@@ -90,6 +90,11 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
+        # a crawl's plans generate ~130 distinct codegen classes and
+        # the default cache holds 100, so the cache thrashed: a 3-round
+        # run compiled 226-237 classes, 136 with this size.  A static
+        # conf, so it is set here, at session start
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

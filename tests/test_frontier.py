@@ -13,6 +13,7 @@ from cdx_writer_spark.frontier import loop, politeness, priority, webgraph
 from cdx_writer_spark.frontier import seen as seenmod
 from cdx_writer_spark.frontier.bloom import BloomFilter
 from cdx_writer_spark.frontier.loop import CrawlConfig
+from cdx_writer_spark.schema import SEEN_FILTER_SCHEMA
 
 N_PAGES = 3000
 
@@ -353,7 +354,7 @@ def test_native_probe_bit_arithmetic_matches_numpy(spark):
 
     one_filter = spark.createDataFrame(
         [(0, bytearray(bf.to_bytes()), bf.n_items, bf.to_longs(),
-          bf.n_bits, bf.k)], seenmod._FILTER_SCHEMA)
+          bf.n_bits, bf.k)], SEEN_FILTER_SCHEMA)
     cand = keys.select(
         "surt_key", F.lit("u").alias("url"), F.lit("h").alias("host"),
         F.lit(1.0).alias("host_rank"), F.lit(1).alias("depth"))
@@ -446,7 +447,7 @@ def test_native_fold_rejects_mismatched_geometry(spark):
 
 def test_rebuild_filters_recovers_incompatible_checkpoint(spark, tmp_path):
     """The documented recovery path: a pre-v2 filters checkpoint
-    (blob-only schema) makes run_round fail fast; rebuild_filters
+    (blob-only schema) makes the next round fail fast; rebuild_filters
     re-derives the filters from the exact seen table, after which the
     resumed crawl is byte-identical to a straight run."""
     import os
@@ -470,7 +471,7 @@ def test_rebuild_filters_recovers_incompatible_checkpoint(spark, tmp_path):
     shutil.rmtree(fdir)
     spark.createDataFrame(old).write.mode("overwrite").parquet(fdir)
     with pytest.raises(ValueError, match="incompatible"):
-        loop.run_round(spark, web, s2, rnd + 1)
+        loop.run_crawl(spark, web, s2, 1)
 
     loop.rebuild_filters(spark, s2)
     rebuilt = {r.partition_id: (bytes(r.filter_blob), list(r.bits_longs),
@@ -497,6 +498,165 @@ def test_rebuild_filters_recovers_incompatible_checkpoint(spark, tmp_path):
                                list(r.bits_longs), r.n_items)
               for r in spark.read.parquet(fdir2).collect()}
     assert chunked == single
+
+
+# --- round fixed cost: fold tasks, job count, output parity ------------------
+
+def test_fold_task_count_follows_filter_state(spark):
+    """The fold's scatter runs in ceil(filter state / advisory
+    partition size) Python tasks: one at default sizing (each task has
+    a fixed worker cost that dwarfs scattering 16 partitions' words),
+    more once the state outgrows the advisory size."""
+    import math
+
+    keys = webgraph.pages(spark, 300).select("surt_key")
+    empty = seenmod.empty_filters(spark)
+    # adaptive coalescing off: the join then yields the session's 8
+    # shuffle partitions, and only the fold's own coalesce merges them
+    coalescing = "spark.sql.adaptive.coalescePartitions.enabled"
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = {c: spark.conf.get(c) for c in (coalescing, advisory)}
+    spark.conf.set(coalescing, "false")
+    try:
+        assert seenmod.update_filters(
+            keys, empty).rdd.getNumPartitions() == 1
+        spark.conf.set(advisory, "1m")
+        n = seenmod.update_filters(keys, empty).rdd.getNumPartitions()
+    finally:
+        for c, v in old.items():
+            spark.conf.set(c, v)
+    state = seenmod.filter_state_bytes(
+        "bloom", seenmod.DEFAULT_CAPACITY, seenmod.DEFAULT_FPR,
+        seenmod.DEFAULT_PARTITIONS)
+    assert n == math.ceil(state / (1 << 20)) > 1
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    # the status store is fed by the listener bus; drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+#: Spark jobs one warm round may submit under the test session
+#: (local[4], 8 shuffle partitions, adaptive execution).  Measured 25;
+#: the round before the state reads went typed, the metrics stopped
+#: joining and the fold stopped being persisted took 32.
+ROUND_MAX_JOBS = 28
+
+
+def test_warm_round_job_count(spark, tmp_path):
+    state = str(tmp_path / "crawl")
+    web = webgraph.pages(spark, N_PAGES)
+    loop.run_crawl(spark, web, state, 2,
+                   seeds=webgraph.seeds(spark, 20, N_PAGES))
+    before = _last_job_id(spark)
+    loop.run_crawl(spark, web, state, 1)
+    assert _last_job_id(spark) - before <= ROUND_MAX_JOBS
+
+
+def _digest(rows) -> str:
+    import hashlib
+
+    return hashlib.sha256(repr(sorted(rows)).encode()).hexdigest()
+
+
+def test_round_state_matches_pinned_digests(spark, tmp_path):
+    """Every round's metrics rows and filter columns equal the ones the
+    round produced before its plan was rebuilt (typed state reads,
+    hashes carried from the probe, metrics from one aggregation,
+    one-task fold): the digests were taken from that earlier build."""
+    state = str(tmp_path / "crawl")
+    loop.run_crawl(spark, webgraph.pages(spark, N_PAGES), state, 3,
+                   seeds=webgraph.seeds(spark, 20, N_PAGES))
+    metrics = spark.read.parquet(f"{state}/round_*/metrics").collect()
+    filters = spark.read.parquet(f"{state}/round_*/filters").collect()
+    assert len(metrics) == 49 and len(filters) == 64
+    assert _digest(tuple(r) for r in metrics) == (
+        "5f1c3b445fc1030f9ffae34240b4b5b2881e88906213f0264bca61864ec6ed8b")
+    assert _digest((r.partition_id, bytes(r.filter_blob),
+                    tuple(r.bits_longs), r.n_items) for r in filters) == (
+        "a3a550dfce3bee160e472e256466b831052cfc521308f33b2790638ea011df00")
+
+
+# --- injected failures: resume equals a straight run -------------------------
+
+@pytest.fixture(scope="module")
+def straight_order(spark, tmp_path_factory):
+    state = str(tmp_path_factory.mktemp("straight") / "crawl")
+    loop.run_crawl(spark, webgraph.pages(spark, N_PAGES), state, 4,
+                   seeds=webgraph.seeds(spark, 20, N_PAGES))
+    return [tuple(r) for r in loop.crawl_order(spark, state).collect()]
+
+
+def _resume_after(spark, state, straight_order):
+    assert loop.latest_round(state) in (1, 2)
+    loop.run_crawl(spark, webgraph.pages(spark, N_PAGES), state,
+                   4 - loop.latest_round(state))
+    got = [tuple(r) for r in loop.crawl_order(spark, state).collect()]
+    assert got == straight_order
+
+
+def test_resume_after_failure_before_metrics(spark, tmp_path,
+                                             monkeypatch, straight_order):
+    """Round 2 dies after its four state writes but before the metrics
+    write: round 2 is not committed, and the resume redoes it."""
+    state = str(tmp_path / "crawl")
+    real = loop._write_concurrent
+
+    def write_then_fail(rnd_dir, named, plan=None):
+        planned = real(rnd_dir, named, plan)
+        if rnd_dir.endswith("round_00002"):
+            raise RuntimeError("injected failure")
+        return planned
+
+    monkeypatch.setattr(loop, "_write_concurrent", write_then_fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        loop.run_crawl(spark, webgraph.pages(spark, N_PAGES), state, 4,
+                       seeds=webgraph.seeds(spark, 20, N_PAGES))
+    monkeypatch.undo()
+    assert loop.latest_round(state) == 1
+    _resume_after(spark, state, straight_order)
+
+
+def test_resume_after_failure_after_commit(spark, tmp_path, monkeypatch,
+                                           straight_order):
+    """Round 2 dies right after its metrics _SUCCESS: round 2 is
+    committed, and the resume starts at round 3."""
+    import os
+
+    from pyspark.sql import DataFrameWriter
+
+    state = str(tmp_path / "crawl")
+    real = DataFrameWriter.parquet
+
+    def write_then_fail(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if path.endswith(os.path.join("round_00002", "metrics")):
+            raise RuntimeError("injected failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        loop.run_crawl(spark, webgraph.pages(spark, N_PAGES), state, 4,
+                       seeds=webgraph.seeds(spark, 20, N_PAGES))
+    monkeypatch.undo()
+    assert loop.latest_round(state) == 2
+    _resume_after(spark, state, straight_order)
+
+
+def test_frontier_crawl_query_leaves_no_state(spark):
+    """q_frontier_crawl returns a local frame and removes its
+    checkpoint tree from the temp dir."""
+    import glob
+    import os
+    import tempfile
+
+    import __spark_entry__ as entrymod
+
+    pattern = os.path.join(tempfile.gettempdir(), "frontier_crawl_*")
+    before = set(glob.glob(pattern))
+    assert len(entrymod.q_frontier_crawl(spark, "").collect()) > 0
+    assert set(glob.glob(pattern)) - before == set()
 
 
 # --- recrawl_policy (adaptive revisit tiers) --------------------------------
