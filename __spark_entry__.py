@@ -316,113 +316,6 @@ def q_web_corpus_full(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "n_ipv4")
 
 
-def q_frontier_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 9309 robots pipeline end-to-end: per-host robots.txt TEXTS
-    (synthesized deterministically: a cdxbot-specific group with
-    Allow/Disallow/Crawl-delay on every 3rd host, a wildcard group
-    with * and $ rules elsewhere) are PARSED by frontier/robots.py,
-    LIKE-compiled, broadcast, and longest-match-applied to candidate
-    URLs.  The oracle re-derives the admitted set + crawl-delay
-    budgets straight from doc_id arithmetic — group selection,
-    longest-match ties, wildcard/anchor semantics all re-decided in
-    SQL without parsing anything."""
-    from cdx_writer_spark.frontier import robots as robotsmod
-
-    hosts = spark.range(37).select(
-        F.concat(F.lit("site"), F.col("id").cast("string")).alias("host"),
-        F.when(F.col("id") % 3 == 0, F.concat(
-            F.lit("User-agent: cdxbot\nDisallow: /private/\n"
-                  "Allow: /private/ok\nCrawl-delay: "),
-            (F.lit(1) + F.col("id") % 5).cast("string"),
-            F.lit("\n\nUser-agent: *\nDisallow: /\n")))
-        .otherwise(F.lit("User-agent: *\nDisallow: /tmp*\n"
-                         "Disallow: /exact$\n")).alias("robots_txt"))
-    rules = robotsmod.compile_robots(hosts, agent="cdxbot/2.1")
-
-    d = F.col("doc_id")
-    h = (d % 37).cast("string")
-    v = d % 6
-    ds = d.cast("string")
-    path = (F.when(v == 0, F.concat(F.lit("/private/p"), ds))
-            .when(v == 1, F.concat(F.lit("/private/ok"), ds))
-            .when(v == 2, F.concat(F.lit("/tmp/x"), ds))
-            .when(v == 3, F.lit("/exact"))
-            .when(v == 4, F.concat(F.lit("/exact/sub"), ds))
-            .otherwise(F.lit("")))
-    cand = _docs(spark, sf_dir).select(
-        d.alias("doc_id"),
-        F.concat(F.lit("site"), h).alias("host"),
-        F.concat(F.lit("http://site"), h, F.lit(".example.com"),
-                 path).alias("url"))
-    out = robotsmod.apply_robots_rep(cand, rules)
-    return out.select(
-        "doc_id", "url",
-        F.col("budget_per_round").cast("long").alias("budget_per_round"))
-
-
-def q_frontier_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outlink extraction — the fetch→frontier edge stage — over HTML
-    with PLANTED anchors (absolute, root-relative, relative,
-    parent-relative, protocol-relative, single-quoted, unquoted,
-    fragment, mailto/data:/tel: scheme drops, uppercase <A HREF>, a
-    <base href> override on every 5th doc — all from doc_id
-    arithmetic).  The engine runs the generic regexps + resolution
-    CASE + bounded ../ collapse; the oracle re-derives every resolved
-    URL ARITHMETICALLY (the ../ case is computed as '/up/…' directly
-    and the base override as a CASE on doc_id, so a collapse or
-    base-resolution bug could not hash-match)."""
-    from cdx_writer_spark.frontier import links
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    h = (d % 37).cast("string")
-    base = F.concat(F.lit("http://site"), h,
-                    F.lit(".example.com/dir/page"), ds, F.lit(".html"))
-
-    def a(href: object) -> object:
-        return F.concat(F.lit('<a href="'), href, F.lit('">x</a>'))
-
-    def a_sq(href: object) -> object:
-        return F.concat(F.lit("<a href='"), href, F.lit("'>x</a>"))
-
-    def a_uq(href: object) -> object:
-        return F.concat(F.lit("<a href="), href, F.lit(">x</a>"))
-
-    # every 5th doc carries a <base href> that overrides the
-    # resolution base for its relative/root-relative anchors
-    base_tag = F.when(d % 5 == 0, F.concat(
-        F.lit('<base href="http://base'), (d % 7).cast("string"),
-        F.lit('.example.net/bdir/">'))).otherwise(F.lit(""))
-    anchors = F.concat(
-        a(F.concat(F.lit("http://ext"), (d % 5).cast("string"),
-                   F.lit(".example.org/abs/"), ds)),
-        a(F.concat(F.lit("/root/"), ds)),
-        a(F.concat(F.lit("rel/"), ds)),
-        a(F.concat(F.lit("../up/"), ds)),
-        a_sq(F.concat(F.lit("srel/"), ds)),
-        a_uq(F.concat(F.lit("/u/"), ds)),
-        F.when(d % 2 == 0,
-               a(F.concat(F.lit("//cdn.example.net/c/"), ds)))
-        .otherwise(F.lit("")),
-        F.lit('<a href="#frag">x</a>'),
-        F.lit('<a href="tel:+15551234">x</a>'),
-        F.when(d % 2 == 1,
-               F.lit('<a href="data:image/png;base64,AAAA">x</a>'))
-        .otherwise(F.lit("")),
-        F.when(d % 3 == 0, F.lit('<a href="mailto:a@b.example">x</a>'))
-        .otherwise(F.lit("")),
-        F.when(d % 4 == 0, F.concat(
-            F.lit('<A HREF="HTTPS://UP.example.com/U'), ds,
-            F.lit('">x</A>'))).otherwise(F.lit("")))
-    pages = docs.select(
-        "doc_id", base.alias("url"),
-        F.concat(F.lit("<html><head>"), base_tag,
-                 F.lit("</head><body>"), anchors,
-                 F.lit("</body></html>")).alias("html"))
-    return links.extract_links(pages)
-
-
 def q_cdx_checksum_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-field digest-header fast path (cdx_writer.py:449-453): the
     'sha1:' strip is native; payload bytes never reach Python."""
@@ -1717,104 +1610,6 @@ def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.hits_exact(edges, iterations=2)
 
 
-def q_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text aggregation (frontier/links.py:
-    extract_anchor_texts) — per-target mention counts, referring-doc
-    counts, and a deterministic representative anchor, over HTML with
-    PLANTED labeled links (absolute shared-target, root-relative with
-    collapsible whitespace, an empty-anchor duplicate on every 3rd
-    doc, a mailto: drop — all from doc_id arithmetic).  The engine
-    runs the two-group regexp + the extract_links resolution CASE +
-    whitespace normalization; the oracle re-derives every (link,
-    anchor) row ARITHMETICALLY (the collapsed anchor text is
-    constructed directly, so a normalization bug could not
-    hash-match)."""
-    from cdx_writer_spark.frontier import links
-
-    docs = _table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    h = (d % 37).cast("string")
-    p7 = (d % 7).cast("string")
-    p13 = (d % 13).cast("string")
-    html = F.concat(
-        F.lit('<a href="http://peer'), p7, F.lit(".example.org/page"),
-        p13, F.lit('">Peer '), p13, F.lit("</a>"),
-        F.lit('<a href="/local/'), (d % 5).cast("string"),
-        F.lit('">  local \t '), (d % 5).cast("string"),
-        F.lit(" </a>"),
-        F.when(d % 3 == 0, F.concat(
-            F.lit('<a href="http://peer'), p7,
-            F.lit(".example.org/page"), p13, F.lit('"></a>')))
-        .otherwise(F.lit("")),
-        F.lit('<a href="mailto:x@y.example">mail</a>'))
-    pages = docs.select(
-        "doc_id", html.alias("html"),
-        F.concat(F.lit("http://site"), h,
-                 F.lit(".example.com/dir/page"), ds,
-                 F.lit(".html")).alias("url"))
-    edges = links.extract_anchor_texts(pages)
-    return edges.groupBy("link").agg(
-        F.count(F.lit(1)).alias("n_mentions"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.min(F.when(F.col("anchor") != "", F.col("anchor")))
-        .alias("top_anchor"))
-
-
-def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap ``<loc>`` extraction (frontier/links.py:
-    extract_sitemap_urls) — the crawl's second discovery channel —
-    over PLANTED sitemap XML on every 4th doc (two valid locs, one of
-    them whitespace-padded, one exact duplicate, one ftp: entry the
-    protocol's absolute-http(s) rule drops; other docs carry
-    loc-free HTML).  The oracle re-derives the surviving (doc, loc)
-    rows arithmetically."""
-    from cdx_writer_spark.frontier import links
-
-    docs = _table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    h = (d % 37).cast("string")
-    xml = F.when(d % 4 == 0, F.concat(
-        F.lit("<urlset><url><loc>http://site"), h,
-        F.lit(".example.com/p"), ds, F.lit("</loc></url>"),
-        F.lit("<url><loc>  http://site"), h,
-        F.lit(".example.com/q"), ds, F.lit("  </loc></url>"),
-        F.lit("<url><loc>http://site"), h,
-        F.lit(".example.com/p"), ds, F.lit("</loc></url>"),
-        F.lit("<url><loc>ftp://site"), h,
-        F.lit(".example.com/bad</loc></url></urlset>")))\
-        .otherwise(F.lit("<html>no sitemap here</html>"))
-    return links.extract_sitemap_urls(
-        docs.select("doc_id", xml.alias("html")))
-
-
-def q_url_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-trap template mining (frontier/links.py: url_templates)
-    — per-(host, template) URL counts with digit runs collapsed, the
-    pre-crawl heuristic that exposes calendars/session-ids/paginated
-    listings so a scheduler can cap per-pattern budget.  URLs are
-    planted in 3 shapes from doc_id arithmetic; the oracle maps each
-    shape straight to its expected template string (no regex), so an
-    engine collapse bug could not hash-match."""
-    from cdx_writer_spark.frontier import links
-
-    docs = _table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    h = (d % 37).cast("string")
-    url = F.concat(
-        F.lit("http://site"), h, F.lit(".example.com"),
-        F.when(d % 3 == 0, F.concat(
-            F.lit("/article/"), ds, F.lit("/view?page="),
-            (d % 11).cast("string")))
-        .when(d % 3 == 1, F.concat(
-            F.lit("/cat"), (d % 5).cast("string"),
-            F.lit("/item"), ds, F.lit(".html")))
-        .otherwise(F.lit("/static/style.css")))
-    return links.url_templates(docs.select(url.alias("url")))
-
-
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build (functions/textstats.py: inverted_index)
     over the REAL corpus text: per-(term, doc) posting rows with
@@ -1873,71 +1668,6 @@ def q_corpus_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars")
 
 
-def q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robots.txt ``Sitemap:`` directive extraction
-    (frontier/links.py: extract_robots_sitemaps) — the wiring from
-    the robots cache to the sitemap discovery channel — over PLANTED
-    robots bodies on every 2nd doc (mixed-case field names, a
-    relative value the absolute-http(s) rule drops; other docs carry
-    directive-free robots text).  The oracle re-derives the
-    surviving (doc, sitemap) rows arithmetically."""
-    from cdx_writer_spark.frontier import links
-
-    docs = _table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    h = (d % 37).cast("string")
-    body = F.when(d % 2 == 0, F.concat(
-        F.lit("User-agent: *\nDisallow: /p\nSitemap: http://site"),
-        h, F.lit(".example.com/sitemap"), (d % 3).cast("string"),
-        F.lit(".xml\n  sitemap:\thttps://cdn"),
-        (d % 5).cast("string"),
-        F.lit(".example.net/idx.xml\nSitemap: /rel.xml\n")))\
-        .otherwise(F.lit("User-agent: *\nAllow: /\n"))
-    return links.extract_robots_sitemaps(
-        docs.select("doc_id", body.alias("text")))
-
-
-def q_web_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The page-links → host-graph composition: extract_links over
-    HTML with planted cross-host/self anchors, then host-level edge
-    weights ``(src_host, dst_host, n_links, n_pages)`` — the
-    aggregation that turns raw anchors into the webgraph PageRank /
-    HITS / triangle analytics consume (and the host-rank half of the
-    frontier priority key).  The source host rides the synthesis
-    arithmetic (no join back to pages); the oracle re-derives every
-    edge arithmetically and aggregates the same keys."""
-    from cdx_writer_spark.frontier import links
-
-    docs = _table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    h = (d % 37).cast("string")
-    html = F.concat(
-        F.lit('<a href="http://site'), ((d + 1) % 37).cast("string"),
-        F.lit('.example.com/p'), ds, F.lit('">x</a>'),
-        F.lit('<a href="http://site'),
-        ((d * 3 + 5) % 37).cast("string"),
-        F.lit(".example.com/q"), (d % 11).cast("string"),
-        F.lit('">x</a>'),
-        F.lit('<a href="/self/'), (d % 7).cast("string"),
-        F.lit('">x</a>'))
-    pages = docs.select(
-        "doc_id", html.alias("html"),
-        F.concat(F.lit("http://site"), h,
-                 F.lit(".example.com/dir/page"), ds,
-                 F.lit(".html")).alias("url"))
-    edges = links.extract_links(pages)
-    return (edges.select(
-        F.concat(F.lit("site"), (F.col("doc_id") % 37).cast("string"),
-                 F.lit(".example.com")).alias("src_host"),
-        F.regexp_extract("link", r"^https?://([^/]+)", 1)
-        .alias("dst_host"),
-        "doc_id")
-        .groupBy("src_host", "dst_host")
-        .agg(F.count(F.lit(1)).alias("n_links"),
-             F.countDistinct("doc_id").alias("n_pages")))
-
-
 def q_cdx_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-over-crawl snapshot diff (functions/relational.py:
     snapshot_delta) — classify every SURT across two synthesized CDX
@@ -1989,38 +1719,6 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       n_partitions=8, capacity=256)
 
 
-def q_url_param_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DUST-style parameter-insignificance mining (frontier/dust.py:
-    insignificant_params, Bar-Yossef WWW'07) over a planted alias
-    structure: per content group, a bare URL, a ?sid=<unique>&ref=home
-    alias and a ?ref=home alias share one digest while ?page=2 carries
-    different content — so the miner must report sid insignificant
-    (every strip has a same-digest witness), ref insignificant at the
-    1/2 ratio (witnessed only from the single-param form), and page
-    significant.  The oracle re-mines the verdicts with its own
-    split/strip/witness-join SQL (joining raw url+digest strings —
-    independent of the engine's md5 identity keys)."""
-    from cdx_writer_spark.frontier import dust
-
-    docs = _table(spark, sf_dir, "documents")
-    cid = F.expr("doc_id div 4")
-    v = F.col("doc_id") % 4
-    base = F.concat(F.lit("http://site"), (cid % 37).cast("string"),
-                    F.lit(".example.com/item/"), cid.cast("string"))
-    url = (F.when(v == 0, base)
-           .when(v == 1, F.concat(base, F.lit("?sid="),
-                                  F.col("doc_id").cast("string"),
-                                  F.lit("&ref=home")))
-           .when(v == 2, F.concat(base, F.lit("?ref=home")))
-           .otherwise(F.concat(base, F.lit("?page=2"))))
-    digest = F.when(
-        v == 3, F.md5(F.concat(F.lit("c"), cid.cast("string"),
-                               F.lit("p2")))).otherwise(
-        F.md5(F.concat(F.lit("c"), cid.cast("string"))))
-    pages = docs.select(url.alias("url"), digest.alias("digest"))
-    return dust.insignificant_params(pages)
-
-
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional phrase search (functions/textstats.py:
     phrase_occurrences) — per-document occurrence counts + first
@@ -2035,78 +1733,6 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return textstats.phrase_occurrences(_docs(spark, sf_dir),
                                         "merge data")
-
-
-def _capture_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic capture log for the CDX query-side ops: every content
-    id (doc_id div 3) is captured three times at the same URL — twice
-    with one payload digest, once changed — so revisit structure and
-    closest-lookup distance ties are both exercised."""
-    docs = _table(spark, sf_dir, "documents")
-    cid = F.expr("doc_id div 3")
-    v = F.col("doc_id") % 3
-    url = F.concat(F.lit("http://site"), (cid % 37).cast("string"),
-                   F.lit(".example.com/p/"), cid.cast("string"))
-    digest = F.when(
-        v == 2, F.md5(F.concat(F.lit("c"), cid.cast("string"),
-                               F.lit("x")))).otherwise(
-        F.md5(F.concat(F.lit("c"), cid.cast("string"))))
-    return docs.select(F.col("doc_id"), url.alias("url"),
-                       F.col("doc_id").alias("ts"),
-                       digest.alias("digest"))
-
-
-_CAPTURE_CTE = (
-    "cap AS (SELECT doc_id, 'http://site' || ((doc_id // 3) % 37) "
-    "|| '.example.com/p/' || (doc_id // 3) AS url, "
-    "doc_id AS ts, "
-    "CASE WHEN doc_id % 3 = 2 THEN md5('c' || (doc_id // 3) || 'x') "
-    "ELSE md5('c' || (doc_id // 3)) END AS digest FROM documents)")
-
-
-def q_warc_revisit_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heritrix-style revisit generation (cdxquery.revisit_dedup):
-    per payload digest the globally-first capture stays a response,
-    later ones become revisit records pointing at it — evaluated as
-    one min-struct aggregation + a digest join (never a window, so a
-    boilerplate digest captured 10^9 times folds map-side; plan test).
-    The oracle decides firsts with a correlated min subquery —
-    a different strategy that must agree row-for-row."""
-    from cdx_writer_spark import cdxquery
-
-    return cdxquery.revisit_dedup(_capture_view(spark, sf_dir))
-
-
-def q_cdx_closest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wayback closest-capture lookup (cdxquery.closest_capture): per
-    URL the capture minimizing |ts - target| with earlier-ts
-    tie-break, as one map-side-partial min-struct aggregation.  The
-    target sits mid-corpus so both sides of the distance are live.
-    Oracle = ANSI row_number over the same (distance, ts, id) order."""
-    from cdx_writer_spark import cdxquery
-
-    return cdxquery.closest_capture(_capture_view(spark, sf_dir),
-                                    target_ts=200)
-
-
-def _surt_index_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The capture view keyed by SURT — the shape of the standing CDX
-    index the query-side prefix/merge operators serve."""
-    docs = _table(spark, sf_dir, "documents")
-    cid = F.expr("doc_id div 3")
-    key = F.concat(F.lit("com,example,site"), (cid % 37).cast("string"),
-                   F.lit(")/p/"), cid.cast("string"))
-    return docs.select("doc_id", key.alias("surt_key"),
-                       F.col("doc_id").alias("ts"),
-                       F.md5(F.concat(F.lit("d"),
-                                      F.col("doc_id").cast("string")))
-                       .alias("digest"))
-
-
-_SURT_INDEX_CTE = (
-    "idx AS (SELECT doc_id, 'com,example,site' || ((doc_id // 3) % 37) "
-    "|| ')/p/' || (doc_id // 3) AS surt_key, doc_id AS ts, "
-    "md5('d' || doc_id) AS digest FROM documents)")
 
 
 # The dHash oracle: re-derive every 2x2 cell sum of the synthetic
@@ -2181,53 +1807,6 @@ _AUDIO_FP_CTES = (
     "list_aggregate(list_transform(range(1, 65), i -> "
     "CASE WHEN es[i] > es[i + 1] THEN '1' ELSE '0' END), "
     "'string_agg', '') AS bits FROM en)")
-
-
-def q_cdx_prefix_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDX-server ``matchType=prefix`` lookup (cdxquery.prefix_scan):
-    captures under a SURT prefix within a timestamp window, index
-    order, capped — planned as a pushed ``StringStartsWith`` +
-    ``TakeOrderedAndProject`` (per-partition heaps, no global sort;
-    plan test).  The prefix 'com,example,site1' genuinely exercises
-    prefix (not host-equality) semantics: site1, site10..site19 all
-    match.  Oracle = LIKE + ORDER BY + LIMIT over the same view."""
-    from cdx_writer_spark import cdxquery
-
-    return cdxquery.prefix_scan(_surt_index_view(spark, sf_dir),
-                                "com,example,site1", ts_from=20,
-                                ts_to=1_000_000, limit=150)
-
-
-def q_cdx_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental index upsert (cdxquery.merge_captures): a delta
-    crawl batch folds into the standing index, delta winning per
-    (surt_key, ts) — one union + one max-struct aggregation whose
-    partials combine map-side (never a window sort on a hot key).
-    Base drops doc_id%5==0, delta re-captures doc_id%3==0 with new
-    digests, so the output exercises insert / replace / carry-over
-    rows.  Oracle = row_number() OVER latest-generation-wins."""
-    from cdx_writer_spark import cdxquery
-
-    idx = _surt_index_view(spark, sf_dir)
-    base = idx.filter(F.col("doc_id") % 5 != 0)
-    delta = (idx.filter(F.col("doc_id") % 3 == 0)
-             .withColumn("digest",
-                         F.md5(F.concat(F.lit("n"),
-                                        F.col("doc_id").cast("string")))))
-    return cdxquery.merge_captures(base, delta)
-
-
-def q_cdx_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDX-server collapse=timestamp:N (cdxquery.collapse_captures):
-    per (surt_key, truncated-ts bucket) keep the first capture with a
-    collapsed-count — the Wayback calendar dedup — as ONE map-side
-    min-struct aggregation (an hourly-captured URL folds map-side,
-    never a window).  Oracle = min/min_by/count GROUP BY over the same
-    buckets."""
-    from cdx_writer_spark import cdxquery
-
-    return cdxquery.collapse_captures(_surt_index_view(spark, sf_dir),
-                                      digits=13)
 
 
 def q_orders_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2624,16 +2203,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "audio_near_dup": q_audio_near_dup,
         "video_dhash": q_video_dhash,
         "video_near_dup": q_video_near_dup,
-        "cdx_prefix_scan": q_cdx_prefix_scan,
-        "cdx_index_merge": q_cdx_index_merge,
         "events_json": q_events_json,
-        "cdx_collapse": q_cdx_collapse,
         "orders_above_avg": q_orders_above_avg,
         "events_retention": q_events_retention,
         "bmp_decode": q_bmp_decode,
         "tiff_decode": q_tiff_decode,
         "frontier_seen_cuckoo": q_frontier_seen_cuckoo,
-        "frontier_links": q_frontier_links,
         "events_sessions": q_events_sessions,
         "events_asof": q_events_asof,
         "agg_rollup": q_agg_rollup,
@@ -2642,7 +2217,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_decode": q_multimodal_decode,
         "multimodal_resize": q_multimodal_resize,
         "multimodal_frames": q_multimodal_frames,
-        "frontier_robots": q_frontier_robots,
         "frontier_topk": q_frontier_topk,
         "frontier_seen_split": q_frontier_seen_split,
         "frontier_crawl": q_frontier_crawl,
@@ -2656,22 +2230,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_budget": q_crawl_budget,
         "recrawl_tiers": q_recrawl_tiers,
         "cdx_roundtrip": q_cdx_roundtrip,
-        "url_param_rules": q_url_param_rules,
         "phrase_search": q_phrase_search,
-        "warc_revisit_dedup": q_warc_revisit_dedup,
-        "cdx_closest": q_cdx_closest,
         "term_pmi": q_term_pmi,
         "crawl_depth": q_crawl_depth,
         "host_hits": q_host_hits,
-        "anchor_text": q_anchor_text,
-        "sitemap_urls": q_sitemap_urls,
-        "url_templates": q_url_templates,
         "inverted_index": q_inverted_index,
         "term_cooccurrence": q_term_cooccurrence,
         "corpus_sample": q_corpus_sample,
         "corpus_sample_hash": q_corpus_sample_hash,
-        "robots_sitemaps": q_robots_sitemaps,
-        "web_link_graph": q_web_link_graph,
         "host_triangles": q_host_triangles,
         "events_concurrency": q_events_concurrency,
         "orders_topk": q_orders_topk,
@@ -3142,38 +2708,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM fp a JOIN fp b ON a.doc_id < b.doc_id "
             "WHERE len(list_filter(range(1, 65), i -> "
             "substr(a.bits, i, 1) <> substr(b.bits, i, 1))) <= 2"),
-        # CDX-server prefix lookup: LIKE + ORDER BY + LIMIT — the
-        # engine must reach the same capped row set through the pushed
-        # StringStartsWith + TakeOrderedAndProject plan
-        "cdx_prefix_scan": (
-            "WITH " + _SURT_INDEX_CTE + " "
-            "SELECT surt_key, ts, doc_id AS id FROM idx "
-            "WHERE surt_key LIKE 'com,example,site1%' "
-            "AND ts >= 20 AND ts < 1000000 "
-            "ORDER BY surt_key, ts, id LIMIT 150"),
-        # incremental index upsert: latest-generation-wins expressed as
-        # the window the engine deliberately avoids (max-struct agg)
-        "cdx_index_merge": (
-            "WITH " + _SURT_INDEX_CTE + ", "
-            "base AS (SELECT surt_key, ts, digest, doc_id AS id, "
-            "0 AS generation FROM idx WHERE doc_id % 5 <> 0), "
-            "delta AS (SELECT surt_key, ts, md5('n' || doc_id), "
-            "doc_id, 1 FROM idx WHERE doc_id % 3 = 0), "
-            "u AS (SELECT * FROM base UNION ALL SELECT * FROM delta), "
-            "r AS (SELECT *, row_number() OVER "
-            "(PARTITION BY surt_key, ts "
-            "ORDER BY generation DESC, id DESC) AS rn FROM u) "
-            "SELECT surt_key, ts, digest, id, "
-            "CAST(generation AS INTEGER) AS generation "
-            "FROM r WHERE rn = 1"),
-        # Wayback calendar collapse: min/min_by/count per truncated-ts
-        # bucket — vs the engine's single min-struct aggregation
-        "cdx_collapse": (
-            "WITH " + _SURT_INDEX_CTE + ", "
-            "r AS (SELECT surt_key, ts, doc_id AS id, "
-            "ts - ts % 10 AS b FROM idx) "
-            "SELECT surt_key, MIN(ts) AS ts, min_by(id, ts) AS id, "
-            "COUNT(*) AS n_collapsed FROM r GROUP BY surt_key, b"),
         # cohort retention: the same two-level aggregation in SQL
         "events_retention": (
             "WITH act AS (SELECT DISTINCT user_id, "
@@ -3262,41 +2796,6 @@ def oracle_sql() -> dict[str, str]:
             "(ORDER BY score_micro DESC, doc_id) AS INT) AS rank "
             "FROM d) "
             "SELECT * FROM r WHERE rank <= 20"),
-        # DUST re-mined in SQL: same planted alias view, its own
-        # split/strip rebuild, witness join on RAW (url, digest)
-        # strings — independent of the engine's md5 identity keys
-        "url_param_rules": (
-            "WITH up AS (SELECT doc_id // 4 AS cid, doc_id % 4 AS v, "
-            "doc_id FROM documents), "
-            "pr AS (SELECT 'http://site' || (cid % 37) "
-            "|| '.example.com/item/' || cid AS base, v, doc_id, cid "
-            "FROM up), "
-            "obs AS (SELECT DISTINCT CASE v WHEN 0 THEN base "
-            "WHEN 1 THEN base || '?sid=' || doc_id || '&ref=home' "
-            "WHEN 2 THEN base || '?ref=home' "
-            "ELSE base || '?page=2' END AS url, "
-            "CASE WHEN v = 3 THEN md5('c' || cid || 'p2') "
-            "ELSE md5('c' || cid) END AS digest FROM pr), "
-            "wq AS (SELECT url, digest, split_part(url, '?', 1) "
-            "AS base, string_split(split_part(url, '?', 2), '&') "
-            "AS parts FROM obs WHERE contains(url, '?')), "
-            "pp AS (SELECT digest, base, parts, "
-            "unnest(list_distinct(list_transform(parts, "
-            "kv -> split_part(kv, '=', 1)))) AS param FROM wq), "
-            "st AS (SELECT param, digest, CASE WHEN len(rest) = 0 "
-            "THEN base ELSE base || '?' || "
-            "array_to_string(rest, '&') END AS stripped FROM "
-            "(SELECT param, digest, base, list_filter(parts, "
-            "kv -> split_part(kv, '=', 1) <> param) AS rest FROM pp)), "
-            "fl AS (SELECT st.param, CASE WHEN o.url IS NOT NULL "
-            "THEN 1 ELSE 0 END AS hit FROM st LEFT JOIN obs o "
-            "ON o.url = st.stripped AND o.digest = st.digest), "
-            "c AS (SELECT param, COUNT(*) AS n_urls, SUM(hit) "
-            "AS n_matched FROM fl GROUP BY 1) "
-            "SELECT param, CAST(n_urls AS BIGINT) AS n_urls, "
-            "CAST(n_matched AS BIGINT) AS n_matched, "
-            "n_matched * 2 >= n_urls * 1 AS insignificant "
-            "FROM c WHERE n_urls >= 2"),
         # phrase search by the strategy the engine avoids: m-way
         # positional self-join over unnested (doc, pos, token) rows
         "phrase_search": (
@@ -3313,35 +2812,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, CAST(COUNT(*) AS BIGINT) "
             "AS n_occurrences, CAST(MIN(p) AS INT) AS first_pos "
             "FROM occ GROUP BY 1"),
-        # revisit generation re-decided via a groupBy-firsts join in
-        # SQL (DuckDB min over a struct-ordered row), independent of
-        # the engine's struct-min aggregation
-        "warc_revisit_dedup": (
-            "WITH " + _CAPTURE_CTE + ", "
-            "fr AS (SELECT digest, MIN(ROW(ts, doc_id)) AS m "
-            "FROM cap GROUP BY 1), "
-            "fx AS (SELECT f.digest, c.ts AS fts, c.doc_id AS fid, "
-            "c.url AS furl FROM fr f JOIN cap c "
-            "ON c.digest = f.digest AND ROW(c.ts, c.doc_id) = f.m) "
-            "SELECT cap.doc_id AS id, cap.url, CAST(cap.ts AS BIGINT) "
-            "AS ts, CASE WHEN fx.fid IS NULL OR (cap.ts = fx.fts AND "
-            "cap.doc_id = fx.fid) THEN 'response' ELSE 'revisit' END "
-            "AS record_type, "
-            "CASE WHEN fx.fid IS NULL OR (cap.ts = fx.fts AND "
-            "cap.doc_id = fx.fid) THEN NULL ELSE fx.furl END "
-            "AS refers_to_url, "
-            "CAST(CASE WHEN fx.fid IS NULL OR (cap.ts = fx.fts AND "
-            "cap.doc_id = fx.fid) THEN NULL ELSE fx.fts END AS BIGINT) "
-            "AS refers_to_ts "
-            "FROM cap LEFT JOIN fx ON fx.digest = cap.digest"),
-        # closest lookup re-decided with an ANSI row_number window
-        "cdx_closest": (
-            "WITH " + _CAPTURE_CTE + ", "
-            "r AS (SELECT url, ts, doc_id, abs(ts - 200) AS d, "
-            "ROW_NUMBER() OVER (PARTITION BY url "
-            "ORDER BY abs(ts - 200), ts, doc_id) AS rn FROM cap) "
-            "SELECT url, CAST(ts AS BIGINT) AS ts, doc_id AS id, "
-            "CAST(d AS BIGINT) AS distance FROM r WHERE rn = 1"),
         # PMI from positions-self-join pairs (the strategy the engine
         # avoids), marginals and total re-aggregated, same double
         # product/association order inside the ln
@@ -4197,70 +3667,6 @@ def oracle_sql() -> dict[str, str]:
             "+ (strpos('0123456789abcdef', "
             "substr(frame_digest, 2, 1)) - 1) AS INTEGER) "
             "AS frame_luma_x256 FROM fd"),
-        # RFC 9309 robots: admitted set + budgets re-decided in SQL —
-        # group selection (cdxbot group on h%3=0 hosts), longest-match
-        # with allow-beats-equal-disallow, * wildcard, $ anchor,
-        # crawl-delay -> floor(60/delay) budget
-        # outlink extraction re-derived ARITHMETICALLY: every planted
-        # anchor's resolved URL is computed straight from doc_id (the
-        # parent-relative case emits '/up/…' directly — no collapse
-        # regex in the oracle — and the every-5th-doc <base href>
-        # override is a CASE on doc_id, so a collapse or
-        # base-resolution bug in the engine cannot hash-match).
-        # Single-quoted ('srel/…') and unquoted ('/u/…') anchors ride
-        # the same resolution; tel:/data:/mailto: are never emitted
-        # (the engine's generic scheme guard must drop them).
-        "frontier_links": (
-            "WITH raw AS (SELECT doc_id, "
-            "CASE WHEN doc_id % 5 = 0 THEN "
-            "'http://base' || (doc_id % 7) || '.example.net' "
-            "ELSE 'http://site' || (doc_id % 37) || '.example.com' "
-            "END AS org, "
-            "CASE WHEN doc_id % 5 = 0 THEN '/bdir/' ELSE '/dir/' "
-            "END AS dir, unnest("
-            "['http://ext' || (doc_id % 5) || '.example.org/abs/' "
-            "|| doc_id, "
-            "'/root/' || doc_id, 'rel/' || doc_id, '../up/' || doc_id,"
-            " 'srel/' || doc_id, '/u/' || doc_id]"
-            " || CASE WHEN doc_id % 2 = 0 THEN "
-            "['//cdn.example.net/c/' || doc_id] "
-            "ELSE []::VARCHAR[] END "
-            "|| ['#frag', 'tel:+15551234'] "
-            "|| CASE WHEN doc_id % 2 = 1 THEN "
-            "['data:image/png;base64,AAAA'] ELSE []::VARCHAR[] END "
-            "|| CASE WHEN doc_id % 3 = 0 THEN ['mailto:a@b.example'] "
-            "ELSE []::VARCHAR[] END "
-            "|| CASE WHEN doc_id % 4 = 0 THEN "
-            "['HTTPS://UP.example.com/U' || doc_id] "
-            "ELSE []::VARCHAR[] END) AS v FROM documents), "
-            "res AS (SELECT doc_id, CASE "
-            "WHEN lower(v) LIKE 'http://%' OR lower(v) LIKE "
-            "'https://%' THEN v "
-            "WHEN v LIKE '//%' THEN 'http:' || v "
-            "WHEN v LIKE '../%' THEN org || '/' || substr(v, 4) "
-            "WHEN v LIKE '/%' THEN org || v "
-            "WHEN v LIKE '#%' OR regexp_matches(v, "
-            "'^[A-Za-z][A-Za-z0-9+.-]*:') THEN NULL "
-            "ELSE org || dir || v END AS link FROM raw) "
-            "SELECT DISTINCT doc_id, link FROM res "
-            "WHERE link IS NOT NULL"),
-        "frontier_robots": (
-            "WITH c AS (SELECT doc_id, doc_id % 37 AS h, "
-            "doc_id % 6 AS v, "
-            "CASE doc_id % 6 "
-            "WHEN 0 THEN '/private/p' || doc_id "
-            "WHEN 1 THEN '/private/ok' || doc_id "
-            "WHEN 2 THEN '/tmp/x' || doc_id "
-            "WHEN 3 THEN '/exact' "
-            "WHEN 4 THEN '/exact/sub' || doc_id "
-            "ELSE '' END AS path FROM documents) "
-            "SELECT doc_id, "
-            "'http://site' || h || '.example.com' || path AS url, "
-            "CAST(CASE WHEN h % 3 = 0 THEN 60 // (1 + h % 5) "
-            "ELSE 8 END AS BIGINT) AS budget_per_round "
-            "FROM c "
-            "WHERE CASE WHEN h % 3 = 0 THEN v <> 0 "
-            "ELSE v <> 2 AND v <> 3 END"),
         "frontier_topk": (
             "WITH cand AS (SELECT doc_id, doc_id % 37 AS h, "
             "'site' || (doc_id % 37) || '.example.com' AS host, "
@@ -4518,34 +3924,6 @@ def oracle_sql() -> dict[str, str]:
             "WHERE l.l_orderkey = o.o_orderkey "
             "AND datediff('day', o.o_orderdate, l.l_shipdate) >= 60) "
             "GROUP BY o_orderpriority"),
-        # full grouping-set lattice; GROUPING() bits composed in
-        # Spark's grouping_id order (status=bit1, priority=bit0)
-        # triangles: id-ordered three-way self-join — a different
-        # enumeration than the engine's degree orientation, same
-        # id-minimum triangle key
-        # page-links -> host-graph composition: every edge re-derived
-        # arithmetically (the self-link's resolution included), then
-        # aggregated on the same host keys
-        "web_link_graph": (
-            "WITH e AS ("
-            "SELECT doc_id, "
-            "'site' || (doc_id % 37) || '.example.com' AS src_host, "
-            "'site' || ((doc_id + 1) % 37) || '.example.com' "
-            "AS dst_host FROM documents "
-            "UNION ALL "
-            "SELECT doc_id, "
-            "'site' || (doc_id % 37) || '.example.com', "
-            "'site' || ((doc_id * 3 + 5) % 37) || '.example.com' "
-            "FROM documents "
-            "UNION ALL "
-            "SELECT doc_id, "
-            "'site' || (doc_id % 37) || '.example.com', "
-            "'site' || (doc_id % 37) || '.example.com' "
-            "FROM documents) "
-            "SELECT src_host, dst_host, "
-            "CAST(COUNT(*) AS BIGINT) AS n_links, "
-            "CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_pages "
-            "FROM e GROUP BY src_host, dst_host"),
         # stratified sampling: the oracle runs the IDENTICAL spec —
         # md5 hex ordering and the integer ceil are portable, so the
         # kept rows, ranks and stratum sizes must match exactly
@@ -4561,17 +3939,6 @@ def oracle_sql() -> dict[str, str]:
         "corpus_sample_hash": (
             "SELECT doc_id, lang, n_chars FROM documents "
             "WHERE substr(md5('r5h' || doc_id), 1, 4) < '199a'"),
-        # robots Sitemap: directives re-derived arithmetically (the
-        # engine runs the multiline regexp + absolute-http(s) filter)
-        "robots_sitemaps": (
-            "WITH s AS (SELECT doc_id, doc_id % 37 AS h "
-            "FROM documents WHERE doc_id % 2 = 0) "
-            "SELECT doc_id, 'http://site' || h "
-            "|| '.example.com/sitemap' || (doc_id % 3) || '.xml' "
-            "AS sitemap FROM s "
-            "UNION ALL "
-            "SELECT doc_id, 'https://cdn' || (doc_id % 5) "
-            "|| '.example.net/idx.xml' FROM s"),
         # inverted index: positions re-derived by 1-based list
         # indexing over an unnested range (the engine posexplodes)
         "inverted_index": (
@@ -4598,55 +3965,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM p p1 JOIN p p2 ON p2.doc_id = p1.doc_id "
             "AND p2.pos > p1.pos AND p2.pos <= p1.pos + 2 "
             "GROUP BY term_a, term_b"),
-        # anchor-text aggregation: every (link, anchor) row is
-        # re-derived arithmetically — the collapsed anchor strings
-        # are constructed directly, the resolution cases mapped by
-        # shape — then aggregated per target
-        "anchor_text": (
-            "WITH rows AS ("
-            "SELECT doc_id, "
-            "'http://peer' || (doc_id % 7) || '.example.org/page' "
-            "|| (doc_id % 13) AS link, "
-            "'Peer ' || (doc_id % 13) AS anchor FROM documents "
-            "UNION ALL "
-            "SELECT doc_id, "
-            "'http://site' || (doc_id % 37) || '.example.com/local/' "
-            "|| (doc_id % 5), 'local ' || (doc_id % 5) "
-            "FROM documents "
-            "UNION ALL "
-            "SELECT doc_id, "
-            "'http://peer' || (doc_id % 7) || '.example.org/page' "
-            "|| (doc_id % 13), '' FROM documents "
-            "WHERE doc_id % 3 = 0) "
-            "SELECT link, CAST(COUNT(*) AS BIGINT) AS n_mentions, "
-            "CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs, "
-            "MIN(CASE WHEN anchor <> '' THEN anchor END) "
-            "AS top_anchor "
-            "FROM rows GROUP BY link"),
-        # sitemap <loc> extraction: the surviving rows (trimmed,
-        # per-doc deduped, ftp: dropped) re-derived arithmetically
-        "sitemap_urls": (
-            "WITH s AS (SELECT doc_id, doc_id % 37 AS h "
-            "FROM documents WHERE doc_id % 4 = 0) "
-            "SELECT doc_id, 'http://site' || h || '.example.com/p' "
-            "|| doc_id AS loc FROM s "
-            "UNION ALL "
-            "SELECT doc_id, 'http://site' || h || '.example.com/q' "
-            "|| doc_id FROM s"),
-        # crawl-trap templates: each planted URL shape maps straight
-        # to its expected template string — no regex in the oracle,
-        # so an engine digit-collapse bug could not hash-match
-        "url_templates": (
-            "WITH u AS (SELECT "
-            "'site' || (doc_id % 37) || '.example.com' AS host, "
-            "CASE doc_id % 3 "
-            "WHEN 0 THEN '/article/{n}/view?page={n}' "
-            "WHEN 1 THEN '/cat{n}/item{n}.html' "
-            "ELSE '/static/style.css' END AS template "
-            "FROM documents) "
-            "SELECT host, template, "
-            "CAST(COUNT(*) AS BIGINT) AS n_urls "
-            "FROM u GROUP BY host, template"),
         # bounded min-hop BFS re-derived as a recursive CTE: the
         # walk enumerates (node, depth) pairs up to the bound, MIN
         # collapses them — evaluation order shares nothing with the

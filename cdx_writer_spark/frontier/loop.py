@@ -55,6 +55,7 @@ import glob
 import os
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -81,13 +82,6 @@ class CrawlConfig:
     filter_kind: str = "bloom"
     max_depth: int = 12
     salt_threshold: int | None = None  # hot-host pre-cap (priority.py)
-    # Force-broadcast the fetch batch.  Leave False: a forced broadcast
-    # of a million-row round is a serial driver-side collect+build
-    # (measured ~2x round slowdown); with AQE on, Spark converts the
-    # join to broadcast at runtime exactly when the batch is small
-    # enough, and falls back to shuffle join (surt-bucketed co-location
-    # at real scale) otherwise.
-    broadcast_fetch: bool = False
     # Bloom probe strategy (seen.flag_maybe_seen): 'auto' (default)
     # size-gates on the configured filter geometry — 'native'
     # (Catalyst expression over broadcast filter words, zero Python)
@@ -104,15 +98,6 @@ class CrawlConfig:
     # is the cogroup/numpy fold.  Byte parity between the two is
     # property-tested.
     fold_strategy: str = "native"
-    # Prepare the web table once per run_crawl call: repartition by
-    # surt_key + sort within partitions + persist.  The fetch join's
-    # BIG side then satisfies the SortMergeJoin's distribution and
-    # ordering from cache — measured as the dominant per-round cost
-    # (regenerate + exchange + sort of the full web EVERY round).
-    # This is the sandbox stand-in for the real-scale design (a
-    # surt-bucketed Iceberg/parquet web table, where the exchange
-    # happens zero times); content and crawl order are unchanged.
-    prepare_web: bool = True
 
 
 def _round_dir(state_dir: str, rnd: int) -> str:
@@ -296,11 +281,12 @@ def _plan_round(spark: SparkSession, web: DataFrame, state_dir: str,
         "discovered_round", F.lit("pending").alias("state"),
         "host_pos").withColumn("round", F.lit(rnd))
 
-    # 2. fetch (inner = 200 OK only); see CrawlConfig.broadcast_fetch
-    batch_keys = batch.select("surt_key", "depth")
-    if cfg.broadcast_fetch:
-        batch_keys = F.broadcast(batch_keys)
-    fetched_pages = batch_keys.join(web, "surt_key")
+    # 2. fetch (inner = 200 OK only).  No broadcast hint: with AQE on,
+    # Spark converts the join to broadcast at runtime exactly when the
+    # batch is small enough, and keeps the shuffle join (surt-bucketed
+    # co-location at real scale) otherwise; a forced broadcast of a
+    # million-row round is a serial driver-side collect+build
+    fetched_pages = batch.select("surt_key", "depth").join(web, "surt_key")
 
     # 3. discover outlinks
     discovered = (
@@ -479,19 +465,20 @@ def run_crawl(spark: SparkSession, web: DataFrame, state_dir: str,
             raise ValueError("fresh crawl needs seeds")
         init_state(spark, seeds, state_dir, cfg)
         start = 0
-    prepped = None
-    if cfg.prepare_web:
-        from pyspark import StorageLevel
-
-        # DISK_ONLY: the prepared web is a full-scan-per-round table —
-        # the serialized columnar form on executor-local disk is the
-        # honest cluster pattern (a bucketed table scan) and keeps the
-        # multi-GB cache out of the execution heap, where it competes
-        # with the round's joins exactly when parallelism is highest
-        prepped = (web.repartition("surt_key")
-                   .sortWithinPartitions("surt_key")
-                   .persist(StorageLevel.DISK_ONLY))
-        web = prepped
+    # Prepare the web once per call: repartition by surt_key, sort
+    # within partitions and persist, so each round's fetch join finds
+    # its big side's distribution and ordering in the cache instead of
+    # exchanging and sorting the whole web every round.  This stands in
+    # for the real-scale design (a surt-bucketed pages table, where the
+    # exchange happens zero times); content and crawl order are
+    # unchanged.  DISK_ONLY: the prepared web is a full-scan-per-round
+    # table — the serialized columnar form on executor-local disk is
+    # the honest cluster pattern (a bucketed table scan) and keeps the
+    # multi-GB cache out of the execution heap, where it competes
+    # with the round's joins exactly when parallelism is highest
+    web = (web.repartition("surt_key")
+           .sortWithinPartitions("surt_key")
+           .persist(StorageLevel.DISK_ONLY))
     out = []
     last = start + n_rounds
     nxt = None
@@ -512,8 +499,7 @@ def run_crawl(spark: SparkSession, web: DataFrame, state_dir: str,
     finally:
         if nxt is not None:
             nxt.release()
-        if prepped is not None:
-            prepped.unpersist()
+        web.unpersist()
     return out
 
 

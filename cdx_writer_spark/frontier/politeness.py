@@ -11,11 +11,11 @@ the candidates side never shuffles for politeness:
   priority selection (priority.py); hosts absent from the corpus get
   ``DEFAULT_BUDGET`` (crawl-delay unknown → default pacing).
 
-The full RFC 9309 surface — robots.txt TEXT parsing, user-agent group
-selection, longest-match-wins with * / $ and Crawl-delay-derived
-budgets — lives in :mod:`.robots` (``compile_robots`` +
-``apply_robots_rep``); this module stays the minimal dimension-table
-model the crawl loop's synthetic webgraph uses.
+This is the frontier's one robots model.  The crawl round
+(loop._plan_round) and the benchmark's crawl replay and robots check
+all consume this table, so a second matcher (robots.txt text parsing,
+user-agent groups, longest match with * and $) would be code no crawl
+runs.  A single-prefix Disallow is itself an RFC 9309 rule.
 """
 
 from __future__ import annotations

@@ -62,12 +62,6 @@ def main() -> None:
     p.add_argument("--cpus", type=int,
                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
                                               os.cpu_count())))
-    p.add_argument("--probe", default="auto",
-                   choices=["auto", "native", "cogroup"],
-                   help="URL-seen Bloom probe strategy: auto "
-                        "(default: native while the filter words fit "
-                        "the broadcast budget, else cogroup), native "
-                        "Catalyst expression, or per-partition cogroup")
     p.add_argument("--filter-kind", default="bloom",
                    choices=["bloom", "cuckoo"],
                    help="URL-seen filter family: blocked Bloom "
@@ -111,8 +105,7 @@ def main() -> None:
         n_pages = args.pages
     seeds = webgraph.seeds(spark, args.seeds, n_pages)
 
-    cfg = loop.CrawlConfig(probe_strategy=args.probe,
-                           filter_kind=args.filter_kind)
+    cfg = loop.CrawlConfig(filter_kind=args.filter_kind)
     if args.rebuild_filters:
         loop.rebuild_filters(spark, args.state_dir, cfg)
 

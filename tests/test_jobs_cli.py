@@ -295,8 +295,9 @@ def test_wet_job_via_spark_submit_pyfiles(spark, tmp_path):
 
 
 def test_crawl_index_job_runs_rounds(tmp_path):
-    """The crawl job end-to-end on a small synthetic web with its
-    default probe ('auto'): exit 0 and one JSON summary per round."""
+    """The crawl job end-to-end on a small synthetic web (the probe
+    strategy resolves from the filter geometry): exit 0 and one JSON
+    summary per round."""
     state = str(tmp_path / "crawl_state")
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "jobs", "crawl_index_job.py"),

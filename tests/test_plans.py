@@ -231,19 +231,6 @@ def test_quality_mix_is_pure_projection(spark):
     assert "Python" not in plan
 
 
-def test_link_extraction_is_shuffle_free(spark):
-    """Per-document dedup happens inside the row's array (explode of
-    array_distinct), never via a global distinct exchange."""
-    from cdx_writer_spark.frontier import links
-
-    pages = spark.createDataFrame(
-        [(1, "http://h.example.com/", '<a href="/x">a</a>')],
-        "doc_id long, url string, html string")
-    plan = _plan(links.extract_links(pages))
-    assert "Exchange" not in plan
-    assert "Python" not in plan
-
-
 def test_orders_exists_is_a_semi_join(spark):
     """EXISTS must plan as LeftSemi on the orderkey equi-key (one
     probe hit short-circuits; no row duplication, no nested loop)."""
@@ -314,42 +301,6 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
-def test_discovery_operators_are_shuffle_free(spark):
-    """Anchor-text extraction, sitemap <loc> extraction, and robots
-    Sitemap: directive extraction are pure projections + explode —
-    no exchange, no Python worker (the per-target anchor aggregation
-    is the CALLER's one exchange, not these operators')."""
-    from cdx_writer_spark.frontier import links
-
-    pages = spark.createDataFrame(
-        [(1, "http://h.example.com/", '<a href="/x">t</a>')],
-        "doc_id long, url string, html string")
-    assert "Exchange" not in _plan(links.extract_anchor_texts(pages))
-    assert "Python" not in _plan(links.extract_anchor_texts(pages))
-    sm = spark.createDataFrame(
-        [(1, "<loc>http://a.example/s</loc>")],
-        "doc_id long, html string")
-    assert "Exchange" not in _plan(links.extract_sitemap_urls(sm))
-    rb = spark.createDataFrame(
-        [(1, "Sitemap: http://a.example/s.xml")],
-        "doc_id long, text string")
-    assert "Exchange" not in _plan(links.extract_robots_sitemaps(rb))
-
-
-def test_url_templates_one_partial_agged_exchange(spark):
-    """Template mining is one projection + ONE aggregation with a
-    map-side partial (the exchange carries pattern-cardinality
-    rows)."""
-    from cdx_writer_spark.frontier import links
-
-    u = spark.createDataFrame([("http://h.example/a/1",)],
-                              "url string")
-    plan = _plan(links.url_templates(u))
-    assert plan.count("Exchange") == 1
-    assert plan.index("HashAggregate") < plan.index("Exchange")
-    assert "Python" not in plan
-
-
 def test_inverted_index_and_cooccurrence_single_exchange(spark):
     """Both text-index ops aggregate behind ONE exchange with
     map-side partials; co-occurrence generates pairs in-array (no
@@ -382,27 +333,6 @@ def test_sampling_plans(spark):
     p2 = _plan(sampling.hash_sample(docs))
     assert "Exchange" not in p2
     assert "Python" not in p2
-
-
-def test_dust_verdicts_one_key_join_and_broadcast_collapse(spark):
-    """insignificant_params exchanges only md5 identity keys (witness
-    join) plus the distinct/agg exchanges; collapse_aliases applies
-    the verdict table to a frontier via BROADCAST with zero additional
-    shuffles on the frontier side."""
-    from cdx_writer_spark.frontier import dust
-
-    pages = spark.createDataFrame(
-        [("http://h/p?a=1", "d"), ("http://h/p", "d")],
-        "url string, digest string")
-    verdicts = dust.insignificant_params(pages)
-    frontier = spark.createDataFrame([("http://x/a?a=1",)],
-                                     "url string")
-    plan = _plan(dust.collapse_aliases(frontier, verdicts))
-    assert "BroadcastNestedLoopJoin" in plan
-    # the frontier side itself never shuffles: every Exchange in the
-    # plan belongs to the (tiny) verdict aggregation subtree
-    head = plan.split("BroadcastNestedLoopJoin")[0]
-    assert "Exchange" not in head
 
 
 def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):

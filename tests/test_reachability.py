@@ -3,7 +3,9 @@ reachable from a shipped entry point.
 
 The rule: library code stays only if a job in ``jobs/``, the frontier
 loop or the CDX/WET path calls it.  Both gates read source with
-``ast`` alone — no Spark, nothing imported.
+``ast`` alone — no Spark, nothing imported — and start from the same
+roots, ``ROOT_FILE_GLOBS``: the jobs, the benchmark, the row oracle
+and the fixture generator.
 
 * Modules: walk ``import`` statements (module-level and
   function-local) from those roots and assert that each
@@ -24,24 +26,18 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "cdx_writer_spark"
 
-ROOT_MODULES = (
-    f"{PKG}.frontier.loop",
-    f"{PKG}.streaming",
-    f"{PKG}.sink",
-    f"{PKG}.warc_source",
-    f"{PKG}.oracle",      # the row reference the benchmark checks against
-    f"{PKG}.pages_gen",   # the fixture generator behind tests and bench
-)
+# Code that runs when a shipped path runs: whole files here, plus (for
+# the function gate) the module-level statements of every reached
+# module.  __spark_entry__.py, bench.py and tests are not roots (they
+# call code; nothing ships through them), nor is
+# scripts/scaling_report.py (its worker is a code string, which the
+# walk cannot see).  oracle.py is the row reference the benchmark
+# checks against; pages_gen.py the fixture generator behind tests and
+# the benchmark.
+ROOT_FILE_GLOBS = ("jobs/*.py", "perfbench/*.py",
+                   f"{PKG}/oracle.py", f"{PKG}/pages_gen.py")
 
 UNREACHED = {
-    f"{PKG}.frontier.robots":
-        "robots.txt cache for the frontier; not wired into a job yet",
-    f"{PKG}.frontier.links":
-        "outlink discovery for the frontier; not wired into a job yet",
-    f"{PKG}.frontier.dust":
-        "DUST alias collapse for the frontier; not wired into a job yet",
-    f"{PKG}.cdxquery":
-        "CDX lookup over written indexes; not wired into a job yet",
     # registry-only operator families; each goes, with its queries and
     # tests, in a later deletion (ROADMAP item 4)
     f"{PKG}.functions.graph": "link-graph ranking queries only",
@@ -89,12 +85,22 @@ def _imports(path: str, module: str, is_pkg: bool) -> set[str]:
     return names
 
 
+def _root_paths() -> set[str]:
+    return {p for g in ROOT_FILE_GLOBS
+            for p in glob.glob(os.path.join(REPO, g))}
+
+
 def _reached() -> set[str]:
     files = _module_files()
-    todo = list(ROOT_MODULES)
-    for job in glob.glob(os.path.join(REPO, "jobs", "*.py")):
-        todo.extend(n for n in _imports(job, "jobs", False)
-                    if n.startswith(PKG))
+    module_of = {path: mod for mod, path in files.items()}
+    todo = []
+    for path in _root_paths():
+        if path in module_of:       # a package module is its own root
+            todo.append(module_of[path])
+        else:
+            todo.extend(n for n in _imports(
+                path, os.path.basename(os.path.dirname(path)), False)
+                if n.startswith(PKG))
     seen: set[str] = set()
     while todo:
         name = todo.pop()
@@ -131,21 +137,13 @@ def test_unreached_list_is_current():
 
 # --- function level -----------------------------------------------------------
 
-# Code that runs when a shipped path runs: whole files here, plus the
-# module-level statements of every reached module.  __spark_entry__.py,
-# bench.py and tests are not roots (they call code; nothing ships
-# through them), nor is scripts/scaling_report.py (its worker is a code
-# string, which the walk cannot see).
-ROOT_FILE_GLOBS = ("jobs/*.py", "perfbench/*.py",
-                   f"{PKG}/oracle.py", f"{PKG}/pages_gen.py")
-
 # Top-level functions of reached modules that no shipped path calls,
 # grouped by why they stay.  Names are relative to the package.  Each
 # group goes, with its registry queries and tests, in a later deletion
 # (ROADMAP items 4 and 5) or when a job calls it.
 UNREACHED_FUNCS = {
     "pair engine and exact dedup kept for modules in UNREACHED "
-    "(functions.audio/multimodal, functions.graph, frontier.dust)": (
+    "(functions.audio/multimodal, functions.graph)": (
         "functions.dedup.bits_near_pairs",
         "functions.dedup._banded_candidate_pairs",
         "functions.dedup._cap_buckets",
@@ -251,8 +249,7 @@ def _reached_functions() -> tuple[set[str], set[str]]:
     clash can only keep code (a same-named function elsewhere counts
     as a reference); it cannot flag live code."""
     files = _module_files()
-    root_paths = {p for g in ROOT_FILE_GLOBS
-                  for p in glob.glob(os.path.join(REPO, g))}
+    root_paths = _root_paths()
     code = [ast.parse(open(p).read()) for p in sorted(root_paths)]
     defs: dict[str, ast.AST] = {}
     for mod in sorted(_reached() - set(UNREACHED)):
