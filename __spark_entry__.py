@@ -561,22 +561,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm.linear_quality_scores(_docs(spark, sf_dir), wdf)
 
 
-def q_fuzzy_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance-1 fuzzy matching (functions/fuzzy.py) over the
-    planted host names — the typo-site / off-by-one-id detector
-    token dedup can't see.  The engine bands on md5 deletion
-    neighborhoods (recall-complete at d≤1, FastSS-style) and verifies
-    with native levenshtein; the oracle brute-forces ALL pairs with
-    DuckDB's own levenshtein — so a missed banding candidate or a
-    wrong verify threshold hash-mismatches."""
-    from cdx_writer_spark.functions import fuzzy
-
-    hosts = _docs(spark, sf_dir).select(
-        F.concat(F.lit("site"), (F.col("doc_id") % 37).cast("string"),
-                 F.lit(".example.com")).alias("host"))
-    return fuzzy.edit1_pairs(hosts, "host")
-
-
 def q_corpus_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-context training-example chunking: 32-token windows every
     24 tokens (8-token overlap), trailing partials kept — the oracle
@@ -1094,82 +1078,6 @@ def q_part_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-rank for the frontier's priority key (north star:
-    schedule by "host-rank + depth"): PageRank in EXACT integer
-    arithmetic (functions/graph.py) over a deterministic host graph
-    planted from doc_id arithmetic — two quotient-derived edge
-    families on 37 hosts, with hosts ≥34 never emitting edges so the
-    dangling-mass path is exercised.  Float PageRank is
-    summation-order-dependent and could never hash-match an
-    independent engine; the integer spec makes the 3-iteration
-    fixpoint a pure function of the edge set, which the DuckDB oracle
-    recomputes as three unrolled relational iterations."""
-    from cdx_writer_spark.functions import graph
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    e1 = docs.filter(d % 37 < 34).select(
-        (d % 37).alias("src"),
-        (F.expr("doc_id div 7") % 37).alias("dst"))
-    e2 = docs.filter(F.expr("(doc_id div 3) % 37 < 34")).select(
-        F.expr("(doc_id div 3) % 37").alias("src"),
-        (F.expr("doc_id div 11") % 37).alias("dst"))
-    ranks = graph.pagerank_exact(e1.union(e2), iterations=3)
-    return ranks.select("node", F.col("rank").alias("pr_scaled"))
-
-
-def q_host_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seed-biased trust propagation (TrustRank, Gyöngyi et al. VLDB
-    2004) over the SAME planted 37-host graph as host_pagerank, with
-    hosts 0-4 as the trusted whitelist — the web-spam demotion signal
-    a crawl scheduler blends into its priority key (link farms
-    unreachable from any seed converge to rank 0, so they sink to the
-    back of the frontier).  Exact integer arithmetic end-to-end
-    (functions/graph.py trustrank_exact): the biased teleport, the
-    per-edge ``rank div outdeg`` sends and the dangling-mass return
-    to the seeds are all integer divisions in a documented order, so
-    the 2-iteration fixpoint is a pure function of (edge set, seed
-    set) and the DuckDB oracle re-derives it as two unrolled
-    relational iterations — any divergence hash-mismatches."""
-    from cdx_writer_spark.functions import graph
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    e1 = docs.filter(d % 37 < 34).select(
-        (d % 37).alias("src"),
-        (F.expr("doc_id div 7") % 37).alias("dst"))
-    e2 = docs.filter(F.expr("(doc_id div 3) % 37 < 34")).select(
-        F.expr("(doc_id div 3) % 37").alias("src"),
-        (F.expr("doc_id div 11") % 37).alias("dst"))
-    seeds = spark.range(5).select(F.col("id").alias("node"))
-    ranks = graph.trustrank_exact(e1.union(e2), seeds, iterations=2)
-    return ranks.select("node", F.col("rank").alias("trust_scaled"))
-
-
-def q_host_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection over the undirected view of the planted
-    37-host graph via synchronous label propagation (Raghavan et al.
-    2007; functions/graph.py label_propagation) — the mirror-site /
-    template-farm grouping a scheduler uses to spread crawl budget
-    across communities.  Two synchronous rounds with the documented
-    (max multiplicity, min label) tie-break make the labeling a pure
-    function of the edge set; the DuckDB oracle re-derives both
-    rounds relationally (count + row_number argmax), so an
-    update-order or tie-break divergence hash-mismatches."""
-    from cdx_writer_spark.functions import graph
-
-    docs = _docs(spark, sf_dir)
-    d = F.col("doc_id")
-    e1 = docs.filter(d % 37 < 34).select(
-        (d % 37).alias("src"),
-        (F.expr("doc_id div 7") % 37).alias("dst"))
-    e2 = docs.filter(F.expr("(doc_id div 3) % 37 < 34")).select(
-        F.expr("(doc_id div 3) % 37").alias("src"),
-        (F.expr("doc_id div 11") % 37).alias("dst"))
-    return graph.label_propagation(e1.union(e2), rounds=2)
-
-
 def q_join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _table(spark, sf_dir, "customer")
     o = _table(spark, sf_dir, "orders")
@@ -1202,9 +1110,7 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the timeout; sessions aggregate count/start/end/duration/value.
     One exchange on user_id serves both the lag and the running-sum
     window plus the final aggregate (same partitioning reused);
-    timestamps compare cross-engine as exact epoch microseconds.
-    The streaming analogue (applyInPandasWithState) is the politeness
-    gate in streaming.py."""
+    timestamps compare cross-engine as exact epoch microseconds."""
     from pyspark.sql.window import Window
 
     gap_us = 30 * 60 * 1_000_000
@@ -1233,9 +1139,7 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling windows (1 h) per event type via Spark's
-    native ``window()`` — the batch twin of the streaming windowed
-    aggregation in streaming.py (same function drives watermarked
-    streams).  Window bounds come back as epoch microseconds
+    native ``window()``.  Window bounds come back as epoch microseconds
     (events_sessions convention) so the oracle can re-derive them
     with pure integer floor arithmetic — a window-alignment bug on
     either side hash-mismatches.  One exchange on (window, type);
@@ -1417,8 +1321,7 @@ def q_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     via Spark's native ``window(ts, '10 minutes', '5 minutes')``:
     the window assignment expands MAP-SIDE (an Expand of
     ⌈window/slide⌉ rows per event, no self-join), then ONE exchange
-    on (window, event_type) aggregates; the streaming twin is the
-    same expression under a watermark (streaming.py).  The oracle
+    on (window, event_type) aggregates.  The oracle
     re-derives both window starts with integer floor arithmetic over
     an explicit 2-row offset table — independent of Spark's
     alignment machinery, so an off-by-one-slide bug on either side
@@ -1539,75 +1442,6 @@ def q_events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg, "event_type", "us", "delta", out_col="n_active",
         bucket_width=3_600_000_000)
     return out.select("event_type", "us", "delta", "n_active")
-
-
-def q_host_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact triangle counting (functions/graph.py: triangle_count)
-    over a deterministic derived webgraph — the clustering-coefficient
-    primitive for link-graph analysis (host communities, link-farm
-    detection for crawl prioritization).  The engine runs the
-    degree-ordered orientation (per-node oriented out-degree bounded
-    by ~sqrt(2m), so hub wedges never explode); the oracle is the
-    plain id-ordered three-way self-join — a DIFFERENT triangle
-    enumeration order, but both key each triangle by its id-minimum
-    corner, so the per-node counts must match exactly."""
-    from cdx_writer_spark.functions import graph
-
-    docs = _table(spark, sf_dir, "documents")
-    raw = (docs.select(
-        F.expr("doc_id % 257").alias("a"),
-        F.expr("(doc_id div 7) % 257").alias("b"))
-        .unionAll(docs.select(
-            F.expr("(doc_id div 3) % 257").alias("a"),
-            F.expr("(doc_id div 11) % 257").alias("b")))
-        .unionAll(docs.select(
-            F.expr("(doc_id div 5) % 257").alias("a"),
-            F.expr("(doc_id div 13) % 257").alias("b"))))
-    return graph.triangle_count(raw, "a", "b")
-
-
-def q_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Level-synchronous BFS (functions/graph.py: bfs_depths) over a
-    deterministic derived webgraph — the "depth" half of the north
-    star's "host-rank + depth" frontier priority key, derived from
-    the observed link graph.  The engine expands the frontier one
-    level per round (per-round join probe = last round's NEW nodes
-    only); the oracle is a DuckDB recursive CTE closing the same
-    bounded walk — a completely different evaluation strategy, but
-    min-hop-distance is a pure function of (edges, seeds, bound), so
-    the two must agree row-for-row."""
-    from cdx_writer_spark.functions import graph
-
-    docs = _table(spark, sf_dir, "documents")
-    edges = (docs.select(
-        F.expr("doc_id % 257").alias("src"),
-        F.expr("(doc_id div 7) % 257").alias("dst"))
-        .unionAll(docs.select(
-            F.expr("(doc_id div 3) % 257").alias("src"),
-            F.expr("(doc_id div 11) % 257").alias("dst"))))
-    seeds = (docs.filter("doc_id % 100 = 0")
-             .select(F.expr("doc_id % 257").alias("node")))
-    return graph.bfs_depths(edges, seeds, max_depth=3)
-
-
-def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact HITS (functions/graph.py: hits_exact) over a
-    deterministic derived webgraph — hub/authority scores for
-    link-farm detection and crawl prioritization.  Every operation is
-    integer arithmetic in the documented order (raw sum → scaled
-    integer-division normalize, alternating sides), so the DuckDB
-    oracle unrolls both iterations relationally and the BIGINT scores
-    must match bit-for-bit."""
-    from cdx_writer_spark.functions import graph
-
-    docs = _table(spark, sf_dir, "documents")
-    edges = (docs.select(
-        F.expr("doc_id % 61").alias("src"),
-        F.expr("(doc_id div 7) % 61").alias("dst"))
-        .unionAll(docs.select(
-            F.expr("(doc_id div 3) % 61").alias("src"),
-            F.expr("(doc_id div 11) % 61").alias("dst"))))
-    return graph.hits_exact(edges, iterations=2)
 
 
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2109,31 +1943,6 @@ def q_cdx_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parse_cdx_lines(lines, _ORACLE_FORMAT)
 
 
-def q_recrawl_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive revisit tiers (frontier/priority.py: recrawl_policy,
-    Cho & Garcia-Molina 2003) over 4 synthesized crawl snapshots:
-    each URL's digest history changes 0-3 times by doc_id%4 (rates
-    0/333/666/1000 millis → slow/medium/fast) and every 9th URL has
-    a single observation (tier 'unknown').  The engine detects
-    changes with a per-key lag window; the oracle reruns the same
-    integer spec in SQL."""
-    from cdx_writer_spark.frontier import priority
-
-    docs = _table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    snaps = docs.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(1), F.lit(4))).alias("t")) \
-        .filter((d % 9 != 0) | (F.col("t") == 1))
-    ver = F.least(d % 4, F.col("t") - 1)
-    obs = snaps.select(
-        F.concat(F.lit("surt"), d.cast("string")).alias("surt_key"),
-        F.col("t").cast("long").alias("ts"),
-        F.md5(F.concat(F.lit("v"), ver.cast("string"), F.lit("-"),
-                       d.cast("string"))).alias("digest"))
-    return priority.recrawl_policy(obs)
-
-
 def q_corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Efraimidis–Spirakis weighted sampling without replacement
     (functions/sampling.py: weighted_sample) — 50 documents drawn
@@ -2191,8 +2000,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # A capped run of the registry samples from the front of this
     # dict, so queries without a recent recorded run come first.
     return {
-        "host_trustrank": q_host_trustrank,
-        "host_communities": q_host_communities,
         "wet_records": q_wet_records,
         "lm_kn_counts": q_lm_kn_counts,
         "bpe_merges": q_bpe_merges,
@@ -2228,17 +2035,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_bm25": q_text_bm25,
         "corpus_weighted_sample": q_corpus_weighted_sample,
         "crawl_budget": q_crawl_budget,
-        "recrawl_tiers": q_recrawl_tiers,
         "cdx_roundtrip": q_cdx_roundtrip,
         "phrase_search": q_phrase_search,
         "term_pmi": q_term_pmi,
-        "crawl_depth": q_crawl_depth,
-        "host_hits": q_host_hits,
         "inverted_index": q_inverted_index,
         "term_cooccurrence": q_term_cooccurrence,
         "corpus_sample": q_corpus_sample,
         "corpus_sample_hash": q_corpus_sample_hash,
-        "host_triangles": q_host_triangles,
         "events_concurrency": q_events_concurrency,
         "orders_topk": q_orders_topk,
         "customer_top_orders": q_customer_top_orders,
@@ -2246,12 +2049,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_distinct_users": q_events_distinct_users,
         "agg_grouping_sets": q_agg_grouping_sets,
         "orders_rank_dist": q_orders_rank_dist,
-        "host_pagerank": q_host_pagerank,
         "events_tumbling": q_events_tumbling,
         "events_funnel": q_events_funnel,
         "customer_distribution": q_customer_distribution,
         "events_rolling": q_events_rolling,
-        "fuzzy_hosts": q_fuzzy_hosts,
         "join_revenue_nation": q_join_revenue_nation,
         "orders_exists": q_orders_exists,
         "agg_cube": q_agg_cube,
@@ -2859,35 +2660,6 @@ def oracle_sql() -> dict[str, str]:
             "AS compressed_record_size, "
             "CAST(\"offset\" AS VARCHAR) AS compressed_arc_file_offset, "
             "warc_file AS file_name FROM admitted"),
-        # revisit tiers: identical integer spec (lag change detection,
-        # 1000*changes // intervals, tier CASE) over the same
-        # arithmetic snapshot history
-        "recrawl_tiers": (
-            "WITH s AS (SELECT doc_id, i AS t FROM documents, "
-            "unnest(range(1, 5)) AS u(i) "
-            "WHERE doc_id % 9 <> 0 OR i = 1), "
-            "o AS (SELECT 'surt' || doc_id AS surt_key, t AS ts, "
-            "md5('v' || least(doc_id % 4, t - 1) || '-' || doc_id) "
-            "AS digest FROM s), "
-            "l AS (SELECT surt_key, "
-            "CASE WHEN lag(digest) OVER w IS NOT NULL "
-            "AND lag(digest) OVER w <> digest THEN 1 ELSE 0 END AS chg, "
-            "CASE WHEN lag(digest) OVER w IS NOT NULL "
-            "THEN 1 ELSE 0 END AS itv "
-            "FROM o WINDOW w AS "
-            "(PARTITION BY surt_key ORDER BY ts, digest)), "
-            "p AS (SELECT surt_key, "
-            "CAST(SUM(itv) + 1 AS BIGINT) AS n_obs, "
-            "CAST(SUM(chg) AS BIGINT) AS n_changes, "
-            "SUM(itv) AS n_int FROM l GROUP BY surt_key) "
-            "SELECT surt_key, n_obs, n_changes, "
-            "CASE WHEN n_int > 0 THEN "
-            "CAST((1000 * n_changes) // n_int AS BIGINT) END "
-            "AS change_millis, "
-            "CASE WHEN n_int = 0 THEN 'unknown' "
-            "WHEN (1000 * n_changes) // n_int >= 500 THEN 'fast' "
-            "WHEN (1000 * n_changes) // n_int >= 100 THEN 'medium' "
-            "ELSE 'slow' END AS tier FROM p"),
         # A-ES weighted sampling: the oracle recomputes u from the
         # same 12 hash nibbles and the exponential key on the same
         # round-9 grid, then re-ranks
@@ -3466,15 +3238,6 @@ def oracle_sql() -> dict[str, str]:
             "ntile(4) OVER (ORDER BY "
             "CAST(logw_q AS DOUBLE) / n_feats DESC, doc_id ASC) = 1 "
             "AS selected FROM ag"),
-        # fuzzy pairs brute-forced: DuckDB's own levenshtein over ALL
-        # distinct-name pairs — banding-independent ground truth
-        "fuzzy_hosts": (
-            "WITH nm AS (SELECT DISTINCT 'site' || (doc_id % 37) "
-            "|| '.example.com' AS t FROM documents) "
-            "SELECT a.t AS name_a, b.t AS name_b, "
-            "CAST(levenshtein(a.t, b.t) AS INTEGER) AS dist "
-            "FROM nm a JOIN nm b ON a.t < b.t "
-            "AND levenshtein(a.t, b.t) <= 1"),
         # fixed-context chunking re-derived: same 32/24 window starts,
         # same trailing-partial windows, same re-joined text
         "corpus_chunks": (
@@ -3965,94 +3728,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM p p1 JOIN p p2 ON p2.doc_id = p1.doc_id "
             "AND p2.pos > p1.pos AND p2.pos <= p1.pos + 2 "
             "GROUP BY term_a, term_b"),
-        # bounded min-hop BFS re-derived as a recursive CTE: the
-        # walk enumerates (node, depth) pairs up to the bound, MIN
-        # collapses them — evaluation order shares nothing with the
-        # engine's level-synchronous expansion
-        "crawl_depth": (
-            "WITH RECURSIVE raw AS ("
-            "SELECT doc_id % 257 AS src, (doc_id // 7) % 257 AS dst "
-            "FROM documents "
-            "UNION ALL "
-            "SELECT (doc_id // 3) % 257, (doc_id // 11) % 257 "
-            "FROM documents), "
-            "e AS (SELECT DISTINCT src, dst FROM raw "
-            "WHERE src <> dst), "
-            "seeds AS (SELECT DISTINCT doc_id % 257 AS node "
-            "FROM documents WHERE doc_id % 100 = 0), "
-            "walk(node, depth) AS ("
-            "SELECT node, 0 FROM seeds "
-            "UNION "
-            "SELECT e.dst, walk.depth + 1 FROM walk "
-            "JOIN e ON e.src = walk.node WHERE walk.depth < 3) "
-            "SELECT node, CAST(MIN(depth) AS INT) AS depth "
-            "FROM walk GROUP BY node"),
-        # integer-exact HITS, 2 iterations unrolled relationally;
-        # every normalization is (raw * scale) // total in the SAME
-        # order as the engine spec (functions/graph.py: hits_exact),
-        # so the BIGINT scores must match bit-for-bit
-        "host_hits": (
-            "WITH raw AS ("
-            "SELECT doc_id % 61 AS src, (doc_id // 7) % 61 AS dst "
-            "FROM documents "
-            "UNION ALL "
-            "SELECT (doc_id // 3) % 61, (doc_id // 11) % 61 "
-            "FROM documents), "
-            "e AS (SELECT DISTINCT src, dst FROM raw "
-            "WHERE src <> dst), "
-            "nodes AS (SELECT DISTINCT src AS node FROM e "
-            "UNION SELECT DISTINCT dst FROM e), "
-            "c AS (SELECT COUNT(*) AS n FROM nodes), "
-            "h0 AS (SELECT node, 1048576 // n AS s FROM nodes, c), "
-            "ra1 AS (SELECT n2.node, "
-            "COALESCE(SUM(h0.s), 0) AS s FROM nodes n2 "
-            "LEFT JOIN e ON e.dst = n2.node "
-            "LEFT JOIN h0 ON h0.node = e.src GROUP BY n2.node), "
-            "ta1 AS (SELECT SUM(s) AS t FROM ra1), "
-            "a1 AS (SELECT node, CASE WHEN t > 0 THEN "
-            "(s * 1048576) // t ELSE 0 END AS s FROM ra1, ta1), "
-            "rh1 AS (SELECT n2.node, "
-            "COALESCE(SUM(a1.s), 0) AS s FROM nodes n2 "
-            "LEFT JOIN e ON e.src = n2.node "
-            "LEFT JOIN a1 ON a1.node = e.dst GROUP BY n2.node), "
-            "th1 AS (SELECT SUM(s) AS t FROM rh1), "
-            "h1 AS (SELECT node, CASE WHEN t > 0 THEN "
-            "(s * 1048576) // t ELSE 0 END AS s FROM rh1, th1), "
-            "ra2 AS (SELECT n2.node, "
-            "COALESCE(SUM(h1.s), 0) AS s FROM nodes n2 "
-            "LEFT JOIN e ON e.dst = n2.node "
-            "LEFT JOIN h1 ON h1.node = e.src GROUP BY n2.node), "
-            "ta2 AS (SELECT SUM(s) AS t FROM ra2), "
-            "a2 AS (SELECT node, CASE WHEN t > 0 THEN "
-            "(s * 1048576) // t ELSE 0 END AS s FROM ra2, ta2), "
-            "rh2 AS (SELECT n2.node, "
-            "COALESCE(SUM(a2.s), 0) AS s FROM nodes n2 "
-            "LEFT JOIN e ON e.src = n2.node "
-            "LEFT JOIN a2 ON a2.node = e.dst GROUP BY n2.node), "
-            "th2 AS (SELECT SUM(s) AS t FROM rh2), "
-            "h2 AS (SELECT node, CASE WHEN t > 0 THEN "
-            "(s * 1048576) // t ELSE 0 END AS s FROM rh2, th2) "
-            "SELECT h2.node, CAST(h2.s AS BIGINT) AS hub, "
-            "CAST(a2.s AS BIGINT) AS authority "
-            "FROM h2 JOIN a2 ON a2.node = h2.node"),
-        "host_triangles": (
-            "WITH raw AS ("
-            "SELECT doc_id % 257 AS a, (doc_id // 7) % 257 AS b "
-            "FROM documents "
-            "UNION ALL "
-            "SELECT (doc_id // 3) % 257, (doc_id // 11) % 257 "
-            "FROM documents "
-            "UNION ALL "
-            "SELECT (doc_id // 5) % 257, (doc_id // 13) % 257 "
-            "FROM documents), "
-            "e AS (SELECT DISTINCT LEAST(a, b) AS u, "
-            "GREATEST(a, b) AS v FROM raw WHERE a <> b) "
-            "SELECT e1.u AS node, "
-            "CAST(COUNT(*) AS BIGINT) AS n_triangles "
-            "FROM e e1 "
-            "JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v "
-            "JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v "
-            "GROUP BY e1.u"),
         # sweep-line concurrency: the oracle is the NAIVE
         # single-window running sum the engine's two-level
         # decomposition must reproduce exactly
@@ -4147,140 +3822,4 @@ def oracle_sql() -> dict[str, str]:
             "0.75) / 10.0 AS p75_price, "
             "CAST(COUNT(*) AS BIGINT) AS n_parts "
             "FROM part GROUP BY p_brand"),
-        # integer-exact PageRank, 3 iterations unrolled relationally;
-        # every division is integer division in the SAME order as the
-        # engine spec (functions/graph.py docstring), so the ranks
-        # must match bit-for-bit, dangling mass included
-        "host_pagerank": (
-            "WITH e AS (SELECT DISTINCT src, dst FROM ("
-            "SELECT doc_id % 37 AS src, (doc_id // 7) % 37 AS dst "
-            "FROM documents WHERE doc_id % 37 < 34 "
-            "UNION ALL "
-            "SELECT (doc_id // 3) % 37, (doc_id // 11) % 37 "
-            "FROM documents WHERE (doc_id // 3) % 37 < 34"
-            ") WHERE src <> dst), "
-            "nodes AS (SELECT src AS node FROM e "
-            "UNION SELECT dst FROM e), "
-            "deg AS (SELECT src, COUNT(*) AS outdeg FROM e "
-            "GROUP BY src), "
-            "c AS (SELECT COUNT(*) AS n, "
-            "1099511627776 // COUNT(*) AS init, "
-            "(15 * (1099511627776 // COUNT(*))) // 100 AS base "
-            "FROM nodes), "
-            "r0 AS (SELECT node, (SELECT init FROM c) AS pr "
-            "FROM nodes), "
-            "i1 AS (SELECT e.dst AS node, "
-            "SUM(r0.pr // deg.outdeg) AS inflow FROM e "
-            "JOIN deg USING (src) JOIN r0 ON r0.node = e.src "
-            "GROUP BY e.dst), "
-            "d1 AS (SELECT COALESCE(SUM(pr), 0) AS dm FROM r0 "
-            "WHERE node NOT IN (SELECT src FROM deg)), "
-            "r1 AS (SELECT nodes.node, (SELECT base FROM c) "
-            "+ (85 * (COALESCE(i1.inflow, 0) "
-            "+ (SELECT dm FROM d1) // (SELECT n FROM c))) // 100 "
-            "AS pr FROM nodes LEFT JOIN i1 USING (node)), "
-            "i2 AS (SELECT e.dst AS node, "
-            "SUM(r1.pr // deg.outdeg) AS inflow FROM e "
-            "JOIN deg USING (src) JOIN r1 ON r1.node = e.src "
-            "GROUP BY e.dst), "
-            "d2 AS (SELECT COALESCE(SUM(pr), 0) AS dm FROM r1 "
-            "WHERE node NOT IN (SELECT src FROM deg)), "
-            "r2 AS (SELECT nodes.node, (SELECT base FROM c) "
-            "+ (85 * (COALESCE(i2.inflow, 0) "
-            "+ (SELECT dm FROM d2) // (SELECT n FROM c))) // 100 "
-            "AS pr FROM nodes LEFT JOIN i2 USING (node)), "
-            "i3 AS (SELECT e.dst AS node, "
-            "SUM(r2.pr // deg.outdeg) AS inflow FROM e "
-            "JOIN deg USING (src) JOIN r2 ON r2.node = e.src "
-            "GROUP BY e.dst), "
-            "d3 AS (SELECT COALESCE(SUM(pr), 0) AS dm FROM r2 "
-            "WHERE node NOT IN (SELECT src FROM deg)), "
-            "r3 AS (SELECT nodes.node, (SELECT base FROM c) "
-            "+ (85 * (COALESCE(i3.inflow, 0) "
-            "+ (SELECT dm FROM d3) // (SELECT n FROM c))) // 100 "
-            "AS pr FROM nodes LEFT JOIN i3 USING (node)) "
-            "SELECT node, CAST(pr AS BIGINT) AS pr_scaled FROM r3"),
-        # synchronous label propagation, 2 rounds unrolled: per
-        # round a (node, label) neighbor-count + row_number argmax
-        # with the (count DESC, label ASC) tie-break of the spec
-        "host_communities": (
-            "WITH raw AS (SELECT src AS a, dst AS b FROM ("
-            "SELECT doc_id % 37 AS src, (doc_id // 7) % 37 AS dst "
-            "FROM documents WHERE doc_id % 37 < 34 "
-            "UNION ALL "
-            "SELECT (doc_id // 3) % 37, (doc_id // 11) % 37 "
-            "FROM documents WHERE (doc_id // 3) % 37 < 34"
-            ") WHERE src <> dst), "
-            "e AS (SELECT DISTINCT s, d FROM ("
-            "SELECT a AS s, b AS d FROM raw "
-            "UNION ALL SELECT b, a FROM raw)), "
-            "l0 AS (SELECT DISTINCT s AS node, s AS label FROM e), "
-            "c1 AS (SELECT e.d AS node, l0.label, COUNT(*) AS c "
-            "FROM e JOIN l0 ON l0.node = e.s GROUP BY e.d, l0.label), "
-            "l1 AS (SELECT node, label FROM ("
-            "SELECT node, label, row_number() OVER ("
-            "PARTITION BY node ORDER BY c DESC, label ASC) AS rn "
-            "FROM c1) WHERE rn = 1), "
-            "c2 AS (SELECT e.d AS node, l1.label, COUNT(*) AS c "
-            "FROM e JOIN l1 ON l1.node = e.s GROUP BY e.d, l1.label), "
-            "l2 AS (SELECT node, label FROM ("
-            "SELECT node, label, row_number() OVER ("
-            "PARTITION BY node ORDER BY c DESC, label ASC) AS rn "
-            "FROM c2) WHERE rn = 1) "
-            "SELECT node, CAST(label AS BIGINT) AS label FROM l2"),
-        # integer-exact TrustRank, 2 iterations unrolled; the biased
-        # teleport (base only on trusted nodes) and the dangling-mass
-        # return to the seed set follow the trustrank_exact spec
-        # (functions/graph.py) operation-for-operation
-        "host_trustrank": (
-            "WITH e AS (SELECT DISTINCT src, dst FROM ("
-            "SELECT doc_id % 37 AS src, (doc_id // 7) % 37 AS dst "
-            "FROM documents WHERE doc_id % 37 < 34 "
-            "UNION ALL "
-            "SELECT (doc_id // 3) % 37, (doc_id // 11) % 37 "
-            "FROM documents WHERE (doc_id // 3) % 37 < 34"
-            ") WHERE src <> dst), "
-            "nodes AS (SELECT src AS node FROM e "
-            "UNION SELECT dst FROM e), "
-            "seeds AS (SELECT s FROM (VALUES (0), (1), (2), (3), (4)"
-            ") t(s) WHERE s IN (SELECT node FROM nodes)), "
-            "deg AS (SELECT src, COUNT(*) AS outdeg FROM e "
-            "GROUP BY src), "
-            "c AS (SELECT COUNT(*) AS ns, "
-            "1099511627776 // COUNT(*) AS init, "
-            "(15 * (1099511627776 // COUNT(*))) // 100 AS base "
-            "FROM seeds), "
-            "r0 AS (SELECT node, CASE WHEN node IN "
-            "(SELECT s FROM seeds) THEN (SELECT init FROM c) "
-            "ELSE 0 END AS pr FROM nodes), "
-            "i1 AS (SELECT e.dst AS node, "
-            "SUM(r0.pr // deg.outdeg) AS inflow FROM e "
-            "JOIN deg USING (src) JOIN r0 ON r0.node = e.src "
-            "GROUP BY e.dst), "
-            "d1 AS (SELECT COALESCE(SUM(pr), 0) AS dm FROM r0 "
-            "WHERE node NOT IN (SELECT src FROM deg)), "
-            "r1 AS (SELECT nodes.node, "
-            "CASE WHEN nodes.node IN (SELECT s FROM seeds) "
-            "THEN (SELECT base FROM c) ELSE 0 END "
-            "+ (85 * (COALESCE(i1.inflow, 0) "
-            "+ CASE WHEN nodes.node IN (SELECT s FROM seeds) "
-            "THEN (SELECT dm FROM d1) // (SELECT ns FROM c) "
-            "ELSE 0 END)) // 100 AS pr "
-            "FROM nodes LEFT JOIN i1 USING (node)), "
-            "i2 AS (SELECT e.dst AS node, "
-            "SUM(r1.pr // deg.outdeg) AS inflow FROM e "
-            "JOIN deg USING (src) JOIN r1 ON r1.node = e.src "
-            "GROUP BY e.dst), "
-            "d2 AS (SELECT COALESCE(SUM(pr), 0) AS dm FROM r1 "
-            "WHERE node NOT IN (SELECT src FROM deg)), "
-            "r2 AS (SELECT nodes.node, "
-            "CASE WHEN nodes.node IN (SELECT s FROM seeds) "
-            "THEN (SELECT base FROM c) ELSE 0 END "
-            "+ (85 * (COALESCE(i2.inflow, 0) "
-            "+ CASE WHEN nodes.node IN (SELECT s FROM seeds) "
-            "THEN (SELECT dm FROM d2) // (SELECT ns FROM c) "
-            "ELSE 0 END)) // 100 AS pr "
-            "FROM nodes LEFT JOIN i2 USING (node)) "
-            "SELECT node, CAST(pr AS BIGINT) AS trust_scaled "
-            "FROM r2"),
     }

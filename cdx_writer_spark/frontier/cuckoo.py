@@ -3,8 +3,8 @@
 The north rule names "bloom/cuckoo URL-seen"; :mod:`.bloom` is the
 Bloom half, this is the cuckoo half (Fan et al., "Cuckoo Filter:
 Practically Better Than Bloom", CoNEXT 2014 — public paper).  Compared
-to the Bloom blobs it adds **deletion** (retract a URL so it becomes
-crawlable again — e.g. a recrawl policy or a rolled-back round) at a
+to the Bloom blobs it adds **deletion** (``seen.remove_from_filters``
+retracts a URL; no crawl round deletes today) at a
 comparable space budget, and its probe touches exactly two words
 instead of k scattered bits.
 

@@ -52,58 +52,3 @@ def select_batch(candidates: DataFrame,
         candidates.withColumn("host_pos", F.row_number().over(w))
         .filter(F.col("host_pos") <= F.col("budget_per_round"))
     )
-
-
-def recrawl_policy(observations: DataFrame,
-                   key: str = "surt_key", ts_col: str = "ts",
-                   digest_col: str = "digest",
-                   fast_millis: int = 500,
-                   medium_millis: int = 100) -> DataFrame:
-    """Adaptive revisit scheduling (Cho & Garcia-Molina 2003,
-    "Effective page refresh policies for web crawlers"): estimate
-    each URL's change rate from its snapshot history — successive
-    (ts, payload-digest) observations across crawls — and bucket it
-    into revisit tiers the scheduler can join against.  The
-    estimator is the observed change fraction in integer MILLIS
-    (``1000 * n_changes div n_intervals``), exact int64 on any
-    engine.
-
-    Tiers: ``fast`` (rate >= fast_millis), ``medium`` (>=
-    medium_millis), ``slow`` (observed stable), ``unknown`` (a
-    single observation — no interval evidence yet; crawl it on the
-    discovery cadence).
-
-    Output: ``(key, n_obs, n_changes, change_millis, tier)``;
-    ``change_millis`` is NULL for ``unknown``.
-
-    Scale shape: ONE hash exchange on the key serves both the
-    per-key lag window (change detection between consecutive
-    observations, ordered by ts with digest tie-break for
-    determinism under duplicate timestamps) and the per-key
-    aggregate — Catalyst reuses the partitioning.  State per key is
-    its own observation count (snapshot count, single digits in
-    practice), so no skew beyond key frequency; the output is one
-    row per URL, the frontier-sized table the scheduler already
-    handles."""
-    w = Window.partitionBy(key).orderBy(ts_col, digest_col)
-    prev = F.lag(digest_col).over(w)
-    obs = observations.select(
-        key,
-        F.when(prev.isNotNull() & (prev != F.col(digest_col)),
-               F.lit(1)).otherwise(F.lit(0)).cast("long")
-        .alias("__rc_chg"),
-        F.when(prev.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("__rc_int"))
-    per_key = obs.groupBy(key).agg(
-        (F.sum("__rc_int") + 1).cast("long").alias("n_obs"),
-        F.sum("__rc_chg").cast("long").alias("n_changes"),
-        F.sum("__rc_int").alias("__rc_n_int"))
-    rate = F.expr("(1000 * n_changes) div __rc_n_int")
-    return per_key.select(
-        key, "n_obs", "n_changes",
-        F.when(F.col("__rc_n_int") > 0, rate).cast("long")
-        .alias("change_millis"),
-        F.when(F.col("__rc_n_int") == 0, F.lit("unknown"))
-        .when(rate >= fast_millis, F.lit("fast"))
-        .when(rate >= medium_millis, F.lit("medium"))
-        .otherwise(F.lit("slow")).alias("tier"))

@@ -438,8 +438,8 @@ def remove_from_filters(keys: DataFrame, filters: DataFrame,
                         n_partitions: int = DEFAULT_PARTITIONS
                         ) -> DataFrame:
     """Retract keys from CUCKOO filters (cogroup per partition): the
-    deletion path that makes a URL crawlable again — recrawl policies,
-    rolled-back rounds.  Callers must also delete the keys from the
+    deletion path that makes a URL crawlable again (no crawl round
+    calls it yet).  Callers must also delete the keys from the
     exact seen table (the filter is a prefilter, the table is truth).
     Bloom blobs cannot delete; a Bloom row here raises (by magic
     dispatch) instead of corrupting shared bits.  Safe under the

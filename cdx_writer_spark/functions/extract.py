@@ -52,10 +52,12 @@ from __future__ import annotations
 import codecs
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from ..schema import PAGES_SCHEMA
 
 # --- step 2: charset decode (the one Python hop) -------------------------------
 
@@ -257,6 +259,30 @@ def write_wet(pages: DataFrame, out_dir: str, cfg=None) -> None:
      .select("warc_file", "wet_record")
      .write.mode("overwrite").partitionBy("warc_file")
      .text(out_dir))
+
+
+def run_wet_stream(spark: SparkSession, input_dir: str, out_dir: str,
+                   checkpoint_dir: str) -> None:
+    """Drain a landing dir of pages parquet once (availableNow) into
+    WET text parts partitioned by source archive, exactly-once via the
+    checkpoint — the incremental twin of :func:`write_wet` (rerun
+    after new archives land to convert only the delta).
+    :func:`wet_records` is a stateless projection + filter, so it runs
+    on the stream unchanged with zero streaming state, and the
+    content-derived record ids make micro-batch retries emit
+    byte-identical records."""
+    recs = wet_records(
+        spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir))
+    q = (
+        recs.select("warc_file", "wet_record")
+        .writeStream.format("text")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .partitionBy("warc_file")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def extract_text(pages: DataFrame, cfg=None) -> DataFrame:

@@ -303,9 +303,8 @@ def bpe_merges(docs: DataFrame, rounds: int = 2,
     sized word table — one narrow (s1, s2) aggregation with map-side
     partials, a 1-row argmax broadcast back via ``crossJoin``
     (never collected into the plan), and a pure ``replace``
-    projection.  Rounds ``localCheckpoint`` eagerly with the
-    release-previous-round discipline of the graph operators, so
-    plan depth stays one round deep at any merge count.  At 10^5
+    projection.  Rounds ``localCheckpoint`` eagerly and release the
+    previous round's blocks, so plan depth stays one round deep at any merge count.  At 10^5
     merges a production build would drain the same loop from a
     persisted word table — the per-round cost is vocabulary-sized,
     independent of corpus bytes."""
@@ -364,8 +363,8 @@ def bpe_merges(docs: DataFrame, rounds: int = 2,
                 .groupBy(F.col("p.s1").alias("s1"),
                          F.col("p.s2").alias("s2"))
                 .agg(F.sum("freq").alias("wt")))
-        # the winning pair is ONE row — a driver scalar like the
-        # graph operators' node counts, never a data-sized collect
+        # the winning pair is ONE row — a driver scalar, never a
+        # data-sized collect
         top = (cnts.orderBy(F.col("wt").desc(), F.col("s1").asc(),
                             F.col("s2").asc())
                .limit(1).collect())

@@ -111,16 +111,12 @@ def gopher_quality_stats(docs, id_col: str = "doc_id",
                          max_mean_word_len: float = 10.0,
                          max_punct_ratio: float = 0.1,
                          min_alpha_word_ratio: float = 0.8,
-                         min_stop_hits: int = 2,
-                         passthrough_cols: tuple[str, ...] = ()):
+                         min_stop_hits: int = 2):
     """Gopher-style rule-based quality filter (Rae et al. 2021,
     'Scaling Language Models', table A1 — the SQL-expressible subset):
     per-document named rule outcomes plus the conjunction, so a
     pipeline can either filter on ``passes`` or audit per-rule drop
-    rates.  ``passthrough_cols`` ride the projection unchanged — a
-    streaming consumer MUST use them instead of joining the stats
-    back onto the source (two frames off one stream make a
-    stream-stream self-join, which append mode rejects).  Rules: word count within [min_words, max_words]; mean word
+    rates.  Rules: word count within [min_words, max_words]; mean word
     length within [min_mean_word_len, max_mean_word_len]; punctuation
     ratio <= max_punct_ratio; fraction of words containing an
     alphabetic character >= min_alpha_word_ratio; >= min_stop_hits
@@ -149,7 +145,7 @@ def gopher_quality_stats(docs, id_col: str = "doc_id",
             .cast("long").alias("alpha_words")))
 
     base = docs.select(
-        F.col(id_col), *passthrough_cols,
+        F.col(id_col),
         F.length(text).cast("long").alias("_chars"),
         F.length(F.regexp_replace(text, " ", "")).cast("long")
         .alias("_chars_no_sp"),
@@ -164,7 +160,7 @@ def gopher_quality_stats(docs, id_col: str = "doc_id",
     alpha = F.round(F.col("alpha_words").cast("double")
                     / F.greatest(F.col("n_words"), F.lit(1)), 6)
     scored = base.select(
-        id_col, *passthrough_cols, "n_words",
+        id_col, "n_words",
         mean_wl.alias("mean_word_len"),
         punct.alias("punct_ratio"), alpha.alias("alpha_word_ratio"),
         "stop_hits")
@@ -179,7 +175,7 @@ def gopher_quality_stats(docs, id_col: str = "doc_id",
         "ok_stop": F.col("stop_hits") >= min_stop_hits,
     }
     out = scored.select(
-        id_col, *passthrough_cols, "n_words", "mean_word_len",
+        id_col, "n_words", "mean_word_len",
         "punct_ratio",
         "alpha_word_ratio", "stop_hits",
         *[v.alias(k) for k, v in rules.items()])

@@ -65,8 +65,8 @@ def main() -> None:
     p.add_argument("--filter-kind", default="bloom",
                    choices=["bloom", "cuckoo"],
                    help="URL-seen filter family: blocked Bloom "
-                        "(default) or partial-key cuckoo (supports "
-                        "deletion for recrawl policies); crawl order "
+                        "(default) or partial-key cuckoo (deletable; "
+                        "the crawl never deletes); crawl order "
                         "is byte-identical across families")
     p.add_argument("--rebuild-filters", action="store_true",
                    help="before crawling, rebuild the latest round's "

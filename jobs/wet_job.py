@@ -74,9 +74,8 @@ def main() -> None:
     from cdx_writer_spark.functions import extract
 
     if args.incremental:
-        from cdx_writer_spark.streaming import run_wet_stream
-
-        run_wet_stream(spark, args.pages, args.out, args.incremental)
+        extract.run_wet_stream(spark, args.pages, args.out,
+                               args.incremental)
         return
 
     from cdx_writer_spark import io as table_io

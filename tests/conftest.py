@@ -1,3 +1,5 @@
+from collections import Counter
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -16,3 +18,17 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line per skip reason with its count, so every run shows how
+    many skips are parity tests whose reference corpus is absent.
+    Reporting only: no outcome or exit code changes."""
+    reasons = Counter(
+        rep.longrepr[2].removeprefix("Skipped: ")
+        if isinstance(rep.longrepr, tuple) else str(rep.longrepr)
+        for rep in terminalreporter.stats.get("skipped", []))
+    if reasons:
+        terminalreporter.section("skips by reason")
+        for reason, n in reasons.most_common():
+            terminalreporter.write_line(f"{n:4d}  {reason}")

@@ -657,40 +657,3 @@ def test_frontier_crawl_query_leaves_no_state(spark):
     before = set(glob.glob(pattern))
     assert len(entrymod.q_frontier_crawl(spark, "").collect()) > 0
     assert set(glob.glob(pattern)) - before == set()
-
-
-# --- recrawl_policy (adaptive revisit tiers) --------------------------------
-
-
-def test_recrawl_policy_tiers_and_rates(spark):
-    from cdx_writer_spark.frontier.priority import recrawl_policy
-    rows = (
-        [("A", t, d) for t, d in [(1, "x"), (2, "x"), (3, "y")]]    # 1/2
-        + [("B", 1, "x")]                                           # unknown
-        + [("C", t, d) for t, d in [(1, "x"), (2, "y"), (3, "z")]]  # 2/2
-        + [("D", t, "x") for t in (1, 2, 3, 4)]                     # 0/3
-        + [("E", t, d) for t, d in
-           [(1, "x"), (2, "x"), (3, "x"), (4, "y")]])               # 1/3
-    df = spark.createDataFrame(
-        rows, "surt_key string, ts long, digest string")
-    got = {r["surt_key"]: (r["n_obs"], r["n_changes"],
-                           r["change_millis"], r["tier"])
-           for r in recrawl_policy(df).collect()}
-    assert got == {
-        "A": (3, 1, 500, "fast"),
-        "B": (1, 0, None, "unknown"),
-        "C": (3, 2, 1000, "fast"),
-        "D": (4, 0, 0, "slow"),
-        "E": (4, 1, 333, "medium"),
-    }
-
-
-def test_recrawl_policy_single_exchange(spark):
-    from cdx_writer_spark.frontier.priority import recrawl_policy
-    df = spark.createDataFrame(
-        [("A", 1, "x"), ("A", 2, "y")],
-        "surt_key string, ts long, digest string")
-    plan = recrawl_policy(df)._jdf.queryExecution() \
-        .executedPlan().toString()
-    # the lag window's key partitioning is reused by the aggregate
-    assert plan.count("Exchange") <= 1

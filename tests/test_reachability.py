@@ -40,9 +40,7 @@ ROOT_FILE_GLOBS = ("jobs/*.py", "perfbench/*.py",
 UNREACHED = {
     # registry-only operator families; each goes, with its queries and
     # tests, in a later deletion (ROADMAP item 4)
-    f"{PKG}.functions.graph": "link-graph ranking queries only",
     f"{PKG}.functions.relational": "TPC-H/events join queries only",
-    f"{PKG}.functions.fuzzy": "fuzzy_hosts query only",
     f"{PKG}.functions.audio": "audio queries only",
     f"{PKG}.functions.multimodal": "media decode queries only",
     f"{PKG}.functions.png": "codec behind multimodal",
@@ -142,8 +140,8 @@ def test_unreached_list_is_current():
 # group goes, with its registry queries and tests, in a later deletion
 # (ROADMAP items 4 and 5) or when a job calls it.
 UNREACHED_FUNCS = {
-    "pair engine and exact dedup kept for modules in UNREACHED "
-    "(functions.audio/multimodal, functions.graph)": (
+    "bit-string pair engine behind the media near-dup queries "
+    "(image_near_dup, video_near_dup, audio_near_dup)": (
         "functions.dedup.bits_near_pairs",
         "functions.dedup._banded_candidate_pairs",
         "functions.dedup._cap_buckets",
@@ -152,9 +150,15 @@ UNREACHED_FUNCS = {
         "functions.dedup._intra_group_pairs",
         "functions.dedup._pruned_reps",
         "functions.dedup._persist_candidates",
-        "functions.dedup.connected_components",
+    ),
+    "exact dedup: only the dedup_exact query calls it": (
         "functions.dedup.exact_dedup",
+    ),
+    "candidate-cache release: only bench.py calls it": (
         "functions.dedup.release_candidate_caches",
+    ),
+    "pair-list clustering: no caller but its tests": (
+        "functions.dedup.connected_components",
     ),
     "text search and statistics operators only registry queries call": (
         "functions.textstats.bm25_topk",
@@ -193,20 +197,10 @@ UNREACHED_FUNCS = {
     "pii scrub: only the text_pii_scrub query calls it": (
         "functions.pii.scrub_pii",
     ),
-    "structured-streaming variants; no job runs a stream": (
-        "streaming.cdx_stream_lines",
-        "streaming.cdx_stream_stats",
-        "streaming.corpus_stream",
-        "streaming.politeness_stream",
-        "streaming.run_cdx_stream",
-        "streaming.run_corpus_stream",
-        "streaming.run_politeness_stream",
-    ),
     "frontier operators no crawl round calls (the loop inlines the "
     "split; no job recrawls or retracts seen keys)": (
         "frontier.seen.split_new",
         "frontier.seen.remove_from_filters",
-        "frontier.priority.recrawl_policy",
     ),
     "CDX sinks and readers only tests and registry queries call": (
         "sink.parse_cdx_lines",

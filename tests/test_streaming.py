@@ -1,232 +1,9 @@
-"""Streaming CDX: incremental exactly-once line emission must match the
-batch pipeline's output; windowed stats must match batch aggregation."""
+"""Incremental WET: the availableNow drain behind ``wet_job
+--incremental`` must emit exactly the batch operator's records."""
 
 from __future__ import annotations
 
-import glob
-
 from pyspark.sql import functions as F
-
-from cdx_writer_spark.job import CDXConfig, cdx_lines
-from cdx_writer_spark.pages_gen import bulk_rows
-from cdx_writer_spark.schema import PAGES_SCHEMA
-from cdx_writer_spark.streaming import (
-    cdx_stream_stats, pages_stream, run_cdx_stream,
-)
-
-
-def _read_lines(out_dir):
-    lines = []
-    for p in glob.glob(out_dir + "/part*"):
-        lines += open(p, "rb").read().decode("latin1").splitlines()
-    return sorted(lines)
-
-
-def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    rows = bulk_rows(400)
-    a, b = rows[:250], rows[250:]
-
-    spark.createDataFrame(a, PAGES_SCHEMA).write.mode("append").parquet(land)
-    run_cdx_stream(spark, land, out, ckpt)
-    first = _read_lines(out)
-    assert 0 < len(first) < 250
-
-    # second drain processes ONLY the delta (checkpoint bookkeeping)
-    spark.createDataFrame(b, PAGES_SCHEMA).write.mode("append").parquet(land)
-    run_cdx_stream(spark, land, out, ckpt)
-    both = _read_lines(out)
-    assert len(both) > len(first)
-
-    batch = sorted(
-        r.cdx_line for r in cdx_lines(
-            spark.createDataFrame(rows, PAGES_SCHEMA),
-            CDXConfig(), sort=False).collect())
-    assert both == batch
-
-
-def test_stream_stats_window_matches_batch(spark, tmp_path):
-    land = str(tmp_path / "landing")
-    rows = bulk_rows(300)
-    spark.createDataFrame(rows, PAGES_SCHEMA).write.parquet(land)
-    stats = cdx_stream_stats(pages_stream(spark, land), window="1 hour")
-    q = (stats.writeStream.format("memory").queryName("stats_tbl")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {r.window_start: (r.num_records_processed,
-                            r.num_records_included)
-           for r in spark.sql("select * from stats_tbl").collect()}
-    batch = (
-        spark.createDataFrame(rows, PAGES_SCHEMA)
-        .groupBy(F.window("warc_ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n")).collect())
-    assert sum(n for n, _ in got.values()) == len(rows)
-    assert len(got) == len(batch)
-
-
-def _cand_rows(n, hosts=5, start=0):
-    rows = []
-    for i in range(start, start + n):
-        h = "host%d" % (i % hosts)
-        rows.append((h, "http://%s/p/%d" % (h, i),
-                     "com,%s)/p/%d" % (h, i), i % 4))
-    return rows
-
-
-_CAND_DDL = "host string, url string, surt_key string, depth int"
-
-
-def test_politeness_stream_budget_and_batch_equivalence(spark, tmp_path):
-    """One availableNow drain == the batch per-host (depth, surt)
-    top-k; a second drain admits only each host's REMAINING budget
-    (per-host state survives in the checkpoint)."""
-    from cdx_writer_spark.streaming import run_politeness_stream
-
-    land = str(tmp_path / "cand")
-    out = str(tmp_path / "admitted")
-    ckpt = str(tmp_path / "ckpt2")
-    budget = 3
-
-    first = _cand_rows(40, hosts=5)
-    spark.createDataFrame(first, _CAND_DDL).write.mode("append").parquet(land)
-    run_politeness_stream(spark, land, out, ckpt, budget_per_host=budget)
-    got1 = {(r["host"], r["surt_key"])
-            for r in spark.read.parquet(out).collect()}
-
-    # batch reference: per-host top-k in (depth, surt_key) order
-    import itertools
-    expected1 = set()
-    by_host = {}
-    for h, u, s, d in first:
-        by_host.setdefault(h, []).append((d, s))
-    for h, items in by_host.items():
-        for d, s in sorted(items)[:budget]:
-            expected1.add((h, s))
-    assert got1 == expected1
-    assert all(sum(1 for h, _ in got1 if h == hh) == budget
-               for hh in by_host)
-
-    # drain 2: every host's budget is spent -> nothing admitted,
-    # even though all rows are new
-    spark.createDataFrame(_cand_rows(20, hosts=5, start=1000),
-                          _CAND_DDL).write.mode("append").parquet(land)
-    run_politeness_stream(spark, land, out, ckpt, budget_per_host=budget)
-    got2 = {(r["host"], r["surt_key"])
-            for r in spark.read.parquet(out).collect()}
-    assert got2 == got1
-
-    # a fresh host in drain 3 still gets its full budget
-    extra = [("newhost", "http://newhost/p/%d" % i,
-              "com,newhost)/p/%d" % i, 0) for i in range(5)]
-    spark.createDataFrame(extra, _CAND_DDL).write.mode("append").parquet(land)
-    run_politeness_stream(spark, land, out, ckpt, budget_per_host=budget)
-    got3 = {(r["host"], r["surt_key"])
-            for r in spark.read.parquet(out).collect()}
-    new_admitted = {s for h, s in got3 - got2 if h == "newhost"}
-    assert got3 - got2 == {("newhost", s) for s in new_admitted}
-    assert len(new_admitted) == budget
-
-
-def test_corpus_stream_matches_batch_and_is_incremental(spark, tmp_path):
-    """Streaming corpus ingestion (extract → Gopher admission → PII
-    scrub) drained in two increments must equal the same stages run as
-    one batch — and the second drain must process only the delta."""
-    from cdx_writer_spark.streaming import corpus_stream, run_corpus_stream
-    from cdx_writer_spark.webview import pages_from_documents
-
-    sf = "/root/testdata/sf0.001"
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    pages = pages_from_documents(spark, sf)
-    a = pages.filter(F.col("doc_id") % 2 == 0)
-    b = pages.filter(F.col("doc_id") % 2 == 1)
-
-    a.write.mode("append").parquet(land)
-    run_corpus_stream(spark, land, out, ckpt)
-    first = spark.read.parquet(out).count()
-    assert first > 0
-
-    b.write.mode("append").parquet(land)
-    run_corpus_stream(spark, land, out, ckpt)
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert len(got) > first
-
-    want = sorted(map(tuple, corpus_stream(pages).collect()))
-    assert got == want
-
-
-def test_stream_hopping_stats_match_batch_exactly(spark, tmp_path):
-    """Hopping-window streaming twin (cdx_stream_stats(slide=...)):
-    one availableNow drain must equal the batch hopping aggregation
-    per (window_start, counters) — and every record must land in
-    exactly window/slide windows."""
-    land = str(tmp_path / "landing")
-    rows = bulk_rows(300)
-    spark.createDataFrame(rows, PAGES_SCHEMA).write.parquet(land)
-    stats = cdx_stream_stats(pages_stream(spark, land),
-                             window="1 hour", slide="30 minutes")
-    q = (stats.writeStream.format("memory").queryName("hop_tbl")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {r.window_start: (r.num_records_processed,
-                            r.num_records_included,
-                            r.num_records_filtered)
-           for r in spark.sql("select * from hop_tbl").collect()}
-
-    from cdx_writer_spark.job import cdx_flagged
-    inc = F.col("admitted") & ~F.col("excluded")
-    batch = {
-        r["w"]["start"]: (r["p"], r["i"], r["f"])
-        for r in cdx_flagged(
-            spark.createDataFrame(rows, PAGES_SCHEMA), CDXConfig())
-        .groupBy(F.window("warc_ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("p"),
-             F.sum(F.when(inc, 1).otherwise(0)).alias("i"),
-             F.sum(F.when(F.col("excluded"), 1).otherwise(0))
-             .alias("f"))
-        .collect()}
-    assert got == batch
-    # every record in exactly 2 windows (window/slide = 2)
-    assert sum(p for p, _, _ in got.values()) == 2 * len(rows)
-
-
-def test_corpus_stream_dedup_within_watermark(spark, tmp_path):
-    """Recrawl suppression (corpus_stream(dedup_within=...)): a url
-    refetched within the watermark horizon is dropped — within one
-    drain AND across checkpointed drains — and the surviving output
-    equals the batch pipeline over the unique pages."""
-    from cdx_writer_spark.streaming import (
-        corpus_stream, run_corpus_stream,
-    )
-    from cdx_writer_spark.webview import pages_from_documents
-
-    land = str(tmp_path / "landing")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    # every url fetched twice in the same landing
-    pages.write.mode("append").parquet(land)
-    pages.write.mode("append").parquet(land)
-    run_corpus_stream(spark, land, out, ckpt, dedup_within="90 days")
-    first = spark.read.parquet(out)
-    n_first = first.count()
-    assert n_first > 0
-    assert first.select("url").distinct().count() == n_first
-
-    # the same urls land AGAIN (a later recrawl within the horizon):
-    # the checkpointed state must drop all of them on the next drain
-    pages.write.mode("append").parquet(land)
-    run_corpus_stream(spark, land, out, ckpt, dedup_within="90 days")
-    assert spark.read.parquet(out).count() == n_first
-
-    # survivors == batch pipeline over the unique pages
-    batch = corpus_stream(pages.dropDuplicates(["url"])).select("url")
-    assert (sorted(r.url for r in spark.read.parquet(out)
-                   .select("url").collect())
-            == sorted(r.url for r in batch.collect()))
 
 
 def test_wet_stream_matches_batch_and_is_incremental(spark, tmp_path):
@@ -237,8 +14,9 @@ def test_wet_stream_matches_batch_and_is_incremental(spark, tmp_path):
     import glob
     import os
 
-    from cdx_writer_spark.functions.extract import wet_records
-    from cdx_writer_spark.streaming import run_wet_stream
+    from cdx_writer_spark.functions.extract import (
+        run_wet_stream, wet_records,
+    )
     from cdx_writer_spark.webview import pages_from_documents
 
     sf = "/root/testdata/sf0.001"
