@@ -875,48 +875,7 @@ def q_frontier_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(state, ignore_errors=True)
 
 
-# --- relational core (agg / join / window over the TPC-H-ish tables) ----------
-
-def q_agg_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice")
-                          * (1 - F.col("l_discount"))), 2)
-            .alias("sum_disc_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical totals via ``rollup`` (SQL-standard GROUP BY
-    ROLLUP): per (returnflag, linestatus) with per-flag subtotals and
-    a grand total, the NULL-marked superaggregate rows included —
-    Catalyst expands the grouping sets in ONE aggregation pass
-    (map-side partial agg per set), no self-union of the base scan.
-    Cross-engine note: rows are keyed by the nullable group columns
-    plus an explicit grouping-ID so a NULL data value could never
-    collide with a NULL total marker."""
-    li = _table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-01"))
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum(F.col("l_extendedprice")
-                          * (1 - F.col("l_discount"))), 2)
-            .alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
+# --- event analytics (agg / window / pivot over the events table) -------------
 
 def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (long→wide): per-user event counts spread into one
@@ -938,156 +897,6 @@ def q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id") \
         .agg(F.round(F.sum("value"), 4).alias("purchase_value"))
     return counts.join(spend, "user_id", "left")
-
-
-def q_lineitem_range_join(spark: SparkSession, sf_dir: str
-                          ) -> DataFrame:
-    """Point-in-interval range join (functions/relational.py:
-    range_join): each lineitem ship-day pairs with every same-key
-    order window (orderdate .. orderdate + orderkey%14 days) covering
-    it.  The engine runs the bucketized composition — intervals
-    explode to their covered fixed-width buckets, points map to ONE
-    bucket, equi-join on (key, bucket) + exact BETWEEN refine (narrow
-    exchange, no BroadcastNestedLoop, output proportional to true
-    selectivity); the oracle is DuckDB's native inequality join
-    (IEJoin) over the same predicate — zero shared algorithm.  Days
-    since epoch keep the arithmetic integral cross-engine."""
-    from cdx_writer_spark.functions import relational
-
-    epoch = F.lit("1970-01-01")
-    li = _table(spark, sf_dir, "lineitem").select(
-        (F.col("l_suppkey") % 97).alias("k"),
-        "l_orderkey", "l_linenumber",
-        F.datediff(F.col("l_shipdate"), epoch).cast("long")
-        .alias("ship_day"))
-    orders = _table(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % 97).alias("k"),
-        F.col("o_orderkey").alias("win_orderkey"),
-        F.datediff(F.col("o_orderdate"), epoch).cast("long")
-        .alias("win_start"),
-        (F.datediff(F.col("o_orderdate"), epoch)
-         + F.col("o_orderkey") % 14).cast("long").alias("win_end"))
-    out = relational.range_join(
-        li, orders, on="k", point_col="ship_day",
-        start_col="win_start", end_col="win_end", bucket_width=16)
-    return out.select(
-        "k", "l_orderkey", "l_linenumber", "ship_day",
-        F.col("win_start_r").alias("win_start"),
-        F.col("win_end_r").alias("win_end"),
-        F.col("win_orderkey_r").alias("win_orderkey"))
-
-
-def q_join_revenue_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped six-table join: revenue by nation for one
-    region and a two-year order window.  lineitem⋈orders⋈customer⋈
-    supplier are fact-sized joins left to Catalyst/AQE (sort-merge or
-    broadcast by measured size at runtime — supplier grows with SF so
-    it must NOT be hint-broadcast); nation (25 rows) and region (5)
-    are explicit broadcasts.  The region filter and the order-date
-    range are written on the joined frame and Catalyst pushes both
-    into the scans (plan-tested: the orders scan carries the date
-    PushedFilters), so a 100 TB run reads two years of orders, not
-    seven."""
-    li = _table(spark, sf_dir, "lineitem")
-    o = _table(spark, sf_dir, "orders")
-    c = _table(spark, sf_dir, "customer")
-    s = _table(spark, sf_dir, "supplier")
-    n = _table(spark, sf_dir, "nation")
-    r = _table(spark, sf_dir, "region")
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(s, (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(F.broadcast(n),
-              F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .filter((F.col("r_name") == "ASIA")
-                & (F.col("o_orderdate") >= F.lit("1995-01-01"))
-                & (F.col("o_orderdate") < F.lit("1997-01-01")))
-        .groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice")
-                           * (1 - F.col("l_discount"))), 2)
-             .alias("revenue"))
-    )
-
-
-def q_orders_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4-shaped EXISTS: orders with at least one lineitem
-    shipped ≥60 days after the order date, counted by priority.  The
-    engine runs a LEFT SEMI join (one probe hit short-circuits the
-    row — no duplication however many lineitems match, so the
-    downstream aggregate sees each order once); the compound
-    condition keeps the equi-key (orderkey) so the join stays
-    hash/sort-merge, never a nested loop.  The oracle states the same
-    relation as a correlated EXISTS subquery."""
-    o = _table(spark, sf_dir, "orders")
-    li = _table(spark, sf_dir, "lineitem")
-    hit = o.join(
-        li,
-        (F.col("o_orderkey") == F.col("l_orderkey"))
-        & (F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-           >= 60),
-        "left_semi")
-    return (hit.groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n_late_orders")))
-
-
-def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full CUBE over (orderstatus, orderpriority): all four grouping
-    sets in ONE aggregation pass (Catalyst expands the sets map-side —
-    no self-union of the base scan), rows keyed by the explicit
-    grouping-ID so NULL totals can't collide with NULL data values.
-    Complements ``agg_rollup`` (hierarchical sets) with the full
-    lattice."""
-    o = _table(spark, sf_dir, "orders")
-    return (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.grouping_id().alias("gid"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
-
-
-def q_part_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact grouped percentiles (p25/median/p75 retail price per
-    brand) via Spark's ``percentile`` — the exact sort-based
-    aggregate, not the approx sketch.  Cross-engine exactness is
-    engineered: prices are deci-unit-scaled to integer-valued doubles
-    (exact) and the chosen quantiles are dyadic, so the linear
-    interpolation ``a + f·(b−a)`` is exact floating-point in BOTH
-    engines regardless of expression shape — the final single
-    division by 10 is then the only (identical) inexact op.  At 100 TB
-    swap ``percentile`` for ``percentile_approx`` per the documented
-    accuracy budget; the exact form is the oracle-checkable
-    contract."""
-    p = _table(spark, sf_dir, "part")
-    deci = F.expr("CAST(round(p_retailprice * 10) AS DOUBLE)")
-    return (
-        p.select("p_brand", deci.alias("__d"))
-        .groupBy("p_brand")
-        .agg(
-            (F.expr("percentile(__d, 0.25)") / 10.0).alias("p25_price"),
-            (F.expr("percentile(__d, 0.5)") / 10.0).alias("median_price"),
-            (F.expr("percentile(__d, 0.75)") / 10.0).alias("p75_price"),
-            F.count(F.lit(1)).alias("n_parts"),
-        )
-    )
-
-
-def q_join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _table(spark, sf_dir, "customer")
-    o = _table(spark, sf_dir, "orders")
-    # dimension side broadcast: customer is tiny vs orders at scale
-    return (
-        o.join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_custkey", "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_orders"),
-             F.round(F.sum("o_totalprice"), 2).alias("total_spent"))
-    )
 
 
 def q_events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,24 +1014,6 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("fp").alias("n_full_funnel"))
 
 
-def q_customer_distribution(spark: SparkSession, sf_dir: str
-                            ) -> DataFrame:
-    """TPC-H Q13-shaped distribution: how many customers placed k
-    orders, INCLUDING the zero-order customers — which forces a LEFT
-    OUTER join (an inner join silently drops the k=0 bucket, the
-    classic Q13 bug) followed by a second aggregation over the first.
-    Two exchanges total: custkey (join + first count reuse one), then
-    the tiny k-cardinality regroup."""
-    c = _table(spark, sf_dir, "customer")
-    o = _table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT")
-    per = (c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left")
-           .groupBy("c_custkey")
-           .agg(F.count("o_orderkey").alias("n_orders")))
-    return (per.groupBy("n_orders")
-            .agg(F.count(F.lit(1)).alias("n_customers")))
-
-
 def q_events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE window frame: for every event, the user's event
     count and value sum over the PRECEDING HOUR (range frame on epoch
@@ -1248,71 +1039,6 @@ def q_events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "us",
         F.count(F.lit(1)).over(w).alias("n_last_hour"),
         F.round(F.sum("value").over(w), 4).alias("value_last_hour"))
-
-
-def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of join (functions/relational.py): every 'view'
-    event gains the latest preceding 'purchase' by the same user —
-    the time-series most-recent-fact join Spark lacks as a primitive.
-    The engine runs the union-tag single-window composition (one hash
-    exchange, no row multiplication); the oracle is DuckDB's NATIVE
-    ``ASOF LEFT JOIN`` — zero shared algorithm, so a frame/tie bug on
-    either side hash-mismatches.  Timestamps compare as exact epoch
-    microseconds (the events_sessions convention)."""
-    from cdx_writer_spark.functions import relational
-
-    ev = _table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", "value",
-        F.expr("timestampdiff(MICROSECOND, "
-               "TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)").alias("us"))
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "event_id", "us")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("p_event_id"),
-        F.round("value", 4).alias("p_value"), "us")
-    out = relational.asof_join(views, purchases, on="user_id",
-                               left_ts="us", right_ts="us")
-    return out.select(
-        "user_id", "event_id", "us",
-        F.col("us_r").alias("purchase_us"),
-        F.col("p_event_id_r").alias("purchase_event_id"),
-        F.col("p_value_r").alias("purchase_value"))
-
-
-def q_orders_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k (the 100 priciest orders): ``orderBy + limit``
-    compiles to TakeOrderedAndProject — a bounded per-partition heap
-    plus a driver merge of k rows/partition, NOT a global range sort
-    (no rangepartitioning exchange, no full-data sort; plan-tested in
-    tests/test_relational.py).  That is the only global-top-k shape
-    that survives 100 TB: cost is one scan plus k·P merge rows,
-    independent of total order count.  The unique o_orderkey
-    tie-break makes the selected row set deterministic under
-    duplicate prices."""
-    o = _table(spark, sf_dir, "orders")
-    return (o.select("o_orderkey", "o_custkey", "o_totalprice")
-            .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-            .limit(100))
-
-
-def q_customer_top_orders(spark: SparkSession, sf_dir: str
-                          ) -> DataFrame:
-    """Per-group top-k (each customer's 3 priciest orders) via ONE
-    row_number window.  Catalyst inserts WindowGroupLimit in
-    *partial* mode BEFORE the custkey exchange (plan-tested), so
-    every map task pre-prunes to ≤k rows per key before shuffling —
-    shuffle volume is k·|customers|, not |orders|, the per-group
-    top-k shape that survives 100 TB.  The ordering is made total
-    with the unique orderkey tie-break so both engines select
-    identical rows under duplicate prices."""
-    from pyspark.sql.window import Window
-
-    o = _table(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_custkey")
-         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")))
-    return (o.select("o_custkey", "o_orderkey", "o_totalprice",
-                     F.row_number().over(w).alias("rn"))
-            .filter(F.col("rn") <= 3))
 
 
 def q_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1356,92 +1082,6 @@ def q_events_distinct_users(spark: SparkSession, sf_dir: str
             .agg(F.countDistinct("user_id").alias("n_users"),
                  F.count(F.lit(1)).alias("n_events"),
                  F.round(F.sum("value"), 4).alias("sum_value")))
-
-
-def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS — the non-hierarchical set list
-    {(status), (priority), ()} that neither rollup (hierarchy
-    prefixes) nor cube (full lattice) expresses.  One aggregation
-    pass: Catalyst expands the three sets map-side (no self-union of
-    the base scan), and ``grouping_id()`` keys the NULL-total rows
-    apart from NULL data values.  Completes the rollup / cube /
-    grouping-sets family."""
-    o = _table(spark, sf_dir, "orders")
-    return (
-        o.groupingSets(
-            [["o_orderstatus"], ["o_orderpriority"], []],
-            "o_orderstatus", "o_orderpriority")
-        .agg(F.grouping_id().alias("gid"),
-             F.count(F.lit(1)).alias("n_orders"),
-             F.round(F.sum("o_totalprice"), 2).alias("total_price")))
-
-
-def q_orders_rank_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window ranking family over ONE exchange: quartile (ntile),
-    percent_rank and cume_dist of each order's price within its
-    priority class — four ranking functions reuse a single
-    (priority)-partitioned sort.  Cross-engine exactness is
-    structural: the unique orderkey tie-break makes the order total
-    (so rank == row_number and every peer group is a singleton), and
-    percent_rank/cume_dist are then the SAME integer ratio
-    (rank−1)/(n−1) and rank/n in both engines — one IEEE division of
-    identical integers, bit-identical without rounding.  Output is
-    thinned to a deterministic orderkey slice AFTER the windows (the
-    frame must see every row)."""
-    from pyspark.sql.window import Window
-
-    o = _table(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_orderpriority")
-         .orderBy(F.asc("o_totalprice"), F.asc("o_orderkey")))
-    ranked = o.select(
-        "o_orderkey", "o_orderpriority", "o_totalprice",
-        F.ntile(4).over(w).alias("quartile"),
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"))
-    return ranked.filter(F.col("o_orderkey") % 7 == 0)
-
-
-def q_events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep-line interval concurrency: how many events of each type
-    are active at every boundary instant, with each event occupying
-    the half-open interval [ts, ts + a deterministic duration).  The
-    engine explodes each interval to its ±1 boundary deltas MAP-SIDE,
-    pre-aggregates deltas per (type, instant), then runs
-    ``relational.prefix_sum`` — the two-level bucket decomposition
-    whose working exchanges are (type, hour-bucket) and whose only
-    per-type serial structure is ONE ROW PER BUCKET, never a
-    data-sized single-partition window (the naive
-    ``partitionBy(event_type)`` running sum collapses 1/5th of 100 TB
-    into one task; see the operator docstring).  The oracle IS that
-    naive single window in DuckDB — a decomposition seam (offset
-    off-by-one-bucket, tie handling) hash-mismatches.  Thinned to a
-    deterministic event slice; boundary instants stay integral µs."""
-    from cdx_writer_spark.functions import relational
-
-    ev = (_table(spark, sf_dir, "events")
-          .filter(F.col("event_id") % 3 == 0)
-          .select(
-              "event_type",
-              F.expr("timestampdiff(MICROSECOND, "
-                     "TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
-              .alias("us"),
-              ((F.col("event_id") % 7 + 1) * 60_000_000)
-              .alias("dur")))
-    deltas = (ev.select(
-        "event_type",
-        F.explode(F.array(
-            F.struct(F.col("us").alias("t"),
-                     F.lit(1).alias("d")),
-            F.struct((F.col("us") + F.col("dur")).alias("t"),
-                     F.lit(-1).alias("d")))).alias("x"))
-        .select("event_type", F.col("x.t").alias("us"),
-                F.col("x.d").alias("delta")))
-    agg = (deltas.groupBy("event_type", "us")
-           .agg(F.sum("delta").alias("delta")))
-    out = relational.prefix_sum(
-        agg, "event_type", "us", "delta", out_col="n_active",
-        bucket_width=3_600_000_000)
-    return out.select("event_type", "us", "delta", "n_active")
 
 
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1500,57 +1140,6 @@ def q_corpus_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.hash_sample(
         docs, rate_num=6554, salt="r5h").select(
         "doc_id", "lang", "n_chars")
-
-
-def q_cdx_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-over-crawl snapshot diff (functions/relational.py:
-    snapshot_delta) — classify every SURT across two synthesized CDX
-    snapshots as added / removed / changed / unchanged, the
-    recrawl-planning primitive.  Snapshots derive from doc_id
-    arithmetic (old = doc_id%5!=0, new = doc_id%7!=3, digests flip on
-    doc_id%11==0), so all four statuses occur.  The engine runs the
-    union-tag single-exchange decomposition; the oracle runs the
-    naive FULL OUTER JOIN — different plans, same rows."""
-    from cdx_writer_spark.functions import relational
-
-    docs = _table(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    key = F.concat(F.lit("com,site"), (d % 37).cast("string"),
-                   F.lit(")/p"), d.cast("string"))
-    old = docs.filter(d % 5 != 0).select(
-        key.alias("surt_key"),
-        F.md5(F.concat(F.lit("old"), d.cast("string")))
-        .alias("digest"))
-    new = docs.filter(d % 7 != 3).select(
-        key.alias("surt_key"),
-        F.md5(F.concat(
-            F.when(d % 11 == 0, F.lit("new")).otherwise(F.lit("old")),
-            d.cast("string"))).alias("digest"))
-    return relational.snapshot_delta(old, new)
-
-
-def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom runtime-filter semi-join (functions/relational.py:
-    bloom_semi_join) — documents restricted to an allowlisted host
-    dimension, with the frontier's partitioned-Bloom state broadcast
-    as the pre-join prune and the survivors exact-verified.  The
-    result must equal a plain semi-join row-for-row (no false
-    negatives; false positives verified away); the oracle applies the
-    equivalent arithmetic predicate directly, so any probe/fold bug
-    on either path breaks the hash."""
-    from cdx_writer_spark.functions import relational
-
-    docs = _table(spark, sf_dir, "documents")
-    big = docs.select(
-        "doc_id",
-        F.concat(F.lit("site"), (F.col("doc_id") % 97).cast("string"),
-                 F.lit(".example.com")).alias("host"),
-        "lang")
-    dim = spark.range(97).filter(F.col("id") % 3 == 0).select(
-        F.concat(F.lit("site"), F.col("id").cast("string"),
-                 F.lit(".example.com")).alias("host"))
-    return relational.bloom_semi_join(big, dim, "host",
-                                      n_partitions=8, capacity=256)
 
 
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,25 +1230,6 @@ _AUDIO_FP_CTES = (
     "list_aggregate(list_transform(range(1, 65), i -> "
     "CASE WHEN es[i] > es[i + 1] THEN '1' ELSE '0' END), "
     "'string_agg', '') AS bits FROM en)")
-
-
-def q_orders_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated-aggregate filter (TPC-H Q17/Q22 shape): orders
-    whose price exceeds their customer's average — decorrelated into
-    one customer aggregate + an equi-join, with the comparison done in
-    exact integer cents (price*n > sum, no float average ambiguity).
-    One agg with map-side partials + one AQE-planned join; never a
-    per-customer subquery loop.  Oracle = the same integer inequality
-    in SQL."""
-    orders = _table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    per_cust = (orders.groupBy("o_custkey")
-                .agg(F.sum(cents).alias("sum_c"),
-                     F.count(F.lit(1)).alias("n")))
-    j = orders.join(per_cust, "o_custkey")
-    return (j.filter(cents * F.col("n") > F.col("sum_c"))
-            .select("o_orderkey", "o_custkey",
-                    cents.alias("price_cents")))
 
 
 def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2011,27 +1581,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "video_dhash": q_video_dhash,
         "video_near_dup": q_video_near_dup,
         "events_json": q_events_json,
-        "orders_above_avg": q_orders_above_avg,
         "events_retention": q_events_retention,
         "bmp_decode": q_bmp_decode,
         "tiff_decode": q_tiff_decode,
         "frontier_seen_cuckoo": q_frontier_seen_cuckoo,
         "events_sessions": q_events_sessions,
-        "events_asof": q_events_asof,
-        "agg_rollup": q_agg_rollup,
         "events_pivot": q_events_pivot,
-        "lineitem_range_join": q_lineitem_range_join,
         "multimodal_decode": q_multimodal_decode,
         "multimodal_resize": q_multimodal_resize,
         "multimodal_frames": q_multimodal_frames,
         "frontier_topk": q_frontier_topk,
         "frontier_seen_split": q_frontier_seen_split,
         "frontier_crawl": q_frontier_crawl,
-        "agg_pricing": q_agg_pricing,
-        "join_customer_orders": q_join_customer_orders,
         "events_windows": q_events_windows,
-        "cdx_snapshot_delta": q_cdx_snapshot_delta,
-        "bloom_semijoin": q_bloom_semijoin,
         "text_bm25": q_text_bm25,
         "corpus_weighted_sample": q_corpus_weighted_sample,
         "crawl_budget": q_crawl_budget,
@@ -2042,21 +1604,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "term_cooccurrence": q_term_cooccurrence,
         "corpus_sample": q_corpus_sample,
         "corpus_sample_hash": q_corpus_sample_hash,
-        "events_concurrency": q_events_concurrency,
-        "orders_topk": q_orders_topk,
-        "customer_top_orders": q_customer_top_orders,
         "events_hopping": q_events_hopping,
         "events_distinct_users": q_events_distinct_users,
-        "agg_grouping_sets": q_agg_grouping_sets,
-        "orders_rank_dist": q_orders_rank_dist,
         "events_tumbling": q_events_tumbling,
         "events_funnel": q_events_funnel,
-        "customer_distribution": q_customer_distribution,
         "events_rolling": q_events_rolling,
-        "join_revenue_nation": q_join_revenue_nation,
-        "orders_exists": q_orders_exists,
-        "agg_cube": q_agg_cube,
-        "part_percentiles": q_part_percentiles,
         "cdx_lines": q_cdx_lines,
         "cdx_lines_all": q_cdx_lines_all,
         "cdx_screenshot": q_cdx_screenshot,
@@ -2443,7 +1995,6 @@ def oracle_sql() -> dict[str, str]:
         "compressed_size || ' ' || \"offset\" || ' ' || warc_file"
     )
     return {
-        # snapshot diff: the oracle is the NAIVE full outer join the
         # perceptual image dHash: every bit re-derived arithmetically
         # from the pixel generation rule (the engine decodes REAL PNG
         # bytes; the oracle never sees them)
@@ -2520,16 +2071,6 @@ def oracle_sql() -> dict[str, str]:
             "COUNT(DISTINCT act.user_id) AS n_users "
             "FROM act JOIN fw ON fw.user_id = act.user_id "
             "GROUP BY 1, 2"),
-        # correlated-aggregate filter in exact integer cents
-        "orders_above_avg": (
-            "WITH c AS (SELECT o_orderkey, o_custkey, "
-            "CAST(round(o_totalprice * 100) AS BIGINT) AS pc "
-            "FROM orders), "
-            "a AS (SELECT o_custkey, CAST(SUM(pc) AS BIGINT) AS sum_c, "
-            "COUNT(*) AS n FROM c GROUP BY o_custkey) "
-            "SELECT c.o_orderkey, c.o_custkey, c.pc AS price_cents "
-            "FROM c JOIN a USING (o_custkey) "
-            "WHERE c.pc * a.n > a.sum_c"),
         # semi-structured extraction: DuckDB's JSON reader against
         # Spark's get_json_object over the same rows
         "events_json": (
@@ -2541,31 +2082,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM (SELECT event_type, "
             "CAST(json_extract_string(props, '$.k') AS BIGINT) AS k "
             "FROM events) GROUP BY event_type"),
-        # engine's union-tag decomposition replaces — same rows or bust
-        "cdx_snapshot_delta": (
-            "WITH old AS (SELECT 'com,site' || (doc_id % 37) || ')/p' "
-            "|| doc_id AS surt_key, md5('old' || doc_id) AS digest "
-            "FROM documents WHERE doc_id % 5 <> 0), "
-            "new AS (SELECT 'com,site' || (doc_id % 37) || ')/p' "
-            "|| doc_id AS surt_key, "
-            "md5((CASE WHEN doc_id % 11 = 0 THEN 'new' ELSE 'old' END) "
-            "|| doc_id) AS digest "
-            "FROM documents WHERE doc_id % 7 <> 3) "
-            "SELECT COALESCE(old.surt_key, new.surt_key) AS surt_key, "
-            "CASE WHEN old.surt_key IS NULL THEN 'added' "
-            "WHEN new.surt_key IS NULL THEN 'removed' "
-            "WHEN old.digest = new.digest THEN 'unchanged' "
-            "ELSE 'changed' END AS status, "
-            "old.digest AS old_digest, new.digest AS new_digest "
-            "FROM old FULL OUTER JOIN new "
-            "ON old.surt_key = new.surt_key"),
-        # bloom semi-join: the oracle applies the allowlist predicate
-        # arithmetically — the engine must reach the identical row set
-        # through the Bloom prune + exact verify
-        "bloom_semijoin": (
-            "SELECT doc_id, "
-            "'site' || (doc_id % 97) || '.example.com' AS host, lang "
-            "FROM documents WHERE (doc_id % 97) % 3 = 0"),
         # BM25: identical IEEE expression (ln idf, double avgdl,
         # per-term micro-point rounding) recomputed in SQL; the
         # per-doc sum is exact int64 on both sides
@@ -3494,22 +3010,6 @@ def oracle_sql() -> dict[str, str]:
             "host_pos FROM r2_batch) "
             "SELECT round, host, depth, surt_key, url, host_pos "
             "FROM sched ORDER BY round, host, depth, surt_key"),
-        "agg_pricing": (
-            "SELECT l_returnflag, l_linestatus, "
-            "round(SUM(l_quantity), 2) AS sum_qty, "
-            "round(SUM(l_extendedprice), 2) AS sum_base_price, "
-            "round(SUM(l_extendedprice * (1 - l_discount)), 2) "
-            "AS sum_disc_price, "
-            "round(AVG(l_discount), 4) AS avg_disc, "
-            "CAST(COUNT(*) AS BIGINT) AS count_order "
-            "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01' "
-            "GROUP BY 1, 2"),
-        "join_customer_orders": (
-            "SELECT c_custkey, c_mktsegment, "
-            "CAST(COUNT(*) AS BIGINT) AS n_orders, "
-            "round(SUM(o_totalprice), 2) AS total_spent "
-            "FROM orders JOIN customer ON o_custkey = c_custkey "
-            "GROUP BY 1, 2"),
         "events_windows": (
             "SELECT event_id, user_id, "
             "CAST(ROW_NUMBER() OVER (PARTITION BY user_id "
@@ -3539,18 +3039,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(max(us) - min(us) AS BIGINT) AS duration_us, "
             "round(CAST(sum(value) AS DOUBLE), 4) AS sum_value "
             "FROM sess GROUP BY user_id, session_id"),
-        # Q13 shape: the order filter lives in a pre-filtered
-        # relation (NOT the outer WHERE — that would drop the k=0
-        # bucket), mirroring the engine's filter-before-left-join
-        "customer_distribution": (
-            "WITH o AS (SELECT * FROM orders "
-            "WHERE o_orderpriority <> '1-URGENT'), "
-            "per AS (SELECT c_custkey, "
-            "COUNT(o_orderkey) AS n_orders FROM customer "
-            "LEFT JOIN o ON c_custkey = o_custkey GROUP BY 1) "
-            "SELECT CAST(n_orders AS BIGINT) AS n_orders, "
-            "CAST(COUNT(*) AS BIGINT) AS n_customers "
-            "FROM per GROUP BY 1"),
         # time-RANGE frame re-run natively on the same integer
         # ordering key — frame inclusivity must agree exactly
         "events_rolling": (
@@ -3594,35 +3082,6 @@ def oracle_sql() -> dict[str, str]:
             "AS n_view_click, "
             "CAST((SELECT COUNT(*) FROM p) AS BIGINT) "
             "AS n_full_funnel FROM u"),
-        # as-of join: DuckDB's NATIVE ASOF LEFT JOIN (backward,
-        # inclusive) — independent of the engine's union-tag window
-        "events_asof": (
-            "WITH e AS (SELECT user_id, event_id, event_type, value, "
-            "epoch_us(ts) AS us FROM events), "
-            "l AS (SELECT user_id, event_id, us FROM e "
-            "WHERE event_type = 'view'), "
-            "r AS (SELECT user_id, event_id AS p_event_id, "
-            "round(value, 4) AS p_value, us FROM e "
-            "WHERE event_type = 'purchase') "
-            "SELECT l.user_id, l.event_id, l.us, "
-            "r.us AS purchase_us, "
-            "r.p_event_id AS purchase_event_id, "
-            "r.p_value AS purchase_value "
-            "FROM l ASOF LEFT JOIN r "
-            "ON l.user_id = r.user_id AND l.us >= r.us"),
-        # rollup: DuckDB's native GROUP BY ROLLUP; GROUPING() bits
-        # composed in Spark's grouping_id order (returnflag=bit1,
-        # linestatus=bit0)
-        "agg_rollup": (
-            "SELECT l_returnflag, l_linestatus, "
-            "CAST(GROUPING(l_returnflag) * 2 "
-            "+ GROUPING(l_linestatus) AS BIGINT) AS gid, "
-            "round(SUM(l_quantity), 2) AS sum_qty, "
-            "round(SUM(l_extendedprice * (1 - l_discount)), 2) "
-            "AS sum_disc_price, "
-            "CAST(COUNT(*) AS BIGINT) AS count_order "
-            "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01' "
-            "GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
         # pivot: conditional aggregation spreads the same relation the
         # engine builds with .pivot(explicit values)
         "events_pivot": (
@@ -3642,51 +3101,6 @@ def oracle_sql() -> dict[str, str]:
             "WHERE event_type = 'purchase' GROUP BY 1) "
             "SELECT c.*, s.purchase_value FROM c "
             "LEFT JOIN s USING (user_id)"),
-        # range join: DuckDB's native inequality join (IEJoin) over
-        # the raw BETWEEN predicate — independent of the engine's
-        # bucketized composition
-        "lineitem_range_join": (
-            "WITH p AS (SELECT l_suppkey % 97 AS k, l_orderkey, "
-            "l_linenumber, CAST(datediff('day', "
-            "TIMESTAMP '1970-01-01', l_shipdate) AS BIGINT) "
-            "AS ship_day FROM lineitem), "
-            "i AS (SELECT o_custkey % 97 AS k, "
-            "o_orderkey AS win_orderkey, "
-            "CAST(datediff('day', TIMESTAMP '1970-01-01', "
-            "o_orderdate) AS BIGINT) AS win_start, "
-            "CAST(datediff('day', TIMESTAMP '1970-01-01', "
-            "o_orderdate) + o_orderkey % 14 AS BIGINT) AS win_end "
-            "FROM orders) "
-            "SELECT p.k, p.l_orderkey, p.l_linenumber, p.ship_day, "
-            "i.win_start, i.win_end, i.win_orderkey "
-            "FROM p JOIN i ON p.k = i.k "
-            "AND p.ship_day BETWEEN i.win_start AND i.win_end"),
-        # TPC-H Q5 shape: DuckDB's own join order/planner over the
-        # same six-table relation
-        "join_revenue_nation": (
-            "SELECT n_name, "
-            "round(SUM(l_extendedprice * (1 - l_discount)), 2) "
-            "AS revenue "
-            "FROM lineitem "
-            "JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "JOIN supplier ON l_suppkey = s_suppkey "
-            "AND c_nationkey = s_nationkey "
-            "JOIN nation ON s_nationkey = n_nationkey "
-            "JOIN region ON n_regionkey = r_regionkey "
-            "WHERE r_name = 'ASIA' "
-            "AND o_orderdate >= TIMESTAMP '1995-01-01' "
-            "AND o_orderdate < TIMESTAMP '1997-01-01' "
-            "GROUP BY n_name"),
-        # Q4 shape: correlated EXISTS — a different decorrelation
-        # path than the engine's left-semi join
-        "orders_exists": (
-            "SELECT o_orderpriority, "
-            "CAST(COUNT(*) AS BIGINT) AS n_late_orders "
-            "FROM orders o WHERE EXISTS (SELECT 1 FROM lineitem l "
-            "WHERE l.l_orderkey = o.o_orderkey "
-            "AND datediff('day', o.o_orderdate, l.l_shipdate) >= 60) "
-            "GROUP BY o_orderpriority"),
         # stratified sampling: the oracle runs the IDENTICAL spec —
         # md5 hex ordering and the integer ceil are portable, so the
         # kept rows, ranks and stratum sizes must match exactly
@@ -3728,37 +3142,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM p p1 JOIN p p2 ON p2.doc_id = p1.doc_id "
             "AND p2.pos > p1.pos AND p2.pos <= p1.pos + 2 "
             "GROUP BY term_a, term_b"),
-        # sweep-line concurrency: the oracle is the NAIVE
-        # single-window running sum the engine's two-level
-        # decomposition must reproduce exactly
-        "events_concurrency": (
-            "WITH e AS (SELECT event_type, epoch_us(ts) AS us, "
-            "(event_id % 7 + 1) * 60000000 AS dur FROM events "
-            "WHERE event_id % 3 = 0), "
-            "d AS (SELECT event_type, us, 1 AS delta FROM e "
-            "UNION ALL "
-            "SELECT event_type, us + dur, -1 FROM e), "
-            "a AS (SELECT event_type, us, "
-            "CAST(SUM(delta) AS BIGINT) AS delta FROM d "
-            "GROUP BY event_type, us) "
-            "SELECT event_type, us, delta, "
-            "CAST(SUM(delta) OVER (PARTITION BY event_type "
-            "ORDER BY us) AS BIGINT) AS n_active FROM a"),
-        # global top-k: ORDER BY + LIMIT with the unique-key
-        # tie-break; the engine's TakeOrderedAndProject must select
-        # the identical row set
-        "orders_topk": (
-            "SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
-            "ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"),
-        # per-group top-k decorrelated as a row_number subquery —
-        # independent of Spark's WindowGroupLimit pre-pruning
-        "customer_top_orders": (
-            "SELECT o_custkey, o_orderkey, o_totalprice, "
-            "CAST(rn AS INT) AS rn FROM ("
-            "SELECT o_custkey, o_orderkey, o_totalprice, "
-            "row_number() OVER (PARTITION BY o_custkey "
-            "ORDER BY o_totalprice DESC, o_orderkey) AS rn "
-            "FROM orders) WHERE rn <= 3"),
         # hopping windows re-derived with integer floor arithmetic
         # over an explicit 2-row slide-offset table — every event is
         # in exactly the 2 windows starting at (⌊us/slide⌋−k)·slide
@@ -3780,46 +3163,4 @@ def oracle_sql() -> dict[str, str]:
             "CAST(COUNT(*) AS BIGINT) AS n_events, "
             "round(SUM(value), 4) AS sum_value "
             "FROM events GROUP BY event_type"),
-        "agg_grouping_sets": (
-            "SELECT o_orderstatus, o_orderpriority, "
-            "CAST(GROUPING(o_orderstatus) * 2 "
-            "+ GROUPING(o_orderpriority) AS BIGINT) AS gid, "
-            "CAST(COUNT(*) AS BIGINT) AS n_orders, "
-            "round(SUM(o_totalprice), 2) AS total_price "
-            "FROM orders GROUP BY GROUPING SETS "
-            "((o_orderstatus), (o_orderpriority), ())"),
-        # ranking family: the unique tie-break makes rank ==
-        # row_number and the ratios exact integer divisions, so the
-        # doubles compare bit-identically unrounded
-        "orders_rank_dist": (
-            "SELECT o_orderkey, o_orderpriority, o_totalprice, "
-            "CAST(quartile AS INT) AS quartile, pct_rank, cume "
-            "FROM (SELECT o_orderkey, o_orderpriority, o_totalprice, "
-            "ntile(4) OVER w AS quartile, "
-            "percent_rank() OVER w AS pct_rank, "
-            "cume_dist() OVER w AS cume FROM orders "
-            "WINDOW w AS (PARTITION BY o_orderpriority "
-            "ORDER BY o_totalprice, o_orderkey)) "
-            "WHERE o_orderkey % 7 = 0"),
-        "agg_cube": (
-            "SELECT o_orderstatus, o_orderpriority, "
-            "CAST(GROUPING(o_orderstatus) * 2 "
-            "+ GROUPING(o_orderpriority) AS BIGINT) AS gid, "
-            "CAST(COUNT(*) AS BIGINT) AS n_orders, "
-            "round(SUM(o_totalprice), 2) AS total_price "
-            "FROM orders "
-            "GROUP BY CUBE (o_orderstatus, o_orderpriority)"),
-        # exact interpolated quantiles: deci-unit integer-valued
-        # doubles + dyadic quantiles make the interpolation exact in
-        # both engines (see q_part_percentiles docstring)
-        "part_percentiles": (
-            "SELECT p_brand, "
-            "quantile_cont(CAST(round(p_retailprice * 10) AS DOUBLE), "
-            "0.25) / 10.0 AS p25_price, "
-            "quantile_cont(CAST(round(p_retailprice * 10) AS DOUBLE), "
-            "0.5) / 10.0 AS median_price, "
-            "quantile_cont(CAST(round(p_retailprice * 10) AS DOUBLE), "
-            "0.75) / 10.0 AS p75_price, "
-            "CAST(COUNT(*) AS BIGINT) AS n_parts "
-            "FROM part GROUP BY p_brand"),
     }

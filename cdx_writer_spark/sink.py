@@ -160,9 +160,8 @@ def parse_cdx_lines(lines: DataFrame, format: str | None = None,
                     line_col: str = "cdx_line") -> DataFrame:
     """The inverse of the CDX text sink: parse CDX lines back into
     the writer's field columns — the read half of the format, so
-    existing CDX archives are a first-class SOURCE (diff two crawls
-    with ``relational.snapshot_delta``, join an index against the
-    frontier, re-sort a merge of per-file outputs).
+    existing CDX archives are a first-class SOURCE (join an index
+    against the frontier, re-sort a merge of per-file outputs).
 
     ``format`` is the same space-separated field-code string the
     writer takes (default ``schema.DEFAULT_FORMAT``); output columns

@@ -231,46 +231,6 @@ def test_quality_mix_is_pure_projection(spark):
     assert "Python" not in plan
 
 
-def test_orders_exists_is_a_semi_join(spark):
-    """EXISTS must plan as LeftSemi on the orderkey equi-key (one
-    probe hit short-circuits; no row duplication, no nested loop)."""
-    import __spark_entry__ as entrymod
-
-    plan = _plan(entrymod.queries()["orders_exists"](spark, SF_DIR))
-    assert "LeftSemi" in plan
-    assert "NestedLoop" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_revenue_join_broadcasts_dims_and_pushes_dates(spark):
-    """Q5 shape: nation/region arrive via BroadcastExchange; the
-    order-date range written on the six-way joined frame must still
-    reach the orders parquet scan as PushedFilters."""
-    import __spark_entry__ as entrymod
-
-    plan = _plan(
-        entrymod.queries()["join_revenue_nation"](spark, SF_DIR))
-    assert plan.count("BroadcastExchange") >= 2
-    assert "CartesianProduct" not in plan
-    pushed = [ln for ln in plan.splitlines()
-              if "PushedFilters" in ln and "o_orderdate" in ln]
-    assert pushed, "order-date range did not reach the orders scan"
-    assert any("r_name" in ln for ln in plan.splitlines()
-               if "PushedFilters" in ln), \
-        "region filter did not reach the region scan"
-
-
-def test_cube_is_one_expand_pass(spark):
-    """CUBE must expand grouping sets in a single aggregation pass
-    (Expand node), never a self-union of four scans of the base."""
-    import __spark_entry__ as entrymod
-
-    plan = _plan(entrymod.queries()["agg_cube"](spark, SF_DIR))
-    assert "Expand" in plan
-    assert "Union" not in plan
-    assert plan.count("FileScan") == 1
-
-
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """SCALE.md's bucketing claim, proven: two tables bucketed AND
     sorted by the join key co-locate — the sort-merge join plans with

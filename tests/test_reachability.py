@@ -38,9 +38,8 @@ ROOT_FILE_GLOBS = ("jobs/*.py", "perfbench/*.py",
                    f"{PKG}/oracle.py", f"{PKG}/pages_gen.py")
 
 UNREACHED = {
-    # registry-only operator families; each goes, with its queries and
-    # tests, in a later deletion (ROADMAP item 4)
-    f"{PKG}.functions.relational": "TPC-H/events join queries only",
+    # registry-only media family; it goes, with its queries and tests,
+    # in a later deletion (ROADMAP item 6)
     f"{PKG}.functions.audio": "audio queries only",
     f"{PKG}.functions.multimodal": "media decode queries only",
     f"{PKG}.functions.png": "codec behind multimodal",

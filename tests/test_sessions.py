@@ -29,10 +29,6 @@ def test_session_boundaries_and_aggregates(spark, tmp_path):
         rows, "event_id long, ts timestamp_ntz, user_id long, "
               "event_type string, value double, props string")
     sf = str(tmp_path)
-    for t in ("region nation customer supplier part orders lineitem "
-              "documents embeddings").split():
-        spark.range(0).write.mode("overwrite").parquet(
-            f"{sf}/{t}.parquet")
     df.write.mode("overwrite").parquet(f"{sf}/events.parquet")
     got = {(r.user_id, r.session_id): r for r in
            entrymod.q_events_sessions(spark, sf).collect()}

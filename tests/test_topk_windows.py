@@ -1,16 +1,10 @@
-"""Top-k / window-family operators (__spark_entry__): physical-plan
-pins for the shapes that make them survive 100 TB, plus the semantic
-edges the sf0.01 oracle sweep can't isolate (tie determinism,
-singleton partitions, grouping-ID keying).
+"""Window-family operators (__spark_entry__): physical-plan pins for
+the shapes that make them survive 100 TB, plus the semantic edges the
+sf0.01 oracle sweep can't isolate (window coverage, exact distinct
+counts).
 
 Scale contracts pinned here:
 
-* global top-k compiles to ``TakeOrderedAndProject`` (bounded
-  per-partition heap + k-row driver merge) — never a global range
-  sort;
-* per-group top-k gets a *Partial* ``WindowGroupLimit`` BEFORE the
-  key exchange, so map tasks pre-prune to <=k rows/key and shuffle
-  volume is k*|keys|, not |rows|;
 * hopping windows expand map-side (``Expand``, no self-join) and
   aggregate through ONE exchange with map-side partials;
 * mixed exact-distinct aggregation runs Catalyst's two-phase
@@ -29,58 +23,6 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-# --- global top-k --------------------------------------------------------------
-
-def test_orders_topk_take_ordered_plan(spark):
-    plan = _plan(entrymod.q_orders_topk(spark, SF))
-    assert "TakeOrderedAndProject" in plan
-    # never a global sort: no range exchange, no standalone Sort node
-    assert "rangepartitioning" not in plan
-    assert "Exchange" not in plan
-    assert "+- Sort" not in plan
-
-
-def test_orders_topk_tie_break_deterministic(spark):
-    # duplicate prices straddling the cut: the unique-key tie-break
-    # must pick the LOWEST orderkeys among equals
-    rows = [(k, 1, 100.0) for k in range(10)] + [(99, 1, 500.0)]
-    df = spark.createDataFrame(
-        rows, "o_orderkey long, o_custkey long, o_totalprice double")
-    got = (df.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-           .limit(4).collect())
-    assert [r["o_orderkey"] for r in got] == [99, 0, 1, 2]
-
-
-# --- per-group top-k ------------------------------------------------------------
-
-def test_customer_top_orders_window_group_limit_partial(spark):
-    plan = _plan(entrymod.q_customer_top_orders(spark, SF))
-    # Partial group-limit BEFORE the exchange, Final after it
-    i_partial = plan.find("Partial")
-    i_exchange = plan.find("Exchange hashpartitioning")
-    i_final = plan.find("WindowGroupLimit")
-    assert "WindowGroupLimit" in plan and "Partial" in plan
-    assert i_partial > i_exchange > i_final >= 0, plan
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_customer_top_orders_exact_k_and_ties(spark):
-    rows = [(1, k, 50.0) for k in range(5)] + [(1, 9, 80.0),
-                                               (2, 10, 10.0)]
-    df = spark.createDataFrame(
-        rows, "o_custkey long, o_orderkey long, o_totalprice double")
-    from pyspark.sql.window import Window
-    w = (Window.partitionBy("o_custkey")
-         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey")))
-    got = sorted(
-        (r["o_custkey"], r["rn"], r["o_orderkey"])
-        for r in df.select(
-            "o_custkey", "o_orderkey",
-            F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 3).collect())
-    assert got == [(1, 1, 9), (1, 2, 0), (1, 3, 1), (2, 1, 10)]
 
 
 # --- hopping windows ------------------------------------------------------------
@@ -130,61 +72,3 @@ def test_events_distinct_users_matches_brute(spark):
            for r in entrymod.q_events_distinct_users(spark, SF)
            .collect()}
     assert got == brute
-
-
-# --- grouping sets --------------------------------------------------------------
-
-def test_grouping_sets_gid_keys_null_totals_apart(spark):
-    # a data row whose status IS NULL must not collide with the
-    # (priority)-set total rows (which null out status): gid differs
-    df = spark.createDataFrame(
-        [(None, "HIGH", 1.0), ("F", "HIGH", 2.0), ("O", "LOW", 3.0)],
-        "o_orderstatus string, o_orderpriority string, "
-        "o_totalprice double")
-    out = (df.groupingSets(
-               [["o_orderstatus"], ["o_orderpriority"], []],
-               "o_orderstatus", "o_orderpriority")
-           .agg(F.grouping_id().alias("gid"),
-                F.count(F.lit(1)).alias("n"))
-           .collect())
-    rows = {(r["o_orderstatus"], r["o_orderpriority"], r["gid"]): r["n"]
-            for r in out}
-    # the NULL-status DATA group keeps gid=1 (status grouped, real)
-    assert rows[(None, None, 1)] == 1
-    # the (priority) SET rows carry gid=2
-    assert rows[(None, "HIGH", 2)] == 2
-    assert rows[(None, "LOW", 2)] == 1
-    # grand total
-    assert rows[(None, None, 3)] == 3
-    # exactly the three declared sets — no cube/rollup extras
-    assert sorted({g for (_, _, g) in rows}) == [1, 2, 3]
-
-
-def test_grouping_sets_single_pass_plan(spark):
-    plan = _plan(entrymod.q_agg_grouping_sets(spark, SF))
-    assert "Expand" in plan            # sets expanded, not self-union
-    assert "Union" not in plan
-    assert plan.count("FileScan") == 1  # one base scan
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
-# --- ranking family -------------------------------------------------------------
-
-def test_rank_dist_singleton_partition_edges(spark):
-    df = spark.createDataFrame(
-        [("A", 1, 10.0)],
-        "o_orderpriority string, o_orderkey long, o_totalprice double")
-    from pyspark.sql.window import Window
-    w = (Window.partitionBy("o_orderpriority")
-         .orderBy(F.asc("o_totalprice"), F.asc("o_orderkey")))
-    r = df.select(F.ntile(4).over(w).alias("q"),
-                  F.percent_rank().over(w).alias("pr"),
-                  F.cume_dist().over(w).alias("cd")).collect()[0]
-    assert (r["q"], r["pr"], r["cd"]) == (1, 0.0, 1.0)
-
-
-def test_rank_dist_one_exchange_serves_all_three(spark):
-    plan = _plan(entrymod.q_orders_rank_dist(spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Window") >= 1
-    assert "Python" not in plan
