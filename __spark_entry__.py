@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from cdx_writer_spark.job import (
     CDXConfig, cdx_flagged, cdx_lines, stats_aggregation,
 )
-from cdx_writer_spark.functions import (audio, decontam, dedup, extract,
+from cdx_writer_spark.functions import (decontam, dedup, extract,
                                         multimodal, pii, textstats)
 from cdx_writer_spark.webview import ORACLE_PAGES_CTE, pages_from_documents
 
@@ -609,26 +609,6 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode (stdlib ``wave``): every doc gets a
-    deterministic doc_id-seeded 16-bit PCM WAV (audio.synth_wav_bytes),
-    the kernel parses the RIFF container and extracts exact-integer
-    signal features, and the DuckDB oracle re-derives every value from
-    the generation rule alone — a parser that mis-read any offset or
-    sample byte could not match."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def wav_udf(ids):
-        import pandas as pd
-        return pd.Series(
-            [audio.synth_wav_bytes(int(d)) for d in ids])
-
-    docs = _table(spark, sf_dir, "documents").select("doc_id")
-    payloads = docs.withColumn("payload", wav_udf("doc_id"))
-    return audio.audio_features(payloads)
-
-
 def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL animated-GIF frame sampling (stdlib LZW decoder,
     functions/gif.py): every doc gets a deterministic doc_id-seeded
@@ -1084,6 +1064,52 @@ def q_events_distinct_users(spark: SparkSession, sf_dir: str
                  F.round(F.sum("value"), 4).alias("sum_value")))
 
 
+def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort retention (the classic product-analytics rollup): users
+    cohorted by first-active week, then distinct active users per
+    (cohort, weeks-since-cohort) cell.  Two aggregations — a per-user
+    min (map-side partials) and a distinct-count over the deduped
+    (user, week) activity — joined on the user key; all arithmetic in
+    exact epoch-derived integers.  At 100 TB the (user, week) distinct
+    is the only data-sized exchange and it carries two int64s.
+    Oracle = the same two-level aggregation in SQL."""
+    ev = _table(spark, sf_dir, "events")
+    # ts is TIMESTAMP_NTZ: integer seconds from the NTZ epoch, so the
+    # week index is session-timezone-independent (matches DuckDB's
+    # tz-free epoch() on naive timestamps)
+    secs = F.expr("timestampdiff(SECOND, "
+                  "TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
+    week = F.floor(secs / F.lit(7 * 86400))
+    act = (ev.select(F.col("user_id"), week.alias("week"))
+           .distinct())
+    first = act.groupBy("user_id").agg(F.min("week").alias("cohort"))
+    return (act.join(first, "user_id")
+            .groupBy("cohort",
+                     (F.col("week") - F.col("cohort"))
+                     .alias("weeks_since"))
+            .agg(F.countDistinct("user_id").alias("n_users")))
+
+
+def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured extraction: events.props is a JSON string;
+    ``get_json_object`` pulls ``$.k`` natively (JVM-side Jackson, no
+    Python), then one grouped aggregation over the typed value.  At
+    100 TB the JSON parse is a per-row projection inside whole-stage
+    codegen — the schema-on-read path every clickstream pipeline
+    needs.  Oracle = DuckDB json_extract_string over the same rows."""
+    ev = _table(spark, sf_dir, "events")
+    k = F.get_json_object("props", "$.k").cast("long")
+    return (ev.groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"),
+                 F.sum(k).alias("sum_k"),
+                 F.min(k).alias("min_k"),
+                 F.max(k).alias("max_k"),
+                 F.sum(F.when(k % 2 == 0, 1).otherwise(0))
+                 .cast("long").alias("n_even")))
+
+
+# --- corpus text, sampling and CDX round-trip queries -------------------------
+
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build (functions/textstats.py: inverted_index)
     over the REAL corpus text: per-(term, doc) posting rows with
@@ -1156,333 +1182,6 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return textstats.phrase_occurrences(_docs(spark, sf_dir),
                                         "merge data")
-
-
-# The dHash oracle: re-derive every 2x2 cell sum of the synthetic
-# pixel rule pixel(x, y) = (a*x^2 + b*y^2 + x*y) % 200 + v*5 (spiked
-# top-left cell = 4*255 for v == 4), then the 64 adjacent-cell
-# comparison bits — pure integer arithmetic, no decode.  Cell j of the
-# 9x8 grid covers x in {2*(j%9), +1}, y in {2*(j//9), +1}.
-_DHASH_CTES = (
-    "par AS (SELECT doc_id, 3 + ((doc_id // 5) % 35) % 7 AS a, "
-    "1 + ((doc_id // 5) % 35) % 5 AS b, doc_id % 5 AS v "
-    "FROM documents WHERE doc_id % 13 <> 0), "
-    "cells AS (SELECT doc_id, list_transform(range(0, 72), j -> "
-    "CASE WHEN v = 4 AND j = 0 THEN 1020 ELSE "
-    "((a * (2*(j%9))*(2*(j%9)) + b * (2*(j//9))*(2*(j//9)) "
-    "+ (2*(j%9))*(2*(j//9))) % 200 + v * 5) "
-    "+ ((a * (2*(j%9)+1)*(2*(j%9)+1) + b * (2*(j//9))*(2*(j//9)) "
-    "+ (2*(j%9)+1)*(2*(j//9))) % 200 + v * 5) "
-    "+ ((a * (2*(j%9))*(2*(j%9)) + b * (2*(j//9)+1)*(2*(j//9)+1) "
-    "+ (2*(j%9))*(2*(j//9)+1)) % 200 + v * 5) "
-    "+ ((a * (2*(j%9)+1)*(2*(j%9)+1) + b * (2*(j//9)+1)*(2*(j//9)+1) "
-    "+ (2*(j%9)+1)*(2*(j//9)+1)) % 200 + v * 5) END) AS cs FROM par), "
-    "dh AS (SELECT doc_id, "
-    "list_aggregate(list_transform(range(0, 64), i -> "
-    "CASE WHEN cs[(i // 8) * 9 + (i % 8) + 1] "
-    "> cs[(i // 8) * 9 + (i % 8) + 2] THEN '1' ELSE '0' END), "
-    "'string_agg', '') AS bits FROM cells)")
-
-
-# The video-dHash oracle: the image-dHash arithmetic per frame f with
-# the frame-shifted parameter (a + f); spike = frame 0's top-left cell
-# for v == 4 (see _video_gif_payloads).
-_VDHASH_CTES = (
-    "vpar AS (SELECT doc_id, CAST(t.f AS INTEGER) AS f, "
-    "3 + ((doc_id // 5) % 35) % 7 + t.f AS a, "
-    "1 + ((doc_id // 5) % 35) % 5 AS b, doc_id % 5 AS v "
-    "FROM documents, unnest([0, 1, 2, 3]) AS t(f)), "
-    "vcells AS (SELECT doc_id, f, list_transform(range(0, 72), j -> "
-    "CASE WHEN v = 4 AND f = 0 AND j = 0 THEN 1020 ELSE "
-    "((a * (2*(j%9))*(2*(j%9)) + b * (2*(j//9))*(2*(j//9)) "
-    "+ (2*(j%9))*(2*(j//9))) % 200 + v * 5) "
-    "+ ((a * (2*(j%9)+1)*(2*(j%9)+1) + b * (2*(j//9))*(2*(j//9)) "
-    "+ (2*(j%9)+1)*(2*(j//9))) % 200 + v * 5) "
-    "+ ((a * (2*(j%9))*(2*(j%9)) + b * (2*(j//9)+1)*(2*(j//9)+1) "
-    "+ (2*(j%9))*(2*(j//9)+1)) % 200 + v * 5) "
-    "+ ((a * (2*(j%9)+1)*(2*(j%9)+1) + b * (2*(j//9)+1)*(2*(j//9)+1) "
-    "+ (2*(j%9)+1)*(2*(j//9)+1)) % 200 + v * 5) END) AS cs "
-    "FROM vpar), "
-    "vdh AS (SELECT doc_id, f, "
-    "list_aggregate(list_transform(range(0, 64), i -> "
-    "CASE WHEN cs[(i // 8) * 9 + (i % 8) + 1] "
-    "> cs[(i // 8) * 9 + (i % 8) + 2] THEN '1' ELSE '0' END), "
-    "'string_agg', '') AS bits FROM vcells)")
-
-
-# The audio-fingerprint oracle: re-derive the waveform, the 65 exact
-# int64 frame energies and the 64 comparison bits from the generation
-# rule (see _fingerprint_wav_payloads) — no decode.
-_AUDIO_FP_CTES = (
-    "apar AS (SELECT doc_id, 2 + ((doc_id // 3) % 21) % 5 AS a, "
-    "1 + ((doc_id // 3) % 21) % 4 AS b, doc_id % 3 AS v, "
-    "1 + (doc_id % 3) AS c, "
-    "65 * (2 + ((doc_id // 3) % 21) % 3) AS n FROM documents), "
-    "smp AS (SELECT doc_id, n, n // 65 AS L, "
-    "list_transform(range(0, n), i -> "
-    "CASE WHEN v = 2 AND i < n // 65 THEN 0 "
-    "ELSE c * ((a * i * i + b * i) % 512 - 256) END) AS ss FROM apar), "
-    "en AS (SELECT doc_id, n, L, "
-    "list_transform(range(0, 65), f -> "
-    "list_aggregate(list_transform(list_slice(ss, f * L + 1, "
-    "f * L + L), s -> s * s), 'sum')) AS es FROM smp), "
-    "fp AS (SELECT doc_id, n, L, "
-    "list_aggregate(list_transform(range(1, 65), i -> "
-    "CASE WHEN es[i] > es[i + 1] THEN '1' ELSE '0' END), "
-    "'string_agg', '') AS bits FROM en)")
-
-
-def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention (the classic product-analytics rollup): users
-    cohorted by first-active week, then distinct active users per
-    (cohort, weeks-since-cohort) cell.  Two aggregations — a per-user
-    min (map-side partials) and a distinct-count over the deduped
-    (user, week) activity — joined on the user key; all arithmetic in
-    exact epoch-derived integers.  At 100 TB the (user, week) distinct
-    is the only data-sized exchange and it carries two int64s.
-    Oracle = the same two-level aggregation in SQL."""
-    ev = _table(spark, sf_dir, "events")
-    # ts is TIMESTAMP_NTZ: integer seconds from the NTZ epoch, so the
-    # week index is session-timezone-independent (matches DuckDB's
-    # tz-free epoch() on naive timestamps)
-    secs = F.expr("timestampdiff(SECOND, "
-                  "TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
-    week = F.floor(secs / F.lit(7 * 86400))
-    act = (ev.select(F.col("user_id"), week.alias("week"))
-           .distinct())
-    first = act.groupBy("user_id").agg(F.min("week").alias("cohort"))
-    return (act.join(first, "user_id")
-            .groupBy("cohort",
-                     (F.col("week") - F.col("cohort"))
-                     .alias("weeks_since"))
-            .agg(F.countDistinct("user_id").alias("n_users")))
-
-
-def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: events.props is a JSON string;
-    ``get_json_object`` pulls ``$.k`` natively (JVM-side Jackson, no
-    Python), then one grouped aggregation over the typed value.  At
-    100 TB the JSON parse is a per-row projection inside whole-stage
-    codegen — the schema-on-read path every clickstream pipeline
-    needs.  Oracle = DuckDB json_extract_string over the same rows."""
-    ev = _table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (ev.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum(k).alias("sum_k"),
-                 F.min(k).alias("min_k"),
-                 F.max(k).alias("max_k"),
-                 F.sum(F.when(k % 2 == 0, 1).otherwise(0))
-                 .cast("long").alias("n_even")))
-
-
-def _dhash_png_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 18x16 grayscale PNGs for the perceptual-hash ops:
-    pixel(x, y) = (a*x^2 + b*y^2 + x*y) % 200 + v*5 with (a, b) from
-    the doc's group g = (doc_id div 5) % 35 and v = doc_id % 5 a
-    per-doc brightness shift — a uniform shift cancels in every
-    adjacent-cell comparison, so group members dHash identically from
-    DIFFERENT bytes (the exact property perceptual dedup exists to
-    catch); v == 4 additionally saturates the top-left 2x2 pixel
-    block to 255, flipping exactly the bit that compares cell (0,0)
-    to (0,1) — a single-region edit, Hamming 1.  doc_id % 13 == 0
-    gets width 20 (not a multiple of 9) to exercise the
-    unsupported_geometry status row."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def png_udf(ids):
-        import pandas as pd
-
-        from cdx_writer_spark.functions import png as pnglib
-
-        out = []
-        for d in ids:
-            d = int(d)
-            g, v = (d // 5) % 35, d % 5
-            a, b = 3 + g % 7, 1 + g % 5
-            w = 20 if d % 13 == 0 else 18
-            h = 16
-            pix = bytearray(w * h)
-            for y in range(h):
-                for x in range(w):
-                    pix[y * w + x] = ((a * x * x + b * y * y + x * y)
-                                      % 200 + v * 5)
-            if v == 4:
-                for y in (0, 1):
-                    for x in (0, 1):
-                        pix[y * w + x] = 255
-            out.append(pnglib.encode_png(w, h, 1, bytes(pix)))
-        return pd.Series(out)
-
-    docs = _table(spark, sf_dir, "documents").select("doc_id")
-    return docs.withColumn("payload", png_udf("doc_id"))
-
-
-def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dHash (multimodal.image_dhash): REAL PNG
-    decode (stdlib codec) -> integer-exact 9x8 cell-sum grid ->
-    64-bit adjacent-cell difference hash as a portable bit string.
-    The DuckDB oracle re-derives every bit from the pixel generation
-    rule alone (cell sums -> comparisons -> string), so any mis-step
-    in decode, luma, cell binning or bit order breaks the hash."""
-    return multimodal.image_dhash(_dhash_png_payloads(spark, sf_dir))
-
-
-def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup pairs (dedup.bits_near_pairs over
-    multimodal.image_dhash): 4x16-bit banding (pigeonhole recall
-    guarantee for Hamming <= 3) + exact Hamming verify <= 2 — the
-    image-dedup stage of a multimodal corpus build, catching
-    brightness-shifted and single-region-edited copies whose exact
-    digests all differ.  Oracle = brute-force all-pairs Hamming over
-    the arithmetically re-derived hashes."""
-    hashes = multimodal.image_dhash(_dhash_png_payloads(spark, sf_dir))
-    return dedup.bits_near_pairs(hashes, "dhash_bits", id_col="doc_id",
-                                 bit_len=64, max_hamming=2, n_bands=4)
-
-
-def _video_gif_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 4-frame 18x16 animated GIFs for the video
-    perceptual-dedup ops: frame f's pixel(x, y) =
-    ((a+f)*x^2 + b*y^2 + x*y) % 200 + v*5 over the grayscale-ramp
-    palette (index == luma) — group members (same (a, b)) are
-    brightness-shifted copies agreeing on EVERY frame's dHash; v == 4
-    saturates frame 0's top-left 2x2 cell, so those copies agree on
-    3 of 4 frames (the re-edited-copy case frame-voting exists to
-    catch)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def gif_udf(ids):
-        import pandas as pd
-
-        from cdx_writer_spark.functions import gif as giflib
-
-        out = []
-        for d in ids:
-            d = int(d)
-            g, v = (d // 5) % 35, d % 5
-            a, b = 3 + g % 7, 1 + g % 5
-            w, h = 18, 16
-            frames = []
-            for f in range(4):
-                idx = bytearray(
-                    ((a + f) * x * x + b * y * y + x * y) % 200 + v * 5
-                    for y in range(h) for x in range(w))
-                if v == 4 and f == 0:
-                    for y in (0, 1):
-                        for x in (0, 1):
-                            idx[y * w + x] = 255
-                frames.append((w, h, bytes(idx)))
-            out.append(giflib.encode_gif(frames))
-        return pd.Series(out)
-
-    docs = _table(spark, sf_dir, "documents").select("doc_id")
-    return docs.withColumn("payload", gif_udf("doc_id"))
-
-
-def q_video_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-frame video dHash (multimodal.video_frame_dhash): REAL
-    animated-GIF decode (stdlib LZW) -> one integer-exact dHash per
-    frame (1 row in, 4 rows out).  The DuckDB oracle re-derives every
-    frame's 64 bits from the generation rule alone."""
-    return multimodal.video_frame_dhash(
-        _video_gif_payloads(spark, sf_dir))
-
-
-def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-vote video near-dup: frame hashes pair through the SAME
-    generic bits_near_pairs engine (composite (doc, frame) id), then
-    one aggregation counts agreeing frames per video pair — >= 3 of 4
-    frames at Hamming <= 1 declares a near-duplicate video (the
-    shot-level vote that catches re-encoded, brightness-shifted and
-    single-frame-edited copies).  Oracle = brute-force per-frame
-    Hamming + the same vote in SQL."""
-    frames = multimodal.video_frame_dhash(
-        _video_gif_payloads(spark, sf_dir))
-    fid = (F.col("doc_id") * 8 + F.col("frame_idx")).alias("fid")
-    keyed = frames.select(fid, "dhash_bits")
-    pairs = dedup.bits_near_pairs(keyed, "dhash_bits", id_col="fid",
-                                  bit_len=64, max_hamming=1, n_bands=4)
-    same_frame = pairs.filter(
-        (F.col("id_a") % 8) == (F.col("id_b") % 8))
-    votes = (same_frame
-             .groupBy(F.expr("id_a div 8").alias("vid_a"),
-                      F.expr("id_b div 8").alias("vid_b"))
-             .agg(F.count(F.lit(1)).alias("n_frames_matched"),
-                  F.max("hamming").alias("max_hamming")))
-    return votes.filter(F.col("n_frames_matched") >= 3)
-
-
-def _fingerprint_wav_payloads(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Deterministic 16-bit mono WAVs for the audio-fingerprint ops:
-    sample(i) = c * ((a*i^2 + b*i) % 512 - 256) with (a, b) from the
-    doc's group g = (doc_id div 3) % 21, c = 1 + doc_id % 3 a per-doc
-    amplitude scale (energy scales by c^2 uniformly, so scaled copies
-    fingerprint identically from different bytes), n = 65 * (2 + g%3)
-    samples; v == 2 additionally silences frame 0 (a dropout edit —
-    flips exactly the bit comparing energy(0) to energy(1))."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def wav_udf(ids):
-        import io
-        import struct
-        import wave
-
-        import pandas as pd
-
-        out = []
-        for d in ids:
-            d = int(d)
-            g, v = (d // 3) % 21, d % 3
-            a, b, c = 2 + g % 5, 1 + g % 4, 1 + v
-            n = 65 * (2 + g % 3)
-            frame_len = n // 65
-            samples = [0 if (v == 2 and i < frame_len)
-                       else c * ((a * i * i + b * i) % 512 - 256)
-                       for i in range(n)]
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(8000)
-                w.writeframes(struct.pack(f"<{n}h", *samples))
-            out.append(buf.getvalue())
-        return pd.Series(out)
-
-    docs = _table(spark, sf_dir, "documents").select("doc_id")
-    return docs.withColumn("payload", wav_udf("doc_id"))
-
-
-def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio energy-delta fingerprint (audio.audio_fingerprint): REAL
-    WAV decode -> 65 exact int64 frame energies -> 64 adjacent-frame
-    comparison bits as a portable bit string.  The DuckDB oracle
-    re-derives every bit from the waveform generation rule alone —
-    any mis-step in RIFF parsing, sample unpacking, framing or bit
-    order breaks the hash."""
-    from cdx_writer_spark.functions import audio as audiolib
-
-    return audiolib.audio_fingerprint(
-        _fingerprint_wav_payloads(spark, sf_dir))
-
-
-def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-dup pairs — the SAME generic bit-string pair engine
-    as the image tier (dedup.bits_near_pairs), fed by the audio
-    fingerprint: amplitude-scaled copies land at Hamming 0, dropout
-    edits at Hamming 1.  Oracle = brute-force all-pairs Hamming over
-    the arithmetically re-derived fingerprints."""
-    from cdx_writer_spark.functions import audio as audiolib
-
-    fps = audiolib.audio_fingerprint(
-        _fingerprint_wav_payloads(spark, sf_dir))
-    return dedup.bits_near_pairs(fps, "fingerprint_bits",
-                                 id_col="doc_id", bit_len=64,
-                                 max_hamming=2, n_bands=4)
 
 
 def q_term_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1574,12 +1273,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_kn_counts": q_lm_kn_counts,
         "bpe_merges": q_bpe_merges,
         "quality_classifier": q_quality_classifier,
-        "image_dhash": q_image_dhash,
-        "image_near_dup": q_image_near_dup,
-        "audio_fingerprint": q_audio_fingerprint,
-        "audio_near_dup": q_audio_near_dup,
-        "video_dhash": q_video_dhash,
-        "video_near_dup": q_video_near_dup,
         "events_json": q_events_json,
         "events_retention": q_events_retention,
         "bmp_decode": q_bmp_decode,
@@ -1638,7 +1331,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_select": q_dsir_select,
         "text_tfidf": q_text_tfidf,
         "multimodal_meta": q_multimodal_meta,
-        "audio_features": q_audio_features,
         "gif_frames": q_gif_frames,
         "avi_frames": q_avi_frames,
         "jpeg_decode": q_jpeg_decode,
@@ -1995,71 +1687,6 @@ def oracle_sql() -> dict[str, str]:
         "compressed_size || ' ' || \"offset\" || ' ' || warc_file"
     )
     return {
-        # perceptual image dHash: every bit re-derived arithmetically
-        # from the pixel generation rule (the engine decodes REAL PNG
-        # bytes; the oracle never sees them)
-        "image_dhash": (
-            "WITH " + _DHASH_CTES + " "
-            "SELECT doc_id, CAST(18 AS INTEGER) AS width, "
-            "CAST(16 AS INTEGER) AS height, bits AS dhash_bits, "
-            "'ok_png' AS decode_status FROM dh "
-            "UNION ALL SELECT doc_id, CAST(NULL AS INTEGER), "
-            "CAST(NULL AS INTEGER), CAST(NULL AS VARCHAR), "
-            "'unsupported_geometry' FROM documents "
-            "WHERE doc_id % 13 = 0"),
-        # image near-dup: brute-force all-pairs Hamming <= 2 — the
-        # engine must reach the identical pair set through banding +
-        # verify (pigeonhole recall holds: 4 bands cover Hamming <= 3)
-        "image_near_dup": (
-            "WITH " + _DHASH_CTES + " "
-            "SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
-            "CAST(len(list_filter(range(1, 65), i -> "
-            "substr(a.bits, i, 1) <> substr(b.bits, i, 1))) "
-            "AS INTEGER) AS hamming "
-            "FROM dh a JOIN dh b ON a.doc_id < b.doc_id "
-            "WHERE len(list_filter(range(1, 65), i -> "
-            "substr(a.bits, i, 1) <> substr(b.bits, i, 1))) <= 2"),
-        # per-frame video dHash: every frame's 64 bits re-derived
-        # arithmetically (the engine LZW-decodes REAL GIF bytes)
-        "video_dhash": (
-            "WITH " + _VDHASH_CTES + " "
-            "SELECT doc_id, f AS frame_idx, CAST(18 AS INTEGER) AS "
-            "width, CAST(16 AS INTEGER) AS height, bits AS dhash_bits, "
-            "'ok_gif' AS decode_status FROM vdh"),
-        # frame-vote video near-dup: brute-force per-frame Hamming +
-        # the same >= 3-of-4 vote in SQL
-        "video_near_dup": (
-            "WITH " + _VDHASH_CTES + ", "
-            "pr AS (SELECT a.doc_id AS ia, b.doc_id AS ib, "
-            "len(list_filter(range(1, 65), i -> "
-            "substr(a.bits, i, 1) <> substr(b.bits, i, 1))) AS h "
-            "FROM vdh a JOIN vdh b "
-            "ON a.doc_id < b.doc_id AND a.f = b.f) "
-            "SELECT ia AS vid_a, ib AS vid_b, "
-            "COUNT(*) AS n_frames_matched, "
-            "CAST(MAX(h) AS INTEGER) AS max_hamming "
-            "FROM pr WHERE h <= 1 GROUP BY 1, 2 "
-            "HAVING COUNT(*) >= 3"),
-        # audio fingerprint: every bit re-derived arithmetically from
-        # the waveform rule (the engine decodes REAL WAV bytes)
-        "audio_fingerprint": (
-            "WITH " + _AUDIO_FP_CTES + " "
-            "SELECT doc_id, CAST(n AS BIGINT) AS n_samples, "
-            "CAST(L AS INTEGER) AS frame_len, "
-            "bits AS fingerprint_bits, 'ok_wav' AS decode_status "
-            "FROM fp"),
-        # audio near-dup: brute-force all-pairs Hamming <= 2 — the
-        # engine reaches the identical pair set through the SAME
-        # banding engine as the image tier
-        "audio_near_dup": (
-            "WITH " + _AUDIO_FP_CTES + " "
-            "SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
-            "CAST(len(list_filter(range(1, 65), i -> "
-            "substr(a.bits, i, 1) <> substr(b.bits, i, 1))) "
-            "AS INTEGER) AS hamming "
-            "FROM fp a JOIN fp b ON a.doc_id < b.doc_id "
-            "WHERE len(list_filter(range(1, 65), i -> "
-            "substr(a.bits, i, 1) <> substr(b.bits, i, 1))) <= 2"),
         # cohort retention: the same two-level aggregation in SQL
         "events_retention": (
             "WITH act AS (SELECT DISTINCT user_id, "
@@ -2777,27 +2404,6 @@ def oracle_sql() -> dict[str, str]:
             "'application/octet-stream' AS payload_mime, "
             f"sha256({_PAYLOAD_SQL}) AS payload_digest "
             "FROM pages"),
-        # real WAV decode: the oracle re-derives container metadata and
-        # the exact-integer signal features (peak, sum of squares) from
-        # the synth generation rule (n = 64 + doc_id % 129 samples of
-        # (doc_id*31 + i*17) % 2048 - 1024) — pure int64 arithmetic,
-        # bit-identical in both engines
-        "audio_features": (
-            "WITH g AS (SELECT doc_id, 64 + doc_id % 129 AS n "
-            "FROM documents), "
-            "s AS (SELECT doc_id, n, list_transform(range(0, n), "
-            "i -> (doc_id * 31 + i * 17) % 2048 - 1024) AS xs FROM g) "
-            "SELECT doc_id, "
-            "CAST(1 AS INTEGER) AS channels, "
-            "CAST(8000 AS INTEGER) AS sample_rate, "
-            "CAST(2 AS INTEGER) AS sample_width, "
-            "CAST(n AS BIGINT) AS n_frames, "
-            "CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms, "
-            "CAST(list_aggregate(list_transform(xs, x -> abs(x)), "
-            "'max') AS INTEGER) AS peak, "
-            "CAST(list_aggregate(list_transform(xs, x -> x * x), "
-            "'sum') AS BIGINT) AS sum_sq, "
-            "'ok_wav' AS decode_status FROM s"),
         # real GIF decode: frame count / dims / exact-integer luma sums
         # / pixel-CSV md5 all re-derived from the synth generation rule
         # (frame f, pixel p -> (doc_id*7 + f*13 + p*3) % 256; grayscale

@@ -123,7 +123,7 @@ def main() -> None:
             t0 = time.monotonic()
             out = run()
             rep_times.append(round(time.monotonic() - t0, 3))
-            # the near-dup ops cache their candidate frames; release
+            # web_corpus_full caches its stage-boundary frames; release
             # BETWEEN reps too, so every rep measures the same
             # cold-cache plan (and a long session doesn't accumulate
             # dead cached partitions)

@@ -49,16 +49,15 @@ DEFAULT_PARTITIONS = 16
 DEFAULT_CAPACITY = 250_000   # per-partition sizing hint for new blobs
 DEFAULT_FPR = 0.01
 
-#: size gate for the native (broadcast) probe, mirroring dedup.py's
-#: VERIFY_BROADCAST_MAX_PAIRS: strategy='auto' broadcasts the filter
-#: word arrays only while total filter state fits this budget, and
-#: falls back to the per-pid cogroup past it.  The repo's documented
-#: 10^10-key sizing (4096 partitions x ~2.9 MB ≈ 12 GB of filter
-#: state) must NEVER be broadcast — that is an executor/driver OOM —
-#: and with this gate the default config picks cogroup there without
-#: any manual CrawlConfig choice.  256 MiB is conservative against
-#: Spark's broadcast memory accounting (the words are also pinned on
-#: every executor).
+#: size gate for the native (broadcast) probe: strategy='auto'
+#: broadcasts the filter word arrays only while total filter state
+#: fits this budget, and falls back to the per-pid cogroup past it.
+#: The repo's documented 10^10-key sizing (4096 partitions x ~2.9 MB
+#: ≈ 12 GB of filter state) must NEVER be broadcast — that is an
+#: executor/driver OOM — and with this gate the default config picks
+#: cogroup there without any manual CrawlConfig choice.  256 MiB is
+#: conservative against Spark's broadcast memory accounting (the words
+#: are also pinned on every executor).
 NATIVE_BROADCAST_MAX_BYTES = 256 << 20
 
 _CAND_COLS = ["surt_key", "url", "host", "host_rank", "depth"]

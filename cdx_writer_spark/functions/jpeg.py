@@ -22,7 +22,7 @@ and the IDCT of a DC-only block is the constant DC/8+128).  The
 fixture encoder below writes exactly such grayscale JPEGs with the
 spec's Annex-K Huffman tables, so `tests/test_jpeg.py` verifies the
 full marker/Huffman/bitstream/IDCT path against hand-computable
-pixels — the same trick the PNG/GIF/WAV fixtures use.
+pixels — the same trick the PNG/GIF fixtures use.
 
 IDCT note: floating-point 2D separable IDCT with final
 round-half-away-from-zero; for DC-only blocks this is exact, and the

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Image/audio/video payloads are `binary` columns; decode/feature ops run
-as Arrow-batched functions over ``mapInPandas``.
+Image and video payloads are `binary` columns; decode/feature ops
+run as Arrow-batched functions over ``mapInPandas``.
 
 PNG payloads decode/resize FOR REAL via the pure-stdlib codec in
 :mod:`.png` (zlib + struct); GIF payloads — including animated
@@ -889,187 +889,3 @@ def tiff_features(df: DataFrame, bin_col: str = "payload",
     return df.select(id_col, bin_col).mapInPandas(
         kernel, schema=BMP_FEATURES_SCHEMA)
 
-
-IMAGE_DHASH_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("dhash_bits", StringType()),
-    StructField("decode_status", StringType()),
-])
-
-
-def dhash_bits_from_lumas(lumas, w: int, h: int, grid_w: int,
-                          grid_h: int) -> str:
-    """The integer-exact dHash core shared by the still-image and
-    video kernels: cell-SUM grid + adjacent-cell comparison bits
-    (see :func:`image_dhash`).  Caller guarantees divisibility."""
-    bw, bh = w // grid_w, h // grid_h
-    cells = [0] * (grid_w * grid_h)
-    for y in range(h):
-        row_base = (y // bh) * grid_w
-        row_off = y * w
-        for x in range(w):
-            cells[row_base + x // bw] += lumas[row_off + x]
-    return "".join(
-        "1" if cells[r * grid_w + c] > cells[r * grid_w + c + 1]
-        else "0"
-        for r in range(grid_h) for c in range(grid_w - 1))
-
-
-def image_dhash(df: DataFrame, bin_col: str = "payload",
-                id_col: str = "doc_id", grid_w: int = 9,
-                grid_h: int = 8) -> DataFrame:
-    """Perceptual difference-hash over REAL decoded PNG payloads — the
-    image-dedup signature (one 64-bit dHash per image) that feeds
-    :func:`cdx_writer_spark.functions.dedup.bits_near_pairs`: the
-    standard image near-dup stage of a multimodal training-data
-    pipeline (brightness-shifted / re-encoded copies hash identically
-    while exact digests differ).
-
-    Integer-exact dHash variant: the image is partitioned into a
-    ``grid_w x grid_h`` cell grid, each cell's value is the exact
-    int64 SUM of its luma samples (for equal-sized cells, comparing
-    sums IS comparing means — no float resampling), and
-    ``bit(r, c) = cell(r, c) > cell(r, c+1)`` for the ``grid_w - 1``
-    adjacent-cell pairs per row: ``(grid_w-1) * grid_h`` bits, 64 at
-    the 9x8 default.  Width/height must divide evenly into the grid —
-    other geometries get a per-row ``unsupported_geometry`` status
-    (a production variant would bilinear-resample first; exactness is
-    what makes this one oracle-checkable).  Luma for RGB is the same
-    ``(54r + 183g + 19b) // 256`` integer kernel as
-    :func:`jpeg_gray_features`.
-
-    Output: ``(doc_id, width, height, dhash_bits, decode_status)``
-    with ``dhash_bits`` a '0'/'1' string, MSB-first by (row, col) —
-    portable across engines, band-sliceable by substring."""
-    n_bits = (grid_w - 1) * grid_h
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from . import png as pnglib
-
-        def err_row(doc_id, status):
-            out["doc_id"].append(doc_id)
-            out["width"].append(None)
-            out["height"].append(None)
-            out["dhash_bits"].append(None)
-            out["decode_status"].append(status)
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "dhash_bits": [], "decode_status": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                if payload is None:
-                    err_row(doc_id, "null_payload")
-                    continue
-                data = bytes(payload)
-                if not data.startswith(pnglib.PNG_SIGNATURE):
-                    err_row(doc_id, "not_png")
-                    continue
-                try:
-                    w, h, ch, pix = pnglib.decode_png(data)
-                except pnglib.PngError as e:
-                    err_row(doc_id, f"decode_error:{e}")
-                    continue
-                if w % grid_w or h % grid_h:
-                    err_row(doc_id, "unsupported_geometry")
-                    continue
-                if ch == 1:
-                    lumas = pix
-                else:
-                    lumas = [(54 * pix[p] + 183 * pix[p + 1]
-                              + 19 * pix[p + 2]) // 256
-                             for p in range(0, len(pix), ch)]
-                bits = dhash_bits_from_lumas(lumas, w, h, grid_w, grid_h)
-                assert len(bits) == n_bits
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dhash_bits"].append(bits)
-                out["decode_status"].append("ok_png")
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(
-        kernel, schema=IMAGE_DHASH_SCHEMA)
-
-
-VIDEO_DHASH_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("frame_idx", IntegerType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("dhash_bits", StringType()),
-    StructField("decode_status", StringType()),
-])
-
-
-def video_frame_dhash(df: DataFrame, bin_col: str = "payload",
-                      id_col: str = "doc_id", grid_w: int = 9,
-                      grid_h: int = 8) -> DataFrame:
-    """Per-frame perceptual dHash over REAL decoded animated GIFs —
-    the video half of the perceptual-dedup tier: one
-    :func:`dhash_bits_from_lumas` signature per decoded frame (1 row
-    in, n_frames rows out), ready for frame-vote near-dup matching
-    (pair frames with :func:`...dedup.bits_near_pairs` on a composite
-    (doc, frame) id, then count agreeing frames per video pair — the
-    standard shot-level video-dedup shape: re-encoded or
-    brightness-shifted copies agree on every frame, a re-edited copy
-    on most).
-
-    Frames whose geometry doesn't divide the grid yield a per-row
-    ``unsupported_geometry`` status (malformed payloads
-    ``decode_error:*``; sub-rectangle frames hash the frame's OWN
-    rectangle).  Luma is the same integer kernel as
-    :func:`jpeg_gray_features`."""
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from . import gif as giflib
-
-        def err_row(doc_id, status, frame_idx=None):
-            out["doc_id"].append(doc_id)
-            out["frame_idx"].append(frame_idx)
-            out["width"].append(None)
-            out["height"].append(None)
-            out["dhash_bits"].append(None)
-            out["decode_status"].append(status)
-
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "width": [],
-                   "height": [], "dhash_bits": [], "decode_status": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                if payload is None:
-                    err_row(doc_id, "null_payload")
-                    continue
-                data = bytes(payload)
-                if not data.startswith(giflib.GIF_SIGNATURES):
-                    err_row(doc_id, "not_gif")
-                    continue
-                try:
-                    _, _, frames = giflib.decode_gif(data)
-                except giflib.GifError as e:
-                    err_row(doc_id, f"decode_error:{e}")
-                    continue
-                for fi, fr in enumerate(frames):
-                    w, h = fr["width"], fr["height"]
-                    if w % grid_w or h % grid_h:
-                        err_row(doc_id, "unsupported_geometry", fi)
-                        continue
-                    rgb = fr["rgb"]
-                    lumas = [(54 * rgb[p] + 183 * rgb[p + 1]
-                              + 19 * rgb[p + 2]) // 256
-                             for p in range(0, len(rgb), 3)]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(fi)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["dhash_bits"].append(dhash_bits_from_lumas(
-                        lumas, w, h, grid_w, grid_h))
-                    out["decode_status"].append("ok_gif")
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(
-        kernel, schema=VIDEO_DHASH_SCHEMA)

@@ -3,103 +3,18 @@
 The reference's ethos is golden-output verification
 (/root/reference/tests/test_small_warcs.py:108-143); the exact CDX
 pipeline honors that byte-for-byte.  These tests apply the same bar to
-the operators the reference doesn't have: the band-bucket pair engine
-(``bits_near_pairs``), the span dedup the corpus job runs, and the
-Gopher/repetition quality rules, each against hand-built ground truth.
+the operators the reference doesn't have: the span dedup the corpus
+job runs and the Gopher/repetition quality rules, each against
+hand-built ground truth.
 
-Everything is deterministic (seeded signatures, synthetic text from
-index arithmetic), so the asserted counts are regression gates, not
-flaky statistics.
+Everything is deterministic (synthetic text from index arithmetic), so
+the asserted counts are regression gates, not flaky statistics.
 """
 
 from __future__ import annotations
 
-import random
-
-from pyspark.sql import functions as F
-
 from cdx_writer_spark.functions import dedup
 
-
-def _bits(ones) -> str:
-    """A 64-char 0/1 signature with the given bit positions set."""
-    out = ["0"] * 64
-    for i in ones:
-        out[i] = "1"
-    return "".join(out)
-
-
-def _random_bits(rng: random.Random) -> str:
-    return "".join(rng.choice("01") for _ in range(64))
-
-
-def _bits_df(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, bits string")
-
-
-def test_identical_cluster_collapses_before_banding(spark):
-    """The Common-Crawl boilerplate case: a cluster of byte-identical
-    signatures.  Exact pre-collapse keeps the band join at
-    REPRESENTATIVE cardinality (1 row per distinct signature), while
-    the output still contains every intra-cluster pair at the exact
-    score — the output is inherently quadratic in the cluster, the
-    *candidate join* must not be."""
-    k = 400
-    rng = random.Random(7)
-    rows = [(i, _bits([0, 5, 9])) for i in range(k)]
-    rows += [(10_000 + i, _random_bits(rng)) for i in range(5)]
-    got = dedup.bits_near_pairs(_bits_df(spark, rows), "bits")
-    assert got.count() == k * (k - 1) // 2
-    assert got.agg(F.max("hamming")).first()[0] == 0
-    dedup.release_candidate_caches()
-
-
-def test_cross_cluster_pairs_expand_with_exact_score(spark):
-    """Two clusters of identical signatures that are near-duplicates
-    of each other: every cross pair must surface with the same exact
-    Hamming distance the representative pair verified at."""
-    base = _bits([3, 17, 40])
-    near = _bits([3, 17, 40, 62])                 # one bit flipped
-    rows = [(i, base) for i in range(20)]
-    rows += [(100 + i, near) for i in range(20)]
-    got = {(r.id_a, r.id_b): r.hamming for r in dedup.bits_near_pairs(
-        _bits_df(spark, rows), "bits").collect()}
-    dedup.release_candidate_caches()
-    # 2 * C(20,2) intra pairs + 20*20 cross pairs
-    assert len(got) == 2 * (20 * 19 // 2) + 400
-    cross = {p: h for p, h in got.items() if p[0] < 100 <= p[1]}
-    assert len(cross) == 400
-    assert set(cross.values()) == {1}             # one exact score
-
-
-def test_bucket_cap_drops_loudly(spark, caplog):
-    """max_bucket_size excludes oversized buckets and logs the drop —
-    opt-in, never silent (the oracle-checked queries don't set it)."""
-    import logging
-
-    rows = [(i, _bits([1, 2, 3])) for i in range(50)]
-    rows += [(1000, _bits([20, 30])), (1001, _bits([20, 30])),
-             # one bit from the 50-clone cluster: found only by banding
-             (2000, _bits([1, 2, 3, 60]))]
-    df = _bits_df(spark, rows)
-    uncapped = {(r.id_a, r.id_b) for r in
-                dedup.bits_near_pairs(df, "bits").collect()}
-    assert (0, 2000) in uncapped
-    # the 50-clone cluster collapses to ONE rep, so to exercise the cap
-    # we cap at 0: every bucket (size >= 1) is oversized
-    with caplog.at_level(logging.WARNING,
-                         logger="cdx_writer_spark.functions.dedup"):
-        got = dedup.bits_near_pairs(df, "bits",
-                                    max_bucket_size=0).collect()
-    dedup.release_candidate_caches()
-    assert any("oversized buckets" in r.message for r in caplog.records)
-    # banding contributed nothing; intra-cluster pairs still exact
-    pairs = {(r.id_a, r.id_b) for r in got}
-    assert (1000, 1001) in pairs and (0, 2000) not in pairs
-    assert len(pairs) == 50 * 49 // 2 + 1
-
-
-# --- duplicate-span removal (C4-style) ----------------------------------------
 
 def test_drop_duplicate_spans_keeps_global_first_occurrence(spark):
     """Engineered spans: a 3-word span shared by two docs survives only

@@ -56,7 +56,8 @@ def test_corpus_cdx_lines_identical_with_native_split(spark, tmp_path):
     pages = warc_source.read_warc(spark, str(d)).cache()
     try:
         udf_lines = sorted(r.cdx_line for r in cdx_lines(
-            pages, CDXConfig(all_records=True), sort=False).collect())
+            pages, CDXConfig(all_records=True, native_split=False),
+            sort=False).collect())
         nat_lines = sorted(r.cdx_line for r in cdx_lines(
             pages, CDXConfig(all_records=True, native_split=True),
             sort=False).collect())

@@ -39,28 +39,6 @@ def test_column_pruning_on_narrow_format(spark, tmp_path):
     assert "url" in scan_line
 
 
-def _doc_signatures(spark):
-    """(doc_id, 64-char bit signature) over the documents table — the
-    input shape of the band-bucket pair engine."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    return docs.select("doc_id", F.lpad(F.bin(F.xxhash64("text")), 64,
-                                        "0").alias("bits"))
-
-
-def test_near_dup_exchanges_are_narrow(spark):
-    """Candidate-pair dedup must never shuffle the signature payloads
-    per pair: every aggregate in the near-dup plan keys on the narrow
-    gkey projection, signatures re-joined only afterwards."""
-    from cdx_writer_spark.functions import dedup
-
-    plan = _plan(dedup.bits_near_pairs(_doc_signatures(spark), "bits"))
-    dedup.release_candidate_caches()
-    agg_lines = [ln for ln in plan.splitlines() if "HashAggregate" in ln]
-    assert any("gkey_a" in ln for ln in agg_lines)
-    for ln in agg_lines:
-        assert "bits_a#" not in ln and "bits_b#" not in ln, ln
-
-
 def test_textstats_stays_in_codegen(spark):
     from cdx_writer_spark.functions import textstats
 
@@ -86,70 +64,21 @@ def test_dedup_is_partial_aggregated(spark):
     assert plan.count("HashAggregate") >= 2  # partial + final
 
 
-def test_near_dup_verify_is_candidate_pruned(spark):
-    """The exact-verification side must read payloads only for rows
-    that survived banding: the candidate set is persisted (one banding
-    execution, reused by every consumer) and its keys are BROADCAST
-    onto the representative rows — never a second full-corpus pass."""
-    from cdx_writer_spark.functions import dedup
-
-    plan = _plan(dedup.bits_near_pairs(_doc_signatures(spark), "bits"))
-    dedup.release_candidate_caches()
-    # persisted candidates: banding runs once, consumers read cache
-    assert "InMemoryTableScan" in plan, plan[:2000]
-    # the candidate-keys prune is a broadcast join, not a shuffle
-    assert "BroadcastExchange" in plan
-
-
-def test_verify_prune_broadcast_is_size_gated(spark):
-    """Above ``verify_broadcast_limit`` candidate pairs the prune must
-    NOT force-hint a broadcast of the key set — at 10^10 docs the
-    distinct candidate keys are a multi-GB relation and a forced
-    broadcast is a driver/executor OOM.  The fallback is a plain join
-    whose strategy AQE picks from runtime sizes (so with the auto
-    threshold disabled, the pre-adaptive plan is a shuffle join)."""
-    from cdx_writer_spark.functions.dedup import _pruned_reps
-
-    reps = spark.createDataFrame(
-        [(f"k{i}", f"text {i}") for i in range(20)], "gkey string, text string")
-    cand = spark.createDataFrame(
-        [(f"k{i}", f"k{i + 1}") for i in range(10)],
-        "gkey_a string, gkey_b string").persist()
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # below the gate: forced broadcast even with auto-broadcast off
-        below = _pruned_reps(reps, cand, verify_broadcast_limit=1000)
-        plan_b = below._jdf.queryExecution().sparkPlan().toString()
-        assert "BroadcastHashJoin" in plan_b, plan_b
-        # above the gate (10 pairs > limit of 4): plain join, no hint
-        above = _pruned_reps(reps, cand, verify_broadcast_limit=4)
-        plan_a = above._jdf.queryExecution().sparkPlan().toString()
-        assert "BroadcastHashJoin" not in plan_a, plan_a
-        assert "Join" in plan_a
-        # semantics identical either way
-        assert sorted(r["gkey"] for r in above.collect()) == \
-            sorted(r["gkey"] for r in below.collect())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        cand.unpersist()
-
-
 def test_release_candidate_caches(spark):
-    """The pair-enumeration ops register their persisted candidate
-    frames; release_candidate_caches unpersists them all (a long-lived
-    session must have a release path — Spark's CacheManager never GCs
-    explicit persists)."""
+    """Frames registered through _persist_candidates (the corpus
+    queries' stage boundaries) are all unpersisted by
+    release_candidate_caches (a long-lived session must have a release
+    path — Spark's CacheManager never GCs explicit persists)."""
+    from pyspark import StorageLevel
+
     from cdx_writer_spark.functions import dedup
 
     dedup.release_candidate_caches()  # drain anything earlier tests left
-    sigs = spark.createDataFrame(
-        [(i, "01" * 32 if i % 2 else "10" * 32) for i in range(20)],
-        "doc_id long, bits string")
-    pairs = dedup.bits_near_pairs(sigs, "bits")   # signatures + candidates
-    dedup.connected_components(pairs)             # + the labels
-    assert dedup.release_candidate_caches() == 3
+    frames = [dedup._persist_candidates(spark.range(n)) for n in (10, 20)]
+    assert all(f.storageLevel != StorageLevel.NONE for f in frames)
+    assert dedup.release_candidate_caches() == 2
     assert dedup.release_candidate_caches() == 0
+    assert all(f.storageLevel == StorageLevel.NONE for f in frames)
 
 
 def test_http_split_returns_no_payload_bytes(spark):

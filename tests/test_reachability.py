@@ -40,7 +40,6 @@ ROOT_FILE_GLOBS = ("jobs/*.py", "perfbench/*.py",
 UNREACHED = {
     # registry-only media family; it goes, with its queries and tests,
     # in a later deletion (ROADMAP item 6)
-    f"{PKG}.functions.audio": "audio queries only",
     f"{PKG}.functions.multimodal": "media decode queries only",
     f"{PKG}.functions.png": "codec behind multimodal",
     f"{PKG}.functions.gif": "codec behind multimodal",
@@ -139,25 +138,12 @@ def test_unreached_list_is_current():
 # group goes, with its registry queries and tests, in a later deletion
 # (ROADMAP items 4 and 5) or when a job calls it.
 UNREACHED_FUNCS = {
-    "bit-string pair engine behind the media near-dup queries "
-    "(image_near_dup, video_near_dup, audio_near_dup)": (
-        "functions.dedup.bits_near_pairs",
-        "functions.dedup._banded_candidate_pairs",
-        "functions.dedup._cap_buckets",
-        "functions.dedup._exact_groups",
-        "functions.dedup._expand_rep_pairs",
-        "functions.dedup._intra_group_pairs",
-        "functions.dedup._pruned_reps",
-        "functions.dedup._persist_candidates",
-    ),
     "exact dedup: only the dedup_exact query calls it": (
         "functions.dedup.exact_dedup",
     ),
-    "candidate-cache release: only bench.py calls it": (
+    "candidate caches: `q_web_corpus_full` and `bench.py`": (
+        "functions.dedup._persist_candidates",
         "functions.dedup.release_candidate_caches",
-    ),
-    "pair-list clustering: no caller but its tests": (
-        "functions.dedup.connected_components",
     ),
     "text search and statistics operators only registry queries call": (
         "functions.textstats.bm25_topk",
