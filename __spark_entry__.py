@@ -292,8 +292,8 @@ def q_web_corpus_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and drop_duplicate_spans consumes its input twice (explode +
     # rebuild) — without these persists the extraction subtree would
     # re-execute ~4-6x.  Registered on the shared release path
-    # (dedup.release_candidate_caches) like every other cached frame.
-    passing = dedup._persist_candidates(
+    # (dedup.release_stage_caches) like every other cached frame.
+    passing = dedup.persist_stage(
         ext.select("doc_id", "url", "text").join(
             gq.filter(F.col("passes")).select("doc_id"), "doc_id"))
     banned = decontam.banned_ngram_digests(
@@ -304,7 +304,7 @@ def q_web_corpus_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = F.concat(F.col("text"), _pii_aug_col())
     scrub_in = survivors.select("doc_id", "url", planted.alias("text"))
     t = F.col("text")
-    scrubbed = dedup._persist_candidates(scrub_in.select(
+    scrubbed = dedup.persist_stage(scrub_in.select(
         "doc_id", "url", pii.scrub_col(t).alias("text"),
         *pii.pii_counts(t)))
     clean = dedup.drop_duplicate_spans(

@@ -105,7 +105,7 @@ def main() -> None:
         F.sum(_warm(F.col("id")))).collect()
     spark.range(1000).select(F.sum("id")).collect()
 
-    from cdx_writer_spark.functions.dedup import release_candidate_caches
+    from cdx_writer_spark.functions.dedup import release_stage_caches
 
     # noise control: every entry runs REPS warm repetitions and reports
     # the BEST — single-pass numbers on a co-tenant box have mis-flagged
@@ -127,11 +127,11 @@ def main() -> None:
             # BETWEEN reps too, so every rep measures the same
             # cold-cache plan (and a long session doesn't accumulate
             # dead cached partitions)
-            release_candidate_caches()
+            release_stage_caches()
         timings[name] = min(rep_times)
         reps[name] = rep_times
         rows[name] = rows_of(out)
-        release_candidate_caches()
+        release_stage_caches()
     shutil.rmtree(out_dir, ignore_errors=True)
 
     # frontier crawl rounds — the north rule's scheduling path (URL-seen

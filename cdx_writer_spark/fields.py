@@ -3,7 +3,9 @@
 Native Catalyst everywhere the semantics allow (date normalization, URL
 safety transform, MIME parse/validation, status extraction, robots-flag
 assembly, SHA-1/base32 checksum, size/offset/name passthroughs); Arrow
-pandas UDFs only for SURT and the HTML meta scan (see udfs.py).  Column names
+pandas UDFs only for SURT and the HTML meta scan (see udfs.py), and on
+archive input not even those: the splitter kernel's columns stand in
+(``cdx_field_steps(source=True)``).  Column names
 are FIELD_MAP descriptive names with underscores (single-letter codes
 would collide under Spark's case-insensitive resolution: 'S' vs 's').
 
@@ -16,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .schema import FAKE_BUILD_VERSION, META_PARSE_LIMIT
+from .schema import FAKE_BUILD_VERSION, META_PARSE_LIMIT, SOURCE_PREFIX
 from .udfs import make_surt_udf, meta_tags_udf
 
 
@@ -36,7 +38,7 @@ def safe_url_column(url: Column) -> Column:
     (fixture formfeed_in_url shows %0C)."""
     u = F.when(
         url.startswith("<") & url.endswith(">"),
-        F.expr("substring(url, 2, length(url) - 2)"),
+        url.substr(F.lit(2), F.length(url) - 2),
     ).otherwise(url)
     u = F.replace(u, F.lit("\r"), F.lit(""))
     for ch, enc in ((" ", "%20"), ("\n", "%0A"), ("\x0c", "%0C"), ("\x08", "%08")):
@@ -216,39 +218,34 @@ def checksum_column(handler: Column, warc_headers: Column, html: Column,
 
 # --- M: AIF meta tags / robots flags (cdx_writer.py:248-254, 461-554) ---------
 
-def meta_input_col(handler: Column, mime_type: Column, payload: Column,
-                   content_length: Column, html: Column,
-                   payload_present: Column | None = None) -> Column:
-    """The meta-parse gate shared by the M field and the text
-    extraction's charset sniff: text/html responses only,
-    blank/oversized -> no payload crosses into Python
-    (cdx_writer.py:471-486; the >5MB limit compares the record content
-    length, :485).  ONE definition so the two consumers can never
-    drift — and since both call ``meta_tags_udf`` on the identical
-    expression, Catalyst deduplicates them into a single Arrow pass.
+def meta_tags_column(handler: Column, mime_type: Column, payload: Column,
+                     content_length: Column, html: Column,
+                     payload_present: Column,
+                     source_meta: Column | None = None) -> Column:
+    """The HTML meta-tag map of a flagged frame's row, read by the M
+    field and by the text extraction's charset sniff.  Gate: text/html
+    responses only, blank/oversized -> NULL (cdx_writer.py:471-486;
+    the >5MB limit compares the record content length, :485).
 
-    ``payload_present``: the flagged frame passes its cheap
-    offset-nullness boolean here so the gate never evaluates the
-    native payload slice (a byte copy) just to test for NULL — the
-    slice runs only for rows that pass the whole gate."""
-    present = (payload.isNotNull() if payload_present is None
-               else payload_present)
+    Over PAGES_SCHEMA input the map is ``meta_tags_udf`` of the gated
+    payload: only rows that pass the gate send their payload to
+    Python.  ``payload_present`` is the flagged frame's cheap
+    offset-nullness boolean, so the gate never evaluates the native
+    payload slice (a byte copy) just to test for NULL.  Archive input
+    passes ``source_meta``, the map the splitter kernel parsed for a
+    superset of the gated rows (``warc_source.source_columns``); the
+    gate then only picks which of its values count."""
     eff_len = F.coalesce(content_length, F.octet_length(html))
-    return F.when(
-        (handler == "response") & (mime_type == "text/html")
-        & present & (eff_len <= META_PARSE_LIMIT),
-        payload,
-    ).otherwise(F.lit(None))
+    gate = ((handler == "response") & (mime_type == "text/html")
+            & payload_present & (eff_len <= META_PARSE_LIMIT))
+    if source_meta is not None:
+        return F.when(gate, source_meta)
+    return meta_tags_udf(F.when(gate, payload).otherwise(F.lit(None)))
 
 
-def aif_meta_tags_column(handler: Column, mime_type: Column, payload: Column,
-                         content_length: Column, html: Column,
-                         http_headers: Column, warc_headers: Column,
-                         payload_present: Column | None = None) -> Column:
-    meta = meta_tags_udf(meta_input_col(handler, mime_type, payload,
-                                        content_length, html,
-                                        payload_present))
-
+def aif_meta_tags_column(handler: Column, meta: Column,
+                         http_headers: Column,
+                         warc_headers: Column) -> Column:
     robots_meta = F.element_at(meta, F.lit("robots"))
     x_robots = F.nullif(
         F.regexp_extract(http_headers, r"(?im)^x-robots-tag:\s*(.+?)\s*$", 1),
@@ -312,11 +309,15 @@ def charset_column(http_headers: Column, meta_tags: Column) -> Column:
 
 def cdx_field_steps(*, host_massage: bool = True,
                     screenshot_mode: bool = False,
-                    g_prefix: str | None = None) -> list[tuple[str, Column]]:
-    """The 11 field columns (plus the ``_safe_url`` helper they share)
-    as ordered ``(name, Column)`` steps for ``withColumn``, over a pages
-    frame that already carries ``handler``, ``http_headers``,
-    ``payload`` (see job.py, which builds them once per config)."""
+                    g_prefix: str | None = None,
+                    source: bool = False) -> list[tuple[str, Column]]:
+    """The 11 field columns (plus the ``_safe_url`` and ``meta_tags``
+    helpers they share) as ordered ``(name, Column)`` steps for
+    ``withColumn``, over a pages frame that already carries
+    ``handler``, ``http_headers``, ``payload`` (see job.py, which
+    builds them once per config).  ``source``: the frame carries the
+    archive splitter's SOURCE_FIELDS, which then stand in for the SURT
+    UDF (host massage on, no screenshot mode) and the meta UDF."""
     h = F.col("handler")
     safe = F.col("_safe_url")
 
@@ -332,14 +333,21 @@ def cdx_field_steps(*, host_massage: bool = True,
     )
 
     # N: massaged url (:128-136; warcinfo :267-269; screenshot :582-583)
-    surt_fb = make_surt_udf(host_massage=host_massage, fallback=True)
-    massaged = surt_fb(safe)
+    if source and host_massage and not screenshot_mode:
+        massaged = F.col(SOURCE_PREFIX + "massaged_url")
+    else:
+        massaged = make_surt_udf(host_massage=host_massage,
+                                 fallback=True)(safe)
     if screenshot_mode:
+        # the strict key raises on URLs it cannot parse, so only
+        # screenshot rows may reach it: a when() around the UDF call
+        # does not stop the UDF node evaluating every row
         surt_strict = make_surt_udf(host_massage=host_massage, fallback=False)
+        is_shot = h == "screenshot"
         massaged = F.when(
-            h == "screenshot",
+            is_shot,
             F.concat(F.lit("org,archive,web)/screenshot/"),
-                     surt_strict(safe)),
+                     surt_strict(F.when(is_shot, safe))),
         ).otherwise(massaged)
     massaged = F.when(h == "warcinfo", original).otherwise(massaged)
 
@@ -363,11 +371,15 @@ def cdx_field_steps(*, host_massage: bool = True,
                          F.col("http_headers"), F.col("payload"))),
         # r is unconditionally '-' since Sept 2012 (cdx_writer.py:287-293)
         ("redirect", F.lit(None).cast("string")),
+        ("meta_tags",
+         meta_tags_column(h, F.col("mime_type"), F.col("payload"),
+                          F.col("content_length"), F.col("html"),
+                          F.col("payload_present"),
+                          F.col(SOURCE_PREFIX + "meta_tags")
+                          if source else None)),
         ("aif_meta_tags",
-         aif_meta_tags_column(h, F.col("mime_type"), F.col("payload"),
-                              F.col("content_length"), F.col("html"),
-                              F.col("http_headers"), F.col("warc_headers"),
-                              F.col("payload_present"))),
+         aif_meta_tags_column(h, F.col("meta_tags"), F.col("http_headers"),
+                              F.col("warc_headers"))),
         ("compressed_record_size",
          F.col("compressed_size").cast("string")),  # :232-239
         ("compressed_arc_file_offset",

@@ -37,37 +37,37 @@ def bind_once(col: Column, fn) -> Column:
     Catalyst's CollapseProject + ColumnPruning freely inline a column's
     defining expression into every consumer — including into
     higher-order-function lambda bodies, where the inlined argument is
-    re-evaluated on EVERY iteration (a 32-hash signature sliced per
-    band re-tokenized each document 32x: 93s vs 5s per pass at
-    sf0.1).  A lambda-bound
-    variable cannot be inlined, so this is the load-bearing
-    materialization barrier for every expensive expression referenced
-    inside an iterating lambda."""
+    re-evaluated on EVERY iteration (``spans_col`` would re-split the
+    document once per span), and into every consumer of a wide
+    projection (the 32 base32 symbols of ``fields.sha1_b32_column``
+    would each re-hash the payload).  A lambda-bound variable cannot
+    be inlined, so this is the load-bearing materialization barrier
+    for every expensive expression referenced many times."""
     return F.transform(F.array(col), fn)[0]
 
 
 # stage-boundary frames persisted by the corpus queries, released via
-# release_candidate_caches() (Spark's CacheManager never GCs these)
-_CANDIDATE_CACHES: list[DataFrame] = []
+# release_stage_caches() (Spark's CacheManager never GCs these)
+_STAGE_CACHES: list[DataFrame] = []
 
 
-def _persist_candidates(cand: DataFrame) -> DataFrame:
+def persist_stage(df: DataFrame) -> DataFrame:
     """Persist a frame that several consumers read (a corpus stage
     boundary) and register it for explicit release."""
-    cand = cand.persist()
-    _CANDIDATE_CACHES.append(cand)
-    return cand
+    df = df.persist()
+    _STAGE_CACHES.append(df)
+    return df
 
 
-def release_candidate_caches() -> int:
-    """Unpersist every frame cached by :func:`_persist_candidates`
+def release_stage_caches() -> int:
+    """Unpersist every frame cached by :func:`persist_stage`
     since the last release; returns how many were released.
     Long-lived sessions that run the corpus queries repeatedly should
     release once each result is materialized — the cache only exists
     so a stage runs once per query, not per consumer."""
-    n = len(_CANDIDATE_CACHES)
-    while _CANDIDATE_CACHES:
-        _CANDIDATE_CACHES.pop().unpersist()
+    n = len(_STAGE_CACHES)
+    while _STAGE_CACHES:
+        _STAGE_CACHES.pop().unpersist()
     return n
 
 

@@ -140,7 +140,7 @@ def extracted_text_column(handler: Column, mime_type: Column,
     The eligibility mask is applied to the UDF *input* (ineligible rows
     ship NULL, not multi-MB payloads, across Arrow — same masking
     discipline as the digest/meta UDFs, ``udfs.py`` module docstring).
-    ``payload_present`` works as in ``fields.meta_input_col``: the
+    ``payload_present`` works as in ``fields.meta_tags_column``: the
     flagged frame's cheap offset-nullness boolean replaces a NULL test
     that would otherwise evaluate the native payload slice.
     """
@@ -290,26 +290,18 @@ def extract_text(pages: DataFrame, cfg=None) -> DataFrame:
     from ``html`` (NULL where ineligible).
 
     Runs the shared dispatch pipeline (``job.cdx_flagged``) so the
-    HTTP split/meta parse happen exactly once, then projects back to
-    the input's columns — a pure per-row map, no shuffle.
+    HTTP split/meta parse happen exactly once (in the archive splitter
+    for ``read_warc`` input), then projects back to the input's
+    columns — a pure per-row map, no shuffle.
     """
-    from ..fields import meta_input_col
     from ..job import CDXConfig, cdx_flagged
-    from ..udfs import meta_tags_udf
 
-    cfg = cfg or CDXConfig()
-    flagged = cdx_flagged(pages, cfg)
-    # charset sniff needs the meta map; the gate is the SHARED M-field
-    # gate (fields.meta_input_col) — identical expression, so Catalyst
-    # collapses this meta_tags_udf call with the M field's into one
-    # Arrow pass when both are computed
-    meta_input = meta_input_col(
-        F.col("handler"), F.col("mime_type"), F.col("payload"),
-        F.col("content_length"), F.col("html"),
-        F.col("payload_present"))
+    flagged = cdx_flagged(pages, cfg or CDXConfig())
+    # the charset sniff reads the flagged frame's meta map, the same
+    # column the M field reads (fields.meta_tags_column)
     text = extracted_text_column(
         F.col("handler"), F.col("mime_type"), F.col("payload"),
-        F.col("http_headers"), meta_tags_udf(meta_input),
+        F.col("http_headers"), F.col("meta_tags"),
         F.col("payload_present"))
     out_cols = [text.alias(c) if c == "text" else c for c in pages.columns]
     return flagged.select(*out_cols)

@@ -6,7 +6,10 @@ admission filter → field columns → exclusion anti-filter → line
 assembly — so Catalyst prunes unused field columns when a narrow
 ``--format`` is requested (the reference gets the same effect from lazy
 properties + attrgetter, :766-778) and pushes record_type/content_type
-predicates into the parquet/Iceberg scan.
+predicates into the parquet/Iceberg scan.  On archive input
+(``warc_source.read_warc``) the http-split, SURT and meta-tag columns
+arrive from the splitter kernel, so the projection is all native;
+``projection_key`` is the one place that tells the two inputs apart.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from pyspark.sql import functions as F
 from .canonicalize import surt_key
 from .dispatch import content_length_ok, handler_column
 from .fields import cdx_field_steps, field_column_name
-from .schema import DEFAULT_FORMAT
+from .schema import DEFAULT_FORMAT, SOURCE_FIELDS, SOURCE_PREFIX
 from .udfs import http_split, native_http_split_struct
 
 
@@ -42,6 +45,8 @@ class CDXConfig:
     # measured 18-27% faster warm at sf0.1 amplify=20 and removes the
     # admission path's largest Python stage).  False selects the
     # Arrow-UDF split (udfs.http_split), kept as the cross-check twin.
+    # Archive input (read_warc) carries the split already and ignores
+    # this knob.
     native_split: bool = True
 
     def field_codes(self) -> list[str]:
@@ -103,7 +108,7 @@ class _Projection:
     checksum tree alone is ~330) that yields the same expressions every
     time, so ``_projection`` builds them once and each job only applies
     them."""
-    split: Column                               # the HTTP block parse
+    split: tuple[Column, ...]                   # the HTTP block parse
     http_fields: tuple[tuple[str, Column], ...]  # UDF split only
     payload: Column
     payload_present: Column
@@ -118,40 +123,54 @@ class _Projection:
 _PROJECTIONS: dict = {}
 
 
-def projection_key(cfg: CDXConfig) -> tuple:
-    """The memo key of ``_projection``: the config AND the active
+_SOURCE_NAMES = frozenset(f.name for f in SOURCE_FIELDS)
+# the split's columns, named as the flagged frame carries them
+_SPLIT_COLUMNS = ("http_headers", "body_off", "http_status",
+                  "http_version", "http_ct")
+
+
+def projection_key(cfg: CDXConfig, columns=()) -> tuple:
+    """The memo key of ``_projection``: the config, whether the input
+    frame (its ``columns``) carries the archive splitter's derived
+    SOURCE_FIELDS (``warc_source.read_warc``), and the active
     SparkContext.  Pandas-UDF Columns capture the context that created
     them, so a stopped and restarted session must rebuild."""
-    return cfg, SparkContext._active_spark_context
+    return (cfg, _SOURCE_NAMES <= set(columns),
+            SparkContext._active_spark_context)
 
 
-def _projection(cfg: CDXConfig) -> _Projection:
-    key = projection_key(cfg)
+def _projection(cfg: CDXConfig, columns=()) -> _Projection:
+    key = projection_key(cfg, columns)
     proj = _PROJECTIONS.get(key)
     if proj is None:
-        if any(k[1] is not key[1] for k in _PROJECTIONS):
+        if any(k[-1] is not key[-1] for k in _PROJECTIONS):
             _PROJECTIONS.clear()  # drop a stopped context's Columns
-        proj = _PROJECTIONS[key] = _build_projection(cfg)
+        proj = _PROJECTIONS[key] = _build_projection(cfg, key[1])
     return proj
 
 
-def _build_projection(cfg: CDXConfig) -> _Projection:
-    masked = (F.when(F.col("record_type") == "response", F.col("html"))
-              .otherwise(F.lit(None)))
-    if cfg.native_split:
-        # pure-Catalyst split: inline(array(struct)) is a Generate
-        # node — the materialization barrier that stops projection
-        # collapse re-inlining the parse into every field consumer
-        # (same role the ArrowEvalPython node plays for the UDF)
-        split = F.inline(F.array(native_http_split_struct(masked)))
-        http_fields = ()
+def _build_projection(cfg: CDXConfig, source: bool) -> _Projection:
+    http_fields = ()
+    if source:
+        # archive input: the splitter kernel already split the block
+        split = tuple(F.col(SOURCE_PREFIX + c).alias(c)
+                      for c in _SPLIT_COLUMNS)
     else:
-        split = http_split(masked)
-        http_fields = tuple(
-            (name, F.col("_http." + attr)) for name, attr in (
-                ("http_headers", "headers"), ("_body_off", "body_off"),
-                ("http_status", "status"), ("http_version", "version"),
-                ("http_ct", "ct")))
+        masked = (F.when(F.col("record_type") == "response", F.col("html"))
+                  .otherwise(F.lit(None)))
+        if cfg.native_split:
+            # pure-Catalyst split: inline(array(struct)) is a Generate
+            # node — the materialization barrier that stops projection
+            # collapse re-inlining the parse into every field consumer
+            # (same role the ArrowEvalPython node plays for the UDF)
+            split = (F.inline(F.array(native_http_split_struct(masked))),)
+        else:
+            split = (http_split(masked).alias("_http"),)
+            http_fields = tuple(
+                (name, F.col("_http." + attr)) for name, attr in (
+                    ("http_headers", "headers"), ("_body_off", "body_off"),
+                    ("http_status", "status"), ("http_version", "version"),
+                    ("http_ct", "ct")))
     inc = F.col("admitted") & ~F.col("excluded")
     return _Projection(
         split=split,
@@ -179,7 +198,8 @@ def _build_projection(cfg: CDXConfig) -> _Projection:
                   & content_length_ok(F.col("content_length"))),
         fields=tuple(cdx_field_steps(
             host_massage=cfg.host_massage,
-            screenshot_mode=cfg.screenshot_mode, g_prefix=cfg.g_prefix)),
+            screenshot_mode=cfg.screenshot_mode, g_prefix=cfg.g_prefix,
+            source=source)),
         excluded=(F.col("admitted")
                   & excluded_column(F.col("massaged_url"),
                                     cfg.exclude_surts())),
@@ -204,11 +224,9 @@ def cdx_flagged(pages: DataFrame, cfg: CDXConfig | None = None) -> DataFrame:
     per input record, so stats can aggregate the same flags the filters
     use (single-pass, like the reference's inline counters :830-853)."""
     cfg = cfg or CDXConfig()
-    p = _projection(cfg)
-    if cfg.native_split:
-        df = pages.select("*", p.split)
-    else:
-        df = pages.withColumn("_http", p.split)
+    p = _projection(cfg, pages.columns)
+    df = pages.select("*", *p.split)
+    if p.http_fields:
         for name, col in p.http_fields:
             df = df.withColumn(name, col)
         df = df.drop("_http").withColumnRenamed("_body_off", "body_off")
@@ -248,9 +266,10 @@ def cdx_records(pages: DataFrame, cfg: CDXConfig | None = None) -> DataFrame:
     )
 
 
-def cdx_line_column(cfg: CDXConfig) -> Column:
-    """Space-joined line with None -> '-' (cdx_writer.py:850-851)."""
-    return _projection(cfg).line
+def cdx_line_column(cfg: CDXConfig, columns=()) -> Column:
+    """Space-joined line with None -> '-' (cdx_writer.py:850-851).
+    ``columns``: the input frame's, to reuse its memoized projection."""
+    return _projection(cfg, columns).line
 
 
 def cdx_lines(pages: DataFrame, cfg: CDXConfig | None = None,
@@ -261,7 +280,8 @@ def cdx_lines(pages: DataFrame, cfg: CDXConfig | None = None,
     exactly C-locale byte order.  sort=False preserves file order via
     (warc_file, offset)."""
     cfg = cfg or CDXConfig()
-    df = cdx_records(pages, cfg).withColumn("cdx_line", cdx_line_column(cfg))
+    df = cdx_records(pages, cfg).withColumn(
+        "cdx_line", cdx_line_column(cfg, pages.columns))
     if sort:
         # distributed range-partitioned sort (sampled bounds, AQE-skew safe)
         return df.select("cdx_line").orderBy("cdx_line")
@@ -277,7 +297,7 @@ def cdx_lines_per_file(pages: DataFrame,
     cfg = cfg or CDXConfig()
     recs = cdx_records(pages, cfg)
     return (
-        recs.withColumn("cdx_line", cdx_line_column(cfg))
+        recs.withColumn("cdx_line", cdx_line_column(cfg, pages.columns))
         .repartition(F.col("warc_file"))
         .sortWithinPartitions(*file_order_cols(recs))
         .select("warc_file", "cdx_line")
@@ -295,15 +315,17 @@ STATS_COLUMNS = (
     "num_records_processed", "num_records_included", "num_records_filtered")
 
 
-def stats_aggregation(cfg: CDXConfig | None = None) -> list[Column]:
+def stats_aggregation(cfg: CDXConfig | None = None,
+                      columns=()) -> list[Column]:
     """The reference's three counters (cdx_writer.py:805-809, 830, 843,
     853) as aggregate expressions over a cdx_flagged frame; usable with
     .agg() or .observe() for single-pass stats during a write.  They
     do not depend on the config; passing the job's config only reuses
-    its memoized projection."""
-    return list(_projection(cfg or CDXConfig()).stats)
+    its memoized projection (for the input frame's ``columns``)."""
+    return list(_projection(cfg or CDXConfig(), columns).stats)
 
 
 def cdx_stats(pages: DataFrame, cfg: CDXConfig | None = None) -> dict:
-    row = cdx_flagged(pages, cfg).agg(*stats_aggregation(cfg)).collect()[0]
+    row = cdx_flagged(pages, cfg).agg(
+        *stats_aggregation(cfg, pages.columns)).collect()[0]
     return {k: int(row[k] or 0) for k in STATS_COLUMNS}

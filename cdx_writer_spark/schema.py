@@ -48,6 +48,28 @@ PAGES_SCHEMA = StructType([
     StructField("record_seq", LongType()),
 ])
 
+# Columns ``warc_source.read_warc`` adds to PAGES_SCHEMA: what the CDX
+# projection would otherwise send to Python, computed by the archive
+# splitter while each record is still in Python.  The HTTP split
+# (``udfs.split_http_block``; response records only), the field-N SURT
+# with host massage on, and the meta-tag map (``udfs.parse_meta_tags``)
+# of HTML payloads within META_PARSE_LIMIT.  ``job.cdx_flagged`` reads
+# them in place of its own split and UDFs when a frame carries all of
+# them.  The prefix keeps them apart from the flagged frame's own
+# ``http_*``/``body_off``/``massaged_url``/``meta_tags`` columns.
+SOURCE_PREFIX = "_src_"
+SOURCE_FIELDS = [
+    StructField(SOURCE_PREFIX + name, dtype) for name, dtype in (
+        ("http_headers", StringType()),
+        ("body_off", IntegerType()),
+        ("http_status", StringType()),
+        ("http_version", StringType()),
+        ("http_ct", StringType()),
+        ("massaged_url", StringType()),
+        ("meta_tags", MapType(StringType(), StringType())),
+    )]
+ARCHIVE_SCHEMA = StructType(PAGES_SCHEMA.fields + SOURCE_FIELDS)
+
 # CDX field registry: code -> descriptive name (cdx_writer.py:711-722).
 FIELD_MAP = {
     "M": "AIF meta tags",

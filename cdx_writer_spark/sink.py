@@ -36,11 +36,12 @@ from .job import (
 
 def _lines_with_observation(pages: DataFrame, cfg: CDXConfig):
     obs = Observation("cdx_stats")
-    flagged = cdx_flagged(pages, cfg).observe(obs, *stats_aggregation(cfg))
+    flagged = cdx_flagged(pages, cfg).observe(
+        obs, *stats_aggregation(cfg, pages.columns))
     lines = (
         flagged.filter(F.col("admitted") & ~F.col("excluded"))
         .select(*file_order_cols(flagged),
-                cdx_line_column(cfg).alias("cdx_line"))
+                cdx_line_column(cfg, pages.columns).alias("cdx_line"))
     )
     return lines, obs, flagged
 

@@ -1,27 +1,33 @@
-"""The engine's only Python-side scalar ops, as Arrow-vectorized pandas UDFs.
+"""The engine's Python-side scalar ops: plain per-record kernels and
+the Arrow-vectorized pandas UDFs that run them over PAGES_SCHEMA input.
 
 Everything else in the CDX projection is native Catalyst expressions
-(whole-stage codegen).  These three exist because Spark lacks the exact
+(whole-stage codegen).  These exist because Spark lacks the exact
 semantics natively:
 
-* ``http_split``      — header/payload split of raw HTTP blocks
-                        (cdx_writer.py:390-407); returns a struct so the
-                        block is parsed exactly once per record (the
-                        reference's parse-once discipline, :348-352).
-* ``make_surt_udf``   — SURT canonicalization with original-URL fallback
-                        (cdx_writer.py:128-136) via canonicalize.py.
-* ``meta_tags_udf``   — HTML ``<meta>`` scan stopping at ``</head>``
-                        (cdx_writer.py:461-519).
+* ``split_http_block`` — header/payload split of a raw HTTP block
+                         (cdx_writer.py:390-407), parsed once per
+                         record (the reference's parse-once discipline,
+                         :348-352).  ``http_split`` is its UDF;
+                         ``native_http_split_struct`` its pure-Catalyst
+                         twin, which ``job.cdx_flagged`` uses by default.
+* ``make_surt_udf``    — SURT canonicalization with original-URL
+                         fallback (cdx_writer.py:128-136) via
+                         canonicalize.py.
+* ``parse_meta_tags``  — HTML ``<meta>`` scan stopping at ``</head>``
+                         (cdx_writer.py:461-519); ``meta_tags_udf`` is
+                         its UDF.
 
-(The SHA-1/base32 checksum used to be the fourth — it is now fully
-native: JVM ``sha1`` + a codegen'd hex→base32 encoding in
-``fields.sha1_b32_column``, so payload bytes no longer make a second
-Arrow crossing just to be hashed.)
+On archive input none of the UDFs runs: ``warc_source.read_warc``
+calls the same kernels while each record is still in Python and ships
+their results as columns (``schema.SOURCE_FIELDS``), so a record
+crosses into Python once.  On PAGES_SCHEMA input the SURT and meta
+UDFs run in one ArrowEvalPython node.
 
 Callers MASK the inputs with ``when()`` so rows that don't need the op
-ship NULL (not multi-MB payloads) across the Arrow boundary — e.g. the
-digest fast path (cdx_writer.py:449-453) never sends payload bytes to
-Python when a WARC-Payload-Digest header exists.
+ship NULL (not multi-MB payloads) across the Arrow boundary; the
+SHA-1/base32 checksum is fully native (``fields.sha1_b32_column``), so
+payload bytes never cross just to be hashed.
 """
 
 from __future__ import annotations
@@ -45,9 +51,11 @@ from .canonicalize import massaged_url, surt_key
 _CRLF_SPLIT = re.compile(rb"\r?\n\r?\n")
 # Status line (cdx_writer.py:435-436), anchored via .match
 _RE_STATUS_LINE = re.compile(r"HTTP(/\d\.\d)? (\d+)")
-# First Content-Type header line, value whitespace-trimmed
-# (parse_http_header + .strip(), cdx_writer.py:356-374)
-_RE_CT_LINE = re.compile(r"^content-type:\s*(.+?)\s*$", re.I | re.M)
+# Content-Type header line: the reference splits the head with
+# splitlines() and takes the first line this matches, value stripped
+# (parse_headers_and_content + parse_http_header + .strip(),
+# cdx_writer.py:356-374, 390-407)
+_RE_CT_LINE = re.compile(r"content-type:\s*(.+)", re.I)
 _RE_BEFORE_SEMI = re.compile(r"^(.+?);")
 
 _HTTP_SPLIT_TYPE = StructType([
@@ -65,14 +73,17 @@ _HTTP_SPLIT_TYPE = StructType([
 #  * (?d) = UNIX_LINES makes ^ $ and . treat ONLY \n as a line
 #    terminator — exactly Python's str semantics (Java otherwise
 #    refuses to let . cross \r and anchors $ before lone \r).
-#  * Python \s on str, restricted to latin-1 code points, is the
-#    explicit class below (Java's \s is ASCII-only and would drop
-#    \x1c-\x1f, \x85, \xa0).
-_WS_L1 = r" \t\n\x0B\f\r\x1C\x1D\x1E\x1F\x85\xA0"
+#  * str.splitlines() breaks latin-1 text at the characters of _BRK
+#    (\r\n counts once): a Content-Type line starts at the head's
+#    start or right after one of them and runs to the next one.
+#  * Python's str.strip() whitespace that can remain inside a line is
+#    _WS_LINE (Java's \s is ASCII-only and has no \x1f or \xa0).
+_BRK = r"\n\r\x0B\f\x1C\x1D\x1E\x85"
+_WS_LINE = r" \t\x1F\xA0"
 _SEP_RE = r"(\r?\n\r?\n)"
 _STATUS_RE_N = r"^HTTP(/\d\.\d)? (\d+)"
-_CT_RE_N = (r"(?idm)^content-type:[" + _WS_L1 + r"]*(.+?)[" + _WS_L1
-            + r"]*$")
+_CT_RE_N = r"(?i)(?<![^" + _BRK + r"])content-type:([^" + _BRK + r"]+)"
+_STRIP_RE_N = r"^[" + _WS_LINE + r"]+|[" + _WS_LINE + r"]+$"
 _SEMI_RE_N = r"(?d)^(.+?);"
 
 
@@ -117,8 +128,9 @@ def native_http_split_struct(block: Column) -> Column:
                     F.regexp_extract(h, _STATUS_RE_N, 1), F.lit(""))
                 status = F.nullif(
                     F.regexp_extract(h, _STATUS_RE_N, 2), F.lit(""))
-                ct_raw = F.nullif(
-                    F.regexp_extract(h, _CT_RE_N, 1), F.lit(""))
+                ct_raw = F.nullif(F.regexp_replace(
+                    F.regexp_extract(h, _CT_RE_N, 1), _STRIP_RE_N, ""),
+                    F.lit(""))
                 ct = F.coalesce(
                     F.nullif(F.regexp_extract(ct_raw, _SEMI_RE_N, 1),
                              F.lit("")),
@@ -134,6 +146,36 @@ def native_http_split_struct(block: Column) -> Column:
         return bind_once(pos0, with_pos)
 
     return bind_once(F.decode(block, "ISO-8859-1"), outer)
+
+
+_NO_SPLIT = (None, None, None, None, None)
+
+
+def split_http_block(block: bytes | None) -> tuple:
+    """One block's ``(headers, body_off, status, version, ct)``, the row
+    contract of :func:`http_split`; all None unless the block starts
+    with ``HTTP``.  The archive source calls this too, so the split has
+    one Python implementation."""
+    if block is None or not block.startswith(b"HTTP"):
+        return _NO_SPLIT
+    m_sep = _CRLF_SPLIT.search(block)
+    if m_sep:
+        head = block[:m_sep.start()].decode("latin1")
+        off = m_sep.end() + 1
+    else:
+        head = block.decode("latin1")
+        off = len(block) + 1
+    m = _RE_STATUS_LINE.match(head)
+    ct = None
+    for line in head.splitlines():
+        c = _RE_CT_LINE.match(line)
+        if c:
+            ct = c.group(1).strip()
+            semi = _RE_BEFORE_SEMI.match(ct)
+            ct = (semi.group(1) if semi else ct) or None
+            break
+    return (head, off, m.group(2) if m else None,
+            m.group(1) if m else None, ct)
 
 
 @pandas_udf(_HTTP_SPLIT_TYPE)
@@ -165,41 +207,8 @@ def http_split(block: pd.Series) -> pd.DataFrame:
     Catalyst's projection collapse, exploding the codegen'd projection
     (observed 100× slowdown on the full CDX plan).
     """
-    headers: list[str | None] = []
-    offs: list[int | None] = []
-    statuses: list[str | None] = []
-    versions: list[str | None] = []
-    cts: list[str | None] = []
-    for block_bytes in block:
-        if block_bytes is None or not block_bytes.startswith(b"HTTP"):
-            headers.append(None)
-            offs.append(None)
-            statuses.append(None)
-            versions.append(None)
-            cts.append(None)
-            continue
-        m_sep = _CRLF_SPLIT.search(block_bytes)
-        if m_sep:
-            head = block_bytes[:m_sep.start()].decode("latin1")
-            off = m_sep.end() + 1
-        else:
-            head = block_bytes.decode("latin1")
-            off = len(block_bytes) + 1
-        headers.append(head)
-        offs.append(off)
-        m = _RE_STATUS_LINE.match(head)
-        statuses.append(m.group(2) if m else None)
-        versions.append(m.group(1) if m else None)
-        ct_m = _RE_CT_LINE.search(head)
-        if ct_m:
-            ct = ct_m.group(1)
-            semi = _RE_BEFORE_SEMI.match(ct)
-            cts.append(semi.group(1) if semi else ct)
-        else:
-            cts.append(None)
-    return pd.DataFrame({"headers": headers, "body_off": offs,
-                         "status": statuses, "version": versions,
-                         "ct": cts})
+    return pd.DataFrame([split_http_block(b) for b in block],
+                        columns=_HTTP_SPLIT_TYPE.fieldNames())
 
 
 def make_surt_udf(host_massage: bool = True, fallback: bool = True):

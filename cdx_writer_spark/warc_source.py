@@ -6,7 +6,7 @@ archive file via ``ArchiveRecord.open_archive(gzip='auto')``
 (cdx_writer.py:823-828, reader in the external warctools package).
 The distributed equivalent: ``spark.read.format('binaryFile')`` hands
 each archive to one task, and an Arrow-batched ``mapInPandas`` kernel
-splits it into records:
+splits it into records and derives their Python-computed columns:
 
 * **gzip member splitting** — record-per-member WARCs are concatenated
   gzip streams; ``zlib.decompressobj(wbits=31)`` decodes one member at
@@ -23,6 +23,13 @@ splits it into records:
   (verbatim; date14_column handles ISO-8601 incl. micro/nano
   truncation), Content-Type → content_type, full header map →
   warc_headers.
+* **derived columns** — while the record is in Python, the kernel also
+  computes what the CDX projection would otherwise send back to Python
+  (``source_columns``): the HTTP split, the field-N SURT and the
+  meta-tag map, as ``schema.SOURCE_FIELDS``.  ``read_warc`` returns
+  ``schema.ARCHIVE_SCHEMA`` (PAGES_SCHEMA plus those), and
+  ``job.cdx_flagged`` reads them instead of running its own split and
+  UDFs, so the projection over an archive has no Python node.
 
 One archive = one task is the right granularity at scale: WARCs are
 written ~1 GB each, so a 100 TB crawl is ~100k files spread across
@@ -42,7 +49,14 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .schema import PAGES_SCHEMA
+from .canonicalize import massaged_url, safe_url
+from .schema import (
+    ARCHIVE_SCHEMA,
+    META_PARSE_LIMIT,
+    PAGES_SCHEMA,
+    SOURCE_FIELDS,
+)
+from .udfs import parse_meta_tags, split_http_block
 
 _RE_VERSION = re.compile(rb"^WARC/\d+\.\d+\r?\n")
 _RE_HEADER_SPLIT = re.compile(rb"\r?\n\r?\n", re.S)
@@ -139,11 +153,8 @@ def parse_warc_record(raw: bytes) -> dict | None:
     except ValueError:
         body_len = len(raw) - m.end()
     body = raw[m.end():m.end() + body_len]
-    url = headers.get("WARC-Target-URI")
-    if url and url.startswith("<") and url.endswith(">"):
-        pass  # safe_url strips the wget wrapper downstream
     return {
-        "url": url,
+        "url": headers.get("WARC-Target-URI"),
         "warc_ts": None,
         "raw_date": headers.get("WARC-Date"),
         "record_type": headers.get("WARC-Type"),
@@ -334,9 +345,6 @@ _HEAD_KEEP = 64 * 1024
 
 
 def _spill_oversized(row: dict) -> dict:
-    import base64
-    import hashlib
-
     html = row["html"]
     if html is None or len(html) <= MAX_INLINE_PAYLOAD:
         return row
@@ -430,23 +438,55 @@ def archive_to_rows(path: str, data: bytes) -> Iterator[dict]:
             yield _spill_oversized(row)
 
 
+def source_columns(row: dict) -> tuple:
+    """The ARCHIVE_SCHEMA columns past PAGES_SCHEMA for one row as the
+    JVM sees it (after ``_spill_oversized``), in SOURCE_FIELDS order.
+
+    The split follows the engine's mask: response records whose block
+    starts with ``HTTP``.  The meta map is parsed where the M field's
+    gate (``fields.meta_tags_column``) can pass: a split block with
+    ``text/html`` in its HTTP head or as the record's content type, no
+    longer than META_PARSE_LIMIT.  That is a superset of the rows whose
+    mime resolves to ``text/html``; the gate still decides which values
+    are read."""
+    html = row["html"]
+    split = split_http_block(
+        html if row["record_type"] == "response" else None)
+    head, off = split[0], split[1]
+    url = row["url"]
+    surt = None if url is None else massaged_url(safe_url(url))
+    meta = None
+    if off is not None and ("text/html" in head
+                            or row["content_type"] == "text/html"):
+        length = row["content_length"]
+        if (len(html) if length is None else length) <= META_PARSE_LIMIT:
+            meta = parse_meta_tags(html[off - 1:])
+    return (*split, surt, meta)
+
+
 def _warc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: binaryFile (path, content) rows -> pages rows.
-    Module-level so it pickles by reference, not by value."""
-    cols = [f.name for f in PAGES_SCHEMA.fields]
+    """mapInPandas kernel: binaryFile (path, content) rows -> archive
+    rows (ARCHIVE_SCHEMA).  Module-level so it pickles by reference,
+    not by value."""
+    cols = PAGES_SCHEMA.fieldNames()
     for pdf in batches:
         rows = []
         for p, content in zip(pdf["path"], pdf["content"]):
             rows.extend(archive_to_rows(p, bytes(content)))
-        yield pd.DataFrame({c: [r[c] for r in rows] for c in cols})
+        out = {c: [r[c] for r in rows] for c in cols}
+        derived = list(zip(*map(source_columns, rows)))
+        for i, f in enumerate(SOURCE_FIELDS):
+            out[f.name] = derived[i] if rows else []
+        yield pd.DataFrame(out)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed WARC scan: one task per archive file."""
+    """Distributed archive scan, one task per archive file: PAGES_SCHEMA
+    rows plus the derived SOURCE_FIELDS (``schema.ARCHIVE_SCHEMA``)."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{warc,arc,warc.gz,arc.gz}")
         .load(path)
         .select("path", "content")
-        .mapInPandas(_warc_kernel, schema=PAGES_SCHEMA)
+        .mapInPandas(_warc_kernel, schema=ARCHIVE_SCHEMA)
     )

@@ -156,6 +156,20 @@ def test_safe_url():
     assert safe_url("http://e.com/a\x08b\nc") == "http://e.com/a%08b%0Ac"
 
 
+def test_safe_url_column_reads_its_argument(spark):
+    """The native safe_url must transform the Column it is given, not
+    a column that happens to be named ``url``."""
+    from cdx_writer_spark.fields import safe_url_column
+
+    urls = ["<http://example.com/x>", "http://e.com/a\rb",
+            "http://e.com/a b", "http://e.com/a\nb", "http://e.com/a\x0cb",
+            "http://e.com/a\x08b", "<http://e.com/a b\r\n>", "<>", "<", ""]
+    df = spark.createDataFrame([(u, "decoy") for u in urls],
+                               "link string, url string")
+    got = [r[0] for r in df.select(safe_url_column(df["link"])).collect()]
+    assert got == [safe_url(u) for u in urls]
+
+
 def test_session_id_stripping():
     # public IA canonicalizer behavior (32-hex session tokens)
     sid = "0123456789abcdefghij0123456789ab"

@@ -217,6 +217,39 @@ def test_extract_preserves_schema_and_row_count(spark):
     assert out.filter(F.col("text").isNotNull()).count() == 10
 
 
+def test_archive_input_extraction_matches_pages_input(spark, tmp_path):
+    """On ``read_warc`` output the charset sniff reads the splitter
+    kernel's meta map; extraction and WET records must equal the same
+    calls over the rows reduced to PAGES_SCHEMA, and extract_text
+    returns exactly its input's columns."""
+    from test_warc_source import _warc_record, _write_archives
+
+    from cdx_writer_spark.functions.extract import wet_records
+
+    _write_archives(tmp_path)
+    # the meta tag names the charset: decoded as latin-1, not utf-8
+    html = (b'<html><head><meta http-equiv="content-type" '
+            b'content="text/html; charset=iso-8859-1"></head>'
+            b'<body>caf\xe9 <b>au</b> lait</body></html>')
+    (tmp_path / "meta.warc").write_bytes(_warc_record(
+        "response", "http://www.example.com/meta", "2011-02-18T23:32:58Z",
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html,
+        {"Content-Type": "application/http; msgtype=response"}))
+    pages = warc_source.read_warc(spark, str(tmp_path))
+    reduced = pages.select(*PAGES_SCHEMA.fieldNames())
+
+    out = extract_text(pages)
+    assert out.columns == pages.columns
+    key = ["warc_file", "offset", "record_seq"]
+    got = sorted(out.select(*key, "url", "text").collect())
+    assert got == sorted(
+        extract_text(reduced).select(*key, "url", "text").collect())
+    assert ("http://www.example.com/meta", "caf\xe9 au lait") in [
+        (r.url, r.text) for r in got]
+    assert sorted(wet_records(pages).collect()) == sorted(
+        wet_records(reduced).collect())
+
+
 def test_strip_regex_subset_is_engine_identical(spark):
     """The spec bans \\s and \\b (Java \\s includes \\x0B, RE2's does
     not; Python's \\s/\\b are unicode-aware) — drive the exact

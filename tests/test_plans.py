@@ -65,19 +65,19 @@ def test_dedup_is_partial_aggregated(spark):
 
 
 def test_release_candidate_caches(spark):
-    """Frames registered through _persist_candidates (the corpus
+    """Frames registered through persist_stage (the corpus
     queries' stage boundaries) are all unpersisted by
-    release_candidate_caches (a long-lived session must have a release
+    release_stage_caches (a long-lived session must have a release
     path — Spark's CacheManager never GCs explicit persists)."""
     from pyspark import StorageLevel
 
     from cdx_writer_spark.functions import dedup
 
-    dedup.release_candidate_caches()  # drain anything earlier tests left
-    frames = [dedup._persist_candidates(spark.range(n)) for n in (10, 20)]
+    dedup.release_stage_caches()  # drain anything earlier tests left
+    frames = [dedup.persist_stage(spark.range(n)) for n in (10, 20)]
     assert all(f.storageLevel != StorageLevel.NONE for f in frames)
-    assert dedup.release_candidate_caches() == 2
-    assert dedup.release_candidate_caches() == 0
+    assert dedup.release_stage_caches() == 2
+    assert dedup.release_stage_caches() == 0
     assert all(f.storageLevel == StorageLevel.NONE for f in frames)
 
 

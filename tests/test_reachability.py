@@ -141,9 +141,9 @@ UNREACHED_FUNCS = {
     "exact dedup: only the dedup_exact query calls it": (
         "functions.dedup.exact_dedup",
     ),
-    "candidate caches: `q_web_corpus_full` and `bench.py`": (
-        "functions.dedup._persist_candidates",
-        "functions.dedup.release_candidate_caches",
+    "corpus stage caches: `q_web_corpus_full` and `bench.py`": (
+        "functions.dedup.persist_stage",
+        "functions.dedup.release_stage_caches",
     ),
     "text search and statistics operators only registry queries call": (
         "functions.textstats.bm25_topk",
